@@ -50,7 +50,6 @@ WARMUP = os.environ.get("BENCH_WARMUP")
 # wave-packing A/B knobs (round-4 ladder attribution: ~27% of the N→4N gap
 # is sub-full waves across many small stages, not engine-serial work)
 SHUFFLE = int(os.environ.get("BENCH_SHUFFLE", "0")) or None  # default: = CPUS
-CONCURRENT_SINKS = os.environ.get("BENCH_CONCURRENT_SINKS") == "1"
 
 
 def _force(df) -> None:
@@ -141,7 +140,6 @@ def bench_crawl_rounds(spark, tmpdir: str) -> dict:
     crawler = Crawler(
         spark, cfg, docs, tmpdir, compact_every=COMPACT_EVERY,
         warmup_codegen=None if WARMUP is None else WARMUP == "1",
-        concurrent_sinks=CONCURRENT_SINKS,
     )
     t0 = time.time()
     stats = crawler.run(max_rounds=ROUNDS)

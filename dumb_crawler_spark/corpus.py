@@ -262,17 +262,20 @@ def docs_from_documents_table(documents: DataFrame) -> DataFrame:
     """
     n = documents.count()
     i = F.col("doc_id").cast("long")
+    # NULL text reads as "" (as in py_docs_from_documents): F.concat would
+    # otherwise null the whole span
+    text = F.coalesce(F.col("text"), F.lit(""))
 
     def doc_url(expr) -> F.Column:
         return F.concat(F.lit(f"http://{CORPUS_HOST}/doc/"), expr.cast("string"))
 
     link = lambda expr: F.concat(F.lit('<a href="'), doc_url(expr), F.lit('">'))
     t1 = F.concat(
-        F.lit("title "), F.col("text").substr(1, 80), F.lit(" article-body "),
+        F.lit("title "), text.substr(1, 80), F.lit(" article-body "),
         link((i * 7 + 1) % n), F.lit(" "), link((i * 13 + 2) % n),
     )
     t2 = F.concat(
-        F.lit("body "), F.col("text").substr(81, 120), F.lit(" "),
+        F.lit("body "), text.substr(81, 120), F.lit(" "),
         link((i * 3 + 5) % n),
         F.when(i % 10 == 0,
                F.concat(F.lit(' <a href="http://'), F.lit(EXT_HOST), F.lit('/x" rel="nofollow">'))

@@ -2,7 +2,7 @@
 
 The reference's main loop polls futures every second
 (DumbCrawler.java:61-79,302-310); one Spark **round** executes the same
-dataflow as one declarative plan over the whole batch:
+dataflow as declarative plans over the whole batch:
 
     dequeue (A1) → mark PROCESSING → re-tag/re-filter (T4/F2)
     → fetch-simulate join docs (J4) → validate (F5/F6)
@@ -10,6 +10,17 @@ dataflow as one declarative plan over the whole batch:
     → merge new links into frontier (J1-J3/S4)
     → mark PROCESSED/FAILED (C3) → append pages (J5/S7/S8)
     → append metrics (A3/S10) + errors (S11) → commit round (lineage)
+
+Every k-bounded step is either one Spark action or pure driver work. The
+dequeued batch (≤ k rows by construction) is collected ONCE as Arrow; the
+driver derives its count, the D2 lineage (written with pyarrow), the
+planner's decrements and the plan-walk drift check from it, and the
+downstream plans read it back as a local relation. The counters ride writes
+that run anyway as observed metrics: the A3 fetch counters on the fetch
+write, the F2/robots counters on the ins write. The URL-seen bloom and the
+planner state grow on the driver from one Arrow read of the round's
+inserts. The Warehouse pins each table's read schema after its first read,
+so no per-read schema-inference job runs either.
 
 Exactly-once rounds: all table writes land BEFORE the round's commit marker
 (storage.py); a crash mid-round leaves the previous round's state intact —
@@ -25,19 +36,19 @@ from __future__ import annotations
 
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import frontier as FR
+from .bloom import PartitionedBloom, _h1h2
 from .config import CrawlConfig
 from .extract import order_spans
-from .fetch import fetch_simulate
+from .fetch import error_kinds, fetch_simulate
 from .filters import is_url_allowed, should_store
 from .planner import IncrementalPlanner
 from .storage import Warehouse
@@ -76,28 +87,23 @@ class Crawler:
         use_bloom: bool = False,
         round_interval_ms: int = 60_000,
         compact_every: int = 16,
-        concurrent_sinks: bool = False,
         warmup_codegen: bool | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
         self.docs = docs
         self.wh = Warehouse(spark, warehouse_dir)
+        # one lineage schema across rounds: deltas written before `host`
+        # existed read it back as NULL
+        self.wh.pin_schema("dequeue_order", "delta", FR.DEQUEUE_ORDER_SCHEMA)
         self.history: list[RoundStats] = []
         self.robots = robots if cfg.politeness.respect_robots else None
         self.use_bloom = use_bloom
         self.compact_every = compact_every  # MoR delta-window bound (frontier.py)
-        # On a real cluster concurrent chain submission overlaps stage
-        # latencies (each sink chain's stages interleave on idle executors).
-        # In local[N] the driver IS the executor — measured: concurrent
-        # chains contend on the same cores + single DAGScheduler event loop
-        # for zero net win — so the sandbox default is sequential.
-        self.concurrent_sinks = concurrent_sinks
         self._fr_count = 0  # remembered frontier size (avoids before/after double counts)
         self.phase_times: dict[str, float] = {}  # accumulated per-phase secs (perf triage)
-        self._phase_lock = threading.Lock()  # chains run concurrently with concurrent_sinks
+        self._phase_lock = threading.Lock()  # phases may be timed off the main thread
         self._bloom = None
-        self._bloom_capacity = 0
         self._pages_bloom = None  # J5 pages-seen filter (incremental, _pages_split)
         self._pages_bloom_capacity = 0
         self._host_budgets = None
@@ -155,7 +161,7 @@ class Crawler:
             with self._phase_lock:
                 self.phase_times[name] = self.phase_times.get(name, 0.0) + (time.time() - t0)
 
-    def _write_frontier(self, round_no: int, fr) -> None:
+    def _write_frontier(self, round_no: int, fr) -> int:
         """Snapshot write with explicit layout: repartition by `part` (the
         salted host bucket — Iceberg bucket-spec analog) and sort within
         partitions by (status, priority DESC) — the `WRITE ORDERED BY`
@@ -164,7 +170,7 @@ class Crawler:
         out = fr.repartition(self.cfg.partitions, "part").sortWithinPartitions(
             "status", F.desc("priority")
         )
-        self.wh.write_snapshot("frontier", round_no, out)
+        return self.wh.write_snapshot("frontier", round_no, out)
 
     # -- bootstrap / resume ----------------------------------------------------
     def bootstrap(self) -> int:
@@ -185,8 +191,7 @@ class Crawler:
             non_http = cands.where(~F.col("url").startswith("http")).count()
             stats.add("IGNORED_URLS", non_http)
             fr = FR.merge_new_links(FR.empty_frontier(self.spark), cands, self.cfg, 0, depth=0)
-            self._write_frontier(0, fr)
-            self._fr_count = self.wh.read_snapshot("frontier", 0).count()
+            self._fr_count = self._write_frontier(0, fr)
             stats.add("DISCOVERED_URLS", self._fr_count)
             self._append_metrics(0, stats)
             self.wh.commit_round(0, {"dequeued": 0, "seeded": len(self.cfg.seeds)})
@@ -225,9 +230,9 @@ class Crawler:
         else is written."""
         cfg = self.cfg
         frq = self.wh.read_frontier_queued()
-        dq = FR.eligible_raw(frq, cfg).limit(2)
-        allowed = FR.retag_dequeued(dq, cfg).where(F.col("_allowed")).drop("_allowed")
         with self._phase("warmup"):
+            dq = self.spark.createDataFrame(FR.eligible_raw(frq, cfg).limit(2).toArrow())
+            allowed = FR.retag_dequeued(dq, cfg).where(F.col("_allowed")).drop("_allowed")
             self.wh.append_delta("fetch", 0, self._fetch_artifact(allowed))
             try:
                 fetched = self.wh.read_delta("fetch", 0)
@@ -254,7 +259,6 @@ class Crawler:
         k = cfg.thread_count * 2
         eligible = FR.eligible_raw(frq, cfg)
         use_inc = self._planner.applicable(k, self._host_budgets)
-        elig_cached = False
         with self._phase("dequeue_plan"):
             plan = None
             if use_inc:
@@ -263,320 +267,96 @@ class Crawler:
                 # beyond-cap job on over-budget rounds. The dequeue filter
                 # itself then reads the frontier parquet directly — status/
                 # priority/attempt predicates push down to row-group stats
-                # (the snapshot is written sorted by (status, priority DESC)),
-                # so no 10^6-row executor cache is ever built.
+                # (the snapshot is written sorted by (status, priority DESC)).
                 if not self._planner.ready:
                     # seed pass: the ONE full grouping-sets scan per
                     # bootstrap/resume (the legacy path paid it every round)
                     self._planner.seed_from(eligible)
                 if self._planner.ready:
                     plan = self._planner.plan(eligible, k)
-            if plan is not None:
-                dq_plan, dq_offsets, planned_n = plan
-            else:
+            if plan is None:
                 use_inc = False
                 # legacy fused planning: cache the eligible set once — the
                 # grouping-sets probe, the politeness window and the top-K
                 # all read the cache (frontier.plan_dequeue)
                 eligible = eligible.cache()
-                elig_cached = True
-                dq_plan, dq_offsets, planned_n = FR.plan_dequeue(
-                    eligible, cfg, k, self._host_budgets
-                )
-            dq = dq_plan.cache()
+                plan = FR.plan_dequeue(eligible, cfg, k, self._host_budgets)
         if not use_inc:
             # this round's transitions won't be fed back — stale state must
             # not survive into a later incremental round
             self._planner.invalidate()
+        dq_plan, _, planned_n = plan
+
+        # The dequeued batch is ≤ k rows by construction: ONE Arrow collect,
+        # then driver work — the count, the D2 lineage, the planner's
+        # decrements — and every downstream plan reads it back as a local
+        # relation (no executor cache, no per-step jobs over the batch).
+        with self._phase("dequeue"):
+            batch = dq_plan.toArrow()
+        eligible.unpersist()
+        stats.dequeued = batch.num_rows
+        if planned_n is not None and planned_n != stats.dequeued:
+            raise AssertionError(
+                f"threshold dequeue drift: plan walk={planned_n}, executed={stats.dequeued}"
+            )
+        if stats.dequeued == 0:
+            return stats
+        self.wh.append_delta_rows(
+            "dequeue_order", round_no, FR.dequeue_order_table(batch, round_no)
+        )
+        if use_inc:
+            self._planner.on_dequeued(batch)
+        # one partition: the Repartition node also keeps Catalyst from folding
+        # the re-tag projection into the local relation, which it would
+        # evaluate row by row on the driver, interpreted (~0.5 s per 10k rows)
+        dq = self.spark.createDataFrame(batch).coalesce(1)
 
         # T4 re-tag + re-filter; disallowed rows leak as PROCESSING (reference
         # marks taken before filtering, URLStore.java:191-206 + DumbCrawler.java:275-279).
-        retagged = None
-        if planned_n is not None:
-            # threshold path: dequeued count is known from the plan walk; the
-            # ALLOWED/IGNORED split falls out of the fetch artifact's footer
-            # row count below. The D2 ORDER-INDEX WRITE is the CACHE
-            # MATERIALIZATION BARRIER (VERDICT r04 item 5 — the former bare
-            # count() job is fused away): without a barrier the fetch join's
-            # several subplan references to dq (broadcast build + miss
-            # anti-join) race to evaluate the whole dequeue pipeline against
-            # a cold cache and duplicate the heavy window/filter work
-            # (measured ~2.5x fetch_write at local[8]). The lineage write
-            # evaluates that pipeline exactly once (k-row bucket window +
-            # parquet), its footer count IS the walk-count invariant check,
-            # and the planner's per-host decrement aggregates the just-
-            # written k-row delta (host rides in keep_cols) instead of
-            # re-running the pipeline.
-            stats.dequeued = planned_n
-            assert dq_offsets is not None  # threshold ⇒ walk offsets exist
-            with self._phase("dq_order"):
-                got_n = self.wh.append_delta(
-                    "dequeue_order",
-                    round_no,
-                    FR.dequeue_order_index(
-                        dq, round_no, prefix_len=3, offsets=dq_offsets,
-                        keep_cols=("host",),
-                    ),
-                )
-            if got_n != planned_n:
-                raise AssertionError(
-                    f"threshold dequeue drift: plan walk={planned_n}, executed={got_n}"
-                )
-            if use_inc:
-                hc = None
-                if self._planner.hosts is not None:
-                    with self._phase("dequeue"):
-                        hc = {
-                            r["host"]: r["n"]
-                            for r in self.wh.read_delta("dequeue_order", round_no)
-                            .groupBy("host")
-                            .agg(F.count(F.lit(1)).alias("n"))
-                            .collect()
-                        }
-                self._planner.on_dequeued(hc)
-            allowed = FR.retag_dequeued(dq, cfg).where(F.col("_allowed")).drop("_allowed")
-        else:
-            # small-k path: one job materializes dq+retagged AND yields counts
-            retagged = FR.retag_dequeued(dq, cfg).cache()
-            allowed = retagged.where(F.col("_allowed")).drop("_allowed")
-            with self._phase("dequeue"):
-                verdicts = {r["_allowed"]: r["n"] for r in retagged.groupBy("_allowed").agg(F.count("*").alias("n")).collect()}
-            stats.dequeued = verdicts.get(True, 0) + verdicts.get(False, 0)
-        if stats.dequeued == 0:
-            for c in (dq, retagged, eligible):
-                if c is not None:
-                    c.unpersist()
-            return stats
-        if planned_n is None:
-            stats.add("ALLOWED_LINKS", verdicts.get(True, 0))
-            stats.add("IGNORED_LINKS", verdicts.get(False, 0))
-
         # J4 + F5/F6 + L2 link extraction, materialized as a per-round parquet
         # artifact (`fetch` table) instead of an executor-heap cache: the rows
         # carry full span payloads (~KBs each), and columnar-compressed files
         # + column-pruned re-reads beat caching GBs of span data in the heap
         # (measured: the cache build GC-thrashed local[32] into anti-scaling).
-        # Downstream consumers each read only the columns they need.
+        # The A3 fetch counters ride the write as observed metrics.
+        allowed = FR.retag_dequeued(dq, cfg).where(F.col("_allowed")).drop("_allowed")
+        fobs = Observation()
+        artifact = self._fetch_artifact(allowed).observe(fobs, *self._fetch_counters())
         with self._phase("fetch_write"):
-            allowed_n = self.wh.append_delta("fetch", round_no, self._fetch_artifact(allowed))
-        if planned_n is not None:
-            # fetch_simulate emits exactly one row per allowed input row, so
-            # the artifact's footer count IS the T4-allowed count
-            stats.add("ALLOWED_LINKS", allowed_n)
-            stats.add("IGNORED_LINKS", planned_n - allowed_n)
+            allowed_n = self.wh.append_delta("fetch", round_no, artifact)
+        # fetch_simulate emits exactly one row per allowed input row, so the
+        # artifact's footer count IS the T4-allowed count
+        stats.add("ALLOWED_LINKS", allowed_n)
+        stats.add("IGNORED_LINKS", stats.dequeued - allowed_n)
+        fcounts = {name: int(v or 0) for name, v in fobs.get.items()}
+        for name, v in fcounts.items():
+            stats.add(name, v)
         fetched = self.wh.read_delta("fetch", round_no)
         ok_rows = fetched.where(F.col("ok"))
 
-        # ---- independent chains over the immutable fetch artifact run
-        # CONCURRENTLY. The reference overlaps fetch workers with the store
-        # thread (DumbCrawler.java:183-193); the batch analog is concurrent
-        # job submission — Spark's scheduler interleaves their stages across
-        # the executor cores, so round wall time approaches max(chain)
-        # instead of sum(chain). Each chain returns its counter increments;
-        # the main thread merges them (RoundStats is not touched off-thread).
-
-        def links_chain() -> dict[str, int]:
-            # link-ingest (§3.2): explode → canonicalize/tag/score → F2
-            # counters → J3 anti-join → ins delta
-            out: dict[str, int] = {}
-            link_cands = self._link_candidates(ok_rows)
-            obs = None
-            flagged = link_cands.withColumn(
-                "_ok", is_url_allowed(F.col("url"), F.col("tags"), cfg)
-            )
-            if self.robots is None and not self.use_bloom:
-                # F2 counters ride the ins-write job as observed metrics
-                # (CollectMetrics) instead of a separate full candidate pass;
-                # the candidate pipeline is therefore evaluated exactly once
-                # per round and needs no executor cache. The robots/bloom
-                # configs keep the legacy count job: their plans reference
-                # the candidate subtree from more than one branch/action, so
-                # an observed node would double-count.
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                flagged = flagged.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_total"),
-                    F.sum(F.col("_ok").cast("long")).alias("n_ok"),
-                )
-                allowed_cands = flagged.where(F.col("_ok")).drop("_ok")
-            else:
-                # robots/bloom path: ONE aggregation over the cached verdict
-                # columns yields the F2 split AND the robots-blocked count —
-                # previously links_count plus two per-round full-candidate
-                # count() jobs on robots rounds (VERDICT r03 item 6). J6-NR
-                # robots gate rides as a broadcast-joined verdict column.
-                if self.robots is not None:
-                    from .robots import with_robots_verdict
-
-                    flagged = with_robots_verdict(flagged, self.robots)
-                else:
-                    flagged = flagged.withColumn("_robots_blocked", F.lit(False))
-                flagged = flagged.cache()
-                link_cands = flagged  # cached handle for the final unpersist
-                with self._phase("links_count"):
-                    lc = (
-                        flagged.groupBy("_ok", "_robots_blocked")
-                        .agg(F.count("*").alias("n")).collect()
-                    )
-                out["ALLOWED_LINKS"] = sum(r["n"] for r in lc if r["_ok"])
-                out["IGNORED_LINKS"] = sum(r["n"] for r in lc if not r["_ok"])
-                if self.robots is not None:
-                    out["ROBOTS_BLOCKED_LINKS"] = sum(
-                        r["n"] for r in lc if r["_ok"] and r["_robots_blocked"]
-                    )
-                allowed_cands = flagged.where(
-                    F.col("_ok") & ~F.col("_robots_blocked")
-                ).drop("_ok", "_robots_blocked")
-
-            seen_ids = self.wh.read_frontier_seen_ids(round_no - 1)
-            bloom = None
-            if self.use_bloom:
-                from .bloom import PartitionedBloom
-
-                if self._bloom is None:
-                    # first build presizes capacity so later increments union
-                    self._bloom_capacity = max(4096, (self._fr_count // cfg.partitions + 1) * 8)
-                    self._bloom = PartitionedBloom.build(
-                        seen_ids, expected_per_part=self._bloom_capacity
-                    )
-                bloom = self._bloom
-            new_rows = FR.new_link_rows(seen_ids, allowed_cands, round_no, depth=round_no, bloom=bloom)
-            with self._phase("ins_write"):
-                # returns the footer row count — no read-back count job; a
-                # zero-insert round leaves no ins- dir at all
-                inserted_n = self.wh.write_frontier_inserts(round_no, new_rows)
-            out["DISCOVERED_URLS"] = inserted_n
-            if obs is not None:
-                vals = obs.get
-                out["ALLOWED_LINKS"] = int(vals["n_ok"] or 0)
-                out["IGNORED_LINKS"] = int(vals["n_total"] or 0) - int(vals["n_ok"] or 0)
-            if use_inc and inserted_n:
-                # fold the k-bounded ins-delta into the planner state — the
-                # small aggregation that replaces next round's frontier scan
-                with self._phase("plan_ins_update"):
-                    self._planner.on_inserts(self.wh.read_frontier_inserts(round_no))
-            if self.use_bloom and inserted_n:
-                # incremental: hash ONLY this round's inserts into the filter
-                from .bloom import PartitionedBloom
-
-                self._bloom = self._bloom.union(
-                    PartitionedBloom.build(
-                        self.wh.read_frontier_inserts(round_no).select("url_id", "part"),
-                        expected_per_part=self._bloom_capacity,
-                    )
-                )
-            if obs is None:
-                link_cands.unpersist()
-            return out
-
-        def fstats_chain() -> dict[str, int]:
-            # ONE aggregation pass yields PROCESSED_URLS, every ERROR_*,
-            # MAX_ATTEMPT_COUNT_REACHED, the F3 store split and A4 warns
-            # (A3; URLStore.java:176-180, AbstractStorageManager.java:37-50,
-            # DumbCrawler.java:108-110); errors sink (S11) rides behind it
-            out: dict[str, int] = {}
-            with self._phase("fetch_stats"):
-                fstats = (
-                    fetched.select(
-                        "error",
-                        (F.col("attempt") + 1 >= cfg.max_attempt_count).alias("maxed"),
-                        (F.col("ok") & should_store(F.col("tags"), cfg)).alias("store"),
-                        (F.col("ok") & (F.col("n_links") == 0)).alias("no_links"),
-                        (F.col("ok") & (F.col("n_links") > 300)).alias("many_links"),
-                        "ok",
-                    )
-                    .groupBy("error", "maxed", "store", "no_links", "many_links", "ok")
-                    .count()
-                    .collect()
-                )
-            n_errors = 0
-            for r in fstats:
-                if r["error"] is None:
-                    out["PROCESSED_URLS"] = out.get("PROCESSED_URLS", 0) + r["count"]
-                else:
-                    out[f"ERROR_{r['error']}"] = out.get(f"ERROR_{r['error']}", 0) + r["count"]
-                    n_errors += r["count"]
-                if r["maxed"]:
-                    out["MAX_ATTEMPT_COUNT_REACHED"] = out.get("MAX_ATTEMPT_COUNT_REACHED", 0) + r["count"]
-                if r["ok"] and not r["store"]:
-                    out["UNSAVED_PAGES"] = out.get("UNSAVED_PAGES", 0) + r["count"]
-                if r["no_links"]:
-                    out["WARN_EMPTY_LINKS"] = out.get("WARN_EMPTY_LINKS", 0) + r["count"]
-                if r["many_links"]:
-                    out["WARN_TOO_MANY_LINKS"] = out.get("WARN_TOO_MANY_LINKS", 0) + r["count"]
-            if n_errors:
-                with self._phase("errors_write"):
-                    self.wh.append_delta(
-                        "errors",
-                        round_no,
-                        fetched.where(~F.col("ok")).select(
-                            "url_id", "url", "error", F.lit(round_no).alias("round"), "spans"
-                        ),
-                    )
-            return out
-
-        def upd_chain() -> dict[str, int]:
-            # C3 as a k-row MoR update delta — the frontier is NEVER
-            # rewritten in-round (frontier.round_update_delta; compaction
-            # bounds the delta window). At 10^10 rows this is O(k) instead
-            # of O(frontier) per-round write cost.
-            results = fetched.select("url_id", "tags", "ok", "error")
-            with self._phase("upd_write"):
-                self.wh.write_frontier_updates(
-                    round_no, FR.round_update_delta(dq, results, round_no)
-                )
-            return {}
-
-        def pages_chain() -> dict[str, int]:
-            # S7/S8 pages sink with F3 gate + J5 new-vs-update. The span
-            # payload makes one pass (gate → order_spans → parquet); the
-            # new-vs-update split is INCREMENTAL (VERDICT r04 item 3): a
-            # per-round O(k) probe of the pages-seen bloom, exact-checking
-            # only bloom positives — never a per-round scan of the full
-            # pages history (see _pages_split).
-            saved = ok_rows.where(should_store(F.col("tags"), cfg)).select(
-                "url_id", "url", F.lit(round_no).alias("round"),
-                order_spans(F.col("spans")).alias("spans"),
-            )
-            with self._phase("pages_write"):
-                saved_n = self.wh.append_delta("pages", round_no, saved, keep_empty=False)
-            if saved_n == 0:
-                return {"NEW_SAVED_PAGES": 0, "UPDATED_PAGES": 0, "SAVED_PAGES": 0}
-            with self._phase("pages_split"):
-                upd_n = self._pages_split(round_no)
-            new_n = saved_n - upd_n
-            return {"NEW_SAVED_PAGES": new_n, "UPDATED_PAGES": upd_n, "SAVED_PAGES": saved_n}
-
-        def dq_order_chain() -> dict[str, int]:
-            # dequeue-order lineage (golden-comparable): distributed
-            # contiguous D2 rank, all-JVM (frontier.dequeue_order_index).
-            # Threshold rounds already wrote it as the materialization
-            # barrier above (with the walk's offsets — no histogram job);
-            # only the small-k path writes it here.
-            if planned_n is not None:
-                return {}
-            with self._phase("dq_order"):
-                # host kept on BOTH paths so the table's schema is uniform
-                # across rounds (read_deltas unions the per-round dirs)
+        self._ingest_links(round_no, ok_rows, use_inc, stats)
+        if allowed_n > fcounts["PROCESSED_URLS"]:
+            with self._phase("errors_write"):  # S11 errors sink, one file
                 self.wh.append_delta(
-                    "dequeue_order",
+                    "errors",
                     round_no,
-                    FR.dequeue_order_index(dq, round_no, prefix_len=2, keep_cols=("host",)),
+                    fetched.where(~F.col("ok")).select(
+                        "url_id", "url", "error", F.lit(round_no).alias("round"), "spans"
+                    ).coalesce(1),
                 )
-            return {}
-
-        chains = [links_chain, fstats_chain, upd_chain, pages_chain, dq_order_chain]
-        with self._phase("chains_wall"):
-            if self.concurrent_sinks:
-                with ThreadPoolExecutor(max_workers=len(chains)) as pool:
-                    results = list(pool.map(lambda c: c(), chains))
-            else:
-                results = [c() for c in chains]
-            for result in results:
-                for name, value in result.items():
-                    stats.add(name, value)
+        # C3 as a k-row MoR update delta — the frontier is NEVER rewritten
+        # in-round (frontier.round_update_delta; compaction bounds the delta
+        # window). At 10^10 rows this is O(k) instead of O(frontier) per-round
+        # write cost. One partition (dq's): one file per round.
+        with self._phase("upd_write"):
+            self.wh.write_frontier_updates(
+                round_no,
+                FR.round_update_delta(
+                    dq, fetched.select("url_id", "tags", "ok", "error"), round_no
+                ),
+            )
+        for name, v in self._save_pages(round_no, ok_rows).items():
+            stats.add(name, v)
         self._fr_count += stats.counters.get("DISCOVERED_URLS", 0)
 
         # periodic MoR compaction: reconcile deltas into a fresh base snapshot
@@ -594,10 +374,110 @@ class Crawler:
             # only within its round — spans persist in pages/errors; without
             # this the warehouse grows O(k × page bytes) every round
             self.wh.drop_delta("fetch", round_no)
-        for c in (dq, retagged, eligible):
-            if c is not None:
-                c.unpersist()
         return stats
+
+    def _fetch_counters(self) -> list:
+        """ONE set of aggregates over the fetch artifact yields
+        PROCESSED_URLS, every ERROR_*, MAX_ATTEMPT_COUNT_REACHED, the F3 store
+        split and the A4 warns (A3; URLStore.java:176-180,
+        AbstractStorageManager.java:37-50, DumbCrawler.java:108-110)."""
+        cfg, ok, n_links = self.cfg, F.col("ok"), F.col("n_links")
+        stored = F.coalesce(should_store(F.col("tags"), cfg), F.lit(False))
+        named = {
+            "PROCESSED_URLS": F.col("error").isNull(),
+            **{f"ERROR_{e}": F.col("error") == e for e in error_kinds(cfg)},
+            "MAX_ATTEMPT_COUNT_REACHED": F.col("attempt") + 1 >= cfg.max_attempt_count,
+            "UNSAVED_PAGES": ok & ~stored,
+            "WARN_EMPTY_LINKS": ok & (n_links == 0),
+            "WARN_TOO_MANY_LINKS": ok & (n_links > 300),
+        }
+        return [F.count_if(cond).alias(name) for name, cond in named.items()]
+
+    def _ingest_links(self, round_no: int, ok_rows: DataFrame, use_inc: bool, stats: RoundStats) -> None:
+        """Link ingest (§3.2): explode → canonicalize/tag/score → F2 (+ J6-NR
+        robots verdict) → J3 anti-join → ins delta. The F2/robots counters
+        ride the ins write as observed metrics, so the candidate pipeline is
+        evaluated once per round with no executor cache. The round's inserts
+        are then read once, as Arrow, to grow the URL-seen bloom and the
+        planner state on the driver."""
+        cfg = self.cfg
+        flagged = self._link_candidates(ok_rows).withColumn(
+            "_ok", is_url_allowed(F.col("url"), F.col("tags"), cfg)
+        )
+        counters = [
+            F.count(F.lit(1)).alias("n_total"),
+            F.count_if(F.col("_ok")).alias("n_ok"),
+        ]
+        keep = F.col("_ok")
+        if self.robots is not None:
+            from .robots import with_robots_verdict
+
+            flagged = with_robots_verdict(flagged, self.robots)
+            counters.append(
+                F.count_if(F.col("_ok") & F.col("_robots_blocked")).alias("n_blocked")
+            )
+            keep = keep & ~F.col("_robots_blocked")
+        obs = Observation()
+        allowed_cands = (
+            flagged.observe(obs, *counters).where(keep).drop("_ok", "_robots_blocked")
+        )
+
+        seen_ids = self.wh.read_frontier_seen_ids(round_no - 1)
+        if self.use_bloom and self._bloom is None:
+            # one distributed build per process lifetime, presized so the
+            # per-round driver-side growth (add_local) keeps its (m, k)
+            self._bloom = PartitionedBloom.build(
+                seen_ids,
+                expected_per_part=max(4096, (self._fr_count // cfg.partitions + 1) * 8),
+            )
+        new_rows = FR.new_link_rows(
+            seen_ids, allowed_cands, round_no, depth=round_no, bloom=self._bloom
+        )
+        with self._phase("ins_write"):
+            # returns the footer row count — no read-back count job; a
+            # zero-insert round leaves no ins- dir at all
+            inserted_n = self.wh.write_frontier_inserts(round_no, new_rows)
+        vals = obs.get
+        stats.add("ALLOWED_LINKS", vals["n_ok"])
+        stats.add("IGNORED_LINKS", vals["n_total"] - vals["n_ok"])
+        if self.robots is not None:
+            stats.add("ROBOTS_BLOCKED_LINKS", vals["n_blocked"])
+        stats.add("DISCOVERED_URLS", inserted_n)
+        if inserted_n and (use_inc or self.use_bloom):
+            h1, h2 = _h1h2(F.col("url_id"))
+            with self._phase("ins_fold"):
+                ins = (
+                    self.wh.read_frontier_inserts(round_no)
+                    .select(
+                        "url_id", "host", "priority", "attempt", "status", "part",
+                        h1.alias("h1"), h2.alias("h2"),
+                    )
+                    .toArrow()
+                )
+            if use_inc:
+                self._planner.on_inserts(ins)
+            if self.use_bloom:
+                self._bloom = self._bloom.add_local(
+                    ins["part"].to_numpy(), ins["h1"].to_numpy(), ins["h2"].to_numpy()
+                )
+
+    def _save_pages(self, round_no: int, ok_rows: DataFrame) -> dict[str, int]:
+        """S7/S8 pages sink with F3 gate + J5 new-vs-update. The span payload
+        makes one pass (gate → order_spans → parquet); the new-vs-update split
+        is INCREMENTAL (VERDICT r04 item 3): a per-round O(k) probe of the
+        pages-seen bloom, exact-checking only bloom positives — never a
+        per-round scan of the full pages history (see _pages_split)."""
+        saved = ok_rows.where(should_store(F.col("tags"), self.cfg)).select(
+            "url_id", "url", F.lit(round_no).alias("round"),
+            order_spans(F.col("spans")).alias("spans"),
+        )
+        with self._phase("pages_write"):
+            saved_n = self.wh.append_delta("pages", round_no, saved, keep_empty=False)
+        if saved_n == 0:
+            return {}
+        with self._phase("pages_split"):
+            upd_n = self._pages_split(round_no)
+        return {"NEW_SAVED_PAGES": saved_n - upd_n, "UPDATED_PAGES": upd_n, "SAVED_PAGES": saved_n}
 
     # -- J5 incremental new-vs-update split (VERDICT r04 item 3) ----------------
     # The old split semi-joined the round's fresh ids against EVERY pages
@@ -635,8 +515,6 @@ class Crawler:
         """Lazy pages-seen filter: empty on a fresh crawl, rebuilt from the
         committed pages history on resume (one distinct id scan per process,
         NOT per round)."""
-        from .bloom import PartitionedBloom
-
         if self._pages_bloom is None:
             self._pages_bloom_capacity = max(
                 4096, (self._fr_count // self.cfg.partitions + 1) * 4
@@ -665,8 +543,6 @@ class Crawler:
         probe sides like the frontier candidate stream). O(k) per round,
         independent of crawl history."""
         import numpy as np
-
-        from .bloom import _h1h2
 
         h1, h2 = _h1h2(F.col("url_id"))
         pdf = (

@@ -35,6 +35,14 @@ ERR_EMPTY = "EMPTY_RESPONSE_BODY"
 ERR_VALIDATION_PREFIX = "CONTENT_VALIDATION_ERROR_"
 
 
+def error_kinds(cfg: CrawlConfig) -> list[str]:
+    """Every value fetch_simulate's ``error`` column can take — a closed set,
+    so per-error counters can be fixed aggregate expressions."""
+    return [ERR_404, ERR_EMPTY] + [
+        ERR_VALIDATION_PREFIX + tag for tag in cfg.validation_selectors
+    ]
+
+
 def render_via(tags: Column, cfg: CrawlConfig) -> Column:
     """S6: route through proxy when a task tag is in renderer.proxify or the
     list contains 'all' (ContentRenderer.java:31-52, RocketscrapeRenderer.java:20-25).

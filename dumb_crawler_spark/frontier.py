@@ -27,6 +27,9 @@ Scale notes (10^10 rows, 1000 executors):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -293,10 +296,8 @@ def topk_with_offsets(
 ) -> tuple[DataFrame, list[tuple] | None, int | None]:
     """topk_from_eligible + (threshold path only) the walk's bucket-offset
     table (priority, attempt, url_id-prefix, global D2 offset) and the EXACT
-    planned row count. dequeue_order_index reuses the offsets instead of
-    re-collecting its own histogram, and the crawler uses the count instead
-    of launching a count job over the dequeued batch (two driver round-trips
-    per round saved). ``hist`` lets the caller hand in a pre-collected
+    planned row count, which the crawler checks against the collected batch
+    (walk-vs-executed drift). ``hist`` lets the caller hand in a pre-collected
     (priority, attempt, prefix, count) histogram (plan_dequeue's fused
     probe) so the threshold path launches ZERO extra aggregation jobs."""
     if k is None:
@@ -485,8 +486,7 @@ def _dequeue_threshold_ex(
     global_offset)] — every bucket the dequeue touches, in D2 order. Within
     any bucket the taken rows are exactly the smallest url_ids (whole bucket,
     or the TakeOrdered/recursive edge), so (offset + within-bucket url_id
-    rank) IS the contiguous global D2 rank: dequeue_order_index consumes
-    these offsets with no second histogram job.
+    rank) IS the contiguous global D2 rank.
     """
     pre = F.substring("url_id", 1, prefix_len)
     if hist is None:
@@ -554,52 +554,32 @@ def _dequeue_threshold_ex(
     return out, offsets, k - remaining
 
 
-def dequeue_order_index(
-    dq: DataFrame,
-    round_no: int,
-    prefix_len: int = 2,
-    offsets: list[tuple] | None = None,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(round, seq, url_id) lineage rows: seq = contiguous 0-based global
-    rank of the dequeued batch in D2 order (priority DESC, attempt ASC,
-    url_id ASC) — golden-comparable against the oracle's enumerate().
+DEQUEUE_ORDER_SCHEMA = T.StructType([
+    T.StructField("round", T.IntegerType()),
+    T.StructField("seq", T.LongType()),
+    T.StructField("url_id", T.StringType()),
+    T.StructField("host", T.StringType()),
+])
 
-    Distributed contiguous ranking without a global sort, a single-partition
-    window, or an RDD zipWithIndex (which round-trips every row through
-    Python): bucket rows by (priority, attempt, url_id-prefix) — prefix
-    truncation preserves lexicographic order, so concatenating buckets in
-    D2-bucket order IS the global order. Each bucket's global offset comes
-    either from the large-k threshold walk (``offsets``, zero extra jobs —
-    ``prefix_len`` must then match the walk's) or from one tiny
-    groupBy().count() collect; a per-bucket row_number window (parallel
-    across buckets, k-row shuffle at most) finishes the rank.
-    All JVM/codegen — zero Python in the loop.
 
-    ``keep_cols`` carries extra dq columns (e.g. ``host``) into the lineage
-    rows — the threshold path writes this index as the round's dq-cache
-    materialization BARRIER and re-reads the tiny delta for the planner's
-    per-host decrement, so the host must ride along (crawler.run_round)."""
-    pre = F.substring("url_id", 1, prefix_len)
-    b = dq.select("priority", "attempt", pre.alias("_pre"), "url_id", *keep_cols)
-    if offsets is None:
-        counts = b.groupBy("priority", "attempt", "_pre").count().collect()
-        counts.sort(key=lambda r: (-r["priority"], r["attempt"], r["_pre"]))
-        offsets, acc = [], 0
-        for r in counts:
-            offsets.append((r["priority"], r["attempt"], r["_pre"], acc))
-            acc += r["count"]
-    odf = F.broadcast(
-        b.sparkSession.createDataFrame(
-            offsets, "priority int, attempt int, _pre string, _off long"
-        )
-    )
-    w = Window.partitionBy("priority", "attempt", "_pre").orderBy("url_id")
-    return (
-        b.join(odf, ["priority", "attempt", "_pre"])
-        .withColumn("seq", F.col("_off") + F.row_number().over(w) - 1)
-        .select(F.lit(round_no).alias("round"), "seq", "url_id", *keep_cols)
-    )
+def dequeue_order_table(batch: pa.Table, round_no: int) -> pa.Table:
+    """(round, seq, url_id, host) lineage rows of one dequeued batch (a
+    pyarrow Table with DEQUEUE_COLS): seq = contiguous 0-based rank in D2
+    order (priority DESC, attempt ASC, url_id ASC) — golden-comparable
+    against the oracle's enumerate(). Arrow compares strings bytewise, as
+    Spark does. The batch is ≤ k rows by construction, so one driver-side
+    sort replaces a distributed rank; host rides along for the politeness
+    checks."""
+    order = pc.sort_indices(batch, sort_keys=[
+        ("priority", "descending"), ("attempt", "ascending"), ("url_id", "ascending"),
+    ])
+    n = batch.num_rows
+    return pa.table({
+        "round": pa.array(np.full(n, round_no, dtype=np.int32)),
+        "seq": pa.array(np.arange(n, dtype=np.int64)),
+        "url_id": batch["url_id"].take(order),
+        "host": batch["host"].take(order),
+    })
 
 
 def retag_dequeued(dequeued: DataFrame, cfg: CrawlConfig) -> DataFrame:

@@ -13,18 +13,17 @@ from a full scan:
   QUEUED ∧ attempt<max rows. Transitions are exact integer algebra:
     hist(R+1) = hist(R) − cells taken by round R's dequeue
                         + cells of round R's ins-delta.
-  The taken cells come FREE from the threshold walk (its bucket-offset table
-  already enumerates every touched bucket and its take count); the ins cells
-  come from one small aggregation over the round's k-bounded ins-delta
-  parquet — never the 10^10-row frontier. Status flips are TERMINAL
+  The taken cells are counted on the driver over the round's dequeued batch
+  (≤ k rows, collected once by the crawler); the ins cells over the round's
+  k-bounded ins-delta, read once as Arrow — never the 10^10-row frontier.
+  Status flips are TERMINAL
   (QUEUED → PROCESSING-leak | PROCESSED | FAILED, never back — SURVEY.md
   §2.8-C3), so dequeued rows leave the eligible set permanently and the
   decrement is exact; the only re-queue paths (resume orphan reset, --refetch)
   reset the planner wholesale.
 - ``hosts`` — per-host eligible counts for the politeness probe, maintained
-  only when a budget is configured, by the same algebra (dequeued-per-host
-  rides the round's existing cache-materialization barrier as a k-bounded
-  groupBy(host); inserts-per-host rides the ins aggregation).
+  only when a budget is configured, by the same algebra over the same two
+  driver-side tables.
 
 The full grouping-sets pass now runs ONCE — at seed time (first round after
 bootstrap/resume) — instead of every round. The politeness cap still needs a
@@ -39,15 +38,18 @@ disables the planner (fall back to the fused per-round job); at the
 as a small state TABLE merged with the k-bounded per-round deltas — the
 driver dict is the sandbox-scale realization, not the algorithm.
 
-Drift safety: every subtraction asserts non-negativity, and the crawler's
-existing plan-walk-vs-executed row-count barrier cross-checks each round;
+Drift safety: every subtraction asserts non-negativity, and the crawler
+cross-checks the plan walk's row count against the collected batch each round;
 any violation raises (loudly) rather than silently degrading order.
 """
 
 from __future__ import annotations
 
 import threading
+from collections import Counter
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,21 +69,6 @@ Cell = tuple[int, int, str]  # (priority, attempt, url_id-prefix)
 _ALGEBRA_OVER_MAX = 64
 
 
-def taken_cells_from_offsets(
-    offsets: list[tuple], planned_n: int
-) -> list[tuple[int, int, str, int]]:
-    """Per-bucket take counts recovered from the threshold walk's offset
-    table: consecutive global offsets delimit each bucket's contribution,
-    the final bucket's is bounded by the exact planned count. Zero extra
-    Spark jobs — this is the walk's own bookkeeping read back."""
-    out = []
-    for i, (p, a, pfx, off) in enumerate(offsets):
-        end = offsets[i + 1][3] if i + 1 < len(offsets) else planned_n
-        if end - off:
-            out.append((p, a, pfx, end - off))
-    return out
-
-
 class IncrementalPlanner:
     """Driver-side planning state for the large-k (threshold) dequeue path.
 
@@ -89,9 +76,8 @@ class IncrementalPlanner:
       seed_from(eligible)   -- once, full grouping-sets pass
       plan(eligible, k)     -- per round: in-memory walk (+ the small
                                beyond-cap job when a host is over budget)
-      on_dequeued(hosts)    -- apply the walk's pending cell decrements
-                               (+ per-host decrements from the barrier job)
-      on_inserts(ins_df)    -- add the round's ins-delta cells/hosts
+      on_dequeued(batch)    -- subtract the dequeued batch's cells/hosts
+      on_inserts(ins)       -- add the round's ins-delta cells/hosts
     Any bail (collect limit, unexpected shape) disables the planner; the
     crawler then uses the legacy fused plan_dequeue for the round.
     """
@@ -102,8 +88,7 @@ class IncrementalPlanner:
         self.hist: dict[Cell, int] | None = None
         self.hosts: dict[str, int] | None = None
         self.disabled = False
-        self._pending: list[tuple[int, int, str, int]] = []
-        self._lock = threading.Lock()  # on_inserts may run from a sink-chain thread
+        self._lock = threading.Lock()  # guards hist/hosts against concurrent callers
 
     # -- applicability ---------------------------------------------------------
     def applicable(self, k: int | None, host_budgets: DataFrame | None) -> bool:
@@ -125,7 +110,6 @@ class IncrementalPlanner:
     def invalidate(self) -> None:
         self.hist = None
         self.hosts = None
-        self._pending = []
 
     # -- seed (the one full pass) ---------------------------------------------
     def seed_from(self, eligible: DataFrame) -> bool:
@@ -177,8 +161,7 @@ class IncrementalPlanner:
         when no host exceeds its budget)."""
         assert self.ready
         budget = self.cfg.politeness.budget_per_host_per_round
-        with self._lock:  # snapshot under the lock: on_inserts mutates these
-            # dicts from a sink-chain thread (ADVICE r03 lock discipline)
+        with self._lock:  # snapshot under the lock (ADVICE r03 lock discipline)
             hist = dict(self.hist)
             hosts = dict(self.hosts) if self.hosts is not None else None
         over = [h for h, n in hosts.items() if n > budget] if budget is not None else []
@@ -204,7 +187,6 @@ class IncrementalPlanner:
         df, offsets, taken = FR._dequeue_threshold_ex(
             capped, k, self.prefix_len, hist=hist_list
         )
-        self._pending = taken_cells_from_offsets(offsets, taken)
         return df.select(*FR.DEQUEUE_COLS), offsets, taken
 
     def _capped_by_window(
@@ -333,72 +315,52 @@ class IncrementalPlanner:
         return capped, [(p, a, pfx, n) for (p, a, pfx), n in cells.items() if n > 0]
 
     # -- round feedback ---------------------------------------------------------
-    def on_dequeued(self, host_counts: dict[str, int] | None) -> None:
-        """Apply the planned decrements after the dequeue materialized (the
-        crawler's barrier already verified executed == planned). Dequeued
-        rows leave the eligible set for good — transitions are terminal."""
+    def _counts(self, rows: pa.Table) -> tuple[Counter, Counter | None]:
+        """(cell → rows, host → rows | None) of a driver-side Arrow table."""
+        pre = [u[: self.prefix_len] for u in rows["url_id"].to_pylist()]
+        cells = Counter(zip(rows["priority"].to_pylist(), rows["attempt"].to_pylist(), pre))
+        hosts = Counter(rows["host"].to_pylist()) if self.hosts is not None else None
+        return cells, hosts
+
+    def on_dequeued(self, batch: pa.Table) -> None:
+        """Subtract the round's dequeued batch (DEQUEUE_COLS, ≤ k rows, already
+        collected by the crawler, which verified its size against the plan
+        walk). Dequeued rows leave the eligible set for good — transitions
+        are terminal."""
+        cells, hosts = self._counts(batch)
         with self._lock:
             if self.hist is None:
                 return
-            for p, a, pfx, n in self._pending:
-                key = (p, a, pfx)
-                left = self.hist.get(key, 0) - n
-                assert left >= 0, f"incremental histogram underflow at {key}"
-                if left:
-                    self.hist[key] = left
-                else:
-                    self.hist.pop(key, None)
-            self._pending = []
-            if self.hosts is not None and host_counts:
-                for h, n in host_counts.items():
-                    left = self.hosts.get(h, 0) - n
-                    assert left >= 0, f"incremental host-count underflow at {h!r}"
-                    if left:
-                        self.hosts[h] = left
-                    else:
-                        self.hosts.pop(h, None)
+            _subtract(self.hist, cells, "histogram")
+            if self.hosts is not None:
+                _subtract(self.hosts, hosts, "host-count")
 
-    def on_inserts(self, ins: DataFrame) -> None:
-        """Fold one round's ins-delta into the state: a single small
-        aggregation over the freshly-written, column-pruned parquet (k-bounded
-        rows — reading it back costs footer metadata + a few columns, nothing
-        like the frontier scan this replaces). Inserted rows are QUEUED with
-        attempt 0 by construction (frontier.new_link_rows); the eligibility
-        filter is still applied verbatim for safety."""
-        from .filters import can_attempt
+    def on_inserts(self, ins: pa.Table) -> None:
+        """Add one round's ins-delta (url_id, host, priority, attempt, status
+        columns as Arrow; k-bounded rows the crawler reads once for the bloom
+        too). Inserted rows are QUEUED with attempt 0 by construction
+        (frontier.new_link_rows); the eligibility filter is still applied
+        verbatim for safety."""
+        el = ins.filter(pc.and_(
+            pc.equal(ins["status"], FR.QUEUED),
+            pc.less(ins["attempt"], self.cfg.max_attempt_count),
+        ))
+        cells, hosts = self._counts(el)
+        with self._lock:
+            if self.hist is None:
+                return
+            for key, n in cells.items():
+                self.hist[key] = self.hist.get(key, 0) + n
+            if self.hosts is not None:
+                for h, n in hosts.items():
+                    self.hosts[h] = self.hosts.get(h, 0) + n
 
-        pre = F.substring("url_id", 1, self.prefix_len)
-        el = ins.where(
-            (F.col("status") == FR.QUEUED) & can_attempt(F.col("attempt"), self.cfg)
-        )
-        track_hosts = self.hosts is not None
-        if track_hosts:
-            agg = (
-                el.select("host", "priority", "attempt", pre.alias("_p"))
-                .groupingSets(
-                    [["host"], ["priority", "attempt", "_p"]],
-                    "host", "priority", "attempt", "_p",
-                )
-                .agg(F.count(F.lit(1)).alias("_n"), F.grouping_id().alias("_gid"))
-            )
+
+def _subtract(state: dict, counts: Counter, what: str) -> None:
+    for key, n in counts.items():
+        left = state.get(key, 0) - n
+        assert left >= 0, f"incremental {what} underflow at {key!r}"
+        if left:
+            state[key] = left
         else:
-            agg = (
-                el.select("priority", "attempt", pre.alias("_p"))
-                .groupBy("priority", "attempt", "_p")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .withColumn("_gid", F.lit(8))
-            )
-        rows = agg.limit(FR._PLAN_COLLECT_LIMIT).collect()
-        if len(rows) >= FR._PLAN_COLLECT_LIMIT:
-            self.disabled = True
-            self.invalidate()
-            return
-        with self._lock:
-            if self.hist is None:
-                return
-            for r in rows:
-                if r["_gid"] == 8:
-                    key = (r["priority"], r["attempt"], r["_p"])
-                    self.hist[key] = self.hist.get(key, 0) + r["_n"]
-                elif self.hosts is not None:
-                    self.hosts[r["host"]] = self.hosts.get(r["host"], 0) + r["_n"]
+            state.pop(key, None)

@@ -17,13 +17,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Half the host's RAM (from /proc/meminfo), in MB: in local mode the
+    driver heap runs every task too. 4g where /proc/meminfo is missing."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(kb // 2048, 1024)}m"
+
+
 def get_spark(
     app: str = "dumb_crawler_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 1
     shuffle_partitions = shuffle_partitions or cores
     # SPARK_GRAFT_MASTER overrides the thread-mode master — e.g.
     # "local-cluster[8,2,6144]" runs 8 SEPARATE executor JVMs × 2 cores
@@ -39,7 +50,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem())
         # only meaningful under local-cluster masters (ignored by local[N],
         # where executor == driver); must fit inside the worker memory slice
         # given in the master spec

@@ -37,6 +37,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _footer_rows(parquet_dir: Path) -> int:
@@ -63,7 +64,25 @@ class Warehouse:
         self.spark = spark
         self.root = Path(root)
         self.max_records_per_file = max_records_per_file
+        # (table, kind) → read schema. A bare spark.read.parquet launches a
+        # schema-inference job per call (~70-80 ms on local[4]); every table
+        # keeps one schema for its lifetime, so only the first read infers.
+        self._schemas: dict[tuple[str, str], StructType] = {}
         (self.root / "_commits").mkdir(parents=True, exist_ok=True)
+
+    def pin_schema(self, table: str, kind: str, schema: StructType) -> None:
+        """Declare the read schema of ``table``'s ``kind`` dirs (snap, ins,
+        upd, delta) up front. Files written before a column existed read it
+        back as NULL instead of taking their narrower schema from inference."""
+        self._schemas[(table, kind)] = schema
+
+    def _read(self, table: str, kind: str, *paths: str) -> DataFrame:
+        schema = self._schemas.get((table, kind))
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*paths)
+        df = self.spark.read.parquet(*paths)
+        self._schemas[(table, kind)] = df.schema
+        return df
 
     # -- atomic writes -------------------------------------------------------
     def _atomic_write(self, df: DataFrame, dest: Path, keep_empty: bool = True) -> int:
@@ -95,7 +114,7 @@ class Warehouse:
         return self._atomic_write(df, self.root / table / f"snap-{round_no:08d}")
 
     def read_snapshot(self, table: str, round_no: int) -> DataFrame:
-        return self.spark.read.parquet(str(self.root / table / f"snap-{round_no:08d}"))
+        return self._read(table, "snap", str(self.root / table / f"snap-{round_no:08d}"))
 
     # -- append-only tables ----------------------------------------------------
     def append_delta(
@@ -129,7 +148,7 @@ class Warehouse:
 
     def read_delta(self, table: str, round_no: int) -> DataFrame:
         """One round's delta dir (e.g. the per-round `fetch` artifact)."""
-        return self.spark.read.parquet(str(self.root / table / f"delta-{round_no:08d}"))
+        return self._read(table, "delta", str(self.root / table / f"delta-{round_no:08d}"))
 
     def read_deltas(self, table: str, upto_round: int | None = None) -> DataFrame | None:
         """Union of committed delta dirs (≤ upto_round if given); None if empty.
@@ -145,7 +164,7 @@ class Warehouse:
         )
         if not dirs:
             return None
-        return self.spark.read.parquet(*dirs)
+        return self._read(table, "delta", *dirs)
 
     # -- round lineage / crash consistency -------------------------------------
     def commit_round(self, round_no: int, info: dict) -> None:
@@ -209,7 +228,7 @@ class Warehouse:
                 str(d) for d in tdir.glob(f"{prefix}-*")
                 if s < int(d.name.split("-")[1]) <= round_no
             )
-            return self.spark.read.parquet(*dirs) if dirs else None
+            return self._read("frontier", prefix, *dirs) if dirs else None
 
         return base, deltas("ins"), deltas("upd")
 
@@ -226,7 +245,7 @@ class Warehouse:
 
     def read_frontier_inserts(self, round_no: int) -> DataFrame | None:
         d = self.root / "frontier" / f"ins-{round_no:08d}"
-        return self.spark.read.parquet(str(d)) if d.exists() else None
+        return self._read("frontier", "ins", str(d)) if d.exists() else None
 
     # -- convenience -----------------------------------------------------------
     def read_frontier(self, round_no: int | None = None) -> DataFrame:

@@ -11,15 +11,32 @@ from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
-from dumb_crawler_spark.planner import taken_cells_from_offsets
 
 
-def test_taken_cells_from_offsets_roundtrip():
-    offsets = [(900, 0, "0a", 0), (900, 0, "0b", 5), (900, 1, "1f", 5), (10, 0, "00", 9)]
-    # planned 12 → takes: 5, 0, 4, 3 (zero-take bucket dropped)
-    assert taken_cells_from_offsets(offsets, 12) == [
-        (900, 0, "0a", 5), (900, 1, "1f", 4), (10, 0, "00", 3)
-    ]
+def test_on_dequeued_subtracts_batch_cells():
+    """The driver-side decrement: the collected batch's (priority, attempt,
+    url_id-prefix) cells and hosts leave the state exactly; emptied keys go;
+    an over-subtraction raises instead of drifting."""
+    import pyarrow as pa
+    import pytest
+
+    from dumb_crawler_spark.config import CrawlConfig, Politeness
+    from dumb_crawler_spark.planner import IncrementalPlanner
+
+    pl = IncrementalPlanner(CrawlConfig(politeness=Politeness(budget_per_host_per_round=9)))
+    pl.hist = {(900, 0, "0a1"): 5, (900, 1, "1f0"): 4, (10, 0, "000"): 3}
+    pl.hosts = {"a.com": 6, "b.com": 6}
+    batch = pa.table({
+        "url_id": ["0a1x", "0a1y", "1f0z", "000q", "000r", "000s"],
+        "priority": pa.array([900, 900, 900, 10, 10, 10], pa.int32()),
+        "attempt": pa.array([0, 0, 1, 0, 0, 0], pa.int32()),
+        "host": ["a.com", "a.com", "b.com", "b.com", "b.com", "a.com"],
+    })
+    pl.on_dequeued(batch)
+    assert pl.hist == {(900, 0, "0a1"): 3, (900, 1, "1f0"): 3}
+    assert pl.hosts == {"a.com": 3, "b.com": 3}
+    with pytest.raises(AssertionError, match="underflow"):
+        pl.on_dequeued(batch)
 
 
 def _crawl(spark, tmp_path, docs, cfg, rounds, disable_planner=False):

@@ -119,3 +119,24 @@ def test_a4_f6_counters_present(spark, tmp_path):
     assert r.counters.get("WARN_TOO_MANY_LINKS", 0) >= 1
     assert r.counters.get("ERROR_INVALID_STATUS_CODE_404", 0) >= 1
     assert any(k.startswith("ERROR_CONTENT_VALIDATION_ERROR_") for k in r.counters)
+
+
+def test_documents_corpus_null_text_matches_python_twin(spark):
+    """A NULL documents.text must derive the same spans on the Spark side
+    (docs_from_documents_table) as on its pure-Python twin
+    (py_docs_from_documents), which reads it as the empty string."""
+    from dumb_crawler_spark.corpus import docs_from_documents_table, py_docs_from_documents
+
+    rows = [(0, "x" * 150), (1, None), (2, "short"), (3, None)]
+    documents = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in docs_from_documents_table(documents).collect()
+    }
+    want = {
+        did: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
+        for did, spans in py_docs_from_documents(
+            [(str(d), t[:200] if t is not None else None) for d, t in rows], len(rows)
+        ).items()
+    }
+    assert got == want

@@ -1,8 +1,7 @@
 """The fused round planner (frontier.plan_dequeue: one grouping-sets job for
-the politeness probe + top-K histogram, plus offset reuse for the lineage
-rank) must be EXACTLY equivalent to the legacy two-job path
-(over_budget_hosts → apply_host_cap → topk_from_eligible and
-dequeue_order_index's own histogram)."""
+the politeness probe + top-K histogram) must be EXACTLY equivalent to the legacy two-job path
+(over_budget_hosts → apply_host_cap → topk_from_eligible) and to the
+driver-side lineage rank (dequeue_order_table)."""
 
 from __future__ import annotations
 
@@ -55,8 +54,10 @@ def test_plan_dequeue_matches_legacy_with_binding_cap(spark, monkeypatch):
 
 
 def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
-    """Offsets handed from the threshold walk must reproduce the contiguous
-    global D2 rank that dequeue_order_index computes from its own histogram."""
+    """The threshold walk's bucket offsets must agree with the contiguous
+    global D2 rank the crawler's driver-side lineage (dequeue_order_table)
+    assigns to the collected batch: each touched bucket starts at its walk
+    offset, and the ranks are exactly 0..planned_n-1."""
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
     fr = _skewed_frontier(spark, seed=12)
     cfg = CrawlConfig(
@@ -64,21 +65,22 @@ def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
     )
     eligible = FR.eligible_raw(fr, cfg)
     dq, offsets, planned_n = FR.plan_dequeue(eligible, cfg, 700)
-    dq = dq.cache()
-    try:
-        via_offsets = {
-            (r["seq"], r["url_id"])
-            for r in FR.dequeue_order_index(dq, 1, prefix_len=3, offsets=offsets).collect()
-        }
-        via_hist = {
-            (r["seq"], r["url_id"])
-            for r in FR.dequeue_order_index(dq, 1, prefix_len=2).collect()
-        }
-        assert via_offsets == via_hist
-        assert len(via_offsets) == dq.count() == planned_n
-        assert {s for s, _ in via_offsets} == set(range(dq.count()))
-    finally:
-        dq.unpersist()
+    batch = dq.toArrow()
+    lineage = FR.dequeue_order_table(batch, 1).to_pylist()
+    assert [r["seq"] for r in lineage] == list(range(planned_n))
+    assert batch.num_rows == planned_n
+    cls = {r["url_id"]: (r["priority"], r["attempt"]) for r in batch.to_pylist()}
+    first_seq: dict[tuple, int] = {}
+    for r in lineage:
+        p, a = cls[r["url_id"]]
+        first_seq.setdefault((p, a, r["url_id"][:3]), r["seq"])
+    assert first_seq == {(p, a, pfx): off for p, a, pfx, off in offsets}
+    # D2 order, Spark's byte order on url_id, checked against a Spark sort
+    want = [
+        r["url_id"] for r in spark.createDataFrame(batch)
+        .orderBy(F.desc("priority"), F.asc("attempt"), F.asc("url_id")).collect()
+    ]
+    assert [r["url_id"] for r in lineage] == want
 
 
 def test_plan_dequeue_no_budget_single_job(spark, monkeypatch):
