@@ -14,7 +14,7 @@ dataflow as declarative plans over the whole batch:
 Every k-bounded step is either one Spark action or pure driver work. The
 dequeued batch (≤ k rows by construction) is collected ONCE as Arrow; the
 driver derives its count, the D2 lineage (written with pyarrow), the
-planner's decrements and the plan-walk drift check from it, and the
+planner's decrements and the planned-count drift check from it, and the
 downstream plans read it back as a local relation. The counters ride writes
 that run anyway as observed metrics: the A3 fetch counters on the fetch
 write, the F2/robots counters on the ins write. The URL-seen bloom and the
@@ -106,13 +106,21 @@ class Crawler:
         self._bloom = None
         self._pages_bloom = None  # J5 pages-seen filter (incremental, _pages_split)
         self._pages_bloom_capacity = 0
-        self._host_budgets = None
-        # Incremental dequeue planning (planner.py): the per-round full
-        # eligible-set scan was the dominant serial phase (BENCH.md round 2);
-        # the planner replaces it with k-bounded driver algebra after one
-        # seed pass. Applies to the large-k threshold path; legacy fused
-        # planning remains for small-k / per-host-budget-table rounds.
-        self._planner = IncrementalPlanner(cfg)
+        # Dequeue planning (planner.py) for every round, every k and every
+        # budget form: per-round planning is k-bounded driver algebra after
+        # one seed pass, with no per-round eligible-set scan (the dominant
+        # serial phase, BENCH.md round 2). The robots crawl-delay budgets
+        # reach it as a driver dict, collected once here.
+        budgets = None
+        if self.robots is not None:
+            from .robots import host_budgets
+
+            default = cfg.politeness.budget_per_host_per_round or 2**31 - 1
+            budgets = {
+                r["host"]: r["host_budget"]
+                for r in host_budgets(self.robots, round_interval_ms, default).collect()
+            }
+        self._planner = IncrementalPlanner(cfg, budgets)
         # First-execution JIT convoy guard (round-4 finding): the links-chain
         # codegen class first executes in round 1 with EVERY core already
         # running it interpreted — on a saturated 32-thread local run the
@@ -137,11 +145,6 @@ class Crawler:
             else warmup_codegen
         )
         self._warmed = False
-        if self.robots is not None:
-            from .robots import host_budgets
-
-            default = cfg.politeness.budget_per_host_per_round or 2**31 - 1
-            self._host_budgets = host_budgets(self.robots, round_interval_ms, default).cache()
 
     @contextmanager
     def _phase(self, name: str):
@@ -181,6 +184,9 @@ class Crawler:
             last = self.wh.last_committed_round()
             if last is not None:
                 self.wh.rollback_uncommitted()
+                # planner state may include a rolled-back round's deltas:
+                # the next round seeds afresh from the committed frontier
+                self._planner = IncrementalPlanner(self.cfg, self._planner.budgets)
                 self._fr_count = self.wh.read_frontier(last).count()
                 return last
             seeds_df = self.spark.createDataFrame(
@@ -258,34 +264,17 @@ class Crawler:
         # (DumbCrawler.java:266-274).
         k = cfg.thread_count * 2
         eligible = FR.eligible_raw(frq, cfg)
-        use_inc = self._planner.applicable(k, self._host_budgets)
         with self._phase("dequeue_plan"):
-            plan = None
-            if use_inc:
-                # incremental path (planner.py): driver-held histogram +
-                # host counts → the only pre-dequeue Spark work is the small
-                # beyond-cap job on over-budget rounds. The dequeue filter
-                # itself then reads the frontier parquet directly — status/
-                # priority/attempt predicates push down to row-group stats
-                # (the snapshot is written sorted by (status, priority DESC)).
-                if not self._planner.ready:
-                    # seed pass: the ONE full grouping-sets scan per
-                    # bootstrap/resume (the legacy path paid it every round)
-                    self._planner.seed_from(eligible)
-                if self._planner.ready:
-                    plan = self._planner.plan(eligible, k)
-            if plan is None:
-                use_inc = False
-                # legacy fused planning: cache the eligible set once — the
-                # grouping-sets probe, the politeness window and the top-K
-                # all read the cache (frontier.plan_dequeue)
-                eligible = eligible.cache()
-                plan = FR.plan_dequeue(eligible, cfg, k, self._host_budgets)
-        if not use_inc:
-            # this round's transitions won't be fed back — stale state must
-            # not survive into a later incremental round
-            self._planner.invalidate()
-        dq_plan, _, planned_n = plan
+            # driver-held histogram + host counts (planner.py) → the only
+            # pre-dequeue Spark work is the large-k form's small cap job on
+            # over-budget rounds. The dequeue itself reads the frontier
+            # parquet directly — status/priority/attempt predicates push down
+            # to row-group stats (the snapshot is written sorted by (status,
+            # priority DESC)).
+            if not self._planner.ready:
+                # seed pass: the ONE full grouping-sets scan per bootstrap/resume
+                self._planner.seed_from(eligible)
+            dq_plan, _, planned_n = self._planner.plan(eligible, k)
 
         # The dequeued batch is ≤ k rows by construction: ONE Arrow collect,
         # then driver work — the count, the D2 lineage, the planner's
@@ -293,19 +282,17 @@ class Crawler:
         # relation (no executor cache, no per-step jobs over the batch).
         with self._phase("dequeue"):
             batch = dq_plan.toArrow()
-        eligible.unpersist()
         stats.dequeued = batch.num_rows
-        if planned_n is not None and planned_n != stats.dequeued:
+        if planned_n != stats.dequeued:
             raise AssertionError(
-                f"threshold dequeue drift: plan walk={planned_n}, executed={stats.dequeued}"
+                f"dequeue drift: planned={planned_n}, executed={stats.dequeued}"
             )
         if stats.dequeued == 0:
             return stats
         self.wh.append_delta_rows(
             "dequeue_order", round_no, FR.dequeue_order_table(batch, round_no)
         )
-        if use_inc:
-            self._planner.on_dequeued(batch)
+        self._planner.on_dequeued(batch)
         # one partition: the Repartition node also keeps Catalyst from folding
         # the re-tag projection into the local relation, which it would
         # evaluate row by row on the driver, interpreted (~0.5 s per 10k rows)
@@ -334,7 +321,7 @@ class Crawler:
         fetched = self.wh.read_delta("fetch", round_no)
         ok_rows = fetched.where(F.col("ok"))
 
-        self._ingest_links(round_no, ok_rows, use_inc, stats)
+        self._ingest_links(round_no, ok_rows, stats)
         if allowed_n > fcounts["PROCESSED_URLS"]:
             with self._phase("errors_write"):  # S11 errors sink, one file
                 self.wh.append_delta(
@@ -393,7 +380,7 @@ class Crawler:
         }
         return [F.count_if(cond).alias(name) for name, cond in named.items()]
 
-    def _ingest_links(self, round_no: int, ok_rows: DataFrame, use_inc: bool, stats: RoundStats) -> None:
+    def _ingest_links(self, round_no: int, ok_rows: DataFrame, stats: RoundStats) -> None:
         """Link ingest (§3.2): explode → canonicalize/tag/score → F2 (+ J6-NR
         robots verdict) → J3 anti-join → ins delta. The F2/robots counters
         ride the ins write as observed metrics, so the candidate pipeline is
@@ -443,7 +430,7 @@ class Crawler:
         if self.robots is not None:
             stats.add("ROBOTS_BLOCKED_LINKS", vals["n_blocked"])
         stats.add("DISCOVERED_URLS", inserted_n)
-        if inserted_n and (use_inc or self.use_bloom):
+        if inserted_n:
             h1, h2 = _h1h2(F.col("url_id"))
             with self._phase("ins_fold"):
                 ins = (
@@ -454,8 +441,7 @@ class Crawler:
                     )
                     .toArrow()
                 )
-            if use_inc:
-                self._planner.on_inserts(ins)
+            self._planner.on_inserts(ins)
             if self.use_bloom:
                 self._bloom = self._bloom.add_local(
                     ins["part"].to_numpy(), ins["h1"].to_numpy(), ins["h2"].to_numpy()

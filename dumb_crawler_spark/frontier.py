@@ -8,7 +8,12 @@ every mutation is a declarative plan:
 
 - insert        = left-anti join + union          (URLStore.java:127-147)
 - dequeue       = window rank / ordered limit     (URLStore.java:185-208)
-- state change  = left join + conditional select  (URLStore.java:159-183)
+- state change  = k-row update delta, composed on read by a left join +
+                  conditional select              (URLStore.java:159-183)
+
+The dequeue's plan pieces live here (eligible_raw, the plan_dequeue seed
+pass, host_cap_split, the threshold walk); planner.IncrementalPlanner
+assembles them into every round's plan from its driver-side counts.
 
 Scale notes (10^10 rows, 1000 executors):
 - Every operation here keys on ``url_id`` or groups by ``host``; both are
@@ -19,10 +24,11 @@ Scale notes (10^10 rows, 1000 executors):
 - The anti-join (J3) is the hot spot: the bloom prefilter (bloom.py) prunes
   candidate links that are definitely-unseen BEFORE the shuffle, so only
   bloom-positives (≈ duplicates + fpr) reach the exact join.
-- The dequeue top-K never sorts the whole frontier: with a politeness budget
-  it is a per-host window (partition-local after the part bucketing); the
-  global-K variant compiles to TakeOrderedAndProject (per-partition heap
-  top-K, then a K-row merge on the driver) — not a global sort.
+- The dequeue top-K never sorts the whole frontier: the politeness cap ranks
+  only the over-budget hosts' rows (a per-host window, partition-local after
+  the part bucketing); small k compiles to TakeOrderedAndProject
+  (per-partition heap top-K, then a K-row merge on the driver), large k to
+  a histogram-threshold range filter — neither is a global sort.
 """
 
 from __future__ import annotations
@@ -173,284 +179,65 @@ def new_link_rows(
     )
 
 
-def dequeue(
-    frontier: DataFrame,
-    cfg: CrawlConfig,
-    k: int | None,
-    host_budgets: DataFrame | None = None,
-) -> DataFrame:
-    """A1: priority-ordered top-K of QUEUED rows (URLStore.java:185-190).
-
-    Total order per SURVEY.md §2.8-D2: (priority DESC, attempt ASC, url_id ASC)
-    — SQLite's ORDER BY priority DESC, attempt_count leaves ties unordered;
-    this totalizes it and the oracle uses the same rule.
-
-    With a politeness budget the ranking is per-host (north rule): a window
-    PARTITION BY host caps each host's rows per round; the cross-host result
-    is then globally ordered by the same rule. Without a budget and with k
-    set, this is exactly the reference's global top-K.
-    """
-    return topk_from_eligible(eligible_capped(frontier, cfg, host_budgets), k)
-
-
 DEQUEUE_COLS = ["url_id", "url", "host", "tags", "priority", "attempt", "depth", "part"]
 
 
-def eligible_capped(
-    frontier: DataFrame, cfg: CrawlConfig, host_budgets: DataFrame | None = None
-) -> DataFrame:
-    """Stage 1 of A1: QUEUED ∧ attempt<max ∧ per-host politeness cap, column-
-    pruned to the dequeue columns (the crawler splits these steps so the raw
-    eligible set is cached once and the cap reads the cache)."""
-    raw = eligible_raw(frontier, cfg)
-    over = over_budget_hosts(raw, cfg, host_budgets)
-    return apply_host_cap(raw, cfg, over, host_budgets)
-
-
 def eligible_raw(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """QUEUED ∧ attempt<max, pruned to dequeue columns. The crawler
-    materializes THIS into the executor cache once per round (the hot
-    working set — at 10^10 rows × ~300 B that is ~3 GB/executor on 1000
-    executors), so the over-budget probe, the top-K histogram and the
-    dequeue itself never re-scan the frontier or rebuild the queued-view
-    broadcast."""
+    """QUEUED ∧ attempt<max, pruned to the dequeue columns — the set every
+    round's dequeue plan reads. No executor cache: the plan reads it straight
+    off the frontier view, so the status predicate and the threshold walk's
+    class predicates push down to the parquet scan."""
     return frontier.where(
         (F.col("status") == QUEUED) & can_attempt(F.col("attempt"), cfg)
     ).select(*DEQUEUE_COLS)
 
 
-def _host_cap_expr(cfg: CrawlConfig, host_budgets: DataFrame | None) -> Column:
-    budget = cfg.politeness.budget_per_host_per_round
-    if host_budgets is None:
-        return F.lit(budget)
-    cap = F.coalesce(F.col("host_budget"), F.lit(budget if budget is not None else 2**31 - 1))
-    return F.least(cap, F.lit(budget)) if budget is not None else cap
-
-
-def over_budget_hosts(
-    eligible: DataFrame, cfg: CrawlConfig, host_budgets: DataFrame | None = None
-) -> list[str] | None:
-    """Hosts exceeding their politeness cap — small BY CONSTRUCTION (the
-    budget exists to throttle the few hot hosts), so one collect of the
-    violators replaces per-row join machinery. Returns None when the list
-    is too large to in-line (degenerate config: budget ≪ typical host size)
-    — callers then fall back to the broadcast-join path (_cap_per_host)."""
-    budget = cfg.politeness.budget_per_host_per_round
-    if budget is None and host_budgets is None:
-        return []
-    counts = eligible.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    if host_budgets is not None:
-        counts = counts.join(F.broadcast(host_budgets), "host", "left")
-    over = counts.where(F.col("_n") > _host_cap_expr(cfg, host_budgets)).select("host")
-    rows = over.limit(10_001).collect()
-    if len(rows) > 10_000:
-        return None
-    return [r["host"] for r in rows]
-
-
-def apply_host_cap(
-    eligible: DataFrame,
-    cfg: CrawlConfig,
-    over_hosts: list[str] | None,
-    host_budgets: DataFrame | None = None,
-) -> DataFrame:
-    """Politeness budget: rank-cap ONLY the over-budget hosts; everyone else
-    passes wholesale with zero shuffle (see over_budget_hosts). NULL hosts
-    (can't occur for F1-filtered http URLs) pass uncapped."""
-    budget = cfg.politeness.budget_per_host_per_round
-    if budget is None and host_budgets is None:
-        return eligible
-    if over_hosts is None:
-        # too many violators to inline — broadcast-join form
-        if host_budgets is not None:
-            joined = eligible.join(F.broadcast(host_budgets), "host", "left")
-            return _cap_per_host(joined, _host_cap_expr(cfg, host_budgets)).drop("host_budget")
-        return _cap_per_host(eligible, F.lit(budget))
-    if not over_hosts:
-        return eligible
-    in_over = F.col("host").isin(over_hosts)
-    under = eligible.where(~in_over | F.col("host").isNull())
-    over = eligible.where(in_over)
-    if host_budgets is not None:
-        over = over.join(F.broadcast(host_budgets), "host", "left")
-    w = Window.partitionBy("host").orderBy(
-        F.desc("priority"), F.asc("attempt"), F.asc("url_id")
-    )
-    over = (
-        over.withColumn("_hr", F.row_number().over(w))
-        .where(F.col("_hr") <= _host_cap_expr(cfg, host_budgets))
-        .drop("_hr")
-    )
-    if host_budgets is not None:
-        over = over.drop("host_budget")
-    return under.unionByName(over)
-
-
-def topk_from_eligible(eligible: DataFrame, k: int | None) -> DataFrame:
-    """Stage 2 of A1: exact global top-K in D2 order over the capped set."""
-    return topk_with_offsets(eligible, k)[0]
-
-
-def topk_with_offsets(
-    eligible: DataFrame, k: int | None, hist: list[tuple] | None = None, prefix_len: int = 3
-) -> tuple[DataFrame, list[tuple] | None, int | None]:
-    """topk_from_eligible + (threshold path only) the walk's bucket-offset
-    table (priority, attempt, url_id-prefix, global D2 offset) and the EXACT
-    planned row count, which the crawler checks against the collected batch
-    (walk-vs-executed drift). ``hist`` lets the caller hand in a pre-collected
-    (priority, attempt, prefix, count) histogram (plan_dequeue's fused
-    probe) so the threshold path launches ZERO extra aggregation jobs."""
-    if k is None:
-        return eligible.select(*DEQUEUE_COLS), None, None
-    if k <= _TOPK_THRESHOLD_CUTOFF:
-        # TakeOrderedAndProject: per-partition heap top-k, k-row driver merge
-        out = eligible.orderBy(F.desc("priority"), F.asc("attempt"), F.asc("url_id"))
-        return out.limit(k).select(*DEQUEUE_COLS), None, None
-    df, offsets, taken = _dequeue_threshold_ex(eligible, k, prefix_len, hist=hist)
-    return df.select(*DEQUEUE_COLS), offsets, taken
-
-
-# driver-memory bound on the fused probe's collect: class histogram
-# (classes × 16^prefix_len) + over-budget hosts (≤ _OVER_HOST_INLINE_MAX);
-# hitting the limit falls back to the legacy two-job path.
-_PLAN_COLLECT_LIMIT = 500_000
-_OVER_HOST_INLINE_MAX = 10_000
-
-
 def plan_dequeue(
-    eligible: DataFrame,
-    cfg: CrawlConfig,
-    k: int | None,
-    host_budgets: DataFrame | None = None,
-    prefix_len: int = 3,
-) -> tuple[DataFrame, list[tuple] | None, int | None]:
-    """A1 round planner: ONE grouping-sets aggregation over the (cached)
-    eligible set yields BOTH driver-side inputs the round needs — the
-    over-budget host list (politeness probe) and the (priority, attempt,
-    url_id-prefix) class histogram (large-k threshold walk). The legacy path
-    ran these as two separate full passes; at 10^10 rows each pass is a full
-    frontier scan, and per-round driver round-trips are exactly the serial
-    fraction that caps N→4N scaling (BENCH.md).
-
-    Exactness with a binding cap: the raw histogram counts rows the per-host
-    cap will remove, so a second SMALL job aggregates the beyond-cap rows of
-    just the over-budget hosts (the skewed few) and the driver subtracts —
-    capped_hist = raw_hist − beyond_hist. No full-eligible second pass ever.
-
-    Returns (dq plan, bucket-offset table | None, exact planned row count |
-    None) — see topk_with_offsets.
-    """
-    budget = cfg.politeness.budget_per_host_per_round
-    need_hosts = budget is not None or host_budgets is not None
-    need_hist = k is not None and k > _TOPK_THRESHOLD_CUTOFF
-    if not need_hosts:
-        return topk_with_offsets(eligible, k, prefix_len=prefix_len)
-
-    pre = F.substring("url_id", 1, prefix_len)
-    proj = eligible.select("host", "priority", "attempt", pre.alias("_p"))
-    if need_hist:
+    eligible: DataFrame, prefix_len: int = 3, hosts: bool = True
+) -> tuple[dict[tuple[int, int, str], int], dict[str, int] | None]:
+    """The dequeue planner's seed pass (planner.IncrementalPlanner.seed_from):
+    ONE grouping-sets aggregation over the eligible set yields both driver-
+    side tables — the (priority, attempt, url_id-prefix) class histogram and,
+    when ``hosts``, the per-host eligible counts. It runs once per bootstrap
+    or resume; every later round updates both tables from its k-row deltas."""
+    proj = eligible.select(
+        "host", "priority", "attempt", F.substring("url_id", 1, prefix_len).alias("_p")
+    )
+    if hosts:
         # grouping_id: 7 = host slice (priority/attempt/_p aggregated away),
-        # 8 = class slice (host aggregated away) — probed constants, pinned
-        # by test_dequeue_threshold.
+        # 8 = class slice (host aggregated away)
         agg = proj.groupingSets(
             [["host"], ["priority", "attempt", "_p"]], "host", "priority", "attempt", "_p"
         ).agg(F.count(F.lit(1)).alias("_n"), F.grouping_id().alias("_gid"))
-        host_slice = F.col("_gid") == 7
     else:
-        agg = proj.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-        agg = agg.withColumn("_gid", F.lit(7))
-        host_slice = F.lit(True)
-    if host_budgets is not None:
-        agg = agg.join(F.broadcast(host_budgets), "host", "left")
-    # host rows are pre-filtered to the over-budget few BEFORE collect —
-    # same bail-out contract as over_budget_hosts
-    agg = agg.where(~host_slice | (F.col("_n") > _host_cap_expr(cfg, host_budgets)))
-    rows = agg.limit(_PLAN_COLLECT_LIMIT).collect()
-
-    over_rows = [r for r in rows if r["_gid"] == 7]
-    hist = [(r["priority"], r["attempt"], r["_p"], r["_n"]) for r in rows if r["_gid"] == 8]
-    if len(rows) >= _PLAN_COLLECT_LIMIT or len(over_rows) > _OVER_HOST_INLINE_MAX:
-        # degenerate config (budget ≪ typical host size): broadcast-join cap
-        # for every host, threshold walk collects its own capped histogram
-        capped = apply_host_cap(eligible, cfg, None, host_budgets)
-        return topk_with_offsets(capped, k, prefix_len=prefix_len)
-    over_hosts = [r["host"] for r in over_rows]
-    if not over_hosts:
-        return topk_with_offsets(
-            eligible, k, hist=hist if need_hist else None, prefix_len=prefix_len
-        )
-    capped, beyond = host_cap_split(eligible, cfg, over_hosts, host_budgets)
-    if not need_hist:
-        return topk_with_offsets(capped, k, prefix_len=prefix_len)
-    removed = beyond.groupBy("priority", "attempt", pre.alias("_p")).count().collect()
-    cells = {(p, a, pfx): n for p, a, pfx, n in hist}
-    for r in removed:
-        key = (r["priority"], r["attempt"], r["_p"])
-        cells[key] -= r["count"]
-        assert cells[key] >= 0, f"capped histogram underflow at {key}"
-    capped_hist = [(p, a, pfx, n) for (p, a, pfx), n in cells.items() if n > 0]
-    return topk_with_offsets(capped, k, hist=capped_hist, prefix_len=prefix_len)
+        agg = proj.groupBy("priority", "attempt", "_p").agg(
+            F.count(F.lit(1)).alias("_n")
+        ).withColumn("_gid", F.lit(8))
+    rows = agg.collect()
+    hist = {(r["priority"], r["attempt"], r["_p"]): r["_n"] for r in rows if r["_gid"] == 8}
+    counts = {r["host"]: r["_n"] for r in rows if r["_gid"] == 7} if hosts else None
+    return hist, counts
 
 
 def host_cap_split(
-    eligible: DataFrame,
-    cfg: CrawlConfig,
-    over_hosts: list[str],
-    host_budgets: DataFrame | None = None,
+    eligible: DataFrame, over_hosts: list[str], cap: Column
 ) -> tuple[DataFrame, DataFrame]:
-    """(capped, beyond): rank the over-budget hosts' rows once; ``capped`` is
-    the politeness-capped eligible set (under-budget hosts pass wholesale,
-    zero shuffle of their rows), ``beyond`` the rows the cap removed (the
-    planner's histogram correction). Same semantics as apply_host_cap —
-    equivalence pinned by tests."""
+    """(capped, beyond): the per-host politeness cap as a row_number window
+    over ONLY the over-budget hosts' rows — under-budget hosts pass
+    wholesale, zero shuffle of their rows. ``capped`` is the capped eligible
+    set, ``beyond`` the rows the cap removed (the threshold walk's histogram
+    correction). ``cap`` is the row's host budget, an expression over
+    ``host``. NULL hosts (can't occur for F1-filtered http URLs) pass
+    uncapped."""
     in_over = F.col("host").isin(over_hosts)
     under = eligible.where(~in_over | F.col("host").isNull())
-    over = eligible.where(in_over)
-    if host_budgets is not None:
-        over = over.join(F.broadcast(host_budgets), "host", "left")
     w = Window.partitionBy("host").orderBy(
         F.desc("priority"), F.asc("attempt"), F.asc("url_id")
     )
-    ranked = over.withColumn("_hr", F.row_number().over(w))
-    cap = _host_cap_expr(cfg, host_budgets)
-    drop_cols = ["_hr"] + (["host_budget"] if host_budgets is not None else [])
-    kept = ranked.where(F.col("_hr") <= cap).drop(*drop_cols)
-    beyond = ranked.where(F.col("_hr") > cap).drop(*drop_cols)
+    ranked = eligible.where(in_over).withColumn("_hr", F.row_number().over(w))
+    kept = ranked.where(F.col("_hr") <= cap).drop("_hr")
+    beyond = ranked.where(F.col("_hr") > cap).drop("_hr")
     return under.unionByName(kept), beyond
-
-
-def _cap_per_host(eligible: DataFrame, cap: Column) -> DataFrame:
-    """Politeness budget: top-``cap`` rows per host in D2 order.
-
-    Naive form is a row_number window PARTITION BY host — a full-row shuffle
-    + sort of every eligible row every round. But almost every host is UNDER
-    its budget (the budget exists to throttle the few hot hosts), so: count
-    rows per host (map-side partial agg, tiny byte volume), broadcast the
-    over-budget host list, pass under-budget hosts wholesale (scan-only,
-    zero shuffle of their rows), and run the ranking window ONLY on the
-    over-budget subset. Skew-defusing for the window itself comes free: the
-    subset is exactly the skewed hosts, already isolated. ``cap`` must be an
-    expression over columns available on ``eligible`` (or a literal).
-    NULL hosts (can't occur for F1-filtered http URLs) pass uncapped — null
-    join keys never match the over-host list."""
-    per_host = eligible.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    over_hosts = F.broadcast(
-        eligible.select("host", cap.alias("_cap")).distinct()
-        .join(per_host, "host")
-        .where(F.col("_n") > F.col("_cap"))
-        .select("host")
-    )
-    under = eligible.join(over_hosts, "host", "left_anti")
-    w = Window.partitionBy("host").orderBy(
-        F.desc("priority"), F.asc("attempt"), F.asc("url_id")
-    )
-    over = (
-        eligible.join(over_hosts, "host", "left_semi")
-        .withColumn("_hr", F.row_number().over(w))
-        .where(F.col("_hr") <= cap)
-        .drop("_hr")
-    )
-    return under.unionByName(over)
 
 
 # Above this k, TakeOrderedAndProject's single-task merge of
@@ -595,108 +382,6 @@ def retag_dequeued(dequeued: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return fresh.withColumn("_allowed", is_url_allowed(F.col("url"), F.col("tags"), cfg))
 
 
-def mark_taken(frontier: DataFrame, dequeued: DataFrame, round_no: int) -> DataFrame:
-    """status QUEUED→PROCESSING + taken_round (URLStore.java:191-206).
-    Iceberg: MERGE … WHEN MATCHED UPDATE; locally left join + conditional."""
-    # broadcast the k-bounded update side — the frontier (10^10 rows) must
-    # never shuffle for a status flip
-    taken = F.broadcast(dequeued.select("url_id", F.lit(True).alias("_taken")))
-    return (
-        frontier.join(taken, "url_id", "left")
-        .withColumn(
-            "status",
-            F.when(F.col("_taken"), F.lit(PROCESSING).cast("tinyint")).otherwise(F.col("status")),
-        )
-        .withColumn(
-            "taken_round",
-            F.when(F.col("_taken"), F.lit(round_no)).otherwise(F.col("taken_round")),
-        )
-        .drop("_taken")
-    )
-
-
-def mark_completed(frontier: DataFrame, results: DataFrame, cfg: CrawlConfig, round_no: int) -> DataFrame:
-    """C3: completion MERGE (URLStore.java:159-183).
-
-    ``results`` needs columns: url_id, tags (fresh, written back like the
-    reference's markProcessed), ok (bool), error (null when ok).
-    Semantics: status → PROCESSED(2) | FAILED(3); FAILED is terminal —
-    CrawlingException.shouldRetry is never used to requeue
-    (CrawlingException.java:11, SURVEY.md §2.8-C3). attempt += 1 always.
-    """
-    upd = F.broadcast(  # k-bounded update side; frontier stays un-shuffled
-        results.select(
-            "url_id",
-            F.col("tags").alias("_new_tags"),
-            F.when(F.col("ok"), F.lit(PROCESSED)).otherwise(F.lit(FAILED)).cast("tinyint").alias("_new_status"),
-            F.col("error").alias("_new_error"),
-        )
-    )
-    out = (
-        frontier.join(upd, "url_id", "left")
-        .withColumn("status", F.coalesce(F.col("_new_status"), F.col("status")))
-        .withColumn("tags", F.when(F.col("_new_status").isNotNull(), F.col("_new_tags")).otherwise(F.col("tags")))
-        .withColumn("error", F.when(F.col("_new_status").isNotNull(), F.col("_new_error")).otherwise(F.col("error")))
-        .withColumn(
-            "attempt",
-            F.when(F.col("_new_status").isNotNull(), F.col("attempt") + 1).otherwise(F.col("attempt")),
-        )
-        .withColumn(
-            "completed_round",
-            F.when(F.col("_new_status").isNotNull(), F.lit(round_no)).otherwise(F.col("completed_round")),
-        )
-        .drop("_new_tags", "_new_status", "_new_error")
-    )
-    return out
-
-
-def apply_round_updates(
-    frontier: DataFrame, dequeued: DataFrame, results: DataFrame, cfg: CrawlConfig, round_no: int
-) -> DataFrame:
-    """mark_taken + mark_completed fused into ONE frontier join (one broadcast
-    of the k-bounded update side instead of two full-frontier passes).
-
-    Exact same semantics: every dequeued row → PROCESSING + taken_round;
-    rows with a result → PROCESSED/FAILED + fresh tags + error + attempt+1 +
-    completed_round; dequeued-but-filtered rows stay PROCESSING (the
-    reference's leak, URLStore.java:191-206 + DumbCrawler.java:275-279).
-    Equivalence to the two-step path is pinned in tests.
-    """
-    upd = F.broadcast(
-        dequeued.select("url_id")
-        .join(
-            results.select(
-                "url_id", F.col("tags").alias("_nt"), "ok", F.col("error").alias("_ne")
-            ),
-            "url_id",
-            "left",
-        )
-        .select(
-            "url_id",
-            F.when(F.col("ok").isNull(), F.lit(PROCESSING))
-            .when(F.col("ok"), F.lit(PROCESSED))
-            .otherwise(F.lit(FAILED))
-            .cast("tinyint")
-            .alias("_ns"),
-            "_nt",
-            "_ne",
-            F.col("ok").isNotNull().alias("_done"),
-        )
-    )
-    j = frontier.join(upd, "url_id", "left")
-    touched = F.col("_ns").isNotNull()
-    done = F.coalesce(F.col("_done"), F.lit(False))
-    return (
-        j.withColumn("status", F.coalesce(F.col("_ns"), F.col("status")))
-        .withColumn("taken_round", F.when(touched, F.lit(round_no)).otherwise(F.col("taken_round")))
-        .withColumn("tags", F.when(done, F.col("_nt")).otherwise(F.col("tags")))
-        .withColumn("error", F.when(done, F.col("_ne")).otherwise(F.col("error")))
-        .withColumn("attempt", F.when(done, F.col("attempt") + 1).otherwise(F.col("attempt")))
-        .withColumn("completed_round", F.when(done, F.lit(round_no)).otherwise(F.col("completed_round")))
-        .drop("_ns", "_nt", "_ne", "_done")
-    )
-
-
 # -- merge-on-read round deltas (Iceberg MoR analog; SURVEY.md §4 "Iceberg
 # MERGE churn" risk) -----------------------------------------------------------
 #
@@ -743,9 +428,10 @@ def round_update_delta(dequeued: DataFrame, results: DataFrame, round_no: int) -
 
 
 def compose_frontier(base: DataFrame, inserts: DataFrame | None, upds: DataFrame | None) -> DataFrame:
-    """Reconcile base ∪ inserts with the update deltas (exact equivalent of
-    the old full-rewrite apply_round_updates path; equivalence pinned by the
-    golden tests). The upd side is k×rounds rows — broadcast."""
+    """Reconcile base ∪ inserts with the update deltas — the same rows a
+    full rewrite of the frontier per round would give (that rewrite is the
+    reference in tests/test_frontier.py). The upd side is k×rounds rows —
+    broadcast."""
     full = base if inserts is None else base.unionByName(inserts)
     if upds is None:
         return full
@@ -793,17 +479,3 @@ def status_counts(frontier: DataFrame) -> DataFrame:
     """A2: SELECT status, count(*) GROUP BY status (URLStore.java:41-52) —
     partial/final hash agg, no full shuffle of data, only of counts."""
     return frontier.groupBy("status").count()
-
-
-def reset_orphans(frontier: DataFrame) -> DataFrame:
-    """C2: PROCESSING → QUEUED on resume (URLStore.java:54-58). With the
-    commit protocol in storage.py this is normally a no-op (uncommitted
-    rounds vanish wholesale), but it also heals snapshots that committed a
-    'taken' state mid-round (the crawler commits only at round end, so only
-    reference-imported or hand-edited state ever needs it)."""
-    orphan = F.col("status") == PROCESSING
-    return frontier.select(
-        *[c for c in frontier.columns if c not in ("status", "taken_round")],
-        F.when(orphan, F.lit(QUEUED).cast("tinyint")).otherwise(F.col("status")).alias("status"),
-        F.when(orphan, F.lit(None).cast("int")).otherwise(F.col("taken_round")).alias("taken_round"),
-    ).select(*frontier.columns)

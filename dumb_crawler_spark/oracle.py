@@ -209,10 +209,16 @@ class OracleResult:
 class OracleCrawler:
     """Batch-round crawl identical to crawler.py's plan, in plain Python."""
 
-    def __init__(self, cfg: CrawlConfig, docs: dict[str, list[dict]]):
+    def __init__(
+        self,
+        cfg: CrawlConfig,
+        docs: dict[str, list[dict]],
+        host_budgets: dict[str, int] | None = None,
+    ):
         self.cfg = cfg
         self.kernel = Kernel(cfg)
         self.docs = docs
+        self.host_budgets = host_budgets or {}  # robots crawl-delay budgets
         self.r = OracleResult()
 
     # -- frontier ops ---------------------------------------------------------
@@ -251,18 +257,10 @@ class OracleCrawler:
             e for e in self.r.frontier.values()
             if e.status == QUEUED and e.attempt < self.cfg.max_attempt_count
         ]
-        budget = self.cfg.politeness.budget_per_host_per_round
-        if budget is not None:
-            by_host: dict[str | None, list[Entry]] = {}
-            for e in elig:
-                by_host.setdefault(e.host, []).append(e)
-            elig = []
-            for host_entries in by_host.values():
-                host_entries.sort(key=lambda e: (-e.priority, e.attempt, e.url_id))
-                elig.extend(host_entries[:budget])
-        elig.sort(key=lambda e: (-e.priority, e.attempt, e.url_id))  # D2
-        k = self._round_k()
-        out = elig if k is None else elig[:k]
+        out = capped_topk(
+            elig, self._round_k(), self.cfg.politeness.budget_per_host_per_round,
+            self.host_budgets,
+        )
         for seq, e in enumerate(out):
             e.status = PROCESSING
             e.taken_round = round_no
@@ -371,6 +369,24 @@ class OracleCrawler:
                 break
         self.r.rounds_run = rnd
         return self.r
+
+
+def capped_topk(elig: list, k: int | None, budget: int | None, host_budgets: dict) -> list:
+    """Sort, then cap: the eligible rows in D2 order (priority DESC, attempt
+    ASC, url_id ASC), each host keeping its first ``cap`` rows, cut at k. A
+    host's cap is ``host_budgets.get(host, budget)``, never above ``budget``;
+    None means uncapped. Rows need priority/attempt/url_id/host attributes
+    (oracle entries or Spark Rows)."""
+    used: Counter = Counter()
+    out = []
+    for e in sorted(elig, key=lambda e: (-e.priority, e.attempt, e.url_id)):
+        cap = host_budgets.get(e.host, budget)
+        if budget is not None:
+            cap = min(cap, budget)
+        if cap is None or used[e.host] < cap:
+            used[e.host] += 1
+            out.append(e)
+    return out if k is None else out[:k]
 
 
 def _neg(s: str) -> tuple:

@@ -1,13 +1,10 @@
-"""Incremental dequeue planning — the round planner without the per-round
-full-frontier pass (SURVEY.md §2.6-A1; reference dequeue URLStore.java:185-208).
+"""Incremental dequeue planning — every crawl round's planner, with no
+per-round full-frontier pass (SURVEY.md §2.6-A1; reference dequeue
+URLStore.java:185-208).
 
-round 2 measured the fused planning job (frontier.plan_dequeue: one
-grouping-sets aggregation over the whole eligible set) as the dominant
-SERIAL phase of a crawl round — the wall barely shrank from local[2] to
-local[8], capping N→4N scaling efficiency (BENCH.md). The fix is algebraic:
-the eligible set changes only by k-bounded deltas per round, so the planner's
-two driver-side inputs can be maintained incrementally instead of re-derived
-from a full scan:
+A round's plan needs two driver-side inputs, and the eligible set changes
+only by k-bounded deltas per round, so both are maintained incrementally
+instead of re-derived from a full scan:
 
 - ``hist`` — the RAW (priority, attempt, url_id-prefix) class histogram of
   QUEUED ∧ attempt<max rows. Transitions are exact integer algebra:
@@ -20,27 +17,34 @@ from a full scan:
   (QUEUED → PROCESSING-leak | PROCESSED | FAILED, never back — SURVEY.md
   §2.8-C3), so dequeued rows leave the eligible set permanently and the
   decrement is exact; the only re-queue paths (resume orphan reset, --refetch)
-  reset the planner wholesale.
-- ``hosts`` — per-host eligible counts for the politeness probe, maintained
-  only when a budget is configured, by the same algebra over the same two
-  driver-side tables.
+  start from a fresh planner.
+- ``hosts`` — per-host eligible counts, kept whenever any cap exists (the
+  global politeness budget or a robots crawl-delay budget table), by the
+  same algebra over the same two driver-side tables. A host's cap is
+  ``budgets.get(host, budget)``; the budget table is a driver dict with one
+  row per robots host that has a crawl delay, collected once by the crawler.
+  Each round the over-budget hosts fall out of ``hosts`` with no Spark job.
 
-The full grouping-sets pass now runs ONCE — at seed time (first round after
-bootstrap/resume) — instead of every round. The politeness cap still needs a
-small per-round job (the beyond-cap rows of the FEW over-budget hosts depend
-on per-host ranking, not on any incrementally-maintainable total), but that
-job scans only the over-budget hosts' rows — the skewed few, by construction.
+The full grouping-sets pass (frontier.plan_dequeue) runs ONCE — at seed
+time, the first round after bootstrap/resume — and every round, for every k
+and every budget form, is planned here; there is no fallback planner. The
+plan form follows k (frontier._TOPK_THRESHOLD_CUTOFF):
 
-Driver-memory honesty: the seeded host table is the collect-bounded piece
-(≤ _PLAN_COLLECT_LIMIT rows). A frontier with more distinct hosts than that
-disables the planner (fall back to the fused per-round job); at the
-1000-executor design point the same algebra would instead maintain ``hosts``
-as a small state TABLE merged with the k-bounded per-round deltas — the
-driver dict is the sandbox-scale realization, not the algorithm.
+- k ≤ cutoff: the over-budget hosts' rows are capped by the per-host window
+  (frontier.host_cap_split), then a TakeOrdered top-k. No histogram needed.
+- k > cutoff: the histogram threshold walk; the cap is the cell algebra of
+  _capped_by_algebra, or the window plus a beyond-cells correction past
+  _ALGEBRA_OVER_MAX over-budget hosts.
+
+Driver-state bound: one ``hosts`` entry per eligible host when a cap
+exists, plus ≤ classes × 16^prefix_len ``hist`` cells. At the
+1000-executor design point the same algebra would maintain ``hosts`` as a
+small state TABLE merged with the k-bounded per-round deltas — the driver
+dict is the single-machine realization, not the algorithm.
 
 Drift safety: every subtraction asserts non-negativity, and the crawler
-cross-checks the plan walk's row count against the collected batch each round;
-any violation raises (loudly) rather than silently degrading order.
+cross-checks each plan's exact row count against the collected batch every
+round; any violation raises (loudly) rather than silently degrading order.
 """
 
 from __future__ import annotations
@@ -50,7 +54,7 @@ from collections import Counter
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import frontier as FR
@@ -62,126 +66,93 @@ Cell = tuple[int, int, str]  # (priority, attempt, url_id-prefix)
 # edge subplan PER over-budget host — past a few dozen hosts the expression
 # tree's Catalyst analysis/codegen cost dominates the window sort it avoids
 # (VERDICT r03 item 3: a few hundred over hosts compiled a multi-thousand-
-# branch CASE well before the 10k disable bail). Beyond this cap the planner
-# keeps its driver-state algebra but caps via frontier.host_cap_split's
-# per-host window — which sorts ONLY the over hosts' rows — and corrects the
-# histogram with one small beyond-cells aggregation.
+# branch CASE). Beyond this cap the planner keeps its driver-state algebra
+# but caps via frontier.host_cap_split's per-host window — which sorts ONLY
+# the over hosts' rows — and corrects the histogram with one small
+# beyond-cells aggregation.
 _ALGEBRA_OVER_MAX = 64
 
 
 class IncrementalPlanner:
-    """Driver-side planning state for the large-k (threshold) dequeue path.
+    """Driver-side planning state for every round's dequeue.
 
     Lifecycle per crawl:
       seed_from(eligible)   -- once, full grouping-sets pass
-      plan(eligible, k)     -- per round: in-memory walk (+ the small
-                               beyond-cap job when a host is over budget)
+      plan(eligible, k)     -- per round: over-budget hosts from ``hosts``,
+                               then the k-selected plan form (module doc)
       on_dequeued(batch)    -- subtract the dequeued batch's cells/hosts
       on_inserts(ins)       -- add the round's ins-delta cells/hosts
-    Any bail (collect limit, unexpected shape) disables the planner; the
-    crawler then uses the legacy fused plan_dequeue for the round.
+    ``host_budgets`` is the robots crawl-delay budget table as a driver dict
+    (host → budget); a host's cap is ``budgets.get(host, budget)``, where
+    ``budget`` is the config's global per-host budget (None = uncapped).
+
+    A plan selects A1 (URLStore.java:185-190) in the SURVEY.md §2.8-D2
+    total order (priority DESC, attempt ASC, url_id ASC — SQLite's ORDER BY
+    leaves ties unordered; the oracle uses the same rule): each host keeps
+    its first ``cap`` eligible rows in that order, then the first k overall.
     """
 
-    def __init__(self, cfg: CrawlConfig, prefix_len: int = 3):
+    def __init__(
+        self, cfg: CrawlConfig, host_budgets: dict[str, int] | None = None, prefix_len: int = 3
+    ):
         self.cfg = cfg
         self.prefix_len = prefix_len
+        self.budget = cfg.politeness.budget_per_host_per_round
+        # a table entry never exceeds the global budget
+        self.budgets = {
+            h: b if self.budget is None else min(b, self.budget)
+            for h, b in (host_budgets or {}).items()
+        }
         self.hist: dict[Cell, int] | None = None
         self.hosts: dict[str, int] | None = None
-        self.disabled = False
         self._lock = threading.Lock()  # guards hist/hosts against concurrent callers
-
-    # -- applicability ---------------------------------------------------------
-    def applicable(self, k: int | None, host_budgets: DataFrame | None) -> bool:
-        """Incremental planning covers the bench/scale path: large-k threshold
-        dequeue with at most the global politeness budget. Per-host budget
-        TABLES (the robots crawl-delay path) would need budget values
-        driver-side — those rounds use the legacy fused planner."""
-        return (
-            not self.disabled
-            and host_budgets is None
-            and k is not None
-            and k > FR._TOPK_THRESHOLD_CUTOFF
-        )
 
     @property
     def ready(self) -> bool:
-        return self.hist is not None and not self.disabled
+        return self.hist is not None
 
-    def invalidate(self) -> None:
-        self.hist = None
-        self.hosts = None
+    def _cap(self, host: str | None) -> int | None:
+        return self.budgets.get(host, self.budget)
 
     # -- seed (the one full pass) ---------------------------------------------
-    def seed_from(self, eligible: DataFrame) -> bool:
+    def seed_from(self, eligible: DataFrame) -> None:
         """ONE grouping-sets aggregation over the eligible set yields both
-        state dicts (class histogram + per-host counts). Unlike
-        frontier.plan_dequeue's probe this collects ALL host rows (the state
-        must cover under-budget hosts too) — hence the honesty bail above."""
-        pre = F.substring("url_id", 1, self.prefix_len)
-        track_hosts = self.cfg.politeness.budget_per_host_per_round is not None
-        if track_hosts:
-            agg = (
-                eligible.select("host", "priority", "attempt", pre.alias("_p"))
-                .groupingSets(
-                    [["host"], ["priority", "attempt", "_p"]],
-                    "host", "priority", "attempt", "_p",
-                )
-                .agg(F.count(F.lit(1)).alias("_n"), F.grouping_id().alias("_gid"))
-            )
-        else:
-            agg = (
-                eligible.select("priority", "attempt", pre.alias("_p"))
-                .groupBy("priority", "attempt", "_p")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .withColumn("_gid", F.lit(8))
-            )
-        rows = agg.limit(FR._PLAN_COLLECT_LIMIT).collect()
-        if len(rows) >= FR._PLAN_COLLECT_LIMIT:
-            self.disabled = True
-            return False
+        state dicts (class histogram + per-host counts when a cap exists).
+        Called through the module attribute, so a wrapper installed on
+        frontier.plan_dequeue sees it."""
+        track_hosts = self.budget is not None or bool(self.budgets)
+        hist, hosts = FR.plan_dequeue(eligible, self.prefix_len, hosts=track_hosts)
         with self._lock:
-            self.hist = {
-                (r["priority"], r["attempt"], r["_p"]): r["_n"]
-                for r in rows
-                if r["_gid"] == 8
-            }
-            self.hosts = (
-                {r["host"]: r["_n"] for r in rows if r["_gid"] == 7} if track_hosts else None
-            )
-        return True
+            self.hist, self.hosts = hist, hosts
 
     # -- per-round plan ---------------------------------------------------------
-    def plan(
-        self, eligible: DataFrame, k: int
-    ) -> tuple[DataFrame, list[tuple], int] | None:
-        """Same contract as frontier.plan_dequeue's threshold path, but the
-        raw histogram and the over-budget host list come from driver state —
-        the only Spark work before the dequeue itself is the small beyond-cap
-        correction job over the over-budget hosts' rows (skipped entirely
-        when no host exceeds its budget)."""
+    def plan(self, eligible: DataFrame, k: int) -> tuple[DataFrame, list[tuple] | None, int]:
+        """(dequeue plan, threshold walk's bucket offsets | None, EXACT planned
+        row count). The raw histogram and the over-budget host list come from
+        driver state; the only Spark work before the dequeue itself is the
+        small cap job of the large-k form on rounds with an over-budget host."""
         assert self.ready
-        budget = self.cfg.politeness.budget_per_host_per_round
         with self._lock:  # snapshot under the lock (ADVICE r03 lock discipline)
             hist = dict(self.hist)
-            hosts = dict(self.hosts) if self.hosts is not None else None
-        over = [h for h, n in hosts.items() if n > budget] if budget is not None else []
-        if len(over) > FR._OVER_HOST_INLINE_MAX:
-            self.disabled = True
-            return None
+            hosts = dict(self.hosts) if self.hosts is not None else {}
+        over = [
+            h for h, n in hosts.items()
+            if h is not None and self._cap(h) is not None and n > self._cap(h)
+        ]
+        if k <= FR._TOPK_THRESHOLD_CUTOFF:
+            capped = FR.host_cap_split(eligible, over, self._cap_col(over))[0] if over else eligible
+            # TakeOrderedAndProject: per-partition heap top-k, k-row driver merge
+            out = capped.orderBy(F.desc("priority"), F.asc("attempt"), F.asc("url_id"))
+            n_capped = sum(hist.values()) - sum(hosts[h] - self._cap(h) for h in over)
+            return out.limit(k).select(*FR.DEQUEUE_COLS), None, min(k, n_capped)
         hist_list = [(p, a, pfx, n) for (p, a, pfx), n in hist.items()]
         if over and len(over) <= _ALGEBRA_OVER_MAX:
-            capped, hist_list = self._capped_by_algebra(eligible, over, budget, hist, hosts)
-            if capped is None:
-                self.disabled = True
-                return None
+            capped, hist_list = self._capped_by_algebra(eligible, over, hist, hosts)
         elif over:
             # too many over hosts for inline CASE/edge subplans — per-host
             # window over ONLY the over set (the skewed few), one beyond-
             # cells aggregation corrects the histogram
             capped, hist_list = self._capped_by_window(eligible, over, hist)
-            if capped is None:
-                self.disabled = True
-                return None
         else:
             capped = eligible
         df, offsets, taken = FR._dequeue_threshold_ex(
@@ -189,24 +160,30 @@ class IncrementalPlanner:
         )
         return df.select(*FR.DEQUEUE_COLS), offsets, taken
 
+    def _cap_col(self, over: list[str]) -> Column:
+        """The over hosts' caps as one expression over ``host``: a literal
+        when they share one cap, else one isin branch per distinct cap (few:
+        the global budget plus the distinct crawl-delay budgets)."""
+        by_cap: dict[int, list[str]] = {}
+        for h in over:
+            by_cap.setdefault(self._cap(h), []).append(h)
+        *rest, (last, _) = sorted(by_cap.items(), key=lambda c: len(c[1]))
+        col = F.lit(last)
+        for c, hs in rest:
+            col = F.when(F.col("host").isin(hs), c).otherwise(col)
+        return col
+
     def _capped_by_window(
         self, eligible: DataFrame, over: list[str], hist: dict[Cell, int]
-    ) -> tuple[DataFrame | None, list[tuple] | None]:
+    ) -> tuple[DataFrame, list[tuple]]:
         """Cap form for MANY over-budget hosts (> _ALGEBRA_OVER_MAX): the
         per-host row_number window of frontier.host_cap_split, restricted to
         the over hosts' rows — bounded plan size regardless of host count.
         The histogram correction is one aggregation over the beyond-cap rows
         (cells only, ≤ classes × 16^prefix_len — never per-host)."""
-        capped, beyond = FR.host_cap_split(eligible, self.cfg, over, None)
+        capped, beyond = FR.host_cap_split(eligible, over, self._cap_col(over))
         pre = F.substring("url_id", 1, self.prefix_len)
-        removed = (
-            beyond.groupBy("priority", "attempt", pre.alias("_p"))
-            .count()
-            .limit(FR._PLAN_COLLECT_LIMIT)
-            .collect()
-        )
-        if len(removed) >= FR._PLAN_COLLECT_LIMIT:
-            return None, None
+        removed = beyond.groupBy("priority", "attempt", pre.alias("_p")).count().collect()
         cells = dict(hist)
         for r in removed:
             key = (r["priority"], r["attempt"], r["_p"])
@@ -218,10 +195,9 @@ class IncrementalPlanner:
         self,
         eligible: DataFrame,
         over: list[str],
-        budget: int,
         hist: dict[Cell, int],
         hosts: dict[str, int],
-    ) -> tuple[DataFrame | None, list[tuple] | None]:
+    ) -> tuple[DataFrame, list[tuple]]:
         """Politeness cap over the over-budget hosts WITHOUT the per-host
         row_number window (a single-reducer sort of every hot host's rows —
         the measured serial phase of the round). Instead: ONE parallel
@@ -232,10 +208,10 @@ class IncrementalPlanner:
         per host is topped off with a tiny TakeOrdered edge. Within a class,
         ordering by (prefix, url_id) equals ordering by url_id — prefix
         truncation preserves lexicographic order — so the result is
-        row-for-row identical to the window form (pinned by the
-        incremental-vs-legacy equality tests). The histogram correction
-        (cells the cap removed) falls out of the same walk arithmetically —
-        the old second collect job is gone. Scale shape: the aggregation is
+        row-for-row identical to the window form (pinned by the planner-vs-
+        reference equality tests). The histogram correction (cells the cap
+        removed) falls out of the same walk arithmetically. Scale shape: the
+        aggregation is
         map-side combined over only the skewed hosts' rows; nothing sorts
         more than one prefix bucket (~rows/16^len) per host."""
         pre = F.substring("url_id", 1, self.prefix_len)
@@ -243,11 +219,8 @@ class IncrementalPlanner:
             eligible.where(F.col("host").isin(over))
             .groupBy("host", "priority", "attempt", pre.alias("_p"))
             .agg(F.count(F.lit(1)).alias("_n"))
-            .limit(FR._PLAN_COLLECT_LIMIT)
             .collect()
         )
-        if len(cellrows) >= FR._PLAN_COLLECT_LIMIT:
-            return None, None
         by_host: dict[str, list[tuple[int, int, str, int]]] = {}
         for r in cellrows:
             by_host.setdefault(r["host"], []).append(
@@ -267,7 +240,7 @@ class IncrementalPlanner:
             assert total == hosts.get(h), (
                 f"incremental host-count drift at {h!r}: agg={total}, state={hosts.get(h)}"
             )
-            left = budget
+            left = self._cap(h)
             boundary = None
             for idx, (p, a, pfx, n) in enumerate(hcells):
                 if left >= n:
@@ -276,7 +249,7 @@ class IncrementalPlanner:
                     boundary = idx
                     break
             if boundary is None:
-                continue  # whole host fits (can't happen while n > budget; harmless)
+                continue  # whole host fits (can't happen while n > cap; harmless)
             bp, ba, bpfx, bn = hcells[boundary]
             # removed cells: the boundary's beyond-cap remainder + every cell after it
             cell_sub((bp, ba, bpfx), bn - left)

@@ -131,8 +131,8 @@ def politeness_gate(
     """Custom STATEFUL streaming operator (applyInPandasWithState): per-host
     event-time politeness budget across micro-batches.
 
-    The batch engine enforces politeness per round with a window rank
-    (frontier.apply_host_cap); a continuous pipeline has no rounds, so the
+    The batch engine enforces politeness per round in its dequeue plan
+    (planner.IncrementalPlanner); a continuous pipeline has no rounds, so the
     cap must be carried as STATE keyed by host: each host's group state
     holds (current event-time window, admissions used). A batch of candidate
     URLs for a host admits at most ``budget_per_host − used`` rows per

@@ -156,3 +156,50 @@ def test_warmup_pass_is_invisible(spark, tmp_path, web):
     # the throwaway warm-up artifact is gone
     assert not any("fetch" in d and "00000000" in d for d in
                    (str(p) for p in (tmp_path / "on").rglob("*")))
+
+
+@pytest.mark.parametrize("cutoff", [None, 0])
+def test_budget_table_crawl_matches_oracle(spark, tmp_path, monkeypatch, cutoff):
+    """Robots crawl-delay budgets (empty disallow lists) that bind on both
+    hosts in every round: the engine's planner reads them as a driver
+    table; the oracle caps each host at host_budgets[host]. Dequeue order,
+    seen set and counters must match on both sides of the TakeOrdered/
+    threshold cutoff (None = the default cutoff, 0 = threshold path)."""
+    from collections import Counter
+
+    from dumb_crawler_spark import frontier as FR
+    from dumb_crawler_spark.robots import ROBOTS_SCHEMA
+
+    if cutoff is not None:
+        monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", cutoff)
+    docs, _ = generate_web(n_articles=40, n_hot=30, seed=42)
+    seeds = ("http://site.example.com/",) + tuple(
+        f"http://site.example.com/articles/{j}" for j in (2, 3, 4)
+    ) + tuple(f"http://hot.example.com/articles/{j}" for j in range(10))
+    cfg = canonical_config(
+        seeds=seeds, thread_count=4, politeness=Politeness(respect_robots=True)
+    )
+    # one fetch per 20 s / 30 s in a 60 s round: budgets 3 and 2
+    robots = spark.createDataFrame(
+        [("site.example.com", [], 20_000), ("hot.example.com", [], 30_000)], ROBOTS_SCHEMA
+    )
+    budgets = {"site.example.com": 3, "hot.example.com": 2}
+    rounds = 4
+    oracle = OracleCrawler(cfg, docs, host_budgets=budgets).run(max_rounds=rounds)
+    engine = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh", robots=robots)
+    engine.run(max_rounds=rounds)
+    # the budgets bind: every round takes exactly each host's budget
+    per_round = Counter(
+        (rnd, oracle.frontier[uid].host) for rnd, _, uid in oracle.dequeue_order
+    )
+    assert per_round == {
+        (rnd, host): b for rnd in range(1, rounds + 1) for host, b in budgets.items()
+    }
+    got = [
+        (r["round"], r["seq"], r["url_id"])
+        for r in engine.dequeue_order().orderBy("round", "seq").collect()
+    ]
+    assert got == oracle.dequeue_order
+    fr = engine.wh.read_frontier()
+    assert {r["url_id"] for r in fr.select("url_id").collect()} == oracle.seen_set()
+    assert engine.metrics_total() == {k: v for k, v in oracle.counters.items() if v}

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+from planner_ref import planner_dequeue, reference_dequeue
+
 from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import CrawlConfig
 
@@ -39,10 +41,16 @@ def test_threshold_equals_naive(spark):
 
 
 def test_dequeue_uses_threshold_above_cutoff(spark, monkeypatch):
+    """The planner picks its plan form by k: the threshold walk (offsets)
+    above the cutoff, TakeOrdered below it — same rows as the reference."""
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
     fr = _random_frontier(spark, n=1000, seed=9)
     cfg = CrawlConfig(max_attempt_count=5)
-    via_threshold = {r["url_id"] for r in FR.dequeue(fr, cfg, k=200).collect()}
+    dq, offsets, _ = planner_dequeue(fr, cfg, 200)
+    assert offsets is not None
+    via_threshold = {r["url_id"] for r in dq.collect()}
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 10_000)
-    via_naive = {r["url_id"] for r in FR.dequeue(fr, cfg, k=200).collect()}
-    assert via_threshold == via_naive
+    dq, offsets, _ = planner_dequeue(fr, cfg, 200)
+    assert offsets is None
+    via_naive = {r["url_id"] for r in dq.collect()}
+    assert via_threshold == via_naive == set(reference_dequeue(fr, cfg, 200))

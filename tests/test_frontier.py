@@ -1,8 +1,11 @@
 """Frontier operator tests (SURVEY.md §5.1/§5.5): J1-J3 dedup+anti-join,
-A1 dequeue ordering + politeness budget, C2/C3 status transitions."""
+A1 dequeue ordering + politeness budget, C3 status transitions — the
+merge-on-read round delta against a full rewrite of the frontier."""
 
 from __future__ import annotations
 
+from planner_ref import planner_dequeue
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
@@ -53,9 +56,9 @@ def test_dequeue_order_and_limit(spark):
         ("u4", "http://h2/e", "h2", 1, 1, 0),    # PROCESSING → ineligible
         ("u5", "http://h2/f", "h2", 1, 0, 5),    # attempt ≥ max → ineligible (F7)
     ])
-    got = [r["url_id"] for r in FR.dequeue(fr, cfg, k=10).collect()]
+    got = [r["url_id"] for r in planner_dequeue(fr, cfg, 10)[0].collect()]
     assert got == ["u3", "u0", "u1", "u2"]  # D2: prio DESC, attempt ASC, url_id ASC
-    assert [r["url_id"] for r in FR.dequeue(fr, cfg, k=2).collect()] == ["u3", "u0"]
+    assert [r["url_id"] for r in planner_dequeue(fr, cfg, 2)[0].collect()] == ["u3", "u0"]
 
 
 def test_dequeue_politeness_budget(spark):
@@ -66,8 +69,55 @@ def test_dequeue_politeness_budget(spark):
         ("a3", "http://h1/3", "h1", 7, 0, 0),   # over h1 budget
         ("b1", "http://h2/1", "h2", 5, 0, 0),
     ])
-    got = [r["url_id"] for r in FR.dequeue(fr, cfg, k=10).collect()]
+    got = [r["url_id"] for r in planner_dequeue(fr, cfg, 10)[0].collect()]
     assert got == ["a1", "a2", "b1"]
+
+
+# -- full-rewrite reference for the merge-on-read round delta ------------------
+# A round's status transitions, applied by rewriting the whole frontier —
+# O(frontier) per round, so the engine never runs this. It is the reference
+# that frontier.round_update_delta + compose_frontier must reproduce.
+
+def mark_taken(frontier: DataFrame, dequeued: DataFrame, round_no: int) -> DataFrame:
+    """status QUEUED→PROCESSING + taken_round (URLStore.java:191-206)."""
+    taken = F.broadcast(dequeued.select("url_id", F.lit(True).alias("_taken")))
+    return (
+        frontier.join(taken, "url_id", "left")
+        .withColumn(
+            "status",
+            F.when(F.col("_taken"), F.lit(FR.PROCESSING).cast("tinyint")).otherwise(F.col("status")),
+        )
+        .withColumn(
+            "taken_round",
+            F.when(F.col("_taken"), F.lit(round_no)).otherwise(F.col("taken_round")),
+        )
+        .drop("_taken")
+    )
+
+
+def mark_completed(frontier: DataFrame, results: DataFrame, cfg: CrawlConfig, round_no: int) -> DataFrame:
+    """C3: completion MERGE (URLStore.java:159-183). ``results`` needs
+    url_id, tags (fresh), ok (bool), error (null when ok). status →
+    PROCESSED(2) | FAILED(3), FAILED terminal (SURVEY.md §2.8-C3);
+    attempt += 1 always."""
+    upd = F.broadcast(
+        results.select(
+            "url_id",
+            F.col("tags").alias("_new_tags"),
+            F.when(F.col("ok"), F.lit(FR.PROCESSED)).otherwise(F.lit(FR.FAILED)).cast("tinyint").alias("_new_status"),
+            F.col("error").alias("_new_error"),
+        )
+    )
+    done = F.col("_new_status").isNotNull()
+    return (
+        frontier.join(upd, "url_id", "left")
+        .withColumn("status", F.coalesce(F.col("_new_status"), F.col("status")))
+        .withColumn("tags", F.when(done, F.col("_new_tags")).otherwise(F.col("tags")))
+        .withColumn("error", F.when(done, F.col("_new_error")).otherwise(F.col("error")))
+        .withColumn("attempt", F.when(done, F.col("attempt") + 1).otherwise(F.col("attempt")))
+        .withColumn("completed_round", F.when(done, F.lit(round_no)).otherwise(F.col("completed_round")))
+        .drop("_new_tags", "_new_status", "_new_error")
+    )
 
 
 def test_mark_taken_and_completed(spark):
@@ -77,8 +127,8 @@ def test_mark_taken_and_completed(spark):
         ("b", "http://h/b", "h", 1, 0, 0),
         ("c", "http://h/c", "h", 1, 0, 0),
     ])
-    dq = FR.dequeue(fr, cfg, k=2)
-    fr1 = FR.mark_taken(fr, dq, round_no=3)
+    dq = planner_dequeue(fr, cfg, 2)[0]
+    fr1 = mark_taken(fr, dq, round_no=3)
     st = {r["url_id"]: r for r in fr1.collect()}
     assert st["a"]["status"] == FR.PROCESSING and st["a"]["taken_round"] == 3
     assert st["c"]["status"] == FR.QUEUED and st["c"]["taken_round"] is None
@@ -87,19 +137,12 @@ def test_mark_taken_and_completed(spark):
         [("a", ["fresh"], True, None), ("b", ["fresh"], False, "INVALID_STATUS_CODE_404")],
         "url_id string, tags array<string>, ok boolean, error string",
     )
-    fr2 = FR.mark_completed(fr1, results, cfg, round_no=3)
+    fr2 = mark_completed(fr1, results, cfg, round_no=3)
     st2 = {r["url_id"]: r for r in fr2.collect()}
     assert st2["a"]["status"] == FR.PROCESSED and st2["a"]["attempt"] == 1
     assert st2["a"]["tags"] == ["fresh"] and st2["a"]["completed_round"] == 3
     assert st2["b"]["status"] == FR.FAILED and st2["b"]["error"] == "INVALID_STATUS_CODE_404"
     assert st2["c"]["status"] == FR.QUEUED and st2["c"]["attempt"] == 0
-
-
-def test_reset_orphans(spark):
-    fr = _mk_frontier(spark, [("a", "http://h/a", "h", 1, 1, 0), ("b", "http://h/b", "h", 1, 2, 0)])
-    st = {r["url_id"]: r for r in FR.reset_orphans(fr).collect()}
-    assert st["a"]["status"] == FR.QUEUED and st["a"]["taken_round"] is None
-    assert st["b"]["status"] == FR.PROCESSED
 
 
 def test_status_counts(spark):
@@ -112,8 +155,10 @@ def test_status_counts(spark):
     assert got == {0: 1, 2: 2}
 
 
-def test_apply_round_updates_equals_two_step(spark):
-    """The fused taken+completed join must equal mark_taken → mark_completed."""
+def test_round_update_delta_equals_full_rewrite(spark):
+    """The engine's merge-on-read path — the round's k-row update delta,
+    composed onto the frontier on read — must equal rewriting the whole
+    frontier with mark_taken → mark_completed."""
     cfg = CrawlConfig(max_attempt_count=5)
     fr = _mk_frontier(spark, [
         ("a", "http://h/a", "h", 1, 0, 0),
@@ -126,13 +171,13 @@ def test_apply_round_updates_equals_two_step(spark):
         [("a", ["fresh"], True, None), ("b", ["fresh"], False, "E")],
         "url_id string, tags array<string>, ok boolean, error string",
     )
-    fused = FR.apply_round_updates(fr, dq, results, cfg, round_no=4)
-    two_step = FR.mark_completed(FR.mark_taken(fr, dq, 4), results, cfg, 4)
+    composed = FR.compose_frontier(fr, None, FR.round_update_delta(dq, results, 4))
+    two_step = mark_completed(mark_taken(fr, dq, 4), results, cfg, 4)
     cols = sorted(fr.columns)
     key = lambda t: repr(t)
-    fused_rows = sorted((tuple(r[c] for c in cols) for r in fused.collect()), key=key)
+    composed_rows = sorted((tuple(r[c] for c in cols) for r in composed.collect()), key=key)
     two_rows = sorted((tuple(r[c] for c in cols) for r in two_step.collect()), key=key)
-    assert fused_rows == two_rows
-    st = {r["url_id"]: r for r in fused.collect()}
+    assert composed_rows == two_rows
+    st = {r["url_id"]: r for r in composed.collect()}
     assert st["c"]["status"] == FR.PROCESSING and st["c"]["taken_round"] == 4
     assert st["d"]["status"] == FR.QUEUED

@@ -1,16 +1,18 @@
-"""The incremental dequeue planner (planner.py) must be EXACTLY equivalent to
-the legacy fused per-round planning (frontier.plan_dequeue) over whole crawls,
-and its driver-held state must stay in perfect sync with the true eligible
-set after every round's algebraic update."""
+"""The dequeue planner (planner.py) must reproduce the oracle over whole
+crawls, equal the plain-Python reference on hand-built frontiers, and keep
+its driver-held state in perfect sync with the true eligible set after
+every round's algebraic update."""
 
 from __future__ import annotations
 
+from planner_ref import planner_dequeue, reference_dequeue
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
+from dumb_crawler_spark.oracle import OracleCrawler
 
 
 def test_on_dequeued_subtracts_batch_cells():
@@ -39,10 +41,8 @@ def test_on_dequeued_subtracts_batch_cells():
         pl.on_dequeued(batch)
 
 
-def _crawl(spark, tmp_path, docs, cfg, rounds, disable_planner=False):
+def _crawl(spark, tmp_path, docs, cfg, rounds):
     c = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path)
-    if disable_planner:
-        c._planner.disabled = True
     c.run(max_rounds=rounds)
     return c
 
@@ -56,21 +56,18 @@ def _order(c):
 
 def test_incremental_crawl_equals_legacy_with_budget(spark, tmp_path, monkeypatch):
     """Whole crawl on the threshold path with a BINDING politeness budget:
-    incremental planning (hist/host algebra + beyond-cap correction) must
-    reproduce the legacy fused plan bit-for-bit — dequeue order, counters,
-    final frontier."""
+    the planner (hist/host algebra + beyond-cap correction) must reproduce
+    the oracle bit-for-bit — dequeue order, counters, final frontier."""
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 0)
     docs, _ = generate_web(n_articles=40, seed=42)
     cfg = canonical_config(politeness=Politeness(budget_per_host_per_round=3), thread_count=4)
     inc = _crawl(spark, tmp_path / "inc", docs, cfg, 5)
-    leg = _crawl(spark, tmp_path / "leg", docs, cfg, 5, disable_planner=True)
-    assert inc._planner.ready  # the incremental path actually ran
-    assert not leg._planner.ready
-    assert _order(inc) == _order(leg)
-    assert inc.metrics_total() == leg.metrics_total()
+    ref = OracleCrawler(cfg, docs).run(max_rounds=5)
+    assert inc._planner.ready and inc._planner.hosts is not None
+    assert _order(inc) == ref.dequeue_order
+    assert inc.metrics_total() == {k: v for k, v in ref.counters.items() if v}
     f_inc = {(r["url_id"], r["status"], r["attempt"]) for r in inc.wh.read_frontier().collect()}
-    f_leg = {(r["url_id"], r["status"], r["attempt"]) for r in leg.wh.read_frontier().collect()}
-    assert f_inc == f_leg
+    assert f_inc == {(e.url_id, e.status, e.attempt) for e in ref.frontier.values()}
 
 
 def test_planner_state_matches_full_recount(spark, tmp_path, monkeypatch):
@@ -96,28 +93,27 @@ def test_planner_state_matches_full_recount(spark, tmp_path, monkeypatch):
 
 def test_incremental_without_budget(spark, tmp_path, monkeypatch):
     """No politeness budget: planner tracks only the class histogram; the
-    crawl must still match the legacy path exactly."""
+    crawl must still match the oracle exactly."""
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 0)
     docs, _ = generate_web(n_articles=30, seed=9)
     cfg = canonical_config()
     inc = _crawl(spark, tmp_path / "inc", docs, cfg, 4)
-    leg = _crawl(spark, tmp_path / "leg", docs, cfg, 4, disable_planner=True)
+    ref = OracleCrawler(cfg, docs).run(max_rounds=4)
     assert inc._planner.ready and inc._planner.hosts is None
-    assert _order(inc) == _order(leg)
-    assert inc.metrics_total() == leg.metrics_total()
+    assert _order(inc) == ref.dequeue_order
+    assert inc.metrics_total() == {k: v for k, v in ref.counters.items() if v}
 
 
 def test_planner_many_over_hosts_window_fallback(spark, monkeypatch):
     """VERDICT r03 item 3 (adversarial): 500 over-budget hosts — a budget
     modestly below typical host size, not degenerate — must NOT compile a
-    500-branch CASE + 500-way union (the algebra form); the planner falls
-    back to the bounded per-host window over just the over set, stays
-    enabled, and still equals the legacy fused plan row-for-row."""
+    500-branch CASE + 500-way union (the algebra form); the planner caps
+    with the bounded per-host window over just the over set and still
+    equals the reference row-for-row."""
     import hashlib as _hl
 
     from dumb_crawler_spark import planner as PL
-    from dumb_crawler_spark.config import CrawlConfig, Politeness
-    from dumb_crawler_spark.planner import IncrementalPlanner
+    from dumb_crawler_spark.config import CrawlConfig
 
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 0)
     budget, n_hosts, per_host = 2, 500, 4
@@ -131,22 +127,16 @@ def test_planner_many_over_hosts_window_fallback(spark, monkeypatch):
             ))
     fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
     cfg = CrawlConfig(politeness=Politeness(budget_per_host_per_round=budget))
-    eligible = FR.eligible_raw(fr, cfg)
-    pl = IncrementalPlanner(cfg)
-    assert pl.seed_from(eligible)
     assert n_hosts > PL._ALGEBRA_OVER_MAX
 
     def boom(*a, **kw):  # the inline-algebra form must not be chosen here
         raise AssertionError("_capped_by_algebra called for 500 over hosts")
 
-    monkeypatch.setattr(pl, "_capped_by_algebra", boom)
-    res = pl.plan(eligible, 600)
-    assert res is not None and not pl.disabled
-    dq, _, taken = res
-    leg_df, _, leg_taken = FR.plan_dequeue(eligible, cfg, 600)
+    monkeypatch.setattr(PL.IncrementalPlanner, "_capped_by_algebra", boom)
+    dq, _, taken = planner_dequeue(fr, cfg, 600)
     got = sorted(r["url_id"] for r in dq.collect())
-    want = sorted(r["url_id"] for r in leg_df.collect())
-    assert taken == leg_taken == 600
+    want = sorted(reference_dequeue(fr, cfg, 600))
+    assert taken == len(want) == 600
     assert got == want
 
 

@@ -72,6 +72,11 @@ def test_refetch_resets_status(spark, tmp_path):  # C4 (URLStore.java:60-68)
     c2 = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh")
     c2.run(max_rounds=0, refetch=True)
     assert c2.wh.read_frontier().where(F.col("status") != 0).count() == 0
+    # the first crawler's planner counted the frontier before the re-queue:
+    # resuming re-seeds it, so its state matches the eligible set again
+    c.run(max_rounds=1)
+    eligible = FR.eligible_raw(c.wh.read_frontier_queued(), cfg)
+    assert c._planner.hist == FR.plan_dequeue(eligible, hosts=False)[0]
 
 
 def test_dequeue_scan_pushdown(spark, tmp_path):
@@ -83,8 +88,9 @@ def test_dequeue_scan_pushdown(spark, tmp_path):
     cfg = canonical_config()
     c = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh")
     c.run(max_rounds=1)
-    fr = c.wh.read_frontier_queued()
-    plan = FR.dequeue(fr, cfg, k=10)._jdf.queryExecution().executedPlan().toString()
+    eligible = FR.eligible_raw(c.wh.read_frontier_queued(), cfg)
+    dq, _, _ = c._planner.plan(eligible, 10)
+    plan = dq._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "EqualTo(status,0)" in plan or "IsNotNull(status)" in plan, plan[:2000]
     # column pruning: the wide frontier scan must NOT read the error column

@@ -1,12 +1,14 @@
-"""The fused round planner (frontier.plan_dequeue: one grouping-sets job for
-the politeness probe + top-K histogram) must be EXACTLY equivalent to the legacy two-job path
-(over_budget_hosts → apply_host_cap → topk_from_eligible) and to the
-driver-side lineage rank (dequeue_order_table)."""
+"""The dequeue planner (planner.IncrementalPlanner over the frontier.plan_dequeue
+seed pass) must return EXACTLY the rows of the plain-Python reference (the
+oracle's sort-then-cap rule) on both sides of the TakeOrdered/threshold
+cutoff, and its walk must agree with the driver-side lineage rank
+(dequeue_order_table)."""
 
 from __future__ import annotations
 
 import random
 
+from planner_ref import planner_dequeue, reference_dequeue
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
@@ -29,28 +31,22 @@ def _skewed_frontier(spark, n=4000, seed=11):
     return spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
 
 
-def _legacy(eligible, cfg, k, host_budgets=None):
-    over = FR.over_budget_hosts(eligible, cfg, host_budgets)
-    capped = FR.apply_host_cap(eligible, cfg, over, host_budgets)
-    return FR.topk_from_eligible(capped, k)
-
-
 def test_plan_dequeue_matches_legacy_with_binding_cap(spark, monkeypatch):
-    """Over-budget host present AND k above the threshold cutoff — exercises
-    the histogram-subtraction (capped_hist = raw − beyond) path."""
+    """Over-budget host present, k on both sides of the cutoff: the window
+    cap + TakeOrdered form below it, the algebra cap + histogram walk
+    (capped_hist = raw − beyond) above it — both equal the reference."""
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
     fr = _skewed_frontier(spark)
     cfg = CrawlConfig(
         max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=40)
     )
-    eligible = FR.eligible_raw(fr, cfg)
-    for k in (60, 400, 1500):
-        want = {r["url_id"] for r in _legacy(eligible, cfg, k).collect()}
-        dq, offsets, planned_n = FR.plan_dequeue(eligible, cfg, k)
+    for k in (30, 60, 400, 1500):
+        want = set(reference_dequeue(fr, cfg, k))
+        dq, offsets, planned_n = planner_dequeue(fr, cfg, k)
         got = {r["url_id"] for r in dq.collect()}
         assert got == want, f"k={k}"
-        assert offsets is not None  # threshold path ran fused
-        assert planned_n == len(got)  # walk count is exact
+        assert (offsets is not None) == (k > 50)  # threshold path above the cutoff
+        assert planned_n == len(got)  # planned count is exact
 
 
 def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
@@ -63,8 +59,7 @@ def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
     cfg = CrawlConfig(
         max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=35)
     )
-    eligible = FR.eligible_raw(fr, cfg)
-    dq, offsets, planned_n = FR.plan_dequeue(eligible, cfg, 700)
+    dq, offsets, planned_n = planner_dequeue(fr, cfg, 700)
     batch = dq.toArrow()
     lineage = FR.dequeue_order_table(batch, 1).to_pylist()
     assert [r["seq"] for r in lineage] == list(range(planned_n))
@@ -81,31 +76,43 @@ def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
         .orderBy(F.desc("priority"), F.asc("attempt"), F.asc("url_id")).collect()
     ]
     assert [r["url_id"] for r in lineage] == want
+    assert want == reference_dequeue(fr, cfg, 700)
 
 
 def test_plan_dequeue_no_budget_single_job(spark, monkeypatch):
-    """No politeness config: planner must reduce to plain topk semantics."""
+    """No politeness config: the seed pass counts classes only (no host
+    slice) and the plan reduces to plain top-k semantics."""
     monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
     fr = _skewed_frontier(spark, seed=13)
     cfg = CrawlConfig(max_attempt_count=5)
-    eligible = FR.eligible_raw(fr, cfg)
-    want = {r["url_id"] for r in FR.topk_from_eligible(eligible, 300).collect()}
-    dq, offsets, planned_n = FR.plan_dequeue(eligible, cfg, 300)
+    hist, hosts = FR.plan_dequeue(FR.eligible_raw(fr, cfg), hosts=False)
+    assert hosts is None and sum(hist.values()) == FR.eligible_raw(fr, cfg).count()
+    want = set(reference_dequeue(fr, cfg, 300))
+    dq, offsets, planned_n = planner_dequeue(fr, cfg, 300)
     assert {r["url_id"] for r in dq.collect()} == want
     assert offsets is not None and planned_n == len(want)
 
 
 def test_plan_dequeue_k_none_with_budget(spark):
-    """k=None + per-host budgets (the robots path): host-slice-only probe."""
+    """A k that takes the whole capped set, with a binding per-host budget:
+    the seed pass's host and class slices equal plain counts, and the plan
+    equals the reference's uncut (k=None) capped set."""
     fr = _skewed_frontier(spark, seed=14)
     cfg = CrawlConfig(
         max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=25)
     )
     eligible = FR.eligible_raw(fr, cfg)
-    want = {r["url_id"] for r in _legacy(eligible, cfg, None).collect()}
-    dq, offsets, planned_n = FR.plan_dequeue(eligible, cfg, None)
+    hist, hosts = FR.plan_dequeue(eligible)
+    assert hosts == {r["host"]: r["count"] for r in eligible.groupBy("host").count().collect()}
+    pre = F.substring("url_id", 1, 3).alias("_p")
+    assert hist == {
+        (r["priority"], r["attempt"], r["_p"]): r["count"]
+        for r in eligible.groupBy("priority", "attempt", pre).count().collect()
+    }
+    want = set(reference_dequeue(fr, cfg, None))
+    dq, offsets, planned_n = planner_dequeue(fr, cfg, FR._TOPK_THRESHOLD_CUTOFF)
     assert {r["url_id"] for r in dq.collect()} == want
-    assert offsets is None and planned_n is None
+    assert offsets is None and planned_n == len(want)
     # the cap binds: hot host must be limited to the budget
     hot = dq.where(F.col("host") == "hot.example.com").count()
     assert hot == 25

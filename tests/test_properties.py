@@ -10,6 +10,7 @@ import string
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from planner_ref import planner_dequeue, reference_dequeue
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
@@ -108,7 +109,7 @@ def test_dequeue_invariants_random_frontier(spark):
         ))
     fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
     cfg = CrawlConfig(max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=7))
-    got = FR.dequeue(fr, cfg, k=100).collect()
+    got = planner_dequeue(fr, cfg, 100)[0].collect()
     src = {r[0]: r for r in rows}
     from collections import Counter
     per_host = Counter()
@@ -122,10 +123,11 @@ def test_dequeue_invariants_random_frontier(spark):
 
 
 def test_plan_dequeue_equals_legacy_randomized(spark):
-    """Batched randomized parity (seeded, one Spark job per case): the fused
-    planner must equal the legacy two-job path for random frontiers × random
-    budgets × random k, including k straddling the threshold cutoff and
-    budgets that do/don't bind."""
+    """Batched randomized parity (seeded, one Spark job per case): the
+    planner must equal the plain-Python reference (the oracle's
+    sort-then-cap rule) for random frontiers × random budgets × random
+    budget tables × random k, including k straddling the threshold cutoff
+    and budgets that do/don't bind."""
     rng = random.Random(77)
     cutoff_orig = FR._TOPK_THRESHOLD_CUTOFF
     FR._TOPK_THRESHOLD_CUTOFF = 40
@@ -149,16 +151,13 @@ def test_plan_dequeue_equals_legacy_randomized(spark):
                 politeness=Politeness(budget_per_host_per_round=budget),
             )
             k = rng.choice([10, 60, 500, 5000])
-            eligible = FR.eligible_raw(fr, cfg)
-            over = FR.over_budget_hosts(eligible, cfg, None)
-            legacy = FR.topk_from_eligible(
-                FR.apply_host_cap(eligible, cfg, over, None), k
-            )
-            want = {r["url_id"] for r in legacy.collect()}
-            dq, offsets, planned_n = FR.plan_dequeue(eligible, cfg, k)
+            table = rng.choice([None, {
+                f"h{h}.x": rng.randint(1, 20) for h in range(0, n_hosts + 1, 2)
+            }])
+            want = set(reference_dequeue(fr, cfg, k, table))
+            dq, offsets, planned_n = planner_dequeue(fr, cfg, k, table)
             got = {r["url_id"] for r in dq.collect()}
-            assert got == want, f"case={case} k={k} budget={budget}"
-            if planned_n is not None:
-                assert planned_n == len(got), f"case={case}"
+            assert got == want, f"case={case} k={k} budget={budget} table={table}"
+            assert planned_n == len(got), f"case={case}"
     finally:
         FR._TOPK_THRESHOLD_CUTOFF = cutoff_orig

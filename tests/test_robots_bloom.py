@@ -4,6 +4,7 @@ the plain anti-join (no false negatives, false positives verified away)."""
 
 from __future__ import annotations
 
+from planner_ref import planner_dequeue, reference_dequeue
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
@@ -70,10 +71,11 @@ def test_host_budgets_and_dequeue(spark):
     ]
     fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
     cfg = CrawlConfig(politeness=Politeness(budget_per_host_per_round=4))
-    dq = FR.dequeue(fr, cfg, k=None, host_budgets=budgets).collect()
+    dq = planner_dequeue(fr, cfg, 100, got)[0].collect()
     from collections import Counter
     per_host = Counter(r["host"] for r in dq)
     assert per_host == {"h1.com": 3, "h2.com": 4, "h3.com": 4}  # robots < cfg < no-row default
+    assert [r["url_id"] for r in dq] == reference_dequeue(fr, cfg, 100, got)
 
 
 def test_robots_crawl_end_to_end(spark, tmp_path):

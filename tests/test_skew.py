@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+from planner_ref import planner_dequeue
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
@@ -54,25 +55,31 @@ def test_salting_bounds_partition_sizes(spark):
 
 
 def test_dequeue_plan_shapes(spark):
-    """Plan checks: the global top-K dequeue compiles to TakeOrderedAndProject
-    (per-partition heap, no global sort); the politeness window materializes
-    ONLY for hosts that actually exceed their budget — an all-under-budget
-    frontier must not shuffle a single row for the cap."""
+    """Plan checks on the planner's plans: the small-k dequeue compiles to
+    TakeOrderedAndProject (per-partition heap, no global sort); the
+    politeness window materializes ONLY for hosts that actually exceed their
+    budget — an all-under-budget frontier must not shuffle a single row for
+    the cap, and with one hot host over budget the window sees only its rows."""
     from dumb_crawler_spark.config import Politeness
+
+    def shape(fr, cfg, k=10):
+        dq, _, _ = planner_dequeue(fr, cfg, k)
+        return dq, dq._jdf.queryExecution().executedPlan().toString()
 
     cfg = CrawlConfig()
     fr = FR.empty_frontier(spark)
-    plan = FR.dequeue(fr, cfg, k=10)._jdf.queryExecution().executedPlan().toString()
+    _, plan = shape(fr, cfg)
     assert "TakeOrderedAndProject" in plan
     cfg2 = CrawlConfig(politeness=Politeness(budget_per_host_per_round=2))
     # under-budget everywhere (empty frontier) → cap is a no-op, no Window
-    plan_under = FR.dequeue(fr, cfg2, k=10)._jdf.queryExecution().executedPlan().toString()
+    _, plan_under = shape(fr, cfg2)
     assert "Window" not in plan_under
     # one hot host over budget → Window appears, scoped to the hot subset
     rows = [(f"u{i}", f"http://hot.example.com/{i}", "hot.example.com", ["t"], 0, 5, 0, 0, 0, None, None, None, 0) for i in range(5)]
+    rows.append(("c0", "http://cold.example.com/0", "cold.example.com", ["t"], 0, 5, 0, 0, 0, None, None, None, 0))
     hot = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
-    capped = FR.apply_host_cap(FR.eligible_raw(hot, cfg2), cfg2, ["hot.example.com"])
-    plan_over = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan_over
-    got = capped.count()
-    assert got == 2 + 0  # budget rows from the hot host, nothing else
+    dq, plan_over = shape(hot, cfg2)
+    assert "Window" in plan_over and "TakeOrderedAndProject" in plan_over
+    assert "hot.example.com" in plan_over and "cold.example.com" not in plan_over
+    got = Counter(r["host"] for r in dq.collect())
+    assert got == {"hot.example.com": 2, "cold.example.com": 1}  # budget rows from the hot host
