@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 FRONTIER_N = int(os.environ.get("BENCH_FRONTIER_N", "2000000"))
-# ≥4 rounds so session bootstrap + first-round JIT warmup amortize and the
+# ≥4 rounds so session bootstrap + first-round JIT warm-up amortize and the
 # per-round serial fraction is visible as a steady-state, not a startup cost
 ROUNDS = int(os.environ.get("BENCH_ROUNDS", "4"))
 K_PER_ROUND = int(os.environ.get("BENCH_K", "200000"))
@@ -44,9 +44,6 @@ PAGE_REPEAT = int(os.environ.get("BENCH_PAGE_REPEAT", "64"))
 # (The engine's own default stays 16; this is the bench PROTOCOL choosing to
 # include one boundary per campaign.)
 COMPACT_EVERY = int(os.environ.get("BENCH_COMPACT_EVERY", "3"))
-# codegen warm-up A/B override: unset = Crawler's auto (on at ≥16-way
-# parallelism), "1" = force on, "0" = force off (round-4 JIT-convoy triage)
-WARMUP = os.environ.get("BENCH_WARMUP")
 # wave-packing A/B knobs (round-4 ladder attribution: ~27% of the N→4N gap
 # is sub-full waves across many small stages, not engine-serial work)
 SHUFFLE = int(os.environ.get("BENCH_SHUFFLE", "0")) or None  # default: = CPUS
@@ -131,16 +128,14 @@ def bench_crawl_rounds(spark, tmpdir: str) -> dict:
         F.lit(0).alias("created_round"),
         F.lit(None).cast("int").alias("taken_round"),
         F.lit(None).cast("int").alias("completed_round"),
+        F.lit(None).cast("int").alias("saved_round"),
         F.lit(None).cast("string").alias("error"),
         "part",
     ).repartition(cfg.partitions, "part")
     wh.write_snapshot("frontier", 0, fr0)
     wh.commit_round(0, {"bootstrap": FRONTIER_N})
 
-    crawler = Crawler(
-        spark, cfg, docs, tmpdir, compact_every=COMPACT_EVERY,
-        warmup_codegen=None if WARMUP is None else WARMUP == "1",
-    )
+    crawler = Crawler(spark, cfg, docs, tmpdir, compact_every=COMPACT_EVERY)
     t0 = time.time()
     stats = crawler.run(max_rounds=ROUNDS)
     elapsed = time.time() - t0
@@ -157,10 +152,10 @@ def bench_crawl_rounds(spark, tmpdir: str) -> dict:
         "phases": {k: round(v, 2) for k, v in sorted(crawler.phase_times.items())},
     }
     if os.environ.get("BENCH_ROUND_PHASES") == "1":
-        # per-round phase slices (flatness evidence, e.g. pages_split vs
+        # per-round phase slices (flatness evidence, e.g. pages_write vs
         # round number) — opt-in to keep the driver's one-line JSON compact
         out["round_phases"] = [s.phase_seconds for s in stats]
-    # Steady-state view: round 1 pays one-time JVM/Catalyst/codegen warmup
+    # Steady-state view: round 1 pays one-time JVM/Catalyst/codegen warm-up
     # (classloading, Janino, JIT) that a production crawl amortizes over
     # thousands of rounds; rounds ≥ 2 are the per-round cost a cluster
     # actually repeats. Both views are reported — the ladder uses each.

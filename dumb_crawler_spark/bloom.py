@@ -142,23 +142,6 @@ class PartitionedBloom:
             {r["part"]: (bytes(r["bitmap"]), r["m"], r["k"]) for r in rows}, expected_per_part
         )
 
-    def probe_local(self, parts: np.ndarray, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """DRIVER-side membership test over collected (part, h1, h2) arrays —
-        for k-BOUNDED probe sides (e.g. a round's fresh page ids), where one
-        small collect beats shipping a pandas UDF + shuffle to the executors.
-        Same kernel as the distributed probe; False ⇒ definitely not seen."""
-        out = np.zeros(len(parts), dtype=bool)
-        a_all = h1.astype(np.int64).astype(np.uint64)
-        b_all = h2.astype(np.int64).astype(np.uint64)
-        for p in np.unique(parts):
-            f = self.filters.get(int(p))
-            if f is None:
-                continue
-            mask = parts == p
-            bitmap = np.frombuffer(f[0], dtype=np.uint8)
-            out[mask] = _test_bits(bitmap, f[1], f[2], a_all[mask], b_all[mask])
-        return out
-
     def add_local(
         self, parts: np.ndarray, h1: np.ndarray, h2: np.ndarray, fpr: float = 0.01
     ) -> "PartitionedBloom":

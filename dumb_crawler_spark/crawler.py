@@ -8,7 +8,7 @@ dataflow as declarative plans over the whole batch:
     → fetch-simulate join docs (J4) → validate (F5/F6)
     → extract links (L2) → canonicalize/tag/score/filter (U9/U2/T1/T2/F2)
     → merge new links into frontier (J1-J3/S4)
-    → mark PROCESSED/FAILED (C3) → append pages (J5/S7/S8)
+    → mark PROCESSED/FAILED (C3) → append pages (S7/S8; J5 off the row)
     → append metrics (A3/S10) + errors (S11) → commit round (lineage)
 
 Every k-bounded step is either one Spark action or pure driver work. The
@@ -17,10 +17,12 @@ driver derives its count, the D2 lineage (written with pyarrow), the
 planner's decrements and the planned-count drift check from it, and the
 downstream plans read it back as a local relation. The counters ride writes
 that run anyway as observed metrics: the A3 fetch counters on the fetch
-write, the F2/robots counters on the ins write. The URL-seen bloom and the
-planner state grow on the driver from one Arrow read of the round's
-inserts. The Warehouse pins each table's read schema after its first read,
-so no per-read schema-inference job runs either.
+write, the F2/robots counters on the ins write, the J5 new-vs-update split
+on the pages write (the dequeued row's ``saved_round``, an exact per-URL
+record like the reference's url_index, says whether the page was saved
+before). The URL-seen bloom and the planner state grow on the driver from
+one Arrow read of the round's inserts. The Warehouse pins each table's read
+schema, so no per-read schema-inference job runs either.
 
 Exactly-once rounds: all table writes land BEFORE the round's commit marker
 (storage.py); a crash mid-round leaves the previous round's state intact —
@@ -55,20 +57,16 @@ from .storage import Warehouse
 
 PAGES_SCHEMA_COLS = ("url_id", "url", "round", "spans", "fetched_round")
 
-# auto-warmup threshold: below this frontier size a round's first wave is
-# small enough that the cold-codegen convoy costs less than the warm pass
-_WARMUP_MIN_FRONTIER = 50_000
-
 
 @dataclass
 class RoundStats:
     round_no: int
     dequeued: int = 0
     counters: dict[str, int] = field(default_factory=dict)
-    wall_seconds: float = 0.0  # run_round wall — steady-state vs warmup triage
+    wall_seconds: float = 0.0  # run_round wall — steady-state vs first-round triage
     # per-round slice of Crawler.phase_times (run() diffs the accumulator
     # around each round) — lets a bench assert a phase is FLAT across rounds
-    # (e.g. pages_split independence from crawl history) without event logs
+    # (e.g. pages_write independence from crawl history) without event logs
     phase_seconds: dict[str, float] = field(default_factory=dict)
 
     def add(self, name: str, value: int) -> None:
@@ -87,7 +85,6 @@ class Crawler:
         use_bloom: bool = False,
         round_interval_ms: int = 60_000,
         compact_every: int = 16,
-        warmup_codegen: bool | None = None,
     ):
         self.spark = spark
         self.cfg = cfg
@@ -104,8 +101,6 @@ class Crawler:
         self.phase_times: dict[str, float] = {}  # accumulated per-phase secs (perf triage)
         self._phase_lock = threading.Lock()  # phases may be timed off the main thread
         self._bloom = None
-        self._pages_bloom = None  # J5 pages-seen filter (incremental, _pages_split)
-        self._pages_bloom_capacity = 0
         # Dequeue planning (planner.py) for every round, every k and every
         # budget form: per-round planning is k-bounded driver algebra after
         # one seed pass, with no per-round eligible-set scan (the dominant
@@ -121,30 +116,6 @@ class Crawler:
                 for r in host_budgets(self.robots, round_interval_ms, default).collect()
             }
         self._planner = IncrementalPlanner(cfg, budgets)
-        # First-execution JIT convoy guard (round-4 finding): the links-chain
-        # codegen class first executes in round 1 with EVERY core already
-        # running it interpreted — on a saturated 32-thread local run the
-        # C1/C2 compile of the big generated methods lags the wave, and the
-        # whole first stage burns ~30× CPU interpreted (measured: 585 s task
-        # CPU at local[32] vs 20 s at local[8] for identical work; rounds 2+
-        # reuse the compiled class and run fast). Running the IDENTICAL plan
-        # shape once over a 2-row artifact compiles those classes while the
-        # machine is idle, so the convoy never forms. Spark folds literals
-        # into codegen references, which is why one warm pass covers every
-        # round. Auto mode enables it only where the convoy exists (≥16
-        # concurrent tasks); a real cluster's executors warm the same way.
-        # auto mode warms only when (a) enough concurrent tasks exist for the
-        # convoy to form (≥16-way) and (b) the frontier is big enough that a
-        # round's first wave outweighs the one-time ~5-10 s warm pass — a
-        # tiny corpus pays the convoy in milliseconds either way (run()
-        # checks the bootstrap row count against _WARMUP_MIN_FRONTIER).
-        self._warmup_auto = warmup_codegen is None
-        self.warmup_codegen = (
-            spark.sparkContext.defaultParallelism >= 16
-            if warmup_codegen is None
-            else warmup_codegen
-        )
-        self._warmed = False
 
     @contextmanager
     def _phase(self, name: str):
@@ -205,52 +176,29 @@ class Crawler:
             return 0
 
     def _fetch_artifact(self, allowed: DataFrame) -> DataFrame:
-        """J4+F5/F6+L2 fetch artifact plan (one row per allowed input row) —
-        shared by run_round and the codegen warm-up so both compile the SAME
-        generated classes."""
+        """J4+F5/F6+L2 fetch artifact plan (one row per allowed input row),
+        with the F3 store gate evaluated once as ``saved``: the pages sink,
+        the UNSAVED_PAGES counter and the update delta all read it."""
         from .extract import BASE_PART_COLS, extract_links_with_base, with_base_parts
 
+        ok = F.col("ok")
         return (
             with_base_parts(fetch_simulate(allowed, self.docs, self.cfg))
-            .withColumn("links", F.when(F.col("ok"), extract_links_with_base(F.col("spans"))))
+            .withColumn("links", F.when(ok, extract_links_with_base(F.col("spans"))))
             .withColumn("n_links", F.size("links"))
+            .withColumn(
+                "saved", ok & F.coalesce(should_store(F.col("tags"), self.cfg), F.lit(False))
+            )
             .drop(*BASE_PART_COLS)
         )
 
     def _link_candidates(self, ok_rows: DataFrame) -> DataFrame:
         """§3.2 link-ingest kernel over the fetch artifact (explode →
-        canonicalize/tag/score/hash) — the heaviest codegen class of a round;
-        shared with the warm-up pass."""
+        canonicalize/tag/score/hash) — the heaviest codegen class of a round."""
         exploded = ok_rows.select(F.explode_outer("links").alias("url")).where(
             F.col("url").isNotNull()
         )
         return FR.make_candidates(exploded, self.cfg)
-
-    def warmup(self) -> None:
-        """One 2-row pass through the round dataflow so its generated classes
-        JIT-compile while the machine is idle (see __init__ docstring; the
-        measured first-round interpreted convoy at local[32] was ~30× task
-        CPU). Uses the real operators over a real (tiny) fetch artifact so
-        the codegen source — hence the compiled class — matches the rounds'.
-        Leaves no state behind: the throwaway artifact is dropped, nothing
-        else is written."""
-        cfg = self.cfg
-        frq = self.wh.read_frontier_queued()
-        with self._phase("warmup"):
-            dq = self.spark.createDataFrame(FR.eligible_raw(frq, cfg).limit(2).toArrow())
-            allowed = FR.retag_dequeued(dq, cfg).where(F.col("_allowed")).drop("_allowed")
-            self.wh.append_delta("fetch", 0, self._fetch_artifact(allowed))
-            try:
-                fetched = self.wh.read_delta("fetch", 0)
-                cands = self._link_candidates(fetched.where(F.col("ok")))
-                last = self.wh.last_committed_round() or 0
-                seen = self.wh.read_frontier_seen_ids(last).limit(2)
-                FR.new_link_rows(seen, cands, 1, depth=1).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            finally:
-                self.wh.drop_delta("fetch", 0)
-        self._warmed = True
 
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> RoundStats:
@@ -319,9 +267,8 @@ class Crawler:
         for name, v in fcounts.items():
             stats.add(name, v)
         fetched = self.wh.read_delta("fetch", round_no)
-        ok_rows = fetched.where(F.col("ok"))
 
-        self._ingest_links(round_no, ok_rows, stats)
+        self._ingest_links(round_no, fetched.where(F.col("ok")), stats)
         if allowed_n > fcounts["PROCESSED_URLS"]:
             with self._phase("errors_write"):  # S11 errors sink, one file
                 self.wh.append_delta(
@@ -339,10 +286,10 @@ class Crawler:
             self.wh.write_frontier_updates(
                 round_no,
                 FR.round_update_delta(
-                    dq, fetched.select("url_id", "tags", "ok", "error"), round_no
+                    dq, fetched.select("url_id", "tags", "ok", "error", "saved"), round_no
                 ),
             )
-        for name, v in self._save_pages(round_no, ok_rows).items():
+        for name, v in self._save_pages(round_no, fetched).items():
             stats.add(name, v)
         self._fr_count += stats.counters.get("DISCOVERED_URLS", 0)
 
@@ -369,12 +316,11 @@ class Crawler:
         split and the A4 warns (A3; URLStore.java:176-180,
         AbstractStorageManager.java:37-50, DumbCrawler.java:108-110)."""
         cfg, ok, n_links = self.cfg, F.col("ok"), F.col("n_links")
-        stored = F.coalesce(should_store(F.col("tags"), cfg), F.lit(False))
         named = {
             "PROCESSED_URLS": F.col("error").isNull(),
             **{f"ERROR_{e}": F.col("error") == e for e in error_kinds(cfg)},
             "MAX_ATTEMPT_COUNT_REACHED": F.col("attempt") + 1 >= cfg.max_attempt_count,
-            "UNSAVED_PAGES": ok & ~stored,
+            "UNSAVED_PAGES": ok & ~F.col("saved"),
             "WARN_EMPTY_LINKS": ok & (n_links == 0),
             "WARN_TOO_MANY_LINKS": ok & (n_links > 300),
         }
@@ -447,130 +393,27 @@ class Crawler:
                     ins["part"].to_numpy(), ins["h1"].to_numpy(), ins["h2"].to_numpy()
                 )
 
-    def _save_pages(self, round_no: int, ok_rows: DataFrame) -> dict[str, int]:
-        """S7/S8 pages sink with F3 gate + J5 new-vs-update. The span payload
-        makes one pass (gate → order_spans → parquet); the new-vs-update split
-        is INCREMENTAL (VERDICT r04 item 3): a per-round O(k) probe of the
-        pages-seen bloom, exact-checking only bloom positives — never a
-        per-round scan of the full pages history (see _pages_split)."""
-        saved = ok_rows.where(should_store(F.col("tags"), self.cfg)).select(
-            "url_id", "url", F.lit(round_no).alias("round"),
-            order_spans(F.col("spans")).alias("spans"),
+    def _save_pages(self, round_no: int, fetched: DataFrame) -> dict[str, int]:
+        """S7/S8 pages sink behind the F3 gate (the artifact's ``saved``);
+        the span payload makes one pass (gate → order_spans → parquet). The
+        J5 new-vs-update split rides the write as an observed metric: a page
+        is UPDATED iff its dequeued frontier row carries a ``saved_round``
+        (an earlier round saved it) — O(k), no pages-history read."""
+        obs = Observation()
+        saved = (
+            fetched.where(F.col("saved"))
+            .observe(obs, F.count_if(F.col("saved_round").isNotNull()).alias("upd"))
+            .select(
+                "url_id", "url", F.lit(round_no).alias("round"),
+                order_spans(F.col("spans")).alias("spans"),
+            )
         )
         with self._phase("pages_write"):
             saved_n = self.wh.append_delta("pages", round_no, saved, keep_empty=False)
         if saved_n == 0:
             return {}
-        with self._phase("pages_split"):
-            upd_n = self._pages_split(round_no)
+        upd_n = int(obs.get["upd"])
         return {"NEW_SAVED_PAGES": saved_n - upd_n, "UPDATED_PAGES": upd_n, "SAVED_PAGES": saved_n}
-
-    # -- J5 incremental new-vs-update split (VERDICT r04 item 3) ----------------
-    # The old split semi-joined the round's fresh ids against EVERY pages
-    # delta ever written — cheap per round (broadcast, url_id-pruned) but
-    # O(total pages history), so on a months-long crawl the per-round cost
-    # grows without bound. A page is UPDATED iff its url_id was saved in a
-    # prior round, which is a seen-set question — the same shape the frontier
-    # already solves with a partitioned bloom (bloom.py). Per round:
-    #   probe the k-bounded fresh ids against the pages-seen bloom (O(k));
-    #   zero positives (the common forward-crawl case at fpr 1e-6) ⇒ upd=0
-    #   with NO history touch; otherwise exact-check ONLY the positives —
-    #   an IN-pushdown id-column scan for small positive sets, a broadcast
-    #   semi-join for the rare mass-update (refetch) case. The bloom then
-    #   grows by this round's first-time ids (k-bounded driver-side numpy
-    #   fold, bloom.add_local — no per-round Spark job for the increment).
-    # The bloom bucket is derived (xxhash64(url_id) mod partitions), NOT the
-    # frontier's salted-host `part`, so the filter needs nothing but the ids
-    # and a resume can rebuild it from pages history alone (one distinct
-    # per process lifetime — the same restart cost class as the planner
-    # seed). Exactness: blooms have no false negatives, and over-approximation
-    # after a rolled-back round only causes spurious exact checks, never a
-    # wrong split. At the 10^10 design point the per-part bitmaps live next
-    # to the Iceberg partitions like the frontier's (bloom.py design note).
-    _PAGES_BLOOM_FPR = 1e-6  # E[false positives]/round = k·fpr ≪ 1 ⇒ most
-    # rounds skip the exact check entirely
-    _PAGES_SPLIT_IN_LIMIT = 10_000  # positives collected for IN-pushdown up
-    # to this; beyond it (mass refetch) the broadcast semi-join path runs
-
-    def _pages_part(self):
-        return F.pmod(F.xxhash64("url_id"), F.lit(self.cfg.partitions)).cast(
-            "int"
-        ).alias("part")
-
-    def _pages_seen_bloom(self, round_no: int):
-        """Lazy pages-seen filter: empty on a fresh crawl, rebuilt from the
-        committed pages history on resume (one distinct id scan per process,
-        NOT per round)."""
-        if self._pages_bloom is None:
-            self._pages_bloom_capacity = max(
-                4096, (self._fr_count // self.cfg.partitions + 1) * 4
-            )
-            hist = self.wh.read_deltas("pages", upto_round=round_no - 1)
-            if hist is None:
-                self._pages_bloom = PartitionedBloom({}, self._pages_bloom_capacity)
-            else:
-                self._pages_bloom = PartitionedBloom.build(
-                    hist.select("url_id").distinct().select("url_id", self._pages_part()),
-                    fpr=self._PAGES_BLOOM_FPR,
-                    expected_per_part=self._pages_bloom_capacity,
-                )
-        return self._pages_bloom
-
-    def _pages_split(self, round_no: int) -> int:
-        """UPDATED_PAGES count for this round's saved pages; folds the
-        first-time ids into the pages-seen bloom.
-
-        The whole probe+fold runs DRIVER-side over ONE k-bounded collect
-        (url_id + JVM xxhash64 pair + derived part, Arrow toPandas): the
-        fresh side is ≤ the round budget by construction, so a 4 MB collect
-        plus vectorized numpy beats launching pandas-UDF probe + shuffle
-        fold jobs per round (measured 10× on the 25k-row bench; the
-        distributed probe path in bloom.py remains the tool for UNBOUNDED
-        probe sides like the frontier candidate stream). O(k) per round,
-        independent of crawl history."""
-        import numpy as np
-
-        h1, h2 = _h1h2(F.col("url_id"))
-        pdf = (
-            self.wh.read_delta("pages", round_no)
-            .select("url_id", self._pages_part(), h1.alias("h1"), h2.alias("h2"))
-            .toPandas()
-        )
-        bloom = self._pages_seen_bloom(round_no)
-        parts = pdf["part"].to_numpy()
-        a = pdf["h1"].to_numpy()
-        b = pdf["h2"].to_numpy()
-        hit = (
-            bloom.probe_local(parts, a, b)
-            if bloom.filters
-            else np.zeros(len(pdf), dtype=bool)
-        )
-        seen: set[str] = set()
-        if hit.any():
-            # exact check ONLY the bloom positives (no false negatives ⇒
-            # every true update is in `pos`); small sets push down as an
-            # IN-literal on the id-column scan, the rare mass-update
-            # (refetch) case broadcast-semi-joins instead
-            pos = pdf.loc[hit, "url_id"].tolist()
-            hist = self.wh.read_deltas("pages", upto_round=round_no - 1)
-            ids = hist.select("url_id")
-            if len(pos) <= self._PAGES_SPLIT_IN_LIMIT:
-                matched = ids.where(F.col("url_id").isin(pos)).distinct()
-            else:
-                pos_df = self.spark.createDataFrame(
-                    [(u,) for u in pos], "url_id string"
-                )
-                matched = ids.join(F.broadcast(pos_df), "url_id", "left_semi").distinct()
-            seen = {r["url_id"] for r in matched.collect()}
-        new_mask = (
-            ~pdf["url_id"].isin(seen).to_numpy()
-            if seen
-            else np.ones(len(pdf), dtype=bool)
-        )
-        self._pages_bloom = bloom.add_local(
-            parts[new_mask], a[new_mask], b[new_mask], fpr=self._PAGES_BLOOM_FPR
-        )
-        return len(seen)
 
     def _append_metrics(self, round_no: int, stats: RoundStats) -> None:
         import pyarrow as pa
@@ -593,10 +436,6 @@ class Crawler:
         self, max_rounds: int | None = None, refetch: bool = False, verbose: bool = False
     ) -> list[RoundStats]:
         start = self.bootstrap()
-        if self.warmup_codegen and not self._warmed and (
-            not self._warmup_auto or self._fr_count >= _WARMUP_MIN_FRONTIER
-        ):
-            self.warmup()
         if refetch and start > 0:
             # C4 refetch-all reset (dormant in the reference: URLStore.java:60-68
             # hardcodes refetch=false — `UPDATE links SET status = 0`)

@@ -68,6 +68,9 @@ FRONTIER_SCHEMA = T.StructType([
     T.StructField("created_round", T.IntegerType(), False),
     T.StructField("taken_round", T.IntegerType(), True),
     T.StructField("completed_round", T.IntegerType(), True),
+    # J5: round of the URL's latest saved page, NULL if never saved (the
+    # reference's url_index hit) — UPDATED_PAGES reads it off the dequeued row
+    T.StructField("saved_round", T.IntegerType(), True),
     T.StructField("error", T.StringType(), True),
     T.StructField("part", T.IntegerType(), False),
 ])
@@ -174,12 +177,15 @@ def new_link_rows(
         F.lit(round_no).alias("created_round"),
         F.lit(None).cast("int").alias("taken_round"),
         F.lit(None).cast("int").alias("completed_round"),
+        F.lit(None).cast("int").alias("saved_round"),
         F.lit(None).cast("string").alias("error"),
         "part",
     )
 
 
-DEQUEUE_COLS = ["url_id", "url", "host", "tags", "priority", "attempt", "depth", "part"]
+DEQUEUE_COLS = [
+    "url_id", "url", "host", "tags", "priority", "attempt", "depth", "saved_round", "part",
+]
 
 
 def eligible_raw(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
@@ -398,16 +404,29 @@ def retag_dequeued(dequeued: DataFrame, cfg: CrawlConfig) -> DataFrame:
 # last-wins window. Periodic compaction (Crawler.compact_every) rewrites the
 # reconciled snapshot and resets the delta window.
 
+UPDATE_DELTA_SCHEMA = T.StructType([
+    T.StructField("url_id", T.StringType()),
+    T.StructField("status", T.ByteType()),
+    T.StructField("tags", T.ArrayType(T.StringType())),
+    T.StructField("error", T.StringType()),
+    T.StructField("done", T.BooleanType()),
+    T.StructField("round", T.IntegerType()),
+    T.StructField("saved_round", T.IntegerType()),
+])
+
+
 def round_update_delta(dequeued: DataFrame, results: DataFrame, round_no: int) -> DataFrame:
     """The k-bounded status-transition delta of one round (C3 + the
     taken-mark, URLStore.java:159-206): every dequeued row appears exactly
     once — PROCESSING if it was filtered before fetch (the reference's leak),
-    else PROCESSED/FAILED with fresh tags + error."""
+    else PROCESSED/FAILED with fresh tags + error, and ``saved_round`` set
+    when the round saved the page (``results.saved``, the F3 gate)."""
     return (
         dequeued.select("url_id")
         .join(
             results.select(
-                "url_id", F.col("tags").alias("_nt"), "ok", F.col("error").alias("_ne")
+                "url_id", F.col("tags").alias("_nt"), "ok", F.col("error").alias("_ne"),
+                "saved",
             ),
             "url_id",
             "left",
@@ -423,6 +442,7 @@ def round_update_delta(dequeued: DataFrame, results: DataFrame, round_no: int) -
             F.col("_ne").alias("error"),
             F.col("ok").isNotNull().alias("done"),
             F.lit(round_no).alias("round"),
+            F.when(F.col("saved"), F.lit(round_no)).alias("saved_round"),
         )
     )
 
@@ -431,7 +451,8 @@ def compose_frontier(base: DataFrame, inserts: DataFrame | None, upds: DataFrame
     """Reconcile base ∪ inserts with the update deltas — the same rows a
     full rewrite of the frontier per round would give (that rewrite is the
     reference in tests/test_frontier.py). The upd side is k×rounds rows —
-    broadcast."""
+    broadcast. ``saved_round`` is sticky: a save sets it, every other
+    completion keeps it."""
     full = base if inserts is None else base.unionByName(inserts)
     if upds is None:
         return full
@@ -443,6 +464,7 @@ def compose_frontier(base: DataFrame, inserts: DataFrame | None, upds: DataFrame
             F.col("error").alias("_ue"),
             F.col("done").alias("_ud"),
             F.col("round").alias("_ur"),
+            F.col("saved_round").alias("_usr"),
         )
     )
     j = full.join(u, "url_id", "left")
@@ -455,7 +477,8 @@ def compose_frontier(base: DataFrame, inserts: DataFrame | None, upds: DataFrame
         .withColumn("error", F.when(done, F.col("_ue")).otherwise(F.col("error")))
         .withColumn("attempt", F.when(done, F.col("attempt") + 1).otherwise(F.col("attempt")))
         .withColumn("completed_round", F.when(done, F.col("_ur")).otherwise(F.col("completed_round")))
-        .drop("_us", "_ut", "_ue", "_ud", "_ur")
+        .withColumn("saved_round", F.coalesce(F.col("_usr"), F.col("saved_round")))
+        .drop("_us", "_ut", "_ue", "_ud", "_ur", "_usr")
     )
 
 

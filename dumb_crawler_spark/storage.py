@@ -69,6 +69,14 @@ class Warehouse:
         # keeps one schema for its lifetime, so only the first read infers.
         self._schemas: dict[tuple[str, str], StructType] = {}
         (self.root / "_commits").mkdir(parents=True, exist_ok=True)
+        # the frontier's kinds are pinned up front, for every reader (crawl,
+        # streaming, CLI): dirs written before a column existed (saved_round)
+        # read it back as NULL
+        from . import frontier as FR
+
+        for kind in ("snap", "ins"):
+            self.pin_schema("frontier", kind, FR.FRONTIER_SCHEMA)
+        self.pin_schema("frontier", "upd", FR.UPDATE_DELTA_SCHEMA)
 
     def pin_schema(self, table: str, kind: str, schema: StructType) -> None:
         """Declare the read schema of ``table``'s ``kind`` dirs (snap, ins,

@@ -157,7 +157,7 @@ def _ladder(levels, frontier_n, rounds, k, reps, progress=None) -> dict:
     med_tp = {
         n: runs[n][0]["crawl"]["urls_processed"] / med_secs[n] for n in runs
     }
-    # Steady-state (rounds ≥ 2) view: round 1 pays one-time JVM warmup —
+    # Steady-state (rounds ≥ 2) view: round 1 pays one-time JVM warm-up —
     # classloading/Catalyst init, Janino codegen, JIT — identical absolute
     # cost at every core count, so at few-round bench inputs it floods the
     # ratio. A production crawl repeats the PER-ROUND cost thousands of
@@ -295,13 +295,13 @@ def _steady_md(lad: dict) -> str:
         f"(steady samples (seconds): {lo} = {st['all_samples_seconds'][lo]}, "
         f"{hi} = {st['all_samples_seconds'][hi]}; per-round walls of the best runs: "
         f"{lo} = {st['round_seconds_best'][lo]}, {hi} = {st['round_seconds_best'][hi]}). "
-        "Round 1 pays one-time JVM warmup — classloading/Catalyst init, Janino "
+        "Round 1 pays one-time JVM warm-up — classloading/Catalyst init, Janino "
         "codegen compile, JIT — measured as a ~16 s driver-only gap plus "
         "cold-code task inflation at EVERY core count (scripts/phase_jobs.py "
         "timeline). That absolute cost is core-count-independent, so on a "
         "few-round bench input it floods the whole-run ratio; a production "
         "crawl repeats the per-round cost thousands of times and amortizes "
-        "warmup to zero. Steady-state throughput is therefore the "
+        "warm-up to zero. Steady-state throughput is therefore the "
         "scale-representative reading of the north rule's two-level "
         "criterion; the whole-run number above is published unchanged for "
         "continuity.\n"
@@ -334,7 +334,7 @@ def write_bench_md(report: dict) -> None:
             "cleaner window — both raw sample sets are in SCALING.json; the spread between the\n"
             "two campaigns IS the documented host noise, not a code delta (same commit).\n"
             "A third variant with the codegen warm-up forced on at BOTH levels\n"
-            "(BENCH_WARMUP=1) measured 0.388 best / 0.374 median in a slightly busier\n"
+            "(forced on by an env var since deleted) measured 0.388 best / 0.374 median in a slightly busier\n"
             "window — same noise band; the warm-up targets the 32-thread convoy, and does\n"
             "not move the 2-vs-8 ratio.\n"
         )
@@ -401,7 +401,7 @@ N→4N executor cluster adds.
 ### Resume at scale (round 5, VERDICT r04 item 7)
 
 Process-restart cost at the bench input (2M frontier, k=200k, local[32];
-`scripts/resume_probe.py`): a fresh Crawler on a 2-round-old warehouse runs
+a resume probe script, since deleted): a fresh Crawler on a 2-round-old warehouse runs
 its first round in 36.3 s vs ~28 s steady, i.e. **~8 s one-time resume
 overhead**: bootstrap rollback + frontier count 1.4 s, incremental-planner
 seed scan ~1.2 s over steady, pages-seen bloom rebuild ~2 s (one distinct
@@ -558,7 +558,7 @@ vs Run Time) attribute the round-level spikes to two distinct mechanisms:
    execute the brand-new whole-stage-codegen class interpreted (~30× CPU)
    while the JIT compile lags behind 32 saturated cores; rounds 2+ reuse the
    compiled class (26 s total) because Spark folds literals into codegen
-   references. Fix: `Crawler.warmup()` runs the identical plan shape over a
+   references. Fix (since deleted): a codegen warm-up pass ran the identical plan shape over a
    2-row artifact before round 1 (auto-enabled at ≥16-way parallelism,
    6-10 s once). Controlled 1-round probe: round 1 = 35.1 s with
    `ins_write` 4.1 s, vs 110 s / 62 s cold.

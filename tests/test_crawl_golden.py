@@ -130,34 +130,6 @@ def test_threshold_path_crawl_matches_oracle(spark, tmp_path, web, monkeypatch):
     assert engine.metrics_total() == {k: v for k, v in oracle.counters.items() if v}
 
 
-def test_warmup_pass_is_invisible(spark, tmp_path, web):
-    """The round-4 codegen warm-up (Crawler.warmup: one 2-row pass through
-    the round dataflow before round 1, JIT-compiling the generated classes
-    while the machine is idle) must leave ZERO trace in crawl semantics:
-    identical dequeue order, counters and final frontier vs warmup off, and
-    no leftover fetch artifact."""
-    docs, _ = web
-    cfg = canonical_config()
-    on = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "on", warmup_codegen=True)
-    on.run(max_rounds=3)
-    assert on._warmed
-    off = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "off", warmup_codegen=False)
-    off.run(max_rounds=3)
-    order = lambda c: [
-        (r["round"], r["seq"], r["url_id"])
-        for r in c.dequeue_order().orderBy("round", "seq").collect()
-    ]
-    assert order(on) == order(off)
-    assert on.metrics_total() == off.metrics_total()
-    f = lambda c: {
-        (r["url_id"], r["status"], r["attempt"]) for r in c.wh.read_frontier().collect()
-    }
-    assert f(on) == f(off)
-    # the throwaway warm-up artifact is gone
-    assert not any("fetch" in d and "00000000" in d for d in
-                   (str(p) for p in (tmp_path / "on").rglob("*")))
-
-
 @pytest.mark.parametrize("cutoff", [None, 0])
 def test_budget_table_crawl_matches_oracle(spark, tmp_path, monkeypatch, cutoff):
     """Robots crawl-delay budgets (empty disallow lists) that bind on both

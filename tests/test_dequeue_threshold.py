@@ -18,7 +18,7 @@ def _random_frontier(spark, n=5000, seed=3):
         (
             f"id{i:05d}", f"http://h{rng.randint(0, 20)}.com/{i}", f"h{rng.randint(0, 20)}.com",
             ["t"], rng.choice([0, 0, 0, 1, 2]), rng.choice([0, 10, 900, 1000]), rng.randint(0, 6),
-            0, 0, None, None, None, i % 8,
+            0, 0, None, None, None, None, i % 8,
         )
         for i in range(n)
     ]

@@ -11,13 +11,15 @@ from pyspark.sql import functions as F
 from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import CrawlConfig, Politeness
 from dumb_crawler_spark.corpus import canonical_config
+from dumb_crawler_spark.filters import should_store
 
 
 def _mk_frontier(spark, rows):
-    """rows: (url_id, url, host, priority, status, attempt)"""
+    """rows: (url_id, url, host, priority, status, attempt[, saved_round])"""
     data = [
-        (uid, url, host, ["t"], status, prio, att, 0, 0, None, None, None, 0)
-        for uid, url, host, prio, status, att in rows
+        (uid, url, host, ["t"], status, prio, att, 0, 0, None, None, saved[0] if saved else None,
+         None, 0)
+        for uid, url, host, prio, status, att, *saved in rows
     ]
     return spark.createDataFrame(data, FR.FRONTIER_SCHEMA)
 
@@ -99,13 +101,15 @@ def mark_completed(frontier: DataFrame, results: DataFrame, cfg: CrawlConfig, ro
     """C3: completion MERGE (URLStore.java:159-183). ``results`` needs
     url_id, tags (fresh), ok (bool), error (null when ok). status →
     PROCESSED(2) | FAILED(3), FAILED terminal (SURVEY.md §2.8-C3);
-    attempt += 1 always."""
+    attempt += 1 always. saved_round = round_no when the page is saved
+    (ok ∧ F3 store gate on the fresh tags), else kept."""
     upd = F.broadcast(
         results.select(
             "url_id",
             F.col("tags").alias("_new_tags"),
             F.when(F.col("ok"), F.lit(FR.PROCESSED)).otherwise(F.lit(FR.FAILED)).cast("tinyint").alias("_new_status"),
             F.col("error").alias("_new_error"),
+            (F.col("ok") & should_store(F.col("tags"), cfg)).alias("_new_saved"),
         )
     )
     done = F.col("_new_status").isNotNull()
@@ -116,7 +120,11 @@ def mark_completed(frontier: DataFrame, results: DataFrame, cfg: CrawlConfig, ro
         .withColumn("error", F.when(done, F.col("_new_error")).otherwise(F.col("error")))
         .withColumn("attempt", F.when(done, F.col("attempt") + 1).otherwise(F.col("attempt")))
         .withColumn("completed_round", F.when(done, F.lit(round_no)).otherwise(F.col("completed_round")))
-        .drop("_new_tags", "_new_status", "_new_error")
+        .withColumn(
+            "saved_round",
+            F.when(done & F.col("_new_saved"), F.lit(round_no)).otherwise(F.col("saved_round")),
+        )
+        .drop("_new_tags", "_new_status", "_new_error", "_new_saved")
     )
 
 
@@ -159,17 +167,25 @@ def test_round_update_delta_equals_full_rewrite(spark):
     """The engine's merge-on-read path — the round's k-row update delta,
     composed onto the frontier on read — must equal rewriting the whole
     frontier with mark_taken → mark_completed."""
-    cfg = CrawlConfig(max_attempt_count=5)
+    cfg = CrawlConfig(max_attempt_count=5, storage_included_tags=("fresh",))
     fr = _mk_frontier(spark, [
-        ("a", "http://h/a", "h", 1, 0, 0),
+        ("a", "http://h/a", "h", 1, 0, 0),   # saved this round
         ("b", "http://h/b", "h", 1, 0, 0),
         ("c", "http://h/c", "h", 1, 0, 0),   # dequeued but filtered → leaked PROCESSING
         ("d", "http://h/d", "h", 1, 0, 0),   # untouched
+        ("e", "http://h/e", "h", 1, 0, 0),   # ok, but the store gate refuses it
+        ("f", "http://h/f", "h", 1, 0, 0, 2),  # saved in round 2, fails now
     ])
-    dq = spark.createDataFrame([("a",), ("b",), ("c",)], "url_id string")
+    dq = spark.createDataFrame([("a",), ("b",), ("c",), ("e",), ("f",)], "url_id string")
+    # `saved` is the fetch artifact's F3 gate column (ok ∧ should_store)
     results = spark.createDataFrame(
-        [("a", ["fresh"], True, None), ("b", ["fresh"], False, "E")],
-        "url_id string, tags array<string>, ok boolean, error string",
+        [
+            ("a", ["fresh"], True, None, True),
+            ("b", ["fresh"], False, "E", False),
+            ("e", ["other"], True, None, False),
+            ("f", ["fresh"], False, "E", False),
+        ],
+        "url_id string, tags array<string>, ok boolean, error string, saved boolean",
     )
     composed = FR.compose_frontier(fr, None, FR.round_update_delta(dq, results, 4))
     two_step = mark_completed(mark_taken(fr, dq, 4), results, cfg, 4)
@@ -181,3 +197,6 @@ def test_round_update_delta_equals_full_rewrite(spark):
     st = {r["url_id"]: r for r in composed.collect()}
     assert st["c"]["status"] == FR.PROCESSING and st["c"]["taken_round"] == 4
     assert st["d"]["status"] == FR.QUEUED
+    assert st["a"]["saved_round"] == 4
+    assert st["e"]["status"] == FR.PROCESSED and st["e"]["saved_round"] is None
+    assert st["f"]["status"] == FR.FAILED and st["f"]["saved_round"] == 2

@@ -123,7 +123,7 @@ def test_planner_many_over_hosts_window_fallback(spark, monkeypatch):
             uid = _hl.md5(f"{h}-{j}".encode()).hexdigest()
             rows.append((
                 uid, f"http://h{h}.example.com/{j}", f"h{h}.example.com",
-                ["t"], 0, 100 + (j % 2), 0, 0, 0, None, None, None, h % 8,
+                ["t"], 0, 100 + (j % 2), 0, 0, 0, None, None, None, None, h % 8,
             ))
     fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
     cfg = CrawlConfig(politeness=Politeness(budget_per_host_per_round=budget))

@@ -1,8 +1,8 @@
-"""J5 incremental new-vs-update split (VERDICT r04 item 3): the per-round
-pages-seen bloom probe must reproduce the exact history semi-join on every
-path — all-new rounds (zero bloom positives), mass-update rounds (refetch:
-every id is a true positive), the broadcast fallback for oversized positive
-sets, and the resume-time bloom rebuild from pages history."""
+"""J5 new-vs-update split: UPDATED_PAGES, read off the dequeued frontier
+row's ``saved_round``, must equal a pyarrow recomputation from the pages
+history on every path — all-new rounds, mass-update rounds (refetch: every
+saved page is saved again) and a resume (a fresh Crawler on the committed
+warehouse, whose frontier rows carry the earlier saves)."""
 
 from __future__ import annotations
 
@@ -86,27 +86,11 @@ def test_pages_split_all_new_and_refetch_updates(spark, tmp_path):
     _assert_split_matches(spark, tmp_path / "wh")
 
     # refetch resets every status → the same pages re-save as UPDATED; a NEW
-    # Crawler instance forces the resume path (bloom rebuilt from history)
+    # Crawler instance forces the resume path
     c2 = Crawler(spark, cfg, sdocs, tmp_path / "wh")
-    assert c2._pages_bloom is None
     c2.run(max_rounds=2, refetch=True)
     _assert_split_matches(spark, tmp_path / "wh")
     hist = c2.history
     assert any(s.counters.get("UPDATED_PAGES", 0) > 0 for s in hist), (
         "refetch rounds must re-save previously saved pages as updates"
     )
-
-
-def test_pages_split_broadcast_fallback_path(spark, tmp_path):
-    """_PAGES_SPLIT_IN_LIMIT = 0 forces every positive set onto the broadcast
-    semi-join fallback; the split must be identical."""
-    cfg = canonical_config(thread_count=16)
-    sdocs = docs_to_spark(spark, _tiny_web(cfg))
-    c = Crawler(spark, cfg, sdocs, tmp_path / "wh")
-    c._PAGES_SPLIT_IN_LIMIT = 0
-    c.run(max_rounds=4)
-    c2 = Crawler(spark, cfg, sdocs, tmp_path / "wh")
-    c2._PAGES_SPLIT_IN_LIMIT = 0
-    c2.run(max_rounds=2, refetch=True)
-    _assert_split_matches(spark, tmp_path / "wh")
-    assert any(s.counters.get("UPDATED_PAGES", 0) > 0 for s in c2.history)

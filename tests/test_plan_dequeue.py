@@ -25,7 +25,7 @@ def _skewed_frontier(spark, n=4000, seed=11):
             (
                 f"id{i:05d}", f"http://{host}/{i}", host, ["t"],
                 rng.choice([0, 0, 0, 2]), rng.choice([0, 10, 900]), rng.randint(0, 2),
-                0, 0, None, None, None, i % 8,
+                0, 0, None, None, None, None, i % 8,
             )
         )
     return spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)

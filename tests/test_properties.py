@@ -105,7 +105,7 @@ def test_dequeue_invariants_random_frontier(spark):
         rows.append((
             f"id{i:04d}", f"http://h{rng.randint(0, 9)}.com/{i}", f"h{rng.randint(0, 9)}.com",
             ["t"], rng.choice([0, 0, 0, 1, 2, 3]), rng.randint(0, 100), rng.randint(0, 6),
-            0, 0, None, None, None, 0,
+            0, 0, None, None, None, None, 0,
         ))
     fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
     cfg = CrawlConfig(max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=7))
@@ -140,7 +140,7 @@ def test_plan_dequeue_equals_legacy_randomized(spark):
                     f"i{case}_{i:05d}", f"http://h{rng.randint(0, n_hosts)}.x/{i}",
                     f"h{rng.randint(0, n_hosts)}.x", ["t"],
                     rng.choice([0, 0, 0, 1, 2, 3]), rng.choice([0, 5, 10, 900]),
-                    rng.randint(0, 4), 0, 0, None, None, None, i % 8,
+                    rng.randint(0, 4), 0, 0, None, None, None, None, i % 8,
                 )
                 for i in range(n)
             ]

@@ -66,7 +66,7 @@ def test_host_budgets_and_dequeue(spark):
     assert got == {"h1.com": 3, "h2.com": 50}  # 30s/10s=3; 30s/0.1s=300 capped at 50
 
     rows = [
-        (f"u{h}{i}", f"http://h{h}.com/{i}", f"h{h}.com", ["t"], 0, 10 - i, 0, 0, 0, None, None, None, 0)
+        (f"u{h}{i}", f"http://h{h}.com/{i}", f"h{h}.com", ["t"], 0, 10 - i, 0, 0, 0, None, None, None, None, 0)
         for h in (1, 2, 3) for i in range(5)
     ]
     fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)

@@ -3,8 +3,8 @@ Spark action or pure driver work (crawler.py module docstring), so a change
 that re-adds a per-round job fails here loudly. Also pinned: the counters
 observed on the ins write stay exact under the bloom's two-branch union, the
 Warehouse's pinned read schemas return what schema inference returns, and
-the dequeue_order lineage reads back across a warehouse written before its
-`host` column existed."""
+the dequeue_order lineage and the frontier read back across a warehouse
+written before their `host` and `saved_round` columns existed."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ import uuid
 
 import pyarrow.parquet as pq
 import pytest
+from test_pages_split import _tiny_web
 
 from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import Politeness
@@ -20,11 +21,12 @@ from dumb_crawler_spark.crawler import Crawler
 from dumb_crawler_spark.robots import ROBOTS_SCHEMA
 
 # steady-state jobs of one round on local[4]; before the dequeued batch was
-# collected to the driver these rounds ran 36 and 30 jobs, and before the
-# robots round was planned from the planner's driver-side counts (no
-# per-round grouping-sets probe) it ran 20
+# collected to the driver these rounds ran 36 and 30 jobs, before the robots
+# round was planned from the planner's driver-side counts (no per-round
+# grouping-sets probe) it ran 20, and before UPDATED_PAGES was read off the
+# frontier row the threshold round (it saves pages) ran 15
 ROBOTS_BLOOM_MAX_JOBS = 15
-THRESHOLD_MAX_JOBS = 15
+THRESHOLD_MAX_JOBS = 14
 ROUNDS = 3  # rounds 1-2 pay first reads; round 3 is counted
 
 
@@ -147,3 +149,35 @@ def test_dequeue_order_reads_pre_host_deltas(spark, tmp_path):
     assert {r["round"] for r in rows} == {1, 2}
     assert all(r["host"] is None for r in rows if r["round"] == 1)
     assert all(r["host"] is not None for r in rows if r["round"] == 2)
+
+
+def test_refetch_reads_pre_saved_round_frontier(spark, tmp_path):
+    """A warehouse whose frontier dirs (snap, ins, upd) predate the
+    `saved_round` column resumes through the pinned read schemas, NULL in
+    that column. A refetch then counts the pages saved before the column
+    existed as NEW (FIXTURES.md §3): nothing on their rows records the save."""
+    cfg = canonical_config(thread_count=16)  # k = 32: the tiny web crawls out in 2 rounds
+    sdocs = docs_to_spark(spark, _tiny_web(cfg))
+    root = tmp_path / "wh"
+    Crawler(spark, cfg, sdocs, root).run(max_rounds=2)
+    saved_before = {r["url_id"] for r in Crawler(spark, cfg, sdocs, root).pages().collect()}
+    assert saved_before
+    stripped = 0
+    for f in (root / "frontier").glob("*/*.parquet"):
+        # without Spark's footer schema too, which still names the column
+        pq.write_table(pq.read_table(f).drop(["saved_round"]).replace_schema_metadata(None), f)
+        f.with_name(f".{f.name}.crc").unlink(missing_ok=True)  # Spark's stale checksum
+        stripped += 1
+    assert stripped
+
+    c = Crawler(spark, cfg, sdocs, root)
+    c.run(max_rounds=2, refetch=True)
+    counters = [s.counters for s in c.history]
+    saved_n = sum(m.get("SAVED_PAGES", 0) for m in counters)
+    assert sum(m.get("UPDATED_PAGES", 0) for m in counters) == 0
+    assert sum(m.get("NEW_SAVED_PAGES", 0) for m in counters) == saved_n
+    resaved = {r["url_id"] for r in c.pages().where("round > 2").collect()}
+    assert resaved == saved_before and saved_n == len(resaved)
+    # the saves made since are on the frontier rows again
+    fr = c.wh.read_frontier()
+    assert {r["url_id"] for r in fr.where("saved_round IS NOT NULL").collect()} == resaved

@@ -75,8 +75,8 @@ def test_dequeue_plan_shapes(spark):
     _, plan_under = shape(fr, cfg2)
     assert "Window" not in plan_under
     # one hot host over budget → Window appears, scoped to the hot subset
-    rows = [(f"u{i}", f"http://hot.example.com/{i}", "hot.example.com", ["t"], 0, 5, 0, 0, 0, None, None, None, 0) for i in range(5)]
-    rows.append(("c0", "http://cold.example.com/0", "cold.example.com", ["t"], 0, 5, 0, 0, 0, None, None, None, 0))
+    rows = [(f"u{i}", f"http://hot.example.com/{i}", "hot.example.com", ["t"], 0, 5, 0, 0, 0, None, None, None, None, 0) for i in range(5)]
+    rows.append(("c0", "http://cold.example.com/0", "cold.example.com", ["t"], 0, 5, 0, 0, 0, None, None, None, None, 0))
     hot = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
     dq, plan_over = shape(hot, cfg2)
     assert "Window" in plan_over and "TakeOrderedAndProject" in plan_over
