@@ -119,7 +119,7 @@ def bench_crawl_rounds(spark, tmpdir: str) -> dict:
     # in-batch dedupe window + seen anti-join would be pure overhead here —
     # build the frontier columns straight from the URL kernel (the kernel
     # cost itself — canonicalize/tag/score/hash — is kept, it's real work)
-    cands = FR.make_candidates(urls, cfg)
+    cands = FR.UrlKernel(cfg).candidates(urls)
     fr0 = cands.select(
         "url_id", "url", "host", "tags",
         F.lit(0).cast("tinyint").alias("status"),

@@ -64,7 +64,7 @@ class CrawlConfig:
     priorities: dict[str, int] = field(default_factory=dict)  # LinkPrioritizer.java:27-31
     validation_selectors: dict[str, str] = field(default_factory=dict)  # ContentValidator.java:23-27
     proxify: tuple[str, ...] = ()  # ContentRenderer.java:31-52 ('all' or tag names)
-    storage_included_tags: tuple[str, ...] = ()  # AbstractStorageManager.java:22-26; empty = store all
+    storage_included_tags: tuple[str, ...] = ()  # AbstractStorageManager.java:22-35; empty = store nothing
     task_killer_timeout_ms: int = parse_period_ms("10m")  # TaskKiller.java:18-23
     max_rounds: int | None = None  # sandbox bound; None = run to empty frontier
     politeness: Politeness = field(default_factory=Politeness)

@@ -7,22 +7,32 @@ dataflow as declarative plans over the whole batch:
     dequeue (A1) → mark PROCESSING → re-tag/re-filter (T4/F2)
     → fetch-simulate join docs (J4) → validate (F5/F6)
     → extract links (L2) → canonicalize/tag/score/filter (U9/U2/T1/T2/F2)
-    → merge new links into frontier (J1-J3/S4)
+    → merge new links into frontier (J1-J3/S4) → errors (S11)
     → mark PROCESSED/FAILED (C3) → append pages (S7/S8; J5 off the row)
-    → append metrics (A3/S10) + errors (S11) → commit round (lineage)
+    → append metrics (A3/S10) → commit round (lineage)
 
 Every k-bounded step is either one Spark action or pure driver work. The
 dequeued batch (≤ k rows by construction) is collected ONCE as Arrow; the
 driver derives its count, the D2 lineage (written with pyarrow), the
 planner's decrements and the planned-count drift check from it, and the
-downstream plans read it back as a local relation. The counters ride writes
-that run anyway as observed metrics: the A3 fetch counters on the fetch
-write, the F2/robots counters on the ins write, the J5 new-vs-update split
-on the pages write (the dequeued row's ``saved_round``, an exact per-URL
-record like the reference's url_index, says whether the page was saved
-before). The URL-seen bloom and the planner state grow on the driver from
-one Arrow read of the round's inserts. The Warehouse pins each table's read
-schema, so no per-read schema-inference job runs either.
+downstream plans read it back as a local relation. The round's other two
+k-row tails are driver work too: the C3 update delta (the dequeued batch
+matched against one pyarrow read of the fetch delta) and the S11 errors
+delta (that delta's failed rows) are pyarrow writes. The counters ride
+writes that run anyway as observed metrics: the A3 fetch counters on the
+fetch write, the F2/robots counters on the ins write, the J5 new-vs-update
+split on the pages write (the dequeued row's ``saved_round``, an exact
+per-URL record like the reference's url_index, says whether the page was
+saved before). The URL-seen bloom and the planner state grow on the driver
+from one Arrow read of the round's inserts. The Warehouse pins each table's
+read schema, so no per-read schema-inference job runs either.
+
+Plans are built once per Crawler: every expression that depends on the
+config alone — the URL kernel, the T4 re-tag, the F2 and robots verdicts,
+the fetch artifact's columns, the counters — is built on first use and
+reused by every round (a Column is an unresolved expression), so a round
+adds only its literals (round number, depth, the bloom version's UDF) and
+its joins. Each layered kernel is one select per layer (urlkit.py).
 
 Exactly-once rounds: all table writes land BEFORE the round's commit marker
 (storage.py); a crash mid-round leaves the previous round's state intact —
@@ -42,20 +52,24 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from functools import cached_property
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import frontier as FR
 from .bloom import PartitionedBloom, _h1h2
 from .config import CrawlConfig
-from .extract import order_spans
+from .extract import BASE_PART_COLS, base_parts_layers, extract_links_with_base, order_spans
 from .fetch import error_kinds, fetch_simulate
-from .filters import is_url_allowed, should_store
+from .filters import should_store
 from .planner import IncrementalPlanner
 from .storage import Warehouse
-
-PAGES_SCHEMA_COLS = ("url_id", "url", "round", "spans", "fetched_round")
+from .urlkit import apply_layers
 
 
 @dataclass
@@ -101,6 +115,9 @@ class Crawler:
         self.phase_times: dict[str, float] = {}  # accumulated per-phase secs (perf triage)
         self._phase_lock = threading.Lock()  # phases may be timed off the main thread
         self._bloom = None
+        # the cfg-pure expressions every round's plans share (UrlKernel and
+        # the cached properties below), built on first use
+        self._urls = FR.UrlKernel(cfg)
         # Dequeue planning (planner.py) for every round, every k and every
         # budget form: per-round planning is k-bounded driver algebra after
         # one seed pass, with no per-round eligible-set scan (the dominant
@@ -163,11 +180,11 @@ class Crawler:
             seeds_df = self.spark.createDataFrame(
                 [(s,) for s in self.cfg.seeds], T.StructType([T.StructField("url", T.StringType())])
             )
-            cands = FR.make_candidates(seeds_df, self.cfg, seeds=True)
+            cands = self._urls.candidates(seeds_df, seeds=True)
             stats = RoundStats(0)
             non_http = cands.where(~F.col("url").startswith("http")).count()
             stats.add("IGNORED_URLS", non_http)
-            fr = FR.merge_new_links(FR.empty_frontier(self.spark), cands, self.cfg, 0, depth=0)
+            fr = FR.merge_new_links(FR.empty_frontier(self.spark), cands, self._urls, 0, depth=0)
             self._fr_count = self._write_frontier(0, fr)
             stats.add("DISCOVERED_URLS", self._fr_count)
             self._append_metrics(0, stats)
@@ -175,30 +192,53 @@ class Crawler:
             self.history.append(stats)
             return 0
 
-    def _fetch_artifact(self, allowed: DataFrame) -> DataFrame:
-        """J4+F5/F6+L2 fetch artifact plan (one row per allowed input row),
-        with the F3 store gate evaluated once as ``saved``: the pages sink,
-        the UNSAVED_PAGES counter and the update delta all read it."""
-        from .extract import BASE_PART_COLS, extract_links_with_base, with_base_parts
+    # -- the cfg-pure pieces of a round's plans, built once per Crawler -------
+    @cached_property
+    def _fetch_artifact(self):
+        """J4+F5/F6+L2 fetch artifact plan (one row per allowed input row):
+        L2 links over the fetch join (base-URL pieces layered), with the F3
+        store gate evaluated once as ``saved`` — the pages sink, the
+        UNSAVED_PAGES counter and the update delta all read it."""
+        fetch, star, ok = fetch_simulate(self.docs, self.cfg), F.col("*"), F.col("ok")
+        saved = ok & F.coalesce(should_store(F.col("tags"), self.cfg), F.lit(False))
+        layers = [
+            *base_parts_layers(),
+            [star, F.when(ok, extract_links_with_base(F.col("spans"))).alias("links")],
+            [star, F.size("links").alias("n_links"), saved.alias("saved")],
+        ]
+        return lambda allowed: apply_layers(fetch(allowed), layers).drop(*BASE_PART_COLS)
 
-        ok = F.col("ok")
-        return (
-            with_base_parts(fetch_simulate(allowed, self.docs, self.cfg))
-            .withColumn("links", F.when(ok, extract_links_with_base(F.col("spans"))))
-            .withColumn("n_links", F.size("links"))
-            .withColumn(
-                "saved", ok & F.coalesce(should_store(F.col("tags"), self.cfg), F.lit(False))
-            )
-            .drop(*BASE_PART_COLS)
-        )
+    @cached_property
+    def _fetch_counters(self) -> list[Column]:
+        """ONE set of aggregates over the fetch artifact yields
+        PROCESSED_URLS, every ERROR_*, MAX_ATTEMPT_COUNT_REACHED, the F3 store
+        split and the A4 warns (A3; URLStore.java:176-180,
+        AbstractStorageManager.java:37-50, DumbCrawler.java:108-110)."""
+        cfg, ok, n_links = self.cfg, F.col("ok"), F.col("n_links")
+        named = {
+            "PROCESSED_URLS": F.col("error").isNull(),
+            **{f"ERROR_{e}": F.col("error") == e for e in error_kinds(cfg)},
+            "MAX_ATTEMPT_COUNT_REACHED": F.col("attempt") + 1 >= cfg.max_attempt_count,
+            "UNSAVED_PAGES": ok & ~F.col("saved"),
+            "WARN_EMPTY_LINKS": ok & (n_links == 0),
+            "WARN_TOO_MANY_LINKS": ok & (n_links > 300),
+        }
+        return [F.count_if(cond).alias(name) for name, cond in named.items()]
 
-    def _link_candidates(self, ok_rows: DataFrame) -> DataFrame:
-        """§3.2 link-ingest kernel over the fetch artifact (explode →
-        canonicalize/tag/score/hash) — the heaviest codegen class of a round."""
-        exploded = ok_rows.select(F.explode_outer("links").alias("url")).where(
-            F.col("url").isNotNull()
-        )
-        return FR.make_candidates(exploded, self.cfg)
+    @cached_property
+    def _verdict_plan(self):
+        """The link ingest's verdicts: (the F2 flag select, the J6-NR robots
+        transform or None, the F2/robots counters, the keep predicate)."""
+        ok = F.col("_ok")
+        counters = [F.count(F.lit(1)).alias("n_total"), F.count_if(ok).alias("n_ok")]
+        keep, robots = ok, None
+        if self.robots is not None:
+            from .robots import robots_verdict
+
+            blocked, robots = F.col("_robots_blocked"), robots_verdict(self.robots)
+            counters.append(F.count_if(ok & blocked).alias("n_blocked"))
+            keep = ok & ~blocked
+        return [F.col("*"), self._urls.allowed.alias("_ok")], robots, counters, keep
 
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> RoundStats:
@@ -254,9 +294,8 @@ class Crawler:
         # + column-pruned re-reads beat caching GBs of span data in the heap
         # (measured: the cache build GC-thrashed local[32] into anti-scaling).
         # The A3 fetch counters ride the write as observed metrics.
-        allowed = FR.retag_dequeued(dq, cfg).where(F.col("_allowed")).drop("_allowed")
         fobs = Observation()
-        artifact = self._fetch_artifact(allowed).observe(fobs, *self._fetch_counters())
+        artifact = self._fetch_artifact(self._urls.retag(dq)).observe(fobs, *self._fetch_counters)
         with self._phase("fetch_write"):
             allowed_n = self.wh.append_delta("fetch", round_no, artifact)
         # fetch_simulate emits exactly one row per allowed input row, so the
@@ -269,25 +308,25 @@ class Crawler:
         fetched = self.wh.read_delta("fetch", round_no)
 
         self._ingest_links(round_no, fetched.where(F.col("ok")), stats)
+        # The round's two k-row tails are driver work over the fetch delta
+        # just written, read with pyarrow like the dequeued batch is held: the
+        # S11 errors sink (the failed rows, spans included) and the C3 update
+        # delta. The frontier is NEVER rewritten in-round — the update delta
+        # is composed on read (frontier.compose_frontier; compaction bounds
+        # the delta window), so the per-round write is O(k), not O(frontier).
         if allowed_n > fcounts["PROCESSED_URLS"]:
-            with self._phase("errors_write"):  # S11 errors sink, one file
-                self.wh.append_delta(
-                    "errors",
-                    round_no,
-                    fetched.where(~F.col("ok")).select(
-                        "url_id", "url", "error", F.lit(round_no).alias("round"), "spans"
-                    ).coalesce(1),
+            with self._phase("errors_write"):
+                failed = self.wh.read_delta_rows(
+                    "fetch", round_no, ["url_id", "url", "error", "spans"], where=~pc.field("ok")
                 )
-        # C3 as a k-row MoR update delta — the frontier is NEVER rewritten
-        # in-round (frontier.round_update_delta; compaction bounds the delta
-        # window). At 10^10 rows this is O(k) instead of O(frontier) per-round
-        # write cost. One partition (dq's): one file per round.
+                rnd = pa.array(np.full(failed.num_rows, round_no, dtype=np.int32))
+                self.wh.append_delta_rows("errors", round_no, failed.add_column(3, "round", rnd))
         with self._phase("upd_write"):
+            results = self.wh.read_delta_rows(
+                "fetch", round_no, ["url_id", "tags", "ok", "error", "saved"]
+            )
             self.wh.write_frontier_updates(
-                round_no,
-                FR.round_update_delta(
-                    dq, fetched.select("url_id", "tags", "ok", "error", "saved"), round_no
-                ),
+                round_no, FR.round_update_delta(batch, results, round_no)
             )
         for name, v in self._save_pages(round_no, fetched).items():
             stats.add(name, v)
@@ -310,22 +349,6 @@ class Crawler:
             self.wh.drop_delta("fetch", round_no)
         return stats
 
-    def _fetch_counters(self) -> list:
-        """ONE set of aggregates over the fetch artifact yields
-        PROCESSED_URLS, every ERROR_*, MAX_ATTEMPT_COUNT_REACHED, the F3 store
-        split and the A4 warns (A3; URLStore.java:176-180,
-        AbstractStorageManager.java:37-50, DumbCrawler.java:108-110)."""
-        cfg, ok, n_links = self.cfg, F.col("ok"), F.col("n_links")
-        named = {
-            "PROCESSED_URLS": F.col("error").isNull(),
-            **{f"ERROR_{e}": F.col("error") == e for e in error_kinds(cfg)},
-            "MAX_ATTEMPT_COUNT_REACHED": F.col("attempt") + 1 >= cfg.max_attempt_count,
-            "UNSAVED_PAGES": ok & ~F.col("saved"),
-            "WARN_EMPTY_LINKS": ok & (n_links == 0),
-            "WARN_TOO_MANY_LINKS": ok & (n_links > 300),
-        }
-        return [F.count_if(cond).alias(name) for name, cond in named.items()]
-
     def _ingest_links(self, round_no: int, ok_rows: DataFrame, stats: RoundStats) -> None:
         """Link ingest (§3.2): explode → canonicalize/tag/score → F2 (+ J6-NR
         robots verdict) → J3 anti-join → ins delta. The F2/robots counters
@@ -334,22 +357,12 @@ class Crawler:
         are then read once, as Arrow, to grow the URL-seen bloom and the
         planner state on the driver."""
         cfg = self.cfg
-        flagged = self._link_candidates(ok_rows).withColumn(
-            "_ok", is_url_allowed(F.col("url"), F.col("tags"), cfg)
-        )
-        counters = [
-            F.count(F.lit(1)).alias("n_total"),
-            F.count_if(F.col("_ok")).alias("n_ok"),
-        ]
-        keep = F.col("_ok")
-        if self.robots is not None:
-            from .robots import with_robots_verdict
-
-            flagged = with_robots_verdict(flagged, self.robots)
-            counters.append(
-                F.count_if(F.col("_ok") & F.col("_robots_blocked")).alias("n_blocked")
-            )
-            keep = keep & ~F.col("_robots_blocked")
+        flag, robots, counters, keep = self._verdict_plan
+        links = ok_rows.select(F.explode_outer("links").alias("url")).where(F.col("url").isNotNull())
+        # the URL kernel over the links: the heaviest codegen class of a round
+        flagged = self._urls.candidates(links).select(*flag)
+        if robots is not None:
+            flagged = robots(flagged)
         obs = Observation()
         allowed_cands = (
             flagged.observe(obs, *counters).where(keep).drop("_ok", "_robots_blocked")
@@ -363,7 +376,7 @@ class Crawler:
                 seen_ids,
                 expected_per_part=max(4096, (self._fr_count // cfg.partitions + 1) * 8),
             )
-        new_rows = FR.new_link_rows(
+        new_rows = self._urls.new_rows(
             seen_ids, allowed_cands, round_no, depth=round_no, bloom=self._bloom
         )
         with self._phase("ins_write"):
@@ -377,21 +390,27 @@ class Crawler:
             stats.add("ROBOTS_BLOCKED_LINKS", vals["n_blocked"])
         stats.add("DISCOVERED_URLS", inserted_n)
         if inserted_n:
-            h1, h2 = _h1h2(F.col("url_id"))
             with self._phase("ins_fold"):
-                ins = (
-                    self.wh.read_frontier_inserts(round_no)
-                    .select(
-                        "url_id", "host", "priority", "attempt", "status", "part",
-                        h1.alias("h1"), h2.alias("h2"),
-                    )
-                    .toArrow()
-                )
+                ins = self.wh.read_frontier_inserts(round_no).select(*self._fold_cols).toArrow()
             self._planner.on_inserts(ins)
             if self.use_bloom:
                 self._bloom = self._bloom.add_local(
                     ins["part"].to_numpy(), ins["h1"].to_numpy(), ins["h2"].to_numpy()
                 )
+
+    @cached_property
+    def _fold_cols(self) -> list[Column]:
+        """The insert columns the planner and the URL-seen bloom grow from."""
+        h1, h2 = _h1h2(F.col("url_id"))
+        cols = ("url_id", "host", "priority", "attempt", "status", "part")
+        return [*map(F.col, cols), h1.alias("h1"), h2.alias("h2")]
+
+    @cached_property
+    def _pages_plan(self) -> tuple[Column, Column, list[Column], Column]:
+        """(F3 gate, the J5 update count, the page columns around ``round``)."""
+        saved_before = F.count_if(F.col("saved_round").isNotNull()).alias("upd")
+        spans = order_spans(F.col("spans")).alias("spans")
+        return F.col("saved"), saved_before, [F.col("url_id"), F.col("url")], spans
 
     def _save_pages(self, round_no: int, fetched: DataFrame) -> dict[str, int]:
         """S7/S8 pages sink behind the F3 gate (the artifact's ``saved``);
@@ -399,14 +418,12 @@ class Crawler:
         J5 new-vs-update split rides the write as an observed metric: a page
         is UPDATED iff its dequeued frontier row carries a ``saved_round``
         (an earlier round saved it) — O(k), no pages-history read."""
+        gate, saved_before, head, spans = self._pages_plan
         obs = Observation()
         saved = (
-            fetched.where(F.col("saved"))
-            .observe(obs, F.count_if(F.col("saved_round").isNotNull()).alias("upd"))
-            .select(
-                "url_id", "url", F.lit(round_no).alias("round"),
-                order_spans(F.col("spans")).alias("spans"),
-            )
+            fetched.where(gate)
+            .observe(obs, saved_before)
+            .select(*head, F.lit(round_no).alias("round"), spans)
         )
         with self._phase("pages_write"):
             saved_n = self.wh.append_delta("pages", round_no, saved, keep_empty=False)
@@ -416,8 +433,6 @@ class Crawler:
         return {"NEW_SAVED_PAGES": saved_n - upd_n, "UPDATED_PAGES": upd_n, "SAVED_PAGES": saved_n}
 
     def _append_metrics(self, round_no: int, stats: RoundStats) -> None:
-        import pyarrow as pa
-
         items = sorted(stats.counters.items())
         self.wh.append_delta_rows(
             "metrics",

@@ -37,6 +37,25 @@ from pyspark.sql import functions as F
 _HREF_RE = r'<(?:a|link) href="([^"]+)"(?! rel="nofollow")'
 
 
+_SCHEME_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://"
+_ORIGIN_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+)"
+_BASE_PATH_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+([^?#]*)"
+
+
+def _base_dir(base_path: Column) -> Column:
+    """origin-relative base directory: the path up to (and incl.) its last '/'."""
+    return F.when(base_path == "", F.lit("/")).otherwise(F.regexp_replace(base_path, r"[^/]*$", ""))
+
+
+def _resolve(scheme: Column, origin: Column, base_dir: Column, href: Column) -> Column:
+    return (
+        F.when(href.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"), href)
+        .when(href.startswith("//"), F.concat(scheme, F.lit(":"), href))
+        .when(href.startswith("/"), F.concat(origin, href))
+        .otherwise(F.concat(origin, base_dir, href))
+    )
+
+
 def resolve_url(base: Column, href: Column) -> Column:
     """Relative → absolute resolution (Jsoup absUrl analog,
     CrawlingTaskCallable.java:97) as pure Column expressions.
@@ -45,19 +64,26 @@ def resolve_url(base: Column, href: Column) -> Column:
     root-relative (/p) · path-relative (p, resolved against the base
     directory with query/fragment of the base dropped).
     """
-    scheme = F.regexp_extract(base, r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1)
-    origin = F.regexp_extract(base, r"^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+)", 1)
-    # base directory: origin + path up to (and incl.) the last '/'
-    base_path = F.regexp_extract(base, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+([^?#]*)", 1)
-    base_dir = F.when(
-        base_path == "", F.lit("/")
-    ).otherwise(F.regexp_replace(base_path, r"[^/]*$", ""))
-    return (
-        F.when(href.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"), href)
-        .when(href.startswith("//"), F.concat(scheme, F.lit(":"), href))
-        .when(href.startswith("/"), F.concat(origin, href))
-        .otherwise(F.concat(origin, base_dir, href))
+    return _resolve(
+        F.regexp_extract(base, _SCHEME_RE, 1),
+        F.regexp_extract(base, _ORIGIN_RE, 1),
+        _base_dir(F.regexp_extract(base, _BASE_PATH_RE, 1)),
+        href,
     )
+
+
+def _links(spans: Column, resolve) -> Column:
+    per_span = F.transform(
+        spans,
+        lambda s: F.when(
+            s["kind"] == "text",
+            F.regexp_extract_all(s["text"], F.lit(_HREF_RE), F.lit(1)),
+        )
+        .when(s["kind"] == "media", F.array(s["media_ref"]))
+        .otherwise(F.array().cast("array<string>")),
+    )
+    resolved = F.transform(F.flatten(per_span), resolve)
+    return F.array_distinct(F.filter(resolved, lambda u: u.rlike(r"^https?://")))
 
 
 def extract_links(spans: Column, base_url: Column) -> Column:
@@ -67,70 +93,35 @@ def extract_links(spans: Column, base_url: Column) -> Column:
     span order (anchors of span i come before span i+1), matching the
     reference's insertion-ordered traversal before its Set dedup.
     """
-    per_span = F.transform(
-        spans,
-        lambda s: F.when(
-            s["kind"] == "text",
-            F.regexp_extract_all(s["text"], F.lit(_HREF_RE), F.lit(1)),
-        )
-        .when(s["kind"] == "media", F.array(s["media_ref"]))
-        .otherwise(F.array().cast("array<string>")),
-    )
-    raw = F.flatten(per_span)
-    resolved = F.transform(raw, lambda h: resolve_url(base_url, h))
-    http_only = F.filter(resolved, lambda u: u.rlike(r"^https?://"))
-    return F.array_distinct(http_only)
+    return _links(spans, lambda h: resolve_url(base_url, h))
 
 
-def with_base_parts(df, url_col: str = "url"):
-    """Layer the base-URL pieces (scheme/origin/base-dir) as columns so the
-    per-link resolution lambda references cheap attributes instead of
-    re-running three regexes per array ELEMENT (urlkit.py layered-kernel
-    rationale: `transform` lambdas duplicate outer expressions per element)."""
-    df = df.withColumn(
-        "_b_scheme", F.regexp_extract(F.col(url_col), r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://", 1)
-    )
-    df = df.withColumn(
-        "_b_origin", F.regexp_extract(F.col(url_col), r"^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+)", 1)
-    )
-    df = df.withColumn(
-        "_b_path",
-        F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]+([^?#]*)", 1),
-    )
-    return df.withColumn(
-        "_b_dir",
-        F.when(F.col("_b_path") == "", F.lit("/")).otherwise(
-            F.regexp_replace(F.col("_b_path"), r"[^/]*$", "")
-        ),
-    )
+def base_parts_layers() -> list[list[Column]]:
+    """Layer the base-URL pieces (scheme/origin/base-dir) as columns, one
+    select per layer, so the per-link resolution lambda references cheap
+    attributes instead of re-running three regexes per array ELEMENT
+    (urlkit.py layered-kernel rationale: `transform` lambdas duplicate outer
+    expressions per element). Every other column passes through."""
+    star, url = F.col("*"), F.col("url")
+    return [
+        [
+            star,
+            F.regexp_extract(url, _SCHEME_RE, 1).alias("_b_scheme"),
+            F.regexp_extract(url, _ORIGIN_RE, 1).alias("_b_origin"),
+            F.regexp_extract(url, _BASE_PATH_RE, 1).alias("_b_path"),
+        ],
+        [star, _base_dir(F.col("_b_path")).alias("_b_dir")],
+    ]
 
 
 BASE_PART_COLS = ("_b_scheme", "_b_origin", "_b_path", "_b_dir")
 
 
 def extract_links_with_base(spans: Column) -> Column:
-    """extract_links over a DataFrame prepared by :func:`with_base_parts` —
+    """extract_links over a DataFrame prepared by :func:`base_parts_layers` —
     identical output, ~6× fewer regex evaluations per link."""
-    scheme, origin, base_dir = F.col("_b_scheme"), F.col("_b_origin"), F.col("_b_dir")
-    per_span = F.transform(
-        spans,
-        lambda s: F.when(
-            s["kind"] == "text",
-            F.regexp_extract_all(s["text"], F.lit(_HREF_RE), F.lit(1)),
-        )
-        .when(s["kind"] == "media", F.array(s["media_ref"]))
-        .otherwise(F.array().cast("array<string>")),
-    )
-    raw = F.flatten(per_span)
-    resolved = F.transform(
-        raw,
-        lambda h: F.when(h.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"), h)
-        .when(h.startswith("//"), F.concat(scheme, F.lit(":"), h))
-        .when(h.startswith("/"), F.concat(origin, h))
-        .otherwise(F.concat(origin, base_dir, h)),
-    )
-    http_only = F.filter(resolved, lambda u: u.rlike(r"^https?://"))
-    return F.array_distinct(http_only)
+    scheme, origin, base_dir = map(F.col, ("_b_scheme", "_b_origin", "_b_dir"))
+    return _links(spans, lambda h: _resolve(scheme, origin, base_dir, h))
 
 
 def order_spans(spans: Column) -> Column:

@@ -25,10 +25,13 @@ broadcast on the dequeued side explicitly.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .config import CrawlConfig
+from .urlkit import apply_layers
 
 ERR_404 = "INVALID_STATUS_CODE_404"
 ERR_EMPTY = "EMPTY_RESPONSE_BODY"
@@ -78,9 +81,11 @@ def _first_failing_tag(spans: Column, tags: Column, cfg: CrawlConfig) -> Column:
     return F.get(F.filter(tags, fails), F.lit(0))
 
 
-def fetch_simulate(dequeued: DataFrame, docs: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """J4 + F5 + F6: broadcast-join the dequeued batch against the docs
-    corpus and classify every row.
+def fetch_simulate(docs: DataFrame, cfg: CrawlConfig) -> Callable[[DataFrame], DataFrame]:
+    """J4 + F5 + F6 as a transform of the dequeued batch: broadcast-join it
+    against the docs corpus and classify every row. The docs side, the
+    spans type and the classification columns are built once, here, so a
+    crawl builds the kernel once and each round's plan adds only its joins.
 
     Output: dequeued columns + spans, render_via, error (null = ok), ok.
     """
@@ -90,22 +95,24 @@ def fetch_simulate(dequeued: DataFrame, docs: DataFrame, cfg: CrawlConfig) -> Da
     # table. Split instead into two joins that each broadcast the k-bounded
     # batch: an inner probe of the docs scan (hits) + a tiny anti-join for
     # the misses (404 rows). Plan-asserted in tests/test_misc.py.
-    d = F.broadcast(dequeued)
-    hits = docs.select("doc_id", "spans").join(
-        d, docs["doc_id"] == dequeued["url_id"], "inner"
-    ).drop("doc_id")
-    misses = dequeued.join(
-        F.broadcast(hits.select("url_id")), "url_id", "left_anti"
-    ).withColumn("spans", F.lit(None).cast(hits.schema["spans"].dataType))
-    joined = hits.unionByName(misses.select(*hits.columns))
-    failing_tag = _first_failing_tag(F.col("spans"), F.col("tags"), cfg)
+    side = docs.select("doc_id", "spans")
+    doc_id, url_id, star = side["doc_id"], F.col("url_id"), F.col("*")
+    no_spans = F.lit(None).cast(side.schema["spans"].dataType).alias("spans")
+    spans, tags = F.col("spans"), F.col("tags")
+    failing_tag = _first_failing_tag(spans, tags, cfg)
     error = (
-        F.when(F.col("spans").isNull(), F.lit(ERR_404))
-        .when(F.size(F.col("spans")) == 0, F.lit(ERR_EMPTY))
+        F.when(spans.isNull(), F.lit(ERR_404))
+        .when(F.size(spans) == 0, F.lit(ERR_EMPTY))
         .when(failing_tag.isNotNull(), F.concat(F.lit(ERR_VALIDATION_PREFIX), failing_tag))
     )
-    return (
-        joined.withColumn("render_via", render_via(F.col("tags"), cfg))
-        .withColumn("error", error)
-        .withColumn("ok", F.col("error").isNull())
-    )
+    classify = [
+        [star, render_via(tags, cfg).alias("render_via"), error.alias("error")],
+        [star, F.col("error").isNull().alias("ok")],
+    ]
+
+    def fetch(dequeued: DataFrame) -> DataFrame:
+        hits = side.join(F.broadcast(dequeued), doc_id == dequeued["url_id"], "inner").drop(doc_id)
+        misses = dequeued.join(F.broadcast(hits.select(url_id)), "url_id", "left_anti")
+        return apply_layers(hits.unionByName(misses.select(star, no_spans)), classify)
+
+    return fetch

@@ -33,25 +33,20 @@ Scale notes (10^10 rows, 1000 executors):
 
 from __future__ import annotations
 
+from functools import cached_property
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .config import CrawlConfig
-from .filters import can_attempt, is_http, is_url_allowed, tag_filter_verdict
+from .filters import can_attempt, is_http, is_url_allowed
 from .tagging import priority_for_tags, tag_urls, with_seed_tag
-from .urlkit import (
-    canonicalize,
-    host_of,
-    part_of,
-    url_id,
-    url_parts,
-    with_canonical_url,
-    with_url_parts,
-)
+from .urlkit import apply_layers, canonical_url_layers, part_of, url_id, url_parts_layers
 
 # Status codes, verbatim from URLStore.java:17-22
 QUEUED, PROCESSING, PROCESSED, FAILED = 0, 1, 2, 3
@@ -80,62 +75,132 @@ def empty_frontier(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], FRONTIER_SCHEMA)
 
 
-def make_candidates(urls: DataFrame, cfg: CrawlConfig, *, seeds: bool = False) -> DataFrame:
-    """§3.2 link-ingest pipeline: url → canonicalize (U9) → parts (U1) →
-    tags (T1) → priority (T2, from expression tags only) → url_id (U2) →
-    host/part. One narrow select chain — single stage, zero shuffle.
+class UrlKernel:
+    """The URL kernel of one crawl config (§3.2): url → canonicalize (U9) →
+    parts (U1) → tags (T1) → priority (T2, from expression tags only) →
+    url_id (U2) → host/part, one narrow select per layer (urlkit.py) —
+    single stage, zero shuffle — plus the T4 re-tag, the F2 verdict and the
+    frontier-row insert. Every piece depends on ``cfg`` alone, so each is
+    built once, on first use, and every later plan reuses it: a Column is an
+    unresolved expression, and rebuilding these trees costs thousands of
+    py4j calls per round."""
 
-    ``seeds=True`` prepends the 'seed' extra tag AFTER scoring
-    (DumbCrawler.java:292-300) and marks depth 0.
-    """
-    df = with_canonical_url(urls.select("url"), "url", "url")
-    df = with_url_parts(df, "url", out="_parts", host_out="host")
-    df = df.withColumn("tags", tag_urls(F.col("_parts"), cfg))
-    df = df.withColumn("priority", priority_for_tags(F.col("tags"), cfg))
-    if seeds:
-        df = df.withColumn("tags", with_seed_tag(F.col("tags")))
-    df = df.withColumn("url_id", url_id(F.col("url"), cfg.id_extractor_pattern))
-    df = df.withColumn("part", part_of(F.col("host"), F.col("url_id"), cfg.partitions, cfg.salt))
-    return df.drop("_parts").select("url", "tags", "priority", "url_id", "host", "part")
+    def __init__(self, cfg: CrawlConfig):
+        self.cfg = cfg
+        self._layers: dict[bool, list[list[Column]]] = {}  # seeds → candidate layers
 
+    @cached_property
+    def allowed(self) -> Column:
+        """F2 LinkFilter gate with the F1 protocol guard (LinkFilter.java:24-44).
+        Seeds bypass it (initialize() calls addTasks directly,
+        DumbCrawler.java:61-67,143-146)."""
+        return is_url_allowed(F.col("url"), F.col("tags"), self.cfg)
 
-def filter_allowed(candidates: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """F2 LinkFilter gate with verdict column kept for counters
-    (LinkFilter.java:24-44). Seeds bypass this (reference initialize() calls
-    addTasks directly, DumbCrawler.java:61-67,143-146)."""
-    return candidates.withColumn("_verdict", tag_filter_verdict(F.col("tags"), cfg)).where(
-        is_url_allowed(F.col("url"), F.col("tags"), cfg)
-    ).drop("_verdict")
+    def _candidate_layers(self, seeds: bool) -> list[list[Column]]:
+        cfg = self.cfg
+        url, host, tags, priority, uid = map(F.col, ("url", "host", "tags", "priority", "url_id"))
+        return [
+            *canonical_url_layers(),
+            *url_parts_layers(with_host=True),
+            [url, host, tag_urls(F.col("_parts"), cfg).alias("tags")],
+            [
+                url, host,
+                # the seed tag goes on AFTER scoring (DumbCrawler.java:292-300);
+                # no alias otherwise — a redundant one can survive optimization
+                # in one branch of the bloom union but not the other, which
+                # breaks their exchange reuse (one more job per round)
+                with_seed_tag(tags).alias("tags") if seeds else tags,
+                priority_for_tags(tags, cfg).alias("priority"),
+                url_id(url, cfg.id_extractor_pattern).alias("url_id"),
+            ],
+            [url, tags, priority, uid, host, part_of(host, uid, cfg.partitions, cfg.salt).alias("part")],
+        ]
 
+    def candidates(self, urls: DataFrame, seeds: bool = False) -> DataFrame:
+        """``urls.url`` → (url, tags, priority, url_id, host, part).
+        ``seeds=True`` prepends the 'seed' extra tag."""
+        if seeds not in self._layers:
+            self._layers[seeds] = self._candidate_layers(seeds)
+        return apply_layers(urls, self._layers[seeds])
 
-def dedupe_in_batch(candidates: DataFrame) -> DataFrame:
-    """J1+J2 in-batch dedup by url_id.
+    @cached_property
+    def _retag_layers(self) -> list[list[Column]]:
+        fresh = tag_urls(F.col("_parts"), self.cfg).alias("tags")
+        return [
+            *url_parts_layers(keep=DEQUEUE_COLS),
+            [fresh if c == "tags" else F.col(c) for c in DEQUEUE_COLS],
+        ]
 
-    The reference's "last wins" toMap merge (URLStore.java:134) iterates a
-    HashSet — nondeterministic; per SURVEY.md §2.8-D1 the deterministic spec
-    keeps (max priority, then min url) per url_id. Window + rank=1, shuffle
-    keyed like every other frontier op.
-    """
-    w = Window.partitionBy("url_id").orderBy(F.desc("priority"), F.asc("url"))
-    return (
-        candidates.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    def retag(self, dequeued: DataFrame) -> DataFrame:
+        """T4: re-tag + re-filter at dequeue (DumbCrawler.java:276-279) —
+        stored tags may be stale vs current config. Fresh tags REPLACE stored
+        ones (so a seed's extra 'seed' tag is dropped here, exactly like the
+        reference, which re-tags from the bare url). Returns the allowed rows
+        only; the others stay PROCESSING — the reference leaks them the same
+        way: filtered tasks were already marked taken and are never
+        completed (DumbCrawler.java:275-279 + URLStore.java:191-206)."""
+        return apply_layers(dequeued, self._retag_layers).where(self.allowed)
+
+    @cached_property
+    def _insert_plan(self) -> tuple[Column, Column, Column, list[Column], list[Column]]:
+        """(F1 guard, D1 rank, its keep predicate, the insert columns before
+        and after the round literals)."""
+        w = Window.partitionBy("url_id").orderBy(F.desc("priority"), F.asc("url"))
+        null = F.lit(None)
+        head = [
+            *map(F.col, ("url_id", "url", "host", "tags")),
+            F.lit(QUEUED).cast("tinyint").alias("status"),
+            F.col("priority").cast("int"),
+            F.lit(0).alias("attempt"),
+        ]
+        tail = [
+            *(null.cast("int").alias(c) for c in ("taken_round", "completed_round", "saved_round")),
+            null.cast("string").alias("error"),
+            F.col("part"),
+        ]
+        rank = F.row_number().over(w).alias("_rn")
+        return is_http(F.col("url")), rank, F.col("_rn") == 1, head, tail
+
+    def new_rows(
+        self, seen_ids: DataFrame, candidates: DataFrame, round_no: int, depth: int, bloom=None
+    ) -> DataFrame:
+        """The not-yet-seen candidate rows in frontier schema (the MERGE's
+        WHEN NOT MATCHED INSERT set). ``seen_ids`` needs only a url_id column
+        — the MoR ins-delta path passes base∪inserts ids (storage.py
+        read_frontier_seen_ids), a column-pruned scan.
+
+        J1+J2 in-batch dedup by url_id first: the reference's "last wins"
+        toMap merge (URLStore.java:134) iterates a HashSet —
+        nondeterministic; per SURVEY.md §2.8-D1 the deterministic spec keeps
+        (max priority, then min url) per url_id. Window + rank=1, shuffle
+        keyed like every other frontier op."""
+        http, rank, first, head, tail = self._insert_plan
+        cands = candidates.where(http).select(F.col("*"), rank).where(first).drop("_rn")
+        if bloom is not None:
+            # J3-NR: bloom prefilter — definitely-unseen candidates skip the
+            # shuffle; only bloom-positives hit the exact anti-join (bloom.py)
+            from .bloom import prefiltered_new_rows
+
+            new_src = prefiltered_new_rows(cands, seen_ids, bloom)
+        else:
+            new_src = cands.join(seen_ids.select("url_id"), "url_id", "left_anti")
+        return new_src.select(
+            *head, F.lit(depth).alias("depth"), F.lit(round_no).alias("created_round"), *tail
+        )
 
 
 def merge_new_links(
     frontier: DataFrame,
     candidates: DataFrame,
-    cfg: CrawlConfig,
+    kernel: UrlKernel,
     round_no: int,
     depth: int,
     bloom=None,
 ) -> DataFrame:
     """S4+J3: insert candidates not already in the seen-set.
 
-    candidates must already be tagged/scored (make_candidates) and F2-filtered
-    for non-seed links (filter_allowed). The F1 protocol filter is re-applied
+    candidates must already be tagged/scored (UrlKernel.candidates) and F2-filtered
+    for non-seed links (UrlKernel.allowed). The F1 protocol filter is re-applied
     here because URLStore does its own (URLStore.java:102-111).
 
     Equivalent Iceberg DDL at scale:
@@ -145,41 +210,7 @@ def merge_new_links(
     so the join is co-partitioned at scale (SPJ).
     """
     return frontier.unionByName(
-        new_link_rows(frontier.select("url_id"), candidates, round_no, depth, bloom=bloom)
-    )
-
-
-def new_link_rows(
-    seen_ids: DataFrame, candidates: DataFrame, round_no: int, depth: int, bloom=None
-) -> DataFrame:
-    """The not-yet-seen candidate rows in frontier schema (the MERGE's
-    WHEN NOT MATCHED INSERT set). ``seen_ids`` needs only a url_id column —
-    the MoR ins-delta path passes base∪inserts ids (storage.py
-    read_frontier_seen_ids), a column-pruned scan."""
-    cands = dedupe_in_batch(candidates.where(is_http(F.col("url"))))
-    if bloom is not None:
-        # J3-NR: bloom prefilter — definitely-unseen candidates skip the
-        # shuffle; only bloom-positives hit the exact anti-join (bloom.py)
-        from .bloom import prefiltered_new_rows
-
-        new_src = prefiltered_new_rows(cands, seen_ids, bloom)
-    else:
-        new_src = cands.join(seen_ids.select("url_id"), "url_id", "left_anti")
-    return new_src.select(
-        "url_id",
-        "url",
-        "host",
-        "tags",
-        F.lit(QUEUED).cast("tinyint").alias("status"),
-        F.col("priority").cast("int"),
-        F.lit(0).alias("attempt"),
-        F.lit(depth).alias("depth"),
-        F.lit(round_no).alias("created_round"),
-        F.lit(None).cast("int").alias("taken_round"),
-        F.lit(None).cast("int").alias("completed_round"),
-        F.lit(None).cast("int").alias("saved_round"),
-        F.lit(None).cast("string").alias("error"),
-        "part",
+        kernel.new_rows(frontier.select("url_id"), candidates, round_no, depth, bloom=bloom)
     )
 
 
@@ -375,19 +406,6 @@ def dequeue_order_table(batch: pa.Table, round_no: int) -> pa.Table:
     })
 
 
-def retag_dequeued(dequeued: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """T4: re-tag + re-filter at dequeue (DumbCrawler.java:276-279) — stored
-    tags may be stale vs current config. Fresh tags REPLACE stored ones (so a
-    seed's extra 'seed' tag is dropped here, exactly like the reference, which
-    re-tags from the bare url). Returns all rows with fresh tags + '_allowed'
-    flag; caller diverts disallowed rows (they stay PROCESSING — the reference
-    leaks them the same way: filtered tasks were already marked taken and are
-    never completed, DumbCrawler.java:275-279 + URLStore.java:191-206)."""
-    fresh = with_url_parts(dequeued, "url", out="_parts")
-    fresh = fresh.withColumn("tags", tag_urls(F.col("_parts"), cfg)).drop("_parts")
-    return fresh.withColumn("_allowed", is_url_allowed(F.col("url"), F.col("tags"), cfg))
-
-
 # -- merge-on-read round deltas (Iceberg MoR analog; SURVEY.md §4 "Iceberg
 # MERGE churn" risk) -----------------------------------------------------------
 #
@@ -415,36 +433,33 @@ UPDATE_DELTA_SCHEMA = T.StructType([
 ])
 
 
-def round_update_delta(dequeued: DataFrame, results: DataFrame, round_no: int) -> DataFrame:
+_UPDATE_DELTA_ARROW = to_arrow_schema(UPDATE_DELTA_SCHEMA)
+
+
+def round_update_delta(dequeued: pa.Table, results: pa.Table, round_no: int) -> pa.Table:
     """The k-bounded status-transition delta of one round (C3 + the
-    taken-mark, URLStore.java:159-206): every dequeued row appears exactly
-    once — PROCESSING if it was filtered before fetch (the reference's leak),
-    else PROCESSED/FAILED with fresh tags + error, and ``saved_round`` set
-    when the round saved the page (``results.saved``, the F3 gate)."""
-    return (
-        dequeued.select("url_id")
-        .join(
-            results.select(
-                "url_id", F.col("tags").alias("_nt"), "ok", F.col("error").alias("_ne"),
-                "saved",
-            ),
-            "url_id",
-            "left",
-        )
-        .select(
-            "url_id",
-            F.when(F.col("ok").isNull(), F.lit(PROCESSING))
-            .when(F.col("ok"), F.lit(PROCESSED))
-            .otherwise(F.lit(FAILED))
-            .cast("tinyint")
-            .alias("status"),
-            F.col("_nt").alias("tags"),
-            F.col("_ne").alias("error"),
-            F.col("ok").isNotNull().alias("done"),
-            F.lit(round_no).alias("round"),
-            F.when(F.col("saved"), F.lit(round_no)).alias("saved_round"),
-        )
+    taken-mark, URLStore.java:159-206), built on the driver from the
+    dequeued batch and the round's fetch results (url_id, tags, ok, error,
+    saved): every dequeued row appears exactly once — PROCESSING if it was
+    filtered before fetch (the reference's leak), else PROCESSED/FAILED with
+    fresh tags + error, and ``saved_round`` set when the round saved the page
+    (``results.saved``, the F3 gate). Both sides are ≤ k rows, so an Arrow
+    hash lookup replaces a Spark left join."""
+    at = pc.index_in(dequeued["url_id"], value_set=results["url_id"].combine_chunks())
+    done = at.is_valid()
+    status = pc.if_else(
+        done, pc.if_else(results["ok"].take(at), PROCESSED, FAILED), PROCESSING
     )
+    rnd = pa.scalar(round_no, pa.int32())
+    return pa.table({
+        "url_id": dequeued["url_id"],
+        "status": status,
+        "tags": results["tags"].take(at),
+        "error": results["error"].take(at),
+        "done": done,
+        "round": pa.array(np.full(dequeued.num_rows, round_no, dtype=np.int32)),
+        "saved_round": pc.if_else(results["saved"].take(at), rnd, pa.scalar(None, pa.int32())),
+    }).cast(_UPDATE_DELTA_ARROW)
 
 
 def compose_frontier(base: DataFrame, inserts: DataFrame | None, upds: DataFrame | None) -> DataFrame:
@@ -452,34 +467,31 @@ def compose_frontier(base: DataFrame, inserts: DataFrame | None, upds: DataFrame
     full rewrite of the frontier per round would give (that rewrite is the
     reference in tests/test_frontier.py). The upd side is k×rounds rows —
     broadcast. ``saved_round`` is sticky: a save sets it, every other
-    completion keeps it."""
+    completion keeps it. One select reconciles every column."""
     full = base if inserts is None else base.unionByName(inserts)
     if upds is None:
         return full
-    u = F.broadcast(
-        upds.select(
-            "url_id",
-            F.col("status").alias("_us"),
-            F.col("tags").alias("_ut"),
-            F.col("error").alias("_ue"),
-            F.col("done").alias("_ud"),
-            F.col("round").alias("_ur"),
-            F.col("saved_round").alias("_usr"),
+    u = F.broadcast(upds.select("url_id", *(
+        F.col(c).alias(a) for c, a in (
+            ("status", "_us"), ("tags", "_ut"), ("error", "_ue"), ("done", "_ud"),
+            ("round", "_ur"), ("saved_round", "_usr"),
         )
-    )
-    j = full.join(u, "url_id", "left")
+    )))
     touched = F.col("_us").isNotNull()
     done = F.coalesce(F.col("_ud"), F.lit(False))
-    return (
-        j.withColumn("status", F.coalesce(F.col("_us"), F.col("status")))
-        .withColumn("taken_round", F.when(touched, F.col("_ur")).otherwise(F.col("taken_round")))
-        .withColumn("tags", F.when(done, F.col("_ut")).otherwise(F.col("tags")))
-        .withColumn("error", F.when(done, F.col("_ue")).otherwise(F.col("error")))
-        .withColumn("attempt", F.when(done, F.col("attempt") + 1).otherwise(F.col("attempt")))
-        .withColumn("completed_round", F.when(done, F.col("_ur")).otherwise(F.col("completed_round")))
-        .withColumn("saved_round", F.coalesce(F.col("_usr"), F.col("saved_round")))
-        .drop("_us", "_ut", "_ue", "_ud", "_ur", "_usr")
-    )
+    reconciled = {
+        "status": F.coalesce(F.col("_us"), F.col("status")),
+        "taken_round": F.when(touched, F.col("_ur")).otherwise(F.col("taken_round")),
+        **{c: F.when(done, F.col(new)).otherwise(F.col(c)) for c, new in (
+            ("tags", "_ut"), ("error", "_ue"), ("completed_round", "_ur"),
+        )},
+        "attempt": F.when(done, F.col("attempt") + 1).otherwise(F.col("attempt")),
+        "saved_round": F.coalesce(F.col("_usr"), F.col("saved_round")),
+    }
+    return full.join(u, "url_id", "left").select(*(
+        reconciled[c].alias(c) if c in reconciled else F.col(c)
+        for c in FRONTIER_SCHEMA.fieldNames()
+    ))
 
 
 def queued_view(base: DataFrame, inserts: DataFrame | None, upds: DataFrame | None) -> DataFrame:

@@ -312,7 +312,7 @@ class IncrementalPlanner:
         """Add one round's ins-delta (url_id, host, priority, attempt, status
         columns as Arrow; k-bounded rows the crawler reads once for the bloom
         too). Inserted rows are QUEUED with attempt 0 by construction
-        (frontier.new_link_rows); the eligibility filter is still applied
+        (frontier.UrlKernel.new_rows); the eligibility filter is still applied
         verbatim for safety."""
         el = ins.filter(pc.and_(
             pc.equal(ins["status"], FR.QUEUED),

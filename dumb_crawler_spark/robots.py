@@ -11,6 +11,8 @@ broadcast joins everywhere, never a shuffle of the big side.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,31 +48,31 @@ def parse_robots_txt(host: str, text: str) -> dict:
     return {"host": host, "disallow": disallow, "crawl_delay_ms": delay_ms}
 
 
-def with_robots_verdict(
-    candidates: DataFrame, robots: DataFrame, out: str = "_robots_blocked"
-) -> DataFrame:
-    """Candidates + a boolean ``out`` column: path starts with a disallowed
-    prefix for the row's host (hosts absent from robots are fully allowed).
-    Broadcast join — candidates never shuffle. Keeping the verdict as a
-    COLUMN lets callers fold block-counting into whatever aggregation they
-    already run instead of paying separate before/after count jobs
-    (VERDICT r03 item 6)."""
+def robots_verdict(
+    robots: DataFrame, out: str = "_robots_blocked"
+) -> Callable[[DataFrame], DataFrame]:
+    """A transform adding a boolean ``out`` column to candidates: the path
+    starts with a disallowed prefix for the row's host (hosts absent from
+    robots are fully allowed). Broadcast join — candidates never shuffle.
+    Keeping the verdict as a COLUMN lets callers fold block-counting into
+    whatever aggregation they already run instead of paying separate
+    before/after count jobs (VERDICT r03 item 6). The path expression and
+    the broadcast side are built once, here; each call adds only the join."""
     path = F.try_parse_url(F.col("url"), F.lit("PATH"))
     path = F.when(path.isNull() | (path == ""), F.lit("/")).otherwise(path)
-    joined = candidates.join(
-        F.broadcast(robots.select("host", "disallow")), "host", "left"
-    )
+    side = F.broadcast(robots.select("host", "disallow"))
     blocked = F.exists(
         F.coalesce(F.col("disallow"), F.array().cast("array<string>")),
         lambda p: path.startswith(p),
     )
-    return joined.withColumn(out, F.coalesce(blocked, F.lit(False))).drop("disallow")
+    verdict = [F.col("*"), F.coalesce(blocked, F.lit(False)).alias(out)]
+    return lambda candidates: candidates.join(side, "host", "left").select(*verdict).drop("disallow")
 
 
 def filter_robots_allowed(candidates: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop candidates whose path starts with a disallowed prefix for their
-    host (with_robots_verdict's verdict applied as a filter)."""
-    return with_robots_verdict(candidates, robots).where(
+    host (robots_verdict's verdict applied as a filter)."""
+    return robots_verdict(robots)(candidates).where(
         ~F.col("_robots_blocked")
     ).drop("_robots_blocked")
 

@@ -49,6 +49,27 @@ def _footer_rows(parquet_dir: Path) -> int:
     )
 
 
+def _write_rows(dest: Path, arrow_table) -> int:
+    """Write-to-temp + atomic rename of one pyarrow-written parquet file.
+    The footer carries no schema metadata: a table read from a Spark-written
+    file keeps Spark's row-schema key, and Spark would infer the new file's
+    schema from it. Nor statistics: no reader filters these k-row files, and
+    pyarrow puts min/max in every page header, which for KB-long span texts
+    would double the errors delta (Spark's writer keeps them out)."""
+    import pyarrow.parquet as pq
+
+    tmp = dest.parent / f".tmp-{uuid.uuid4().hex}"
+    tmp.mkdir(parents=True)
+    pq.write_table(
+        arrow_table.replace_schema_metadata(None), tmp / "part-00000.parquet",
+        store_schema=False, write_statistics=False,
+    )
+    if dest.exists():
+        shutil.rmtree(dest)
+    tmp.rename(dest)
+    return arrow_table.num_rows
+
+
 class Warehouse:
     """One crawl session's tables + round lineage under a root directory.
 
@@ -139,20 +160,22 @@ class Warehouse:
         if d.exists():
             shutil.rmtree(d)
 
-    def append_delta_rows(self, table: str, round_no: int, arrow_table) -> None:
-        """Driver-side parquet write for TINY deltas (a few counter rows per
-        round): a Spark job just to persist 20 rows costs ~seconds of plan +
-        schedule per round; pyarrow writes the same file in microseconds.
-        Readers can't tell the difference."""
+    def append_delta_rows(self, table: str, round_no: int, arrow_table) -> int:
+        """Driver-side parquet write for k-row deltas (counter rows, the
+        dequeue lineage, the errors tail): a Spark job just to persist a few
+        hundred rows costs ~seconds of plan + schedule per round; pyarrow
+        writes the same file in microseconds. Readers can't tell the
+        difference."""
+        return _write_rows(self.root / table / f"delta-{round_no:08d}", arrow_table)
+
+    def read_delta_rows(self, table: str, round_no: int, columns: list[str], where=None):
+        """pyarrow read of one round's delta dir (the driver-side dual of
+        append_delta_rows), ``where`` an optional pyarrow filter expression."""
         import pyarrow.parquet as pq
 
-        dest = self.root / table / f"delta-{round_no:08d}"
-        tmp = dest.parent / f".tmp-{uuid.uuid4().hex}"
-        tmp.mkdir(parents=True)
-        pq.write_table(arrow_table, tmp / "part-00000.parquet")
-        if dest.exists():
-            shutil.rmtree(dest)
-        tmp.rename(dest)
+        return pq.read_table(
+            self.root / table / f"delta-{round_no:08d}", columns=columns, filters=where
+        )
 
     def read_delta(self, table: str, round_no: int) -> DataFrame:
         """One round's delta dir (e.g. the per-round `fetch` artifact)."""
@@ -240,8 +263,10 @@ class Warehouse:
 
         return base, deltas("ins"), deltas("upd")
 
-    def write_frontier_updates(self, round_no: int, df: DataFrame) -> int:
-        return self._atomic_write(df, self.root / "frontier" / f"upd-{round_no:08d}")
+    def write_frontier_updates(self, round_no: int, arrow_table) -> int:
+        """The round's k-row update delta (frontier.round_update_delta), one
+        pyarrow-written file."""
+        return _write_rows(self.root / "frontier" / f"upd-{round_no:08d}", arrow_table)
 
     def write_frontier_inserts(self, round_no: int, df: DataFrame) -> int:
         """Zero-insert rounds leave no ins- dir at all (keep_empty=False):

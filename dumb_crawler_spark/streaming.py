@@ -21,6 +21,8 @@ behavior is identical to the round loop; the streaming runtime only schedules.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,17 +44,8 @@ def stream_ingest_links(
     available_now: bool = True,
 ) -> StreamingQuery:
     """readStream(url files) → foreachBatch(merge into frontier snapshot)."""
-    wh = Warehouse(spark, warehouse_dir)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        last = wh.last_committed_round()
-        fr = wh.read_frontier(last) if last is not None else FR.empty_frontier(spark)
-        rnd = (last or 0) + 1
-        cands = FR.filter_allowed(FR.make_candidates(batch, cfg), cfg)
-        merged = FR.merge_new_links(fr, cands, cfg, rnd, depth=rnd)
-        wh.write_snapshot("frontier", rnd, merged.repartition(cfg.partitions, "part"))
-        wh.commit_round(rnd, {"stream_batch": batch_id})
-
+    # the kernel is built on the first batch and reused by the rest
+    merge_batch = partial(_merge_urls, Warehouse(spark, warehouse_dir), FR.UrlKernel(cfg))
     stream = spark.readStream.schema(URL_SCHEMA).parquet(incoming_dir)
     writer = stream.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -60,6 +53,18 @@ def stream_ingest_links(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _merge_urls(wh: Warehouse, kernel: FR.UrlKernel, urls: DataFrame, batch_id: int) -> None:
+    """Merge one micro-batch's urls into the frontier as its next snapshot
+    round (F2-filtered like crawled links)."""
+    last = wh.last_committed_round()
+    fr = wh.read_frontier(last) if last is not None else FR.empty_frontier(wh.spark)
+    rnd = (last or 0) + 1
+    cands = kernel.candidates(urls).where(kernel.allowed)
+    merged = FR.merge_new_links(fr, cands, kernel, rnd, depth=rnd)
+    wh.write_snapshot("frontier", rnd, merged.repartition(kernel.cfg.partitions, "part"))
+    wh.commit_round(rnd, {"stream_batch": batch_id})
 
 
 def windowed_event_counts(
@@ -312,21 +317,15 @@ def stream_gated_ingest(
       least one batch ago — are pruned, so a long-running stream's listing
       cost stays proportional to in-flight parked data, not stream age.
     """
-    from .urlkit import host_of, with_canonical_url
+    from .urlkit import apply_layers, canonical_url_layers, host_of
 
     wh = Warehouse(spark, warehouse_dir)
+    kernel = FR.UrlKernel(cfg)  # built on the first batch, reused by the rest
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
         try:
-            urls = batch.where(F.col("admitted")).select("url")
-            last = wh.last_committed_round()
-            fr = wh.read_frontier(last) if last is not None else FR.empty_frontier(spark)
-            rnd = (last or 0) + 1
-            cands = FR.filter_allowed(FR.make_candidates(urls, cfg), cfg)
-            merged = FR.merge_new_links(fr, cands, cfg, rnd, depth=rnd)
-            wh.write_snapshot("frontier", rnd, merged.repartition(cfg.partitions, "part"))
-            wh.commit_round(rnd, {"stream_batch": batch_id})
+            _merge_urls(wh, kernel, batch.where(F.col("admitted")).select("url"), batch_id)
             # re-feed: beyond-budget rows come back as next-window candidates,
             # clamped above the watermark this batch advanced (see docstring)
             agg = batch.agg(
@@ -357,7 +356,7 @@ def stream_gated_ingest(
         .option("recursiveFileLookup", "true")
         .parquet(incoming_dir)
     )
-    stream = with_canonical_url(stream, "url", "url").withColumn(
+    stream = apply_layers(stream, canonical_url_layers(keep=["ts"])).withColumn(
         "host", host_of(F.col("url"))
     )
     gated = politeness_gate(stream, budget_per_host, window_seconds)

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 18 static-asset extensions, verbatim list from ExpressionFunctions.java:11-14
@@ -70,6 +70,42 @@ def is_resource(path: Column) -> Column:
     return path.rlike(_RESOURCE_RE)
 
 
+_HOST_RE = r"^(?:[^@]*@)?([^:]+)"
+
+
+def _scheme(url: Column) -> Column:
+    return F.lower(F.regexp_extract(url, _SCHEME_RE, 1))
+
+
+def _from_authority(authority: Column) -> tuple[Column, Column, Column]:
+    """(lowercased host, explicit port, userinfo) of an AUTHORITY part."""
+    return (
+        F.lower(F.regexp_extract(authority, _HOST_RE, 1)),
+        F.regexp_extract(authority, r":(\d+)$", 1),
+        F.regexp_extract(authority, r"^([^@]*@)", 1),
+    )
+
+
+def _parts(url, scheme, raw_path, query, fragment, host, explicit_port) -> Column:
+    """The U1 struct from the parsed pieces of ``url``."""
+    ok = scheme.isin("http", "https")
+    port = F.when(~ok, F.lit(None).cast("int")).otherwise(
+        F.when(explicit_port != "", explicit_port.cast("int")).otherwise(
+            F.when(scheme == "https", F.lit(443)).otherwise(F.lit(80))
+        )
+    )
+    path = F.when(ok, F.when(raw_path.isNull() | (raw_path == ""), F.lit("/")).otherwise(raw_path))
+    return F.struct(
+        url.alias("url"),
+        F.when(ok, scheme).alias("protocol"),
+        F.when(ok & (host != ""), host).alias("host"),
+        path.alias("path"),
+        port.alias("port"),
+        F.when(ok, query).alias("query"),
+        F.when(ok, fragment).alias("fragment"),
+    )
+
+
 def url_parts(url: Column) -> Column:
     """U1: struct<url, protocol, host, path, port, query, fragment>.
 
@@ -78,31 +114,24 @@ def url_parts(url: Column) -> Column:
     "unparseable ⇒ expression false ⇒ no tags" path
     (URLExpressionEvaluator.java:33-38, ThreadLocalEvaluator coercion).
     """
-    scheme = F.lower(F.regexp_extract(url, _SCHEME_RE, 1))
-    ok = scheme.isin("http", "https")
-    protocol = F.when(ok, scheme)
-    authority = F.when(ok, F.try_parse_url(url, F.lit("AUTHORITY")))
-    host = F.lower(F.regexp_extract(authority, r"^(?:[^@]*@)?([^:]+)", 1))
-    host = F.when(ok & (host != ""), host)
-    explicit_port = F.regexp_extract(authority, r":(\d+)$", 1)
-    port = F.when(~ok, F.lit(None).cast("int")).otherwise(
-        F.when(explicit_port != "", explicit_port.cast("int")).otherwise(
-            F.when(scheme == "https", F.lit(443)).otherwise(F.lit(80))
-        )
+    host, explicit_port, _ = _from_authority(F.try_parse_url(url, F.lit("AUTHORITY")))
+    parsed = (F.try_parse_url(url, F.lit(p)) for p in ("PATH", "QUERY", "REF"))
+    return _parts(url, _scheme(url), *parsed, host, explicit_port)
+
+
+def _canonical(u, scheme, raw_path, query, host, explicit_port, userinfo) -> Column:
+    """U9 from the parsed pieces of the fragment-less ``u``."""
+    default_port = F.when(scheme == "https", F.lit("443")).otherwise(F.lit("80"))
+    port_part = F.when(
+        (explicit_port == "") | (explicit_port == default_port), F.lit("")
+    ).otherwise(F.concat(F.lit(":"), explicit_port))
+    path = F.when(raw_path.isNull() | (raw_path == ""), F.lit("/")).otherwise(raw_path)
+    sorted_query = F.array_join(F.array_sort(F.split(query, "&")), "&")
+    query_part = F.when(query.isNull() | (query == ""), F.lit("")).otherwise(
+        F.concat(F.lit("?"), sorted_query)
     )
-    raw_path = F.try_parse_url(url, F.lit("PATH"))
-    path = F.when(ok, F.when(raw_path.isNull() | (raw_path == ""), F.lit("/")).otherwise(raw_path))
-    query = F.when(ok, F.try_parse_url(url, F.lit("QUERY")))
-    fragment = F.when(ok, F.try_parse_url(url, F.lit("REF")))
-    return F.struct(
-        url.alias("url"),
-        protocol.alias("protocol"),
-        host.alias("host"),
-        path.alias("path"),
-        port.alias("port"),
-        query.alias("query"),
-        fragment.alias("fragment"),
-    )
+    canon = F.concat(scheme, F.lit("://"), userinfo, host, port_part, path, query_part)
+    return F.when(scheme.isin("http", "https") & (host != ""), canon).otherwise(u)
 
 
 def canonicalize(url: Column) -> Column:
@@ -114,26 +143,10 @@ def canonicalize(url: Column) -> Column:
     F1 drops it before it ever reaches the frontier.
     """
     u = F.trim(url)
-    scheme = F.lower(F.regexp_extract(u, _SCHEME_RE, 1))
-    ok = scheme.isin("http", "https")
     no_frag = F.regexp_replace(u, r"#.*$", "")
-    authority = F.try_parse_url(no_frag, F.lit("AUTHORITY"))
-    userinfo = F.regexp_extract(authority, r"^([^@]*@)", 1)
-    host = F.lower(F.regexp_extract(authority, r"^(?:[^@]*@)?([^:]+)", 1))
-    explicit_port = F.regexp_extract(authority, r":(\d+)$", 1)
-    default_port = F.when(scheme == "https", F.lit("443")).otherwise(F.lit("80"))
-    port_part = F.when(
-        (explicit_port == "") | (explicit_port == default_port), F.lit("")
-    ).otherwise(F.concat(F.lit(":"), explicit_port))
-    raw_path = F.try_parse_url(no_frag, F.lit("PATH"))
-    path = F.when(raw_path.isNull() | (raw_path == ""), F.lit("/")).otherwise(raw_path)
-    query = F.try_parse_url(no_frag, F.lit("QUERY"))
-    sorted_query = F.array_join(F.array_sort(F.split(query, "&")), "&")
-    query_part = F.when(query.isNull() | (query == ""), F.lit("")).otherwise(
-        F.concat(F.lit("?"), sorted_query)
-    )
-    canon = F.concat(scheme, F.lit("://"), userinfo, host, port_part, path, query_part)
-    return F.when(ok & (host != ""), canon).otherwise(u)
+    parsed = (F.try_parse_url(no_frag, F.lit(p)) for p in ("PATH", "QUERY"))
+    pieces = _from_authority(F.try_parse_url(no_frag, F.lit("AUTHORITY")))
+    return _canonical(u, _scheme(u), *parsed, *pieces)
 
 
 # -- layered kernel (the hot path) -------------------------------------------
@@ -143,97 +156,65 @@ def canonicalize(url: Column) -> Column:
 # which every `when`/`nullif` duplicates its heavyweight argument
 # (parse_url, regexp_extract) — multiplicatively. Measured: ~100-200 core-µs
 # per URL, and the generated code can outgrow HotSpot's JIT method limit
-# (→ interpreted execution, another ~10×). The DataFrame-level forms below
-# evaluate each heavy sub-expression EXACTLY ONCE per row by aliasing it as
-# an intermediate column: Catalyst's CollapseProject never inlines a
-# non-cheap alias that is referenced more than once, so the layering
-# survives optimization. Same semantics (pinned by tests), ~10× cheaper.
+# (→ interpreted execution, another ~10×). The layered forms below evaluate
+# each heavy sub-expression EXACTLY ONCE per row by aliasing it as an
+# intermediate column, one ``select`` per layer: Catalyst's CollapseProject
+# never inlines a non-cheap alias that is referenced more than once, so the
+# layering survives optimization. Same semantics (pinned by tests), ~10×
+# cheaper. A layer list holds only Columns — unresolved expressions — so a
+# crawl builds it once and every round's plan reuses it (apply_layers).
 
 
-def with_canonical_url(df, url_col: str = "url", out: str = "url"):
-    """U9 as a DataFrame transform — identical results to
-    ``canonicalize(col)``, with each parse/regex evaluated once per row."""
-    df = df.withColumn("_u", F.trim(F.col(url_col)))
-    df = df.withColumn("_scheme", F.lower(F.regexp_extract(F.col("_u"), _SCHEME_RE, 1)))
-    df = df.withColumn("_nofrag", F.regexp_replace(F.col("_u"), r"#.*$", ""))
-    df = (
-        df.withColumn("_auth", F.try_parse_url(F.col("_nofrag"), F.lit("AUTHORITY")))
-        .withColumn("_rawpath", F.try_parse_url(F.col("_nofrag"), F.lit("PATH")))
-        .withColumn("_q", F.try_parse_url(F.col("_nofrag"), F.lit("QUERY")))
-    )
-    df = (
-        df.withColumn("_host", F.lower(F.regexp_extract(F.col("_auth"), r"^(?:[^@]*@)?([^:]+)", 1)))
-        .withColumn("_eport", F.regexp_extract(F.col("_auth"), r":(\d+)$", 1))
-        .withColumn("_userinfo", F.regexp_extract(F.col("_auth"), r"^([^@]*@)", 1))
-    )
-    default_port = F.when(F.col("_scheme") == "https", F.lit("443")).otherwise(F.lit("80"))
-    port_part = F.when(
-        (F.col("_eport") == "") | (F.col("_eport") == default_port), F.lit("")
-    ).otherwise(F.concat(F.lit(":"), F.col("_eport")))
-    path = F.when(
-        F.col("_rawpath").isNull() | (F.col("_rawpath") == ""), F.lit("/")
-    ).otherwise(F.col("_rawpath"))
-    sorted_query = F.array_join(F.array_sort(F.split(F.col("_q"), "&")), "&")
-    query_part = F.when(F.col("_q").isNull() | (F.col("_q") == ""), F.lit("")).otherwise(
-        F.concat(F.lit("?"), sorted_query)
-    )
-    ok = F.col("_scheme").isin("http", "https") & (F.col("_host") != "")
-    canon = F.concat(
-        F.col("_scheme"), F.lit("://"), F.col("_userinfo"), F.col("_host"),
-        port_part, path, query_part,
-    )
-    df = df.withColumn("_canon_out", F.when(ok, canon).otherwise(F.col("_u")))
-    df = df.drop("_u", "_scheme", "_nofrag", "_auth", "_rawpath", "_q", "_host", "_eport", "_userinfo")
-    if out in df.columns:
-        df = df.drop(out)
-    return df.withColumnRenamed("_canon_out", out)
+def apply_layers(df: DataFrame, layers: list[list[Column]]) -> DataFrame:
+    """One ``select`` per layer."""
+    for cols in layers:
+        df = df.select(*cols)
+    return df
 
 
-def with_url_parts(df, url_col: str = "url", out: str = "parts", host_out: str | None = None):
-    """U1 as a DataFrame transform — identical struct to ``url_parts(col)``,
-    each parse/regex evaluated once per row. ``host_out`` optionally exports
-    the any-scheme host (the ``host_of`` semantics used for the frontier
-    host column — non-null even for non-http schemes)."""
-    df = df.withColumn("_p_scheme", F.lower(F.regexp_extract(F.col(url_col), _SCHEME_RE, 1)))
-    df = (
-        df.withColumn("_p_auth", F.try_parse_url(F.col(url_col), F.lit("AUTHORITY")))
-        .withColumn("_p_rawpath", F.try_parse_url(F.col(url_col), F.lit("PATH")))
-        .withColumn("_p_query", F.try_parse_url(F.col(url_col), F.lit("QUERY")))
-        .withColumn("_p_frag", F.try_parse_url(F.col(url_col), F.lit("REF")))
-    )
-    df = (
-        df.withColumn("_p_host", F.lower(F.regexp_extract(F.col("_p_auth"), r"^(?:[^@]*@)?([^:]+)", 1)))
-        .withColumn("_p_eport", F.regexp_extract(F.col("_p_auth"), r":(\d+)$", 1))
-    )
-    ok = F.col("_p_scheme").isin("http", "https")
-    port = F.when(~ok, F.lit(None).cast("int")).otherwise(
-        F.when(F.col("_p_eport") != "", F.col("_p_eport").cast("int")).otherwise(
-            F.when(F.col("_p_scheme") == "https", F.lit(443)).otherwise(F.lit(80))
-        )
-    )
-    path = F.when(
-        ok,
-        F.when(
-            F.col("_p_rawpath").isNull() | (F.col("_p_rawpath") == ""), F.lit("/")
-        ).otherwise(F.col("_p_rawpath")),
-    )
-    df = df.withColumn(
-        out,
-        F.struct(
-            F.col(url_col).alias("url"),
-            F.when(ok, F.col("_p_scheme")).alias("protocol"),
-            F.when(ok & (F.col("_p_host") != ""), F.col("_p_host")).alias("host"),
-            path.alias("path"),
-            port.alias("port"),
-            F.when(ok, F.col("_p_query")).alias("query"),
-            F.when(ok, F.col("_p_frag")).alias("fragment"),
-        ),
-    )
-    if host_out is not None:
-        df = df.withColumn(
-            host_out, F.when(F.col("_p_host") == "", F.lit(None)).otherwise(F.col("_p_host"))
-        )
-    return df.drop("_p_scheme", "_p_auth", "_p_rawpath", "_p_query", "_p_frag", "_p_host", "_p_eport")
+def _aliased(cols, names: tuple[str, ...]) -> list[Column]:
+    return [c.alias(n) for c, n in zip(cols, names)]
+
+
+def canonical_url_layers(keep=()) -> list[list[Column]]:
+    """U9 as select layers — identical results to ``canonicalize(col)``, each
+    parse/regex evaluated once per row. The last layer holds the ``keep``
+    columns and ``url``, now canonical."""
+    star, u, nofrag = F.col("*"), F.col("_u"), F.col("_nofrag")
+    parsed = ("_path", "_query", "_host", "_eport", "_userinfo")
+    return [
+        [star, F.trim(F.col("url")).alias("_u")],
+        [star, _scheme(u).alias("_scheme"), F.regexp_replace(u, r"#.*$", "").alias("_nofrag")],
+        [star, *_aliased(
+            (F.try_parse_url(nofrag, F.lit(p)) for p in ("AUTHORITY", "PATH", "QUERY")),
+            ("_authority", "_path", "_query"),
+        )],
+        [star, *_aliased(_from_authority(F.col("_authority")), ("_host", "_eport", "_userinfo"))],
+        [*map(F.col, keep), _canonical(u, F.col("_scheme"), *map(F.col, parsed)).alias("url")],
+    ]
+
+
+def url_parts_layers(keep=("url",), with_host: bool = False) -> list[list[Column]]:
+    """U1 as select layers — ``_parts``, the struct ``url_parts(url)`` gives,
+    with each parse/regex evaluated once per row. The last layer holds the
+    ``keep`` columns, ``_parts`` and, ``with_host``, ``host``: the any-scheme
+    host (the ``host_of`` semantics used for the frontier host column —
+    non-null even for non-http schemes)."""
+    star, url, host = F.col("*"), F.col("url"), F.col("_p_host")
+    parsed = ("_p_path", "_p_query", "_p_ref", "_p_host", "_p_eport")
+    exported = [F.when(host == "", F.lit(None)).otherwise(host).alias("host")] if with_host else []
+    return [
+        [star, _scheme(url).alias("_p_scheme"), *_aliased(
+            (F.try_parse_url(url, F.lit(p)) for p in ("AUTHORITY", "PATH", "QUERY", "REF")),
+            ("_p_authority", "_p_path", "_p_query", "_p_ref"),
+        )],
+        [star, *_aliased(_from_authority(F.col("_p_authority"))[:2], ("_p_host", "_p_eport"))],
+        [
+            *map(F.col, keep),
+            _parts(url, F.col("_p_scheme"), *map(F.col, parsed)).alias("_parts"),
+            *exported,
+        ],
+    ]
 
 
 def url_id(url: Column, id_extractor_pattern: str | None = None) -> Column:
@@ -253,8 +234,7 @@ def url_id(url: Column, id_extractor_pattern: str | None = None) -> Column:
 
 def host_of(url: Column) -> Column:
     """Lowercased host (politeness/partition key)."""
-    authority = F.try_parse_url(F.trim(url), F.lit("AUTHORITY"))
-    h = F.lower(F.regexp_extract(authority, r"^(?:[^@]*@)?([^:]+)", 1))
+    h = _from_authority(F.try_parse_url(F.trim(url), F.lit("AUTHORITY")))[0]
     return F.when(h == "", F.lit(None)).otherwise(h)
 
 

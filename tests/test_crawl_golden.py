@@ -5,10 +5,13 @@ span-sequence invariant (BASELINE.json input_hint)."""
 
 from __future__ import annotations
 
+import dataclasses
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
-from dumb_crawler_spark.config import Politeness
+from dumb_crawler_spark.config import Politeness, load_config
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
 from dumb_crawler_spark.oracle import OracleCrawler
@@ -93,6 +96,25 @@ def test_frontier_urls_match(pair):
         assert r["error"] == e.error, uid
         assert r["tags"] == e.tags, uid
         assert r["depth"] == e.depth and r["created_round"] == e.created_round, uid
+
+
+def test_empty_included_tags_store_nothing(spark, tmp_path, web):
+    """`"includedTags": []` stores NO page, in the engine and in the oracle
+    alike (the reference's shouldStore can only return true on a tag hit,
+    AbstractStorageManager.java:22-35): every fetched page counts as
+    UNSAVED_PAGES and the crawl is otherwise the same."""
+    docs, _ = web
+    path = tmp_path / "config.json"
+    path.write_text(json.dumps({"storage": {"includedTags": []}}))
+    tags = load_config(path).storage_included_tags
+    assert tags == ()
+    cfg = dataclasses.replace(canonical_config(), storage_included_tags=tags)
+    oracle, engine = _run_pair(spark, tmp_path, cfg, docs, max_rounds=3)
+    assert oracle.pages == [] and engine.pages() is None
+    counters = engine.metrics_total()
+    assert counters["UNSAVED_PAGES"] == counters["PROCESSED_URLS"] > 0
+    assert "SAVED_PAGES" not in counters
+    assert counters == {k: v for k, v in oracle.counters.items() if v}
 
 
 def test_politeness_budget_parity(spark, tmp_path, web):

@@ -4,6 +4,7 @@ merge-on-read round delta against a full rewrite of the frontier."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from planner_ref import planner_dequeue
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,7 +39,7 @@ def test_merge_antijoin_and_batch_dedup(spark):
         ],
         "url_id string, url string, host string, tags array<string>, priority int, part int",
     )
-    out = FR.merge_new_links(fr, cands, cfg, round_no=2, depth=2)
+    out = FR.merge_new_links(fr, cands, FR.UrlKernel(cfg), round_no=2, depth=2)
     rows = {r["url_id"]: r for r in out.collect()}
     assert set(rows) == {"a", "b", "c"}
     assert rows["a"]["priority"] == 5  # untouched
@@ -78,7 +79,8 @@ def test_dequeue_politeness_budget(spark):
 # -- full-rewrite reference for the merge-on-read round delta ------------------
 # A round's status transitions, applied by rewriting the whole frontier —
 # O(frontier) per round, so the engine never runs this. It is the reference
-# that frontier.round_update_delta + compose_frontier must reproduce.
+# that frontier.round_update_delta (an Arrow table) + compose_frontier must
+# reproduce.
 
 def mark_taken(frontier: DataFrame, dequeued: DataFrame, round_no: int) -> DataFrame:
     """status QUEUED→PROCESSING + taken_round (URLStore.java:191-206)."""
@@ -176,18 +178,19 @@ def test_round_update_delta_equals_full_rewrite(spark):
         ("e", "http://h/e", "h", 1, 0, 0),   # ok, but the store gate refuses it
         ("f", "http://h/f", "h", 1, 0, 0, 2),  # saved in round 2, fails now
     ])
-    dq = spark.createDataFrame([("a",), ("b",), ("c",), ("e",), ("f",)], "url_id string")
+    dq = pa.table({"url_id": ["a", "b", "c", "e", "f"]})
     # `saved` is the fetch artifact's F3 gate column (ok ∧ should_store)
-    results = spark.createDataFrame(
-        [
-            ("a", ["fresh"], True, None, True),
-            ("b", ["fresh"], False, "E", False),
-            ("e", ["other"], True, None, False),
-            ("f", ["fresh"], False, "E", False),
-        ],
-        "url_id string, tags array<string>, ok boolean, error string, saved boolean",
-    )
-    composed = FR.compose_frontier(fr, None, FR.round_update_delta(dq, results, 4))
+    results = pa.table({
+        "url_id": ["a", "b", "e", "f"],
+        "tags": [["fresh"], ["fresh"], ["other"], ["fresh"]],
+        "ok": [True, False, True, False],
+        "error": [None, "E", None, "E"],
+        "saved": [True, False, False, False],
+    })
+    upd = spark.createDataFrame(FR.round_update_delta(dq, results, 4))
+    composed = FR.compose_frontier(fr, None, upd)
+    # the full rewrite reads the same inputs as Spark tables
+    dq, results = spark.createDataFrame(dq), spark.createDataFrame(results)
     two_step = mark_completed(mark_taken(fr, dq, 4), results, cfg, 4)
     cols = sorted(fr.columns)
     key = lambda t: repr(t)

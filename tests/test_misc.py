@@ -106,7 +106,7 @@ def test_fetch_join_is_broadcast(spark):
         [("x", "http://site.example.com/", "site.example.com", ["internal"], 0, 0, 0, 0)],
         "url_id string, url string, host string, tags array<string>, priority int, attempt int, depth int, part int",
     )
-    plan = fetch_simulate(dq, sdocs, canonical_config())._jdf.queryExecution().executedPlan().toString()
+    plan = fetch_simulate(sdocs, canonical_config())(dq)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 

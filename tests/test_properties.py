@@ -88,10 +88,11 @@ def test_merge_idempotent(spark):
     MERGE WHEN NOT MATCHED semantics)."""
     cfg = CrawlConfig()
     urls = spark.createDataFrame([(u,) for u in _random_urls(200, seed=5)], "url string")
-    cands = FR.make_candidates(urls, cfg)
-    fr1 = FR.merge_new_links(FR.empty_frontier(spark), cands, cfg, 1, depth=1)
+    kernel = FR.UrlKernel(cfg)
+    cands = kernel.candidates(urls)
+    fr1 = FR.merge_new_links(FR.empty_frontier(spark), cands, kernel, 1, depth=1)
     n1 = fr1.count()
-    fr2 = FR.merge_new_links(fr1, cands, cfg, 2, depth=2)
+    fr2 = FR.merge_new_links(fr1, cands, kernel, 2, depth=2)
     assert fr2.count() == n1
     # and nothing changed: created_round stays 1 everywhere
     assert fr2.where(F.col("created_round") != 1).count() == 0

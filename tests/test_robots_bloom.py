@@ -98,9 +98,10 @@ def test_bloom_no_false_negatives_and_exactness(spark):
     from dumb_crawler_spark.corpus import frontier_urls_from_range
 
     urls = frontier_urls_from_range(spark, 3000)
-    cands_all = FR.make_candidates(urls, cfg)
+    kernel = FR.UrlKernel(cfg)
+    cands_all = kernel.candidates(urls)
     frontier = FR.merge_new_links(
-        FR.empty_frontier(spark), cands_all.limit(2000), cfg, 0, depth=0
+        FR.empty_frontier(spark), cands_all.limit(2000), kernel, 0, depth=0
     ).cache()
     bloom = PartitionedBloom.build(frontier.select("url_id", "part"))
 
@@ -143,7 +144,7 @@ def test_bloom_ships_via_broadcast_once(spark):
     from dumb_crawler_spark.corpus import frontier_urls_from_range
 
     urls = frontier_urls_from_range(spark, 500)
-    cands = FR.make_candidates(urls, cfg)
+    cands = FR.UrlKernel(cfg).candidates(urls)
     bloom = PartitionedBloom.build(cands.select("url_id", "part"), expected_per_part=4096)
     assert bloom._bcast is None  # lazy: nothing shipped until first probe
     bloom.might_contain(cands).count()

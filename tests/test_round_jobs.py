@@ -1,17 +1,25 @@
-"""Spark jobs per crawl round, pinned. Every k-bounded step of a round is one
-Spark action or pure driver work (crawler.py module docstring), so a change
-that re-adds a per-round job fails here loudly. Also pinned: the counters
-observed on the ins write stay exact under the bloom's two-branch union, the
+"""Spark jobs and py4j commands per crawl round, pinned. Every k-bounded
+step of a round is one Spark action or pure driver work, and every plan is
+assembled from expressions the Crawler built once (crawler.py module
+docstring), so a change that re-adds a per-round job or rebuilds an
+expression tree every round fails here loudly. Also pinned: the
+observation that keeps the ins write's plan layered, the counters observed
+on the ins write stay exact under the bloom's two-branch union, the
 Warehouse's pinned read schemas return what schema inference returns, and
 the dequeue_order lineage and the frontier read back across a warehouse
 written before their `host` and `saved_round` columns existed."""
 
 from __future__ import annotations
 
+import re
 import uuid
+from collections import Counter
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pyarrow.parquet as pq
 import pytest
+from py4j.clientserver import ClientServerConnection
 from test_pages_split import _tiny_web
 
 from dumb_crawler_spark import frontier as FR
@@ -19,35 +27,69 @@ from dumb_crawler_spark.config import Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
 from dumb_crawler_spark.robots import ROBOTS_SCHEMA
+from dumb_crawler_spark.storage import Warehouse
 
 # steady-state jobs of one round on local[4]; before the dequeued batch was
 # collected to the driver these rounds ran 36 and 30 jobs, before the robots
 # round was planned from the planner's driver-side counts (no per-round
-# grouping-sets probe) it ran 20, and before UPDATED_PAGES was read off the
-# frontier row the threshold round (it saves pages) ran 15
-ROBOTS_BLOOM_MAX_JOBS = 15
-THRESHOLD_MAX_JOBS = 14
+# grouping-sets probe) it ran 20, before UPDATED_PAGES was read off the
+# frontier row the threshold round (it saves pages) ran 15, and before the
+# update and errors deltas were written with pyarrow 15 and 14
+ROBOTS_BLOOM_MAX_JOBS = 12
+THRESHOLD_MAX_JOBS = 11
+# py4j commands of the robots+bloom round, object releases aside: 6,742 while
+# every round rebuilt its expression trees; the bound is a quarter of that
+ROBOTS_BLOOM_MAX_PY4J = 1_685
 ROUNDS = 3  # rounds 1-2 pay first reads; round 3 is counted
 
 
-def _round_jobs(c: Crawler, round_no: int) -> int:
+@contextmanager
+def _py4j_commands():
+    """Counts the py4j commands the driver sends, except object releases
+    (``m\\nd``): those arrive when Python's GC collects a proxy, so their
+    number varies from run to run."""
+    n = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\nd"):
+            n[0] += 1
+        return send(self, command)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counting)
+        yield n
+
+
+def _count_round(c: Crawler, round_no: int) -> SimpleNamespace:
+    """Run one round; its Spark jobs, py4j commands and ins-write plan."""
     sc = c.spark.sparkContext
     group = f"round-jobs-{uuid.uuid4().hex}"
+    ins = []
+    write_inserts = Warehouse.write_frontier_inserts
+
+    def capture(wh, rnd, df):
+        ins.append(df)
+        return write_inserts(wh, rnd, df)
+
     sc.setJobGroup(group, f"round {round_no}")
     try:
-        c.run_round(round_no)
+        with pytest.MonkeyPatch.context() as mp, _py4j_commands() as py4j:
+            mp.setattr(Warehouse, "write_frontier_inserts", capture)
+            c.run_round(round_no)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return SimpleNamespace(jobs=jobs, py4j=py4j[0], ins=ins[0] if ins else None)
 
 
-def _crawl(c: Crawler) -> int:
-    """Bootstrap, rounds 1..ROUNDS-1, then the counted round's job count."""
+def _crawl(c: Crawler) -> SimpleNamespace:
+    """Bootstrap, rounds 1..ROUNDS-1, then the counted round."""
     c.bootstrap()
     for r in range(1, ROUNDS):
         c.run_round(r)
-    return _round_jobs(c, ROUNDS)
+    return _count_round(c, ROUNDS)
 
 
 def _order(c: Crawler) -> list[tuple]:
@@ -59,22 +101,69 @@ def _order(c: Crawler) -> list[tuple]:
 
 @pytest.fixture(scope="module")
 def robots_crawls(spark, tmp_path_factory):
-    """(robots+bloom crawler, its round-3 job count, robots-only crawler)."""
+    """(robots+bloom crawler, its round-3 counts, robots-only crawler)."""
     docs, _ = generate_web(n_articles=30, seed=9)
     robots = spark.createDataFrame([("site.example.com", ["/articles/1"], 1500)], ROBOTS_SCHEMA)
     cfg = canonical_config(politeness=Politeness(respect_robots=True))
     root = tmp_path_factory.mktemp("round_jobs")
     sdocs = docs_to_spark(spark, docs)
     bloomed = Crawler(spark, cfg, sdocs, root / "bloom", robots=robots, use_bloom=True)
-    jobs = _crawl(bloomed)
+    counted = _crawl(bloomed)
     plain = Crawler(spark, cfg, sdocs, root / "plain", robots=robots)
     _crawl(plain)
-    return bloomed, jobs, plain
+    return bloomed, counted, plain
 
 
 def test_robots_bloom_round_job_count(robots_crawls):
-    _, jobs, _ = robots_crawls
-    assert jobs <= ROBOTS_BLOOM_MAX_JOBS, f"{jobs} jobs"
+    _, counted, _ = robots_crawls
+    assert counted.jobs <= ROBOTS_BLOOM_MAX_JOBS, f"{counted.jobs} jobs"
+
+
+def test_robots_bloom_round_py4j_commands(robots_crawls):
+    _, counted, _ = robots_crawls
+    assert counted.py4j <= ROBOTS_BLOOM_MAX_PY4J, f"{counted.py4j} py4j commands"
+
+
+def _plan_nodes(tree: str) -> list[tuple[str, list[int]]]:
+    """(node line, indices of its ancestors) for each node of a plan's
+    treeString; a node's depth is where its text starts."""
+    nodes, stack = [], []  # stack: (depth, index) of the open ancestors
+    for i, line in enumerate(tree.splitlines()):
+        depth = len(re.match(r"[ :|]*(?:[+:]- )?", line).group(0))
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        nodes.append((line[depth:], [j for _, j in stack]))
+        stack.append((depth, i))
+    return nodes
+
+
+def test_ins_write_observation_fences_the_url_kernel(robots_crawls):
+    """The ins write's observe() (a CollectMetrics node) is an optimizer
+    barrier between the URL kernel and the dedupe/anti-join. Without it the
+    F1/F2 filter pushes down into the kernel's layers and constraint
+    propagation over those expressions takes seconds to optimize the plan
+    (12.8 s against ~0.1 s on the polite_crawl benchmark's config). So:
+    every parse/regex of the kernel sits below a CollectMetrics, and the
+    F1 filter and the dedupe Window above it."""
+    _, counted, _ = robots_crawls
+    tree = counted.ins._jdf.queryExecution().optimizedPlan().toString()
+    nodes = _plan_nodes(tree)
+    fences = {i for i, (text, _) in enumerate(nodes) if text.startswith("CollectMetrics")}
+    assert fences, tree
+    kernel = [i for i, (text, _) in enumerate(nodes) if "ParseUrl" in text or "regexp_extract" in text]
+    assert kernel, tree
+    for i in kernel:
+        assert fences & set(nodes[i][1]), nodes[i][0][:120]
+    def fenced_off(text: str) -> bool:  # the dedupe or the F1/F2 filter
+        return text.startswith("Window ") or (
+            text.startswith("Filter ") and "StartsWith(url" in text
+        )
+
+    for i in fences:
+        above = [nodes[j][0] for j in nodes[i][1]]
+        assert any(t.startswith("Window ") for t in above), tree
+        assert any(t.startswith("Filter ") and "StartsWith(url" in t for t in above), tree
+        assert not any(fenced_off(t) for t, anc in nodes if i in anc), tree
 
 
 def test_threshold_round_job_count(spark, tmp_path):
@@ -82,9 +171,9 @@ def test_threshold_round_job_count(spark, tmp_path):
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 0)
         c = Crawler(spark, canonical_config(), docs_to_spark(spark, docs), tmp_path / "wh")
-        jobs = _crawl(c)
+        counted = _crawl(c)
     assert c._planner.ready  # the planner's threshold form ran
-    assert jobs <= THRESHOLD_MAX_JOBS, f"{jobs} jobs"
+    assert counted.jobs <= THRESHOLD_MAX_JOBS, f"{counted.jobs} jobs"
 
 
 def test_observed_counters_exact_under_bloom_union(robots_crawls):
@@ -129,6 +218,21 @@ def test_pinned_reads_match_inferred_reads(spark, robots_crawls):
         assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect())), (
             table, kind,
         )
+
+
+def test_errors_delta_reads_back_as_written(robots_crawls):
+    """The errors delta, written with pyarrow from a read of the fetch delta,
+    reads back through Spark with its own columns (not the fetch delta's):
+    one row per failed fetch, stamped with its round."""
+    c, _, _ = robots_crawls
+    errors = c.wh.read_deltas("errors")
+    assert errors.columns == ["url_id", "url", "error", "round", "spans"]
+    rows = errors.collect()
+    counters = c.metrics_total()
+    assert Counter(r["error"] for r in rows) == {
+        k.removeprefix("ERROR_"): v for k, v in counters.items() if k.startswith("ERROR_")
+    }
+    assert {r["round"] for r in rows} <= set(range(1, ROUNDS + 1))
 
 
 def test_dequeue_order_reads_pre_host_deltas(spark, tmp_path):

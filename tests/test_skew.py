@@ -43,7 +43,7 @@ def test_salting_bounds_partition_sizes(spark):
         .otherwise(F.concat(F.lit("http://h"), (F.col("id") % 7).cast("string"), F.lit(".com/p"), F.col("id").cast("string")))
         .alias("url")
     )
-    cands = FR.make_candidates(urls, cfg)
+    cands = FR.UrlKernel(cfg).candidates(urls)
     dist = (
         cands.where(F.col("host") == "mega.example.com")
         .groupBy("part").count().collect()
