@@ -131,8 +131,8 @@ def bench_crawl_rounds(spark, tmpdir: str) -> dict:
         F.lit(None).cast("int").alias("saved_round"),
         F.lit(None).cast("string").alias("error"),
         "part",
-    ).repartition(cfg.partitions, "part")
-    wh.write_snapshot("frontier", 0, fr0)
+    )
+    wh.write_frontier_snapshot(0, fr0, cfg.partitions)
     wh.commit_round(0, {"bootstrap": FRONTIER_N})
 
     crawler = Crawler(spark, cfg, docs, tmpdir, compact_every=COMPACT_EVERY)

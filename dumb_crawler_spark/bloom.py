@@ -62,13 +62,23 @@ def _test_bits(bitmap: np.ndarray, m: int, k: int, a: np.ndarray, b: np.ndarray)
 
 
 class PartitionedBloom:
-    """part → (bitmap bytes, m, k). Built distributed, collected as compact
-    bitmaps (m/8 bytes each), broadcast for the probe side."""
+    """part → (bitmap bytes, m, k), plus part → keys folded in (``counts``).
+    Built distributed, collected as compact bitmaps (m/8 bytes each),
+    broadcast for the probe side."""
 
-    def __init__(self, filters: dict[int, tuple[bytes, int, int]], expected_per_part: int | None = None):
+    def __init__(self, filters: dict[int, tuple[bytes, int, int]],
+                 expected_per_part: int | None = None, counts: dict[int, int] | None = None):
         self.filters = filters
         self.expected_per_part = expected_per_part
+        self.counts = counts or {}
         self._bcast = None  # lazy sc.broadcast handle (see might_contain)
+
+    @property
+    def overfull(self) -> bool:
+        """A part holds more keys than the presize (at 4× it, ~68% of unseen
+        keys pass a filter sized for 1%)."""
+        cap = self.expected_per_part
+        return cap is not None and any(n > cap for n in self.counts.values())
 
     def broadcast_bytes(self) -> int:
         """Total bitmap payload that one executor holds (all parts)."""
@@ -87,6 +97,8 @@ class PartitionedBloom:
         is exactly what this avoids; only the round's inserts get hashed.
         Both inputs' executor broadcast copies are released (consumed)."""
         merged = dict(self.filters)
+        counts = {p: self.counts.get(p, 0) + other.counts.get(p, 0)
+                  for p in {*self.counts, *other.counts}}
         for p, (bm, m, k) in other.filters.items():
             if p in merged:
                 bm0, m0, k0 = merged[p]
@@ -97,7 +109,7 @@ class PartitionedBloom:
                 merged[p] = (bm, m, k)
         self._release_broadcast()
         other._release_broadcast()
-        return PartitionedBloom(merged, self.expected_per_part or other.expected_per_part)
+        return PartitionedBloom(merged, self.expected_per_part or other.expected_per_part, counts)
 
     @staticmethod
     def build(frontier: DataFrame, fpr: float = 0.01, expected_per_part: int | None = None) -> "PartitionedBloom":
@@ -126,6 +138,7 @@ class PartitionedBloom:
             T.StructField("bitmap", T.BinaryType()),
             T.StructField("m", T.IntegerType()),
             T.StructField("k", T.IntegerType()),
+            T.StructField("n", T.LongType()),
         ])
 
         def fold(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -135,25 +148,24 @@ class PartitionedBloom:
             a = pdf["h1"].to_numpy(dtype=np.int64).astype(np.uint64)
             b = pdf["h2"].to_numpy(dtype=np.int64).astype(np.uint64)
             _fold_into(bits, m, k, a, b)
-            return pd.DataFrame({"part": [part], "bitmap": [bits.tobytes()], "m": [m], "k": [k]})
+            return pd.DataFrame({"part": [part], "bitmap": [bits.tobytes()], "m": [m], "k": [k], "n": [len(pdf)]})
 
         rows = hashed.groupBy("part").applyInPandas(fold, schema).collect()
-        return PartitionedBloom(
-            {r["part"]: (bytes(r["bitmap"]), r["m"], r["k"]) for r in rows}, expected_per_part
-        )
+        filters = {r["part"]: (bytes(r["bitmap"]), r["m"], r["k"]) for r in rows}
+        return PartitionedBloom(filters, expected_per_part, {r["part"]: r["n"] for r in rows})
 
     def add_local(
         self, parts: np.ndarray, h1: np.ndarray, h2: np.ndarray, fpr: float = 0.01
     ) -> "PartitionedBloom":
         """Driver-side incremental growth from collected key hashes (the
         k-bounded dual of :meth:`union`): fold the new keys into COPIES of
-        the affected per-part bitmaps. Requires ``expected_per_part``
-        presizing (all parts share one (m, k)). Executor broadcast copies of
-        the old version are released."""
+        the affected per-part bitmaps, and count them. Requires
+        ``expected_per_part`` presizing (all parts share one (m, k)).
+        Executor broadcast copies of the old version are released."""
         if not self.expected_per_part:
             raise ValueError("add_local requires expected_per_part presizing")
         m, k = _params(self.expected_per_part, fpr)
-        merged = dict(self.filters)
+        merged, counts = dict(self.filters), dict(self.counts)
         a_all = h1.astype(np.int64).astype(np.uint64)
         b_all = h2.astype(np.int64).astype(np.uint64)
         for p in np.unique(parts):
@@ -167,8 +179,9 @@ class PartitionedBloom:
                 bits = np.zeros(m // 8, dtype=np.uint8)
             _fold_into(bits, m, k, a_all[mask], b_all[mask])
             merged[int(p)] = (bits.tobytes(), m, k)
+            counts[int(p)] = counts.get(int(p), 0) + int(mask.sum())
         self._release_broadcast()
-        return PartitionedBloom(merged, self.expected_per_part)
+        return PartitionedBloom(merged, self.expected_per_part, counts)
 
     def might_contain(self, df: DataFrame, url_id_col: str = "url_id", part_col: str = "part") -> DataFrame:
         """Adds boolean ``_maybe_seen``: False ⇒ definitely NOT in the

@@ -68,8 +68,10 @@ from .extract import BASE_PART_COLS, base_parts_layers, extract_links_with_base,
 from .fetch import error_kinds, fetch_simulate
 from .filters import should_store
 from .planner import IncrementalPlanner
-from .storage import Warehouse
+from .storage import COMPACT_EVERY, Warehouse
 from .urlkit import apply_layers
+
+BLOOM_PRESIZE_FLOOR = 4096  # the URL-seen bloom's smallest presize, keys per part
 
 
 @dataclass
@@ -98,7 +100,7 @@ class Crawler:
         robots: DataFrame | None = None,
         use_bloom: bool = False,
         round_interval_ms: int = 60_000,
-        compact_every: int = 16,
+        compact_every: int = COMPACT_EVERY,
     ):
         self.spark = spark
         self.cfg = cfg
@@ -115,6 +117,9 @@ class Crawler:
         self.phase_times: dict[str, float] = {}  # accumulated per-phase secs (perf triage)
         self._phase_lock = threading.Lock()  # phases may be timed off the main thread
         self._bloom = None
+        # the round last bootstrapped to or committed: only its successor runs,
+        # and only while it is the warehouse's last commit (planner staleness)
+        self._round: int | None = None
         # the cfg-pure expressions every round's plans share (UrlKernel and
         # the cached properties below), built on first use
         self._urls = FR.UrlKernel(cfg)
@@ -152,17 +157,6 @@ class Crawler:
             with self._phase_lock:
                 self.phase_times[name] = self.phase_times.get(name, 0.0) + (time.time() - t0)
 
-    def _write_frontier(self, round_no: int, fr) -> int:
-        """Snapshot write with explicit layout: repartition by `part` (the
-        salted host bucket — Iceberg bucket-spec analog) and sort within
-        partitions by (status, priority DESC) — the `WRITE ORDERED BY`
-        analog, so parquet row-group min/max stats let the dequeue's
-        status==0 pushdown skip completed row groups entirely."""
-        out = fr.repartition(self.cfg.partitions, "part").sortWithinPartitions(
-            "status", F.desc("priority")
-        )
-        return self.wh.write_snapshot("frontier", round_no, out)
-
     # -- bootstrap / resume ----------------------------------------------------
     def bootstrap(self) -> int:
         """Seed injection (S2) as round 0, or resume from the last committed
@@ -176,6 +170,7 @@ class Crawler:
                 # the next round seeds afresh from the committed frontier
                 self._planner = IncrementalPlanner(self.cfg, self._planner.budgets)
                 self._fr_count = self.wh.read_frontier(last).count()
+                self._round = last
                 return last
             seeds_df = self.spark.createDataFrame(
                 [(s,) for s in self.cfg.seeds], T.StructType([T.StructField("url", T.StringType())])
@@ -184,12 +179,13 @@ class Crawler:
             stats = RoundStats(0)
             non_http = cands.where(~F.col("url").startswith("http")).count()
             stats.add("IGNORED_URLS", non_http)
-            fr = FR.merge_new_links(FR.empty_frontier(self.spark), cands, self._urls, 0, depth=0)
-            self._fr_count = self._write_frontier(0, fr)
+            fr = self._urls.new_rows(FR.empty_frontier(self.spark), cands, 0, depth=0)
+            self._fr_count = self.wh.write_frontier_snapshot(0, fr, self.cfg.partitions)
             stats.add("DISCOVERED_URLS", self._fr_count)
             self._append_metrics(0, stats)
             self.wh.commit_round(0, {"dequeued": 0, "seeded": len(self.cfg.seeds)})
             self.history.append(stats)
+            self._round = 0
             return 0
 
     # -- the cfg-pure pieces of a round's plans, built once per Crawler -------
@@ -242,6 +238,10 @@ class Crawler:
 
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> RoundStats:
+        last = self.wh.last_committed_round()
+        if self._round is None or last != self._round or round_no != last + 1:
+            raise RuntimeError(f"round {round_no} refused: this Crawler is at round "
+                               f"{self._round}, the warehouse at {last}; resume with a new one")
         cfg = self.cfg
         stats = RoundStats(round_no)
         # dequeue-eligible view: pushdown-friendly, no column reconciliation
@@ -332,13 +332,8 @@ class Crawler:
             stats.add(name, v)
         self._fr_count += stats.counters.get("DISCOVERED_URLS", 0)
 
-        # periodic MoR compaction: reconcile deltas into a fresh base snapshot
-        # so the delta window (and the broadcast upd side) stays bounded —
-        # the Iceberg rewrite_data_files analog, amortized over compact_every
-        # rounds
-        if self.compact_every and round_no % self.compact_every == 0:
-            with self._phase("compact"):
-                self._write_frontier(round_no, self.wh.read_frontier(round_no))
+        with self._phase("compact"):
+            self.wh.compact_frontier(round_no, cfg.partitions, self.compact_every)
 
         with self._phase("commit"):
             self._append_metrics(round_no, stats)
@@ -347,6 +342,7 @@ class Crawler:
             # only within its round — spans persist in pages/errors; without
             # this the warehouse grows O(k × page bytes) every round
             self.wh.drop_delta("fetch", round_no)
+        self._round = round_no
         return stats
 
     def _ingest_links(self, round_no: int, ok_rows: DataFrame, stats: RoundStats) -> None:
@@ -370,12 +366,10 @@ class Crawler:
 
         seen_ids = self.wh.read_frontier_seen_ids(round_no - 1)
         if self.use_bloom and self._bloom is None:
-            # one distributed build per process lifetime, presized so the
-            # per-round driver-side growth (add_local) keeps its (m, k)
-            self._bloom = PartitionedBloom.build(
-                seen_ids,
-                expected_per_part=max(4096, (self._fr_count // cfg.partitions + 1) * 8),
-            )
+            # a distributed build, presized so the driver-side growth
+            # (add_local) keeps its (m, k) until a part outgrows it
+            presize = max(BLOOM_PRESIZE_FLOOR, (self._fr_count // cfg.partitions + 1) * 8)
+            self._bloom = PartitionedBloom.build(seen_ids, expected_per_part=presize)
         new_rows = self._urls.new_rows(
             seen_ids, allowed_cands, round_no, depth=round_no, bloom=self._bloom
         )
@@ -397,6 +391,8 @@ class Crawler:
                 self._bloom = self._bloom.add_local(
                     ins["part"].to_numpy(), ins["h1"].to_numpy(), ins["h2"].to_numpy()
                 )
+                if self._bloom.overfull:  # rebuilt next round, presized anew
+                    self._bloom = None
 
     @cached_property
     def _fold_cols(self) -> list[Column]:
@@ -454,10 +450,8 @@ class Crawler:
         if refetch and start > 0:
             # C4 refetch-all reset (dormant in the reference: URLStore.java:60-68
             # hardcodes refetch=false — `UPDATE links SET status = 0`)
-            fr = self.wh.read_frontier(start).withColumn(
-                "status", F.lit(FR.QUEUED).cast("tinyint")
-            )
-            self.wh.write_snapshot("frontier", start, fr)
+            fr = self.wh.read_frontier(start).withColumn("status", F.lit(FR.QUEUED).cast("tinyint"))
+            self.wh.write_frontier_snapshot(start, fr, self.cfg.partitions)
         limit = max_rounds if max_rounds is not None else self.cfg.max_rounds
         rnd = start
         rounds_without_new_pages = 0

@@ -6,7 +6,7 @@ The reference realizes all three roles in one SQLite table ``links``
 partition column ``part`` (salted murmur3 host bucket — urlkit.part_of), and
 every mutation is a declarative plan:
 
-- insert        = left-anti join + union          (URLStore.java:127-147)
+- insert        = left-anti join → ins- delta     (URLStore.java:127-147)
 - dequeue       = window rank / ordered limit     (URLStore.java:185-208)
 - state change  = k-row update delta, composed on read by a left join +
                   conditional select              (URLStore.java:159-183)
@@ -72,7 +72,8 @@ FRONTIER_SCHEMA = T.StructType([
 
 
 def empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
+    # no partitions: an empty list would be scanned by a task per slice
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), FRONTIER_SCHEMA)
 
 
 class UrlKernel:
@@ -164,10 +165,11 @@ class UrlKernel:
     def new_rows(
         self, seen_ids: DataFrame, candidates: DataFrame, round_no: int, depth: int, bloom=None
     ) -> DataFrame:
-        """The not-yet-seen candidate rows in frontier schema (the MERGE's
-        WHEN NOT MATCHED INSERT set). ``seen_ids`` needs only a url_id column
-        — the MoR ins-delta path passes base∪inserts ids (storage.py
-        read_frontier_seen_ids), a column-pruned scan.
+        """S4+J3, the one insert path (crawl rounds, seeds, streaming): the
+        not-yet-seen candidate rows in frontier schema — MERGE's WHEN NOT
+        MATCHED INSERT set. ``candidates`` are F2-filtered unless seeds; F1 is
+        re-applied (URLStore.java:102-111). ``seen_ids`` needs only url_id:
+        base∪inserts ids (read_frontier_seen_ids) or an empty frontier.
 
         J1+J2 in-batch dedup by url_id first: the reference's "last wins"
         toMap merge (URLStore.java:134) iterates a HashSet —
@@ -187,31 +189,6 @@ class UrlKernel:
         return new_src.select(
             *head, F.lit(depth).alias("depth"), F.lit(round_no).alias("created_round"), *tail
         )
-
-
-def merge_new_links(
-    frontier: DataFrame,
-    candidates: DataFrame,
-    kernel: UrlKernel,
-    round_no: int,
-    depth: int,
-    bloom=None,
-) -> DataFrame:
-    """S4+J3: insert candidates not already in the seen-set.
-
-    candidates must already be tagged/scored (UrlKernel.candidates) and F2-filtered
-    for non-seed links (UrlKernel.allowed). The F1 protocol filter is re-applied
-    here because URLStore does its own (URLStore.java:102-111).
-
-    Equivalent Iceberg DDL at scale:
-        MERGE INTO frontier t USING cands s ON t.url_id = s.url_id
-        WHEN NOT MATCHED THEN INSERT (…status 0, attempt 0…)
-    Locally: left-anti join + union. Both sides are bucketed by part/url_id,
-    so the join is co-partitioned at scale (SPJ).
-    """
-    return frontier.unionByName(
-        kernel.new_rows(frontier.select("url_id"), candidates, round_no, depth, bloom=bloom)
-    )
 
 
 DEQUEUE_COLS = [
@@ -419,7 +396,7 @@ def dequeue_order_table(batch: pa.Table, round_no: int) -> pa.Table:
 # TERMINAL (QUEUED→{PROCESSING-leak, PROCESSED, FAILED}; SURVEY.md §2.8-C3):
 # each url_id appears in AT MOST ONE upd delta per base epoch, so composition
 # is a plain union + one broadcast join — no per-read aggregation, no
-# last-wins window. Periodic compaction (Crawler.compact_every) rewrites the
+# last-wins window. Periodic compaction (storage.COMPACT_EVERY) rewrites the
 # reconciled snapshot and resets the delta window.
 
 UPDATE_DELTA_SCHEMA = T.StructType([

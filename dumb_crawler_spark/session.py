@@ -60,8 +60,8 @@ def get_spark(
         # Smaller file splits: the crawl's scan stages run compute-heavy
         # per-row kernels (URL canonicalize/tag/hash over exploded links),
         # so a 128 MB default split yields ~10 tasks for a round's fetch
-        # artifact — 2 ragged waves on 8+ cores (measured: 6 idle cores for
-        # a full wave, scripts/phase_jobs.py). 32 MB keeps scan stages at
+        # artifact — 2 ragged waves on 8+ cores (measured on a 32-core
+        # host: 6 idle cores for a full wave). 32 MB keeps scan stages at
         # ≥2-3 tasks/core; AQE coalescing re-merges where they're too small.
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # HotSpot refuses to JIT methods over 8 KB of bytecode
@@ -69,22 +69,19 @@ def get_spark(
         # that limit runs INTERPRETED — measured 10-15x slowdowns on wide
         # frontier plans. Capping hugeMethodLimit makes Spark fall back to
         # non-codegen execution for exactly those stages, which is merely
-        # ~2x slower and, critically, predictable. Overridable for A/B
-        # (SPARK_GRAFT_HUGE_METHOD_LIMIT; round-4 warm-up-convoy triage).
-        .config(
-            "spark.sql.codegen.hugeMethodLimit",
-            os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
-        )
-        # the per-round eligible cache is read several times per round; RLE
-        # re-decode on every pass showed up as a top CPU frame — trade memory
-        # for decode-free columnar reads
+        # ~2x slower and, critically, predictable.
+        .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # executor caches (a stream micro-batch, the similarity and
+        # multimodal ops' inputs) are read back several times: RLE re-decode
+        # on every pass once showed up as a top CPU frame — trade memory for
+        # decode-free columnar reads
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
     )
     java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
     if java_opts:
         # e.g. "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m"
         # (in local[N] the driver JVM IS the executor, so these govern task
-        # execution too; used by the round-4 JIT warm-up-convoy experiments)
+        # execution too)
         b = b.config("spark.driver.extraJavaOptions", java_opts)
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if ev_dir:  # per-stage metrics for the scaling report's CPU accounting
@@ -93,9 +90,9 @@ def get_spark(
     if master.startswith("local-cluster"):
         # single-box multi-JVM mode: shuffle/broadcast bytes cross processes
         # over LOOPBACK (+ tmpfs), so lz4 is pure CPU with nothing to save —
-        # measured −15% total task CPU at 8×1-core executors
-        # (EXEC_LADDER_nocompress.json). A real cluster keeps compression for
-        # the network it actually has; SPARK_GRAFT_EXTRA_CONF overrides.
+        # measured −15% total task CPU at 8×1-core executors on a 32-core
+        # host. A real cluster keeps compression for the network it
+        # actually has; SPARK_GRAFT_EXTRA_CONF overrides.
         b = (
             b.config("spark.shuffle.compress", "false")
             .config("spark.broadcast.compress", "false")

@@ -11,10 +11,10 @@ snapshots recorded in a lineage table.
 The sandbox container has no Iceberg runtime jar, so this module provides the
 same contract on bare Parquet:
 
-- **full-state tables** (``frontier``): one immutable snapshot directory per
-  round, ``snap-{round:08d}``, written to a temp dir and atomically renamed —
-  the local analog of an Iceberg snapshot commit. (Iceberg's merge-on-read
-  avoids the full rewrite at scale; the interface is identical.)
+- **merge-on-read table** (``frontier``): a base snapshot ``snap-{round:08d}``
+  plus per-round ``ins-``/``upd-`` deltas, composed on read (frontier.py),
+  each dir written to a temp dir and atomically renamed — the local analog
+  of an Iceberg snapshot commit.
 - **append-only tables** (``pages``, ``metrics``, ``errors``, ``rounds``):
   one ``delta-{round:08d}`` directory per round; a read unions the deltas of
   committed rounds only. File rotation (reference: 50 MB WARC) falls out of
@@ -34,10 +34,14 @@ from __future__ import annotations
 import json
 import shutil
 import uuid
+from functools import cached_property
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+COMPACT_EVERY = 16  # the crawl's and the stream's MoR compaction cadence, in rounds
 
 
 def _footer_rows(parquet_dir: Path) -> int:
@@ -139,8 +143,8 @@ class Warehouse:
         return n
 
     # -- full-state tables (frontier) -----------------------------------------
-    def write_snapshot(self, table: str, round_no: int, df: DataFrame) -> int:
-        return self._atomic_write(df, self.root / table / f"snap-{round_no:08d}")
+    def write_snapshot(self, table: str, round_no: int, df: DataFrame, keep_empty: bool = True) -> int:
+        return self._atomic_write(df, self.root / table / f"snap-{round_no:08d}", keep_empty)
 
     def read_snapshot(self, table: str, round_no: int) -> DataFrame:
         return self._read(table, "snap", str(self.root / table / f"snap-{round_no:08d}"))
@@ -263,6 +267,33 @@ class Warehouse:
 
         return base, deltas("ins"), deltas("upd")
 
+    @cached_property
+    def _frontier_nulls(self) -> DataFrame:
+        """No rows in no partitions, every frontier column nullable: unioned
+        into every frontier write (no task reads it), so inserts and
+        compactions write the one schema a pyarrow concat needs."""
+        from . import frontier as FR
+
+        fields = [StructField(f.name, f.dataType, True) for f in FR.FRONTIER_SCHEMA]
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), StructType(fields))
+
+    def write_frontier_snapshot(self, round_no: int, fr: DataFrame, partitions: int, keep_empty: bool = True) -> int:
+        """The one frontier snapshot writer (seeds, compaction, the refetch
+        reset, a stream's first batch), with explicit layout: repartition by
+        `part` (the salted host bucket — Iceberg bucket-spec analog) and sort
+        within partitions by (status, priority DESC) — the `WRITE ORDERED BY`
+        analog, so parquet row-group min/max stats let the dequeue's
+        status==0 pushdown skip completed row groups entirely."""
+        out = fr.unionByName(self._frontier_nulls).repartition(partitions, "part")
+        out = out.sortWithinPartitions("status", F.desc("priority"))
+        return self.write_snapshot("frontier", round_no, out, keep_empty=keep_empty)
+
+    def compact_frontier(self, round_no: int, partitions: int, every: int = COMPACT_EVERY) -> None:
+        """MoR compaction (Iceberg rewrite_data_files): every ``every``-th round's
+        deltas fold into a fresh base, so the delta window stays bounded."""
+        if every and round_no % every == 0:
+            self.write_frontier_snapshot(round_no, self.read_frontier(round_no), partitions)
+
     def write_frontier_updates(self, round_no: int, arrow_table) -> int:
         """The round's k-row update delta (frontier.round_update_delta), one
         pyarrow-written file."""
@@ -272,9 +303,8 @@ class Warehouse:
         """Zero-insert rounds leave no ins- dir at all (keep_empty=False):
         _frontier_pieces globs only existing dirs, so readers never depend on
         Spark writing schema-only files for empty results."""
-        return self._atomic_write(
-            df, self.root / "frontier" / f"ins-{round_no:08d}", keep_empty=False
-        )
+        dest = self.root / "frontier" / f"ins-{round_no:08d}"
+        return self._atomic_write(df.unionByName(self._frontier_nulls), dest, keep_empty=False)
 
     def read_frontier_inserts(self, round_no: int) -> DataFrame | None:
         d = self.root / "frontier" / f"ins-{round_no:08d}"

@@ -39,8 +39,9 @@ def test_merge_antijoin_and_batch_dedup(spark):
         ],
         "url_id string, url string, host string, tags array<string>, priority int, part int",
     )
-    out = FR.merge_new_links(fr, cands, FR.UrlKernel(cfg), round_no=2, depth=2)
-    rows = {r["url_id"]: r for r in out.collect()}
+    # the frontier as read after the round's ins delta (base ∪ inserts)
+    ins = FR.UrlKernel(cfg).new_rows(fr, cands, round_no=2, depth=2)
+    rows = {r["url_id"]: r for r in FR.compose_frontier(fr, ins, None).collect()}
     assert set(rows) == {"a", "b", "c"}
     assert rows["a"]["priority"] == 5  # untouched
     assert rows["b"]["url"] == "http://site.example.com/b2" and rows["b"]["priority"] == 7

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,6 +78,27 @@ def test_refetch_resets_status(spark, tmp_path):  # C4 (URLStore.java:60-68)
     c.run(max_rounds=1)
     eligible = FR.eligible_raw(c.wh.read_frontier_queued(), cfg)
     assert c._planner.hist == FR.plan_dequeue(eligible, hosts=False)[0]
+
+
+def test_refetch_snapshot_in_layout_order(spark, tmp_path):
+    """The refetch reset writes its snapshot through the one frontier
+    snapshot writer: every file holds its rows in (status, priority DESC)
+    order, which the dequeue's row-group pruning relies on."""
+    docs, _ = generate_web(n_articles=12, seed=2)
+    base = canonical_config()
+    # even-numbered articles outrank the rest, so priorities interleave in
+    # url_id order and only a sort puts them in order
+    cfg = canonical_config(
+        tagger={**base.tagger, "even": r"matches(path, '/articles/[0-9]*[02468]')"},
+        priorities={**base.priorities, "even": 950},
+    )
+    sdocs = docs_to_spark(spark, docs)
+    Crawler(spark, cfg, sdocs, tmp_path / "wh").run(max_rounds=3)
+    Crawler(spark, cfg, sdocs, tmp_path / "wh").run(max_rounds=0, refetch=True)
+    files = sorted((tmp_path / "wh" / "frontier" / "snap-00000003").glob("*.parquet"))
+    prios = [pq.read_table(f, columns=["priority"]).column("priority").to_pylist() for f in files]
+    assert len({p for ps in prios for p in ps}) > 1
+    assert all(ps == sorted(ps, reverse=True) for ps in prios)
 
 
 def test_dequeue_scan_pushdown(spark, tmp_path):

@@ -84,15 +84,15 @@ def test_canonicalize_engine_matches_oracle_on_random_batch(spark):
 
 
 def test_merge_idempotent(spark):
-    """Re-merging the same candidate set changes nothing (J3 exactness —
-    MERGE WHEN NOT MATCHED semantics)."""
+    """Re-inserting the same candidate set changes nothing (J3 exactness —
+    MERGE WHEN NOT MATCHED semantics): its second ins delta is empty."""
     cfg = CrawlConfig()
     urls = spark.createDataFrame([(u,) for u in _random_urls(200, seed=5)], "url string")
     kernel = FR.UrlKernel(cfg)
     cands = kernel.candidates(urls)
-    fr1 = FR.merge_new_links(FR.empty_frontier(spark), cands, kernel, 1, depth=1)
+    fr1 = kernel.new_rows(FR.empty_frontier(spark), cands, 1, depth=1)
     n1 = fr1.count()
-    fr2 = FR.merge_new_links(fr1, cands, kernel, 2, depth=2)
+    fr2 = FR.compose_frontier(fr1, kernel.new_rows(fr1, cands, 2, depth=2), None)
     assert fr2.count() == n1
     # and nothing changed: created_round stays 1 everywhere
     assert fr2.where(F.col("created_round") != 1).count() == 0

@@ -6,9 +6,13 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
 from dumb_crawler_spark.storage import Warehouse
+from dumb_crawler_spark.streaming import stream_gated_ingest
 
 
 def _frontier_state(crawler):
@@ -74,3 +78,40 @@ def test_terminated_marker_on_empty_frontier(spark, tmp_path):
     c.run(max_rounds=30)
     wh = Warehouse(spark, tmp_path / "wh")
     assert wh.is_terminated()  # S12 marker (CrawlingSessionContext.java:203-218)
+
+
+def test_crawler_refuses_round_after_another_writers_commit(spark, tmp_path):
+    """A stream batch commits round 2 between two rounds of a live Crawler:
+    its planner counts miss the stream's rows, so it refuses to run round 2
+    (or any later round) on that warehouse. A fresh Crawler resumes from the
+    stream's commit, and its next round dequeues the stream's row."""
+    docs, _ = generate_web(n_articles=30, seed=7)
+    cfg = canonical_config(thread_count=50)  # k = 100: round 3 takes every queued row
+    sdocs = docs_to_spark(spark, docs)
+    c = Crawler(spark, cfg, sdocs, tmp_path / "wh")
+    c.bootstrap()
+    c.run_round(1)
+
+    new = "http://site.example.com/articles/9999"
+    spark.createDataFrame([(new, "2024-01-01 00:00:10")], "url string, ts string").select(
+        "url", F.col("ts").cast("timestamp")
+    ).write.parquet(str(tmp_path / "in"))
+    q = stream_gated_ingest(
+        spark, cfg, str(tmp_path / "wh"), str(tmp_path / "in"), str(tmp_path / "ck"),
+        budget_per_host=1_000, window_seconds=60,
+    )
+    q.awaitTermination(120)
+    last = c.wh.last_committed_round()
+    assert last > 1  # the stream's batch is a round of its own
+
+    for rnd in (2, last + 1):
+        with pytest.raises(RuntimeError, match="refused"):
+            c.run_round(rnd)
+    assert c.wh.last_committed_round() == last
+
+    resumed = Crawler(spark, cfg, sdocs, tmp_path / "wh")
+    assert resumed.bootstrap() == last
+    resumed.run_round(last + 1)
+    taken = {r["url_id"] for r in resumed.dequeue_order().where(f"round = {last + 1}").collect()}
+    stream_id = resumed.wh.read_frontier().where(F.col("url") == new).collect()[0]["url_id"]
+    assert stream_id in taken

@@ -100,8 +100,8 @@ def test_bloom_no_false_negatives_and_exactness(spark):
     urls = frontier_urls_from_range(spark, 3000)
     kernel = FR.UrlKernel(cfg)
     cands_all = kernel.candidates(urls)
-    frontier = FR.merge_new_links(
-        FR.empty_frontier(spark), cands_all.limit(2000), kernel, 0, depth=0
+    frontier = kernel.new_rows(
+        FR.empty_frontier(spark), cands_all.limit(2000), 0, depth=0
     ).cache()
     bloom = PartitionedBloom.build(frontier.select("url_id", "part"))
 
@@ -117,6 +117,41 @@ def test_bloom_no_false_negatives_and_exactness(spark):
     exact = {r["url_id"] for r in cands_all.join(frontier.select("url_id"), "url_id", "left_anti").collect()}
     fast = {r["url_id"] for r in prefiltered_new_rows(cands_all, frontier, bloom).collect()}
     assert fast == exact
+
+
+def test_bloom_regrows_past_its_presize(spark, tmp_path, monkeypatch):
+    """The URL-seen bloom is presized for max(floor, 8 × frontier per part)
+    keys. A crawl from one seed outgrows that many times over; once a part
+    holds more keys than its presize, the next round rebuilds the filter
+    presized from the current frontier, so the false-positive share over
+    url_ids never inserted stays near the 1% design rate."""
+    from dumb_crawler_spark import crawler as CR
+
+    monkeypatch.setattr(CR, "BLOOM_PRESIZE_FLOOR", 16)
+    presizes = []
+    build = PartitionedBloom.build
+
+    def recording_build(*args, **kwargs):
+        presizes.append(kwargs["expected_per_part"])
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(PartitionedBloom, "build", staticmethod(recording_build))
+    docs, _ = generate_web(n_articles=120, seed=4)
+    cfg = canonical_config(partitions=1, thread_count=50)
+    c = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh", use_bloom=True)
+    c.bootstrap()
+    never = spark.createDataFrame(
+        [(f"never-{i}", 0) for i in range(2000)], "url_id string, part int"
+    )
+    fp_shares = []
+    for rnd in range(1, 5):
+        c.run_round(rnd)
+        if c._bloom is not None:
+            hits = c._bloom.might_contain(never).where("_maybe_seen").count()
+            fp_shares.append(hits / 2000)
+    assert presizes[0] == 16 and c._fr_count > 4 * presizes[0]
+    assert fp_shares and max(fp_shares) < 0.05, fp_shares
+    assert len(presizes) >= 2  # rebuilt, presized from the grown frontier
 
 
 def test_bloom_crawl_matches_plain_crawl(spark, tmp_path):
