@@ -10,7 +10,7 @@ Two parts:
    through the real engine — dequeue window → fetch join → extract → merge →
    snapshot commit — and URLs/sec is reported. Scaling evidence
    (local[8] vs local[32]) is produced by running this same script at two
-   CPU counts; see BENCH.md / scripts/scaling_report.py.
+   CPU counts; the recorded readings are in BENCH.md.
 2. **Operator suite**: representative queries() entries timed with a noop
    sink (forces full computation — .count() alone would let Catalyst prune
    the measured projections).

@@ -253,16 +253,15 @@ class Crawler:
         k = cfg.thread_count * 2
         eligible = FR.eligible_raw(frq, cfg)
         with self._phase("dequeue_plan"):
-            # driver-held histogram + host counts (planner.py) → the only
-            # pre-dequeue Spark work is the large-k form's small cap job on
-            # over-budget rounds. The dequeue itself reads the frontier
-            # parquet directly — status/priority/attempt predicates push down
-            # to row-group stats (the snapshot is written sorted by (status,
+            # driver-held eligible total + host counts (planner.py): no
+            # Spark work before the dequeue itself, which reads the frontier
+            # parquet directly — status/attempt predicates push down to
+            # row-group stats (the snapshot is written sorted by (status,
             # priority DESC)).
             if not self._planner.ready:
-                # seed pass: the ONE full grouping-sets scan per bootstrap/resume
+                # seed pass: the ONE full scan per bootstrap/resume
                 self._planner.seed_from(eligible)
-            dq_plan, _, planned_n = self._planner.plan(eligible, k)
+            dq_plan, planned_n = self._planner.plan(eligible, k)
 
         # The dequeued batch is ≤ k rows by construction: ONE Arrow collect,
         # then driver work — the count, the D2 lineage, the planner's

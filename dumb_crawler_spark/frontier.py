@@ -12,8 +12,8 @@ every mutation is a declarative plan:
                   conditional select              (URLStore.java:159-183)
 
 The dequeue's plan pieces live here (eligible_raw, the plan_dequeue seed
-pass, host_cap_split, the threshold walk); planner.IncrementalPlanner
-assembles them into every round's plan from its driver-side counts.
+pass, host_cap_split); planner.IncrementalPlanner assembles them into every
+round's plan from its driver-side counts.
 
 Scale notes (10^10 rows, 1000 executors):
 - Every operation here keys on ``url_id`` or groups by ``host``; both are
@@ -26,9 +26,8 @@ Scale notes (10^10 rows, 1000 executors):
   bloom-positives (≈ duplicates + fpr) reach the exact join.
 - The dequeue top-K never sorts the whole frontier: the politeness cap ranks
   only the over-budget hosts' rows (a per-host window, partition-local after
-  the part bucketing); small k compiles to TakeOrderedAndProject
-  (per-partition heap top-K, then a K-row merge on the driver), large k to
-  a histogram-threshold range filter — neither is a global sort.
+  the part bucketing), and the top-K compiles to TakeOrderedAndProject
+  (per-partition heap top-K, then a K-row merge on the driver).
 """
 
 from __future__ import annotations
@@ -199,160 +198,37 @@ DEQUEUE_COLS = [
 def eligible_raw(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """QUEUED ∧ attempt<max, pruned to the dequeue columns — the set every
     round's dequeue plan reads. No executor cache: the plan reads it straight
-    off the frontier view, so the status predicate and the threshold walk's
-    class predicates push down to the parquet scan."""
+    off the frontier view, so the status and attempt predicates push down to
+    the parquet scan."""
     return frontier.where(
         (F.col("status") == QUEUED) & can_attempt(F.col("attempt"), cfg)
     ).select(*DEQUEUE_COLS)
 
 
-def plan_dequeue(
-    eligible: DataFrame, prefix_len: int = 3, hosts: bool = True
-) -> tuple[dict[tuple[int, int, str], int], dict[str, int] | None]:
+def plan_dequeue(eligible: DataFrame, hosts: bool = True) -> tuple[int, dict[str, int] | None]:
     """The dequeue planner's seed pass (planner.IncrementalPlanner.seed_from):
-    ONE grouping-sets aggregation over the eligible set yields both driver-
-    side tables — the (priority, attempt, url_id-prefix) class histogram and,
-    when ``hosts``, the per-host eligible counts. It runs once per bootstrap
-    or resume; every later round updates both tables from its k-row deltas."""
-    proj = eligible.select(
-        "host", "priority", "attempt", F.substring("url_id", 1, prefix_len).alias("_p")
-    )
-    if hosts:
-        # grouping_id: 7 = host slice (priority/attempt/_p aggregated away),
-        # 8 = class slice (host aggregated away)
-        agg = proj.groupingSets(
-            [["host"], ["priority", "attempt", "_p"]], "host", "priority", "attempt", "_p"
-        ).agg(F.count(F.lit(1)).alias("_n"), F.grouping_id().alias("_gid"))
-    else:
-        agg = proj.groupBy("priority", "attempt", "_p").agg(
-            F.count(F.lit(1)).alias("_n")
-        ).withColumn("_gid", F.lit(8))
-    rows = agg.collect()
-    hist = {(r["priority"], r["attempt"], r["_p"]): r["_n"] for r in rows if r["_gid"] == 8}
-    counts = {r["host"]: r["_n"] for r in rows if r["_gid"] == 7} if hosts else None
-    return hist, counts
+    (eligible total, per-host eligible counts | None) — one ``groupBy(host)``
+    collect when ``hosts``, else one count. It runs once per bootstrap or
+    resume; every later round updates both from its k-row deltas."""
+    if not hosts:
+        return eligible.count(), None
+    counts = {r["host"]: r["count"] for r in eligible.groupBy("host").count().collect()}
+    return sum(counts.values()), counts
 
 
-def host_cap_split(
-    eligible: DataFrame, over_hosts: list[str], cap: Column
-) -> tuple[DataFrame, DataFrame]:
-    """(capped, beyond): the per-host politeness cap as a row_number window
+def host_cap_split(eligible: DataFrame, over_hosts: list[str], cap: Column) -> DataFrame:
+    """The eligible set under the per-host politeness cap: a row_number window
     over ONLY the over-budget hosts' rows — under-budget hosts pass
-    wholesale, zero shuffle of their rows. ``capped`` is the capped eligible
-    set, ``beyond`` the rows the cap removed (the threshold walk's histogram
-    correction). ``cap`` is the row's host budget, an expression over
-    ``host``. NULL hosts (can't occur for F1-filtered http URLs) pass
-    uncapped."""
+    wholesale, zero shuffle of their rows. ``cap`` is the row's host budget,
+    an expression over ``host``. NULL hosts (can't occur for F1-filtered
+    http URLs) pass uncapped."""
     in_over = F.col("host").isin(over_hosts)
     under = eligible.where(~in_over | F.col("host").isNull())
     w = Window.partitionBy("host").orderBy(
         F.desc("priority"), F.asc("attempt"), F.asc("url_id")
     )
     ranked = eligible.where(in_over).withColumn("_hr", F.row_number().over(w))
-    kept = ranked.where(F.col("_hr") <= cap).drop("_hr")
-    beyond = ranked.where(F.col("_hr") > cap).drop("_hr")
-    return under.unionByName(kept), beyond
-
-
-# Above this k, TakeOrderedAndProject's single-task merge of
-# (numPartitions × k) rows becomes the serial bottleneck; switch to the
-# histogram-threshold plan (same exact D2 semantics, measured in BENCH.md).
-_TOPK_THRESHOLD_CUTOFF = 10_000
-
-
-def _dequeue_threshold(eligible: DataFrame, k: int, prefix_len: int = 3) -> DataFrame:
-    return _dequeue_threshold_ex(eligible, k, prefix_len)[0]
-
-
-def _dequeue_threshold_ex(
-    eligible: DataFrame, k: int, prefix_len: int = 3, hist: list[tuple] | None = None
-) -> tuple[DataFrame, list[tuple], int]:
-    """Exact large-k top-K without a global sort — ONE histogram pass.
-
-    Priorities are small ints (tag scores), so the joint
-    (priority, attempt, url_id-prefix) histogram is tiny (classes × 16^len
-    for hex ids): collect it once (or take it pre-collected via ``hist``),
-    walk it in D2 order until the cumulative count reaches k. Whole classes
-    above the boundary are taken wholesale; within the single boundary class
-    whole PREFIX buckets below the cut are taken (prefix truncation preserves
-    lexicographic order, and buckets are consumed ascending — so the filter
-    is a RANGE comparison ``prefix < cut``, one string compare per row, never
-    a giant INSET); only the boundary bucket itself is topped-off with a
-    small TakeOrdered. At 10^10 rows this replaces a k×P-row single-task
-    merge with one aggregation + one cheap filter, and the degenerate
-    uniform-priority frontier (boundary class = everything) costs the same
-    as the easy case.
-
-    Also returns the walk's bucket-offset table [(priority, attempt, prefix,
-    global_offset)] — every bucket the dequeue touches, in D2 order. Within
-    any bucket the taken rows are exactly the smallest url_ids (whole bucket,
-    or the TakeOrdered/recursive edge), so (offset + within-bucket url_id
-    rank) IS the contiguous global D2 rank.
-    """
-    pre = F.substring("url_id", 1, prefix_len)
-    if hist is None:
-        hist = [
-            (r["priority"], r["attempt"], r["_p"], r["count"])
-            for r in eligible.groupBy("priority", "attempt", pre.alias("_p")).count().collect()
-        ]
-    classes: dict[tuple, list] = {}
-    for p, a, pfx, n in hist:
-        classes.setdefault((p, a), []).append((pfx, n))
-    offsets: list[tuple] = []  # (priority, attempt, prefix, global D2 offset)
-    acc = 0
-    taken_classes, boundary, remaining = [], None, k
-    for cls_key in sorted(classes, key=lambda c: (-c[0], c[1])):
-        n = sum(c for _, c in classes[cls_key])
-        if n <= remaining:
-            taken_classes.append(cls_key)
-            for pfx, cn in sorted(classes[cls_key]):
-                offsets.append((cls_key[0], cls_key[1], pfx, acc))
-                acc += cn
-            remaining -= n
-            if remaining == 0:
-                break
-        else:
-            boundary = cls_key
-            break
-    whole: Column = F.lit(False)
-    for p, a in taken_classes:
-        whole = whole | ((F.col("priority") == p) & (F.col("attempt") == a))
-    out = eligible.where(whole)
-    if boundary is not None and remaining > 0:
-        p, a = boundary
-        cls = eligible.where((F.col("priority") == p) & (F.col("attempt") == a))
-        cut_prefix = None
-        for prefix, n in sorted(classes[boundary]):
-            if n <= remaining:
-                offsets.append((p, a, prefix, acc))
-                acc += n
-                remaining -= n
-                cut_prefix = prefix  # whole buckets ≤ cut taken via range filter
-                if remaining == 0:
-                    break
-            else:
-                # partial boundary bucket: range-take everything below it,
-                # TakeOrdered the remainder inside it (the remainder = the
-                # bucket's `remaining` SMALLEST url_ids, so the parent-level
-                # bucket offset stays rank-exact)
-                offsets.append((p, a, prefix, acc))
-                acc += remaining
-                edge = (
-                    cls.where(pre == prefix).orderBy(F.asc("url_id")).limit(remaining)
-                    if remaining <= _TOPK_THRESHOLD_CUTOFF
-                    else _dequeue_threshold(
-                        cls.where(pre == prefix), remaining, prefix_len + 2
-                    )
-                )
-                out = out.unionByName(edge)
-                remaining = 0
-                if cut_prefix is None:
-                    return out, offsets, k
-                break
-        out = out.unionByName(cls.where(pre <= cut_prefix)) if cut_prefix else out
-    # k - remaining = EXACT rows the plan selects (remaining > 0 only when
-    # the eligible set ran dry below k)
-    return out, offsets, k - remaining
+    return under.unionByName(ranked.where(F.col("_hr") <= cap).drop("_hr"))
 
 
 DEQUEUE_ORDER_SCHEMA = T.StructType([

@@ -34,15 +34,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A ``local[cores]`` session (``SPARK_GRAFT_CPUS``, else every CPU).
+
+    ``SPARK_GRAFT_EXTRA_CONF`` (a JSON dict of Spark confs) and then
+    ``extra_conf`` are applied after the master, so they override it too:
+    ``{"spark.master": "local-cluster[2,1,5120]", "spark.executor.memory":
+    "4g"}`` runs separate executor JVMs."""
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 1
     shuffle_partitions = shuffle_partitions or cores
-    # SPARK_GRAFT_MASTER overrides the thread-mode master — e.g.
-    # "local-cluster[8,2,6144]" runs 8 SEPARATE executor JVMs × 2 cores
-    # (own heap, GC, python workers), the closest single-box analog of the
-    # north rule's N-vs-4N executor-cluster ladder (scripts/scaling_report.py)
-    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     b = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -51,10 +52,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem())
-        # only meaningful under local-cluster masters (ignored by local[N],
-        # where executor == driver); must fit inside the worker memory slice
-        # given in the master spec
-        .config("spark.executor.memory", os.environ.get("SPARK_EXECUTOR_MEM", "4g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Smaller file splits: the crawl's scan stages run compute-heavy
@@ -84,25 +81,13 @@ def get_spark(
         # execution too)
         b = b.config("spark.driver.extraJavaOptions", java_opts)
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")
-    if ev_dir:  # per-stage metrics for the scaling report's CPU accounting
+    if ev_dir:  # per-stage metrics (perfbench's traced runs read them)
         os.makedirs(ev_dir, exist_ok=True)
         b = b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", ev_dir)
-    if master.startswith("local-cluster"):
-        # single-box multi-JVM mode: shuffle/broadcast bytes cross processes
-        # over LOOPBACK (+ tmpfs), so lz4 is pure CPU with nothing to save —
-        # measured −15% total task CPU at 8×1-core executors on a 32-core
-        # host. A real cluster keeps compression for the network it
-        # actually has; SPARK_GRAFT_EXTRA_CONF overrides.
-        b = (
-            b.config("spark.shuffle.compress", "false")
-            .config("spark.broadcast.compress", "false")
-            .config("spark.shuffle.spill.compress", "false")
-        )
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     if env_conf:
-        # JSON dict of arbitrary spark confs — lets subprocess-driven A/B
-        # experiments (scaling ladders) toggle e.g. shuffle compression or
-        # locality wait without code edits
+        # JSON dict of arbitrary spark confs — lets a subprocess-driven run
+        # (perfbench) set confs without code edits
         import json
 
         for k, v in json.loads(env_conf).items():

@@ -10,8 +10,8 @@ from dumb_crawler_spark.planner import IncrementalPlanner
 
 
 def planner_dequeue(fr, cfg, k, host_budgets=None):
-    """(dequeue plan, walk offsets | None, planned row count) of a freshly
-    seeded planner over ``fr``'s eligible set."""
+    """(dequeue plan, planned row count) of a freshly seeded planner over
+    ``fr``'s eligible set."""
     eligible = FR.eligible_raw(fr, cfg)
     pl = IncrementalPlanner(cfg, host_budgets)
     pl.seed_from(eligible)

@@ -131,41 +131,15 @@ def test_politeness_budget_parity(spark, tmp_path, web):
     assert engine.metrics_total() == {k: v for k, v in oracle.counters.items() if v}
 
 
-def test_threshold_path_crawl_matches_oracle(spark, tmp_path, web, monkeypatch):
-    """Round-2 pin: with the threshold cutoff forced to 0 the WHOLE crawl
-    runs on the large-k planner path — plan-walk dequeued counts, footer-based
-    ALLOWED/IGNORED counters, offset-based lineage. Everything must still
-    match the oracle exactly (order, seen set, histogram, counters)."""
-    from dumb_crawler_spark import frontier as FR
-
-    monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 0)
-    docs, _ = web
-    cfg = canonical_config()
-    oracle, engine = _run_pair(spark, tmp_path, cfg, docs)
-    got = [
-        (r["round"], r["seq"], r["url_id"])
-        for r in engine.dequeue_order().orderBy("round", "seq").collect()
-    ]
-    assert got == oracle.dequeue_order
-    fr = engine.wh.read_frontier()
-    assert {r["url_id"] for r in fr.select("url_id").collect()} == oracle.seen_set()
-    assert engine.metrics_total() == {k: v for k, v in oracle.counters.items() if v}
-
-
-@pytest.mark.parametrize("cutoff", [None, 0])
-def test_budget_table_crawl_matches_oracle(spark, tmp_path, monkeypatch, cutoff):
+def test_budget_table_crawl_matches_oracle(spark, tmp_path):
     """Robots crawl-delay budgets (empty disallow lists) that bind on both
     hosts in every round: the engine's planner reads them as a driver
     table; the oracle caps each host at host_budgets[host]. Dequeue order,
-    seen set and counters must match on both sides of the TakeOrdered/
-    threshold cutoff (None = the default cutoff, 0 = threshold path)."""
+    seen set and counters must match."""
     from collections import Counter
 
-    from dumb_crawler_spark import frontier as FR
     from dumb_crawler_spark.robots import ROBOTS_SCHEMA
 
-    if cutoff is not None:
-        monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", cutoff)
     docs, _ = generate_web(n_articles=40, n_hot=30, seed=42)
     seeds = ("http://site.example.com/",) + tuple(
         f"http://site.example.com/articles/{j}" for j in (2, 3, 4)

@@ -77,7 +77,7 @@ def test_refetch_resets_status(spark, tmp_path):  # C4 (URLStore.java:60-68)
     # resuming re-seeds it, so its state matches the eligible set again
     c.run(max_rounds=1)
     eligible = FR.eligible_raw(c.wh.read_frontier_queued(), cfg)
-    assert c._planner.hist == FR.plan_dequeue(eligible, hosts=False)[0]
+    assert c._planner.total == eligible.count() and c._planner.hosts is None
 
 
 def test_refetch_snapshot_in_layout_order(spark, tmp_path):
@@ -111,7 +111,7 @@ def test_dequeue_scan_pushdown(spark, tmp_path):
     c = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh")
     c.run(max_rounds=1)
     eligible = FR.eligible_raw(c.wh.read_frontier_queued(), cfg)
-    dq, _, _ = c._planner.plan(eligible, 10)
+    dq, _ = c._planner.plan(eligible, 10)
     plan = dq._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "EqualTo(status,0)" in plan or "IsNotNull(status)" in plan, plan[:2000]

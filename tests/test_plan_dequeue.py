@@ -1,8 +1,7 @@
 """The dequeue planner (planner.IncrementalPlanner over the frontier.plan_dequeue
 seed pass) must return EXACTLY the rows of the plain-Python reference (the
-oracle's sort-then-cap rule) on both sides of the TakeOrdered/threshold
-cutoff, and its walk must agree with the driver-side lineage rank
-(dequeue_order_table)."""
+oracle's sort-then-cap rule) for small and large k, and its batch must take
+the driver-side lineage rank (dequeue_order_table) in Spark's sort order."""
 
 from __future__ import annotations
 
@@ -31,45 +30,34 @@ def _skewed_frontier(spark, n=4000, seed=11):
     return spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
 
 
-def test_plan_dequeue_matches_legacy_with_binding_cap(spark, monkeypatch):
-    """Over-budget host present, k on both sides of the cutoff: the window
-    cap + TakeOrdered form below it, the algebra cap + histogram walk
-    (capped_hist = raw − beyond) above it — both equal the reference."""
-    monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
+def test_plan_dequeue_matches_legacy_with_binding_cap(spark):
+    """Over-budget host present, k from 30 to 1,500: the window cap +
+    TakeOrdered plan equals the reference."""
     fr = _skewed_frontier(spark)
     cfg = CrawlConfig(
         max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=40)
     )
     for k in (30, 60, 400, 1500):
         want = set(reference_dequeue(fr, cfg, k))
-        dq, offsets, planned_n = planner_dequeue(fr, cfg, k)
+        dq, planned_n = planner_dequeue(fr, cfg, k)
         got = {r["url_id"] for r in dq.collect()}
         assert got == want, f"k={k}"
-        assert (offsets is not None) == (k > 50)  # threshold path above the cutoff
         assert planned_n == len(got)  # planned count is exact
 
 
-def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
-    """The threshold walk's bucket offsets must agree with the contiguous
-    global D2 rank the crawler's driver-side lineage (dequeue_order_table)
-    assigns to the collected batch: each touched bucket starts at its walk
-    offset, and the ranks are exactly 0..planned_n-1."""
-    monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
+def test_plan_dequeue_offsets_give_exact_lineage(spark):
+    """The crawler's driver-side lineage (dequeue_order_table) of a collected
+    batch: the ranks are exactly 0..planned_n-1, in Spark's D2 sort order,
+    over the reference's rows."""
     fr = _skewed_frontier(spark, seed=12)
     cfg = CrawlConfig(
         max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=35)
     )
-    dq, offsets, planned_n = planner_dequeue(fr, cfg, 700)
+    dq, planned_n = planner_dequeue(fr, cfg, 700)
     batch = dq.toArrow()
     lineage = FR.dequeue_order_table(batch, 1).to_pylist()
     assert [r["seq"] for r in lineage] == list(range(planned_n))
     assert batch.num_rows == planned_n
-    cls = {r["url_id"]: (r["priority"], r["attempt"]) for r in batch.to_pylist()}
-    first_seq: dict[tuple, int] = {}
-    for r in lineage:
-        p, a = cls[r["url_id"]]
-        first_seq.setdefault((p, a, r["url_id"][:3]), r["seq"])
-    assert first_seq == {(p, a, pfx): off for p, a, pfx, off in offsets}
     # D2 order, Spark's byte order on url_id, checked against a Spark sort
     want = [
         r["url_id"] for r in spark.createDataFrame(batch)
@@ -79,40 +67,35 @@ def test_plan_dequeue_offsets_give_exact_lineage(spark, monkeypatch):
     assert want == reference_dequeue(fr, cfg, 700)
 
 
-def test_plan_dequeue_no_budget_single_job(spark, monkeypatch):
-    """No politeness config: the seed pass counts classes only (no host
-    slice) and the plan reduces to plain top-k semantics."""
-    monkeypatch.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 50)
+def test_plan_dequeue_no_budget_single_job(spark):
+    """No politeness config: the seed pass only counts (no host counts) and
+    the plan reduces to plain top-k semantics."""
     fr = _skewed_frontier(spark, seed=13)
     cfg = CrawlConfig(max_attempt_count=5)
-    hist, hosts = FR.plan_dequeue(FR.eligible_raw(fr, cfg), hosts=False)
-    assert hosts is None and sum(hist.values()) == FR.eligible_raw(fr, cfg).count()
+    total, hosts = FR.plan_dequeue(FR.eligible_raw(fr, cfg), hosts=False)
+    assert hosts is None and total == FR.eligible_raw(fr, cfg).count()
     want = set(reference_dequeue(fr, cfg, 300))
-    dq, offsets, planned_n = planner_dequeue(fr, cfg, 300)
+    dq, planned_n = planner_dequeue(fr, cfg, 300)
     assert {r["url_id"] for r in dq.collect()} == want
-    assert offsets is not None and planned_n == len(want)
+    assert planned_n == len(want)
 
 
 def test_plan_dequeue_k_none_with_budget(spark):
     """A k that takes the whole capped set, with a binding per-host budget:
-    the seed pass's host and class slices equal plain counts, and the plan
+    the seed pass's host counts and total equal plain counts, and the plan
     equals the reference's uncut (k=None) capped set."""
     fr = _skewed_frontier(spark, seed=14)
     cfg = CrawlConfig(
         max_attempt_count=5, politeness=Politeness(budget_per_host_per_round=25)
     )
     eligible = FR.eligible_raw(fr, cfg)
-    hist, hosts = FR.plan_dequeue(eligible)
+    total, hosts = FR.plan_dequeue(eligible)
     assert hosts == {r["host"]: r["count"] for r in eligible.groupBy("host").count().collect()}
-    pre = F.substring("url_id", 1, 3).alias("_p")
-    assert hist == {
-        (r["priority"], r["attempt"], r["_p"]): r["count"]
-        for r in eligible.groupBy("priority", "attempt", pre).count().collect()
-    }
+    assert total == eligible.count()
     want = set(reference_dequeue(fr, cfg, None))
-    dq, offsets, planned_n = planner_dequeue(fr, cfg, FR._TOPK_THRESHOLD_CUTOFF)
+    dq, planned_n = planner_dequeue(fr, cfg, total)
     assert {r["url_id"] for r in dq.collect()} == want
-    assert offsets is None and planned_n == len(want)
+    assert planned_n == len(want)
     # the cap binds: hot host must be limited to the budget
     hot = dq.where(F.col("host") == "hot.example.com").count()
     assert hot == 25

@@ -127,38 +127,33 @@ def test_plan_dequeue_equals_legacy_randomized(spark):
     """Batched randomized parity (seeded, one Spark job per case): the
     planner must equal the plain-Python reference (the oracle's
     sort-then-cap rule) for random frontiers × random budgets × random
-    budget tables × random k, including k straddling the threshold cutoff
-    and budgets that do/don't bind."""
+    budget tables × random k, including k past the eligible set and budgets
+    that do/don't bind."""
     rng = random.Random(77)
-    cutoff_orig = FR._TOPK_THRESHOLD_CUTOFF
-    FR._TOPK_THRESHOLD_CUTOFF = 40
-    try:
-        for case in range(4):
-            n = rng.randint(200, 1200)
-            n_hosts = rng.choice([3, 12, 50])
-            rows = [
-                (
-                    f"i{case}_{i:05d}", f"http://h{rng.randint(0, n_hosts)}.x/{i}",
-                    f"h{rng.randint(0, n_hosts)}.x", ["t"],
-                    rng.choice([0, 0, 0, 1, 2, 3]), rng.choice([0, 5, 10, 900]),
-                    rng.randint(0, 4), 0, 0, None, None, None, None, i % 8,
-                )
-                for i in range(n)
-            ]
-            fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
-            budget = rng.choice([None, 5, 30, 10_000])
-            cfg = CrawlConfig(
-                max_attempt_count=4,
-                politeness=Politeness(budget_per_host_per_round=budget),
+    for case in range(4):
+        n = rng.randint(200, 1200)
+        n_hosts = rng.choice([3, 12, 50])
+        rows = [
+            (
+                f"i{case}_{i:05d}", f"http://h{rng.randint(0, n_hosts)}.x/{i}",
+                f"h{rng.randint(0, n_hosts)}.x", ["t"],
+                rng.choice([0, 0, 0, 1, 2, 3]), rng.choice([0, 5, 10, 900]),
+                rng.randint(0, 4), 0, 0, None, None, None, None, i % 8,
             )
-            k = rng.choice([10, 60, 500, 5000])
-            table = rng.choice([None, {
-                f"h{h}.x": rng.randint(1, 20) for h in range(0, n_hosts + 1, 2)
-            }])
-            want = set(reference_dequeue(fr, cfg, k, table))
-            dq, offsets, planned_n = planner_dequeue(fr, cfg, k, table)
-            got = {r["url_id"] for r in dq.collect()}
-            assert got == want, f"case={case} k={k} budget={budget} table={table}"
-            assert planned_n == len(got), f"case={case}"
-    finally:
-        FR._TOPK_THRESHOLD_CUTOFF = cutoff_orig
+            for i in range(n)
+        ]
+        fr = spark.createDataFrame(rows, FR.FRONTIER_SCHEMA)
+        budget = rng.choice([None, 5, 30, 10_000])
+        cfg = CrawlConfig(
+            max_attempt_count=4,
+            politeness=Politeness(budget_per_host_per_round=budget),
+        )
+        k = rng.choice([10, 60, 500, 5000])
+        table = rng.choice([None, {
+            f"h{h}.x": rng.randint(1, 20) for h in range(0, n_hosts + 1, 2)
+        }])
+        want = set(reference_dequeue(fr, cfg, k, table))
+        dq, planned_n = planner_dequeue(fr, cfg, k, table)
+        got = {r["url_id"] for r in dq.collect()}
+        assert got == want, f"case={case} k={k} budget={budget} table={table}"
+        assert planned_n == len(got), f"case={case}"

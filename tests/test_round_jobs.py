@@ -3,11 +3,12 @@ step of a round is one Spark action or pure driver work, and every plan is
 assembled from expressions the Crawler built once (crawler.py module
 docstring), so a change that re-adds a per-round job or rebuilds an
 expression tree every round fails here loudly. Also pinned: the
-observation that keeps the ins write's plan layered, the counters observed
-on the ins write stay exact under the bloom's two-branch union, the
-Warehouse's pinned read schemas return what schema inference returns, and
-the dequeue_order lineage and the frontier read back across a warehouse
-written before their `host` and `saved_round` columns existed."""
+observation that keeps the ins write's plan layered, the robots path parsed
+below the verdict's lambda, the counters observed on the ins write stay
+exact under the bloom's two-branch union, the first reads of the Warehouse's
+tables return the columns their writers emit, and the dequeue_order lineage
+and the frontier read back across a warehouse written before their `host`
+and `saved_round` columns existed."""
 
 from __future__ import annotations
 
@@ -22,7 +23,6 @@ import pytest
 from py4j.clientserver import ClientServerConnection
 from test_pages_split import _tiny_web
 
-from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
@@ -33,10 +33,10 @@ from dumb_crawler_spark.storage import Warehouse
 # collected to the driver these rounds ran 36 and 30 jobs, before the robots
 # round was planned from the planner's driver-side counts (no per-round
 # grouping-sets probe) it ran 20, before UPDATED_PAGES was read off the
-# frontier row the threshold round (it saves pages) ran 15, and before the
+# frontier row the canonical round (it saves pages) ran 15, and before the
 # update and errors deltas were written with pyarrow 15 and 14
 ROBOTS_BLOOM_MAX_JOBS = 12
-THRESHOLD_MAX_JOBS = 11
+CANONICAL_MAX_JOBS = 11
 # py4j commands of the robots+bloom round, object releases aside: 6,742 while
 # every round rebuilt its expression trees; the bound is a quarter of that
 ROBOTS_BLOOM_MAX_PY4J = 1_685
@@ -166,14 +166,36 @@ def test_ins_write_observation_fences_the_url_kernel(robots_crawls):
         assert not any(fenced_off(t) for t, anc in nodes if i in anc), tree
 
 
-def test_threshold_round_job_count(spark, tmp_path):
+def _lambdas(tree: str) -> list[str]:
+    """The ``lambdafunction(...)`` expressions of a plan's treeString."""
+    found = []
+    for m in re.finditer(r"lambdafunction\(", tree):
+        depth = 0
+        for i in range(m.end() - 1, len(tree)):
+            depth += {"(": 1, ")": -1}.get(tree[i], 0)
+            if depth == 0:
+                break
+        found.append(tree[m.start():i + 1])
+    return found
+
+
+def test_robots_path_parsed_outside_the_verdict_lambda(robots_crawls):
+    """The robots verdict's ``exists`` runs its lambda once per disallowed
+    prefix of the row's host, so the candidate's path is parsed in a layer
+    below it, once per row: no URL parse inside any lambda of the ins plan."""
+    _, counted, _ = robots_crawls
+    tree = counted.ins._jdf.queryExecution().optimizedPlan().toString()
+    lambdas = _lambdas(tree)
+    assert any("StartsWith" in f for f in lambdas), tree
+    for f in lambdas:
+        assert "ParseUrl" not in f, f[:300]
+
+
+def test_canonical_round_job_count(spark, tmp_path):
     docs, _ = generate_web(n_articles=40, seed=42)
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(FR, "_TOPK_THRESHOLD_CUTOFF", 0)
-        c = Crawler(spark, canonical_config(), docs_to_spark(spark, docs), tmp_path / "wh")
-        counted = _crawl(c)
-    assert c._planner.ready  # the planner's threshold form ran
-    assert counted.jobs <= THRESHOLD_MAX_JOBS, f"{counted.jobs} jobs"
+    c = Crawler(spark, canonical_config(), docs_to_spark(spark, docs), tmp_path / "wh")
+    counted = _crawl(c)
+    assert counted.jobs <= CANONICAL_MAX_JOBS, f"{counted.jobs} jobs"
 
 
 def test_observed_counters_exact_under_bloom_union(robots_crawls):
@@ -187,9 +209,25 @@ def test_observed_counters_exact_under_bloom_union(robots_crawls):
     assert _order(bloomed) == _order(plain)
 
 
+_SPANS = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+# the columns the writers of the tables without a declared read schema emit:
+# the pages write's select, the errors delta's pyarrow table, the metrics rows
+_WRITTEN = {
+    "pages": [("url_id", "string"), ("url", "string"), ("round", "int"), ("spans", _SPANS)],
+    "errors": [
+        ("url_id", "string"), ("url", "string"), ("error", "string"), ("round", "int"),
+        ("spans", _SPANS),
+    ],
+    "metrics": [("round", "int"), ("counter", "string"), ("value", "bigint")],
+}
+
+
 def test_pinned_reads_match_inferred_reads(spark, robots_crawls):
     """For every warehouse table and kind, a read under the pinned schema
-    returns the same columns, types and rows as schema inference."""
+    returns the same columns, types and rows as schema inference. A table
+    without a declared read schema pins what its first read infers, and
+    comparing that with inference compares it with itself; so its first
+    read must also give the columns the table's writer emits."""
     c, _, _ = robots_crawls
     wh, root = c.wh, c.wh.root
     last = wh.last_committed_round()
@@ -215,6 +253,9 @@ def test_pinned_reads_match_inferred_reads(spark, robots_crawls):
         assert [(f.name, f.dataType) for f in df.schema] == [
             (f.name, f.dataType) for f in inferred.schema
         ], (table, kind)
+        if table in _WRITTEN:
+            got = [(f.name, f.dataType.simpleString()) for f in df.schema]
+            assert got == _WRITTEN[table], (table, kind)
         assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect())), (
             table, kind,
         )

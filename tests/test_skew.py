@@ -55,7 +55,7 @@ def test_salting_bounds_partition_sizes(spark):
 
 
 def test_dequeue_plan_shapes(spark):
-    """Plan checks on the planner's plans: the small-k dequeue compiles to
+    """Plan checks on the planner's plans: the dequeue compiles to
     TakeOrderedAndProject (per-partition heap, no global sort); the
     politeness window materializes ONLY for hosts that actually exceed their
     budget — an all-under-budget frontier must not shuffle a single row for
@@ -63,7 +63,7 @@ def test_dequeue_plan_shapes(spark):
     from dumb_crawler_spark.config import Politeness
 
     def shape(fr, cfg, k=10):
-        dq, _, _ = planner_dequeue(fr, cfg, k)
+        dq, _ = planner_dequeue(fr, cfg, k)
         return dq, dq._jdf.queryExecution().executedPlan().toString()
 
     cfg = CrawlConfig()
