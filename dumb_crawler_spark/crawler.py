@@ -397,7 +397,7 @@ class Crawler:
     def _fold_cols(self) -> list[Column]:
         """The insert columns the planner and the URL-seen bloom grow from."""
         h1, h2 = _h1h2(F.col("url_id"))
-        cols = ("url_id", "host", "priority", "attempt", "status", "part")
+        cols = ("host", "attempt", "status", "part")
         return [*map(F.col, cols), h1.alias("h1"), h2.alias("h2")]
 
     @cached_property

@@ -154,9 +154,9 @@ class IncrementalPlanner:
                 _subtract(self.hosts, hosts, "host-count")
 
     def on_inserts(self, ins: pa.Table) -> None:
-        """Add one round's ins-delta (url_id, host, priority, attempt, status
-        columns as Arrow; k-bounded rows the crawler reads once for the bloom
-        too). Inserted rows are QUEUED with attempt 0 by construction
+        """Add one round's ins-delta (host, attempt, status columns as Arrow;
+        k-bounded rows the crawler reads once for the bloom too). Inserted
+        rows are QUEUED with attempt 0 by construction
         (frontier.UrlKernel.new_rows); the eligibility filter is still applied
         verbatim for safety."""
         el = ins.filter(pc.and_(

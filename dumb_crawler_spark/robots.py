@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .urlkit import apply_layers
-
 ROBOTS_SCHEMA = T.StructType([
     T.StructField("host", T.StringType(), False),
     T.StructField("disallow", T.ArrayType(T.StringType()), False),
@@ -58,29 +56,17 @@ def robots_verdict(
     robots are fully allowed). Broadcast join — candidates never shuffle.
     Keeping the verdict as a COLUMN lets callers fold block-counting into
     whatever aggregation they already run instead of paying separate
-    before/after count jobs (VERDICT r03 item 6). The expressions and the
-    broadcast side are built once, here; each call adds only the join and
-    two selects.
-
-    The path is parsed in its own layer, once per row whose host has rules
-    (the urlkit one-select-per-layer idiom): inside the ``exists`` lambda it
-    would be parsed again for every disallowed prefix."""
-    disallow = F.col("disallow")
-    parsed = F.when(disallow.isNotNull(), F.try_parse_url(F.col("url"), F.lit("PATH")))
-    path = F.col("_path")
+    before/after count jobs (VERDICT r03 item 6). The path expression and
+    the broadcast side are built once, here; each call adds only the join."""
+    path = F.try_parse_url(F.col("url"), F.lit("PATH"))
     path = F.when(path.isNull() | (path == ""), F.lit("/")).otherwise(path)
     side = F.broadcast(robots.select("host", "disallow"))
     blocked = F.exists(
-        F.coalesce(disallow, F.array().cast("array<string>")),
+        F.coalesce(F.col("disallow"), F.array().cast("array<string>")),
         lambda p: path.startswith(p),
     )
-    layers = [
-        [F.col("*"), parsed.alias("_path")],
-        [F.col("*"), F.coalesce(blocked, F.lit(False)).alias(out)],
-    ]
-    return lambda candidates: apply_layers(
-        candidates.join(side, "host", "left"), layers
-    ).drop("disallow", "_path")
+    verdict = [F.col("*"), F.coalesce(blocked, F.lit(False)).alias(out)]
+    return lambda candidates: candidates.join(side, "host", "left").select(*verdict).drop("disallow")
 
 
 def filter_robots_allowed(candidates: DataFrame, robots: DataFrame) -> DataFrame:

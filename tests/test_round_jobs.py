@@ -3,12 +3,11 @@ step of a round is one Spark action or pure driver work, and every plan is
 assembled from expressions the Crawler built once (crawler.py module
 docstring), so a change that re-adds a per-round job or rebuilds an
 expression tree every round fails here loudly. Also pinned: the
-observation that keeps the ins write's plan layered, the robots path parsed
-below the verdict's lambda, the counters observed on the ins write stay
-exact under the bloom's two-branch union, the first reads of the Warehouse's
-tables return the columns their writers emit, and the dequeue_order lineage
-and the frontier read back across a warehouse written before their `host`
-and `saved_round` columns existed."""
+observation that keeps the ins write's plan layered, the counters observed
+on the ins write stay exact under the bloom's two-branch union, the first
+reads of the Warehouse's tables return the columns their writers emit, and
+the dequeue_order lineage and the frontier read back across a warehouse
+written before their `host` and `saved_round` columns existed."""
 
 from __future__ import annotations
 
@@ -164,31 +163,6 @@ def test_ins_write_observation_fences_the_url_kernel(robots_crawls):
         assert any(t.startswith("Window ") for t in above), tree
         assert any(t.startswith("Filter ") and "StartsWith(url" in t for t in above), tree
         assert not any(fenced_off(t) for t, anc in nodes if i in anc), tree
-
-
-def _lambdas(tree: str) -> list[str]:
-    """The ``lambdafunction(...)`` expressions of a plan's treeString."""
-    found = []
-    for m in re.finditer(r"lambdafunction\(", tree):
-        depth = 0
-        for i in range(m.end() - 1, len(tree)):
-            depth += {"(": 1, ")": -1}.get(tree[i], 0)
-            if depth == 0:
-                break
-        found.append(tree[m.start():i + 1])
-    return found
-
-
-def test_robots_path_parsed_outside_the_verdict_lambda(robots_crawls):
-    """The robots verdict's ``exists`` runs its lambda once per disallowed
-    prefix of the row's host, so the candidate's path is parsed in a layer
-    below it, once per row: no URL parse inside any lambda of the ins plan."""
-    _, counted, _ = robots_crawls
-    tree = counted.ins._jdf.queryExecution().optimizedPlan().toString()
-    lambdas = _lambdas(tree)
-    assert any("StartsWith" in f for f in lambdas), tree
-    for f in lambdas:
-        assert "ParseUrl" not in f, f[:300]
 
 
 def test_canonical_round_job_count(spark, tmp_path):
