@@ -11,28 +11,33 @@ dataflow as declarative plans over the whole batch:
     → mark PROCESSED/FAILED (C3) → append pages (S7/S8; J5 off the row)
     → append metrics (A3/S10) → commit round (lineage)
 
-Every k-bounded step is either one Spark action or pure driver work. The
-dequeued batch (≤ k rows by construction) is collected ONCE as Arrow; the
-driver derives its count, the D2 lineage (written with pyarrow), the
-planner's decrements and the planned-count drift check from it, and the
-downstream plans read it back as a local relation. The round's other two
-k-row tails are driver work too: the C3 update delta (the dequeued batch
-matched against one pyarrow read of the fetch delta) and the S11 errors
-delta (that delta's failed rows) are pyarrow writes. The counters ride
-writes that run anyway as observed metrics: the A3 fetch counters on the
-fetch write, the F2/robots counters on the ins write, the J5 new-vs-update
-split on the pages write (the dequeued row's ``saved_round``, an exact
-per-URL record like the reference's url_index, says whether the page was
-saved before). The URL-seen bloom and the planner state grow on the driver
-from one Arrow read of the round's inserts. The Warehouse pins each table's
-read schema, so no per-read schema-inference job runs either.
+Every k-bounded step is either one Spark action or pure driver work, and
+the k-bounded hand-offs between them are Arrow tables and files, never
+local relations. The dequeued batch (≤ k rows by construction) is
+collected ONCE as Arrow; the driver derives its count, the D2 lineage
+(written with pyarrow), the planner's decrements and the planned-count
+drift check from it, and writes it once with pyarrow for the fetch plan to
+scan. The link ingest (frontier.UrlKernel.ingest) collects the round's
+allowed candidate links once as Arrow, dedupes and bloom-probes them on
+the driver, verifies the positives with one semi-join and writes the ins
+delta with pyarrow; the URL-seen bloom and the planner state grow from the
+same table. The round's other two k-row tails are driver work too: the C3
+update delta (the dequeued batch matched against one pyarrow read of the
+fetch delta) and the S11 errors delta (that delta's failed rows) are
+pyarrow writes. The counters ride actions that run anyway as observed
+metrics: the A3 fetch counters on the fetch write, the F2/robots counters
+on the ingest's collect, the J5 new-vs-update split on the pages write (the
+dequeued row's ``saved_round``, an exact per-URL record like the
+reference's url_index, says whether the page was saved before). The
+Warehouse pins each table's read schema, so no per-read schema-inference
+job runs either.
 
 Plans are built once per Crawler: every expression that depends on the
 config alone — the URL kernel, the T4 re-tag, the F2 and robots verdicts,
 the fetch artifact's columns, the counters — is built on first use and
 reused by every round (a Column is an unresolved expression), so a round
-adds only its literals (round number, depth, the bloom version's UDF) and
-its joins. Each layered kernel is one select per layer (urlkit.py).
+adds only its literals (the round number) and its joins. Each layered
+kernel is one select per layer (urlkit.py).
 
 Exactly-once rounds: all table writes land BEFORE the round's commit marker
 (storage.py); a crash mid-round leaves the previous round's state intact —
@@ -62,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import frontier as FR
-from .bloom import PartitionedBloom, _h1h2
+from .bloom import PartitionedBloom
 from .config import CrawlConfig
 from .extract import BASE_PART_COLS, base_parts_layers, extract_links_with_base, order_spans
 from .fetch import error_kinds, fetch_simulate
@@ -109,6 +114,7 @@ class Crawler:
         # one lineage schema across rounds: deltas written before `host`
         # existed read it back as NULL
         self.wh.pin_schema("dequeue_order", "delta", FR.DEQUEUE_ORDER_SCHEMA)
+        self.wh.pin_schema("dequeued", "delta", FR.DEQUEUE_SCHEMA)
         self.history: list[RoundStats] = []
         self.robots = robots if cfg.politeness.respect_robots else None
         self.use_bloom = use_bloom
@@ -122,7 +128,7 @@ class Crawler:
         self._round: int | None = None
         # the cfg-pure expressions every round's plans share (UrlKernel and
         # the cached properties below), built on first use
-        self._urls = FR.UrlKernel(cfg)
+        self._urls = FR.UrlKernel(cfg, self.robots)
         # Dequeue planning (planner.py) for every round, every k and every
         # budget form: per-round planning is k-bounded driver algebra after
         # one seed pass, with no per-round eligible-set scan (the dominant
@@ -169,18 +175,16 @@ class Crawler:
                 # planner state may include a rolled-back round's deltas:
                 # the next round seeds afresh from the committed frontier
                 self._planner = IncrementalPlanner(self.cfg, self._planner.budgets)
-                self._fr_count = self.wh.read_frontier(last).count()
+                self._fr_count = self.wh.frontier_size(last)
                 self._round = last
                 return last
             seeds_df = self.spark.createDataFrame(
                 [(s,) for s in self.cfg.seeds], T.StructType([T.StructField("url", T.StringType())])
             )
-            cands = self._urls.candidates(seeds_df, seeds=True)
             stats = RoundStats(0)
-            non_http = cands.where(~F.col("url").startswith("http")).count()
-            stats.add("IGNORED_URLS", non_http)
-            fr = self._urls.new_rows(FR.empty_frontier(self.spark), cands, 0, depth=0)
-            self._fr_count = self.wh.write_frontier_snapshot(0, fr, self.cfg.partitions)
+            rows, counts = self._urls.ingest(self.wh, seeds_df, 0, None, seeds=True)
+            self._fr_count = rows.num_rows
+            stats.add("IGNORED_URLS", counts["n_ignored"])
             stats.add("DISCOVERED_URLS", self._fr_count)
             self._append_metrics(0, stats)
             self.wh.commit_round(0, {"dequeued": 0, "seeded": len(self.cfg.seeds)})
@@ -221,21 +225,6 @@ class Crawler:
         }
         return [F.count_if(cond).alias(name) for name, cond in named.items()]
 
-    @cached_property
-    def _verdict_plan(self):
-        """The link ingest's verdicts: (the F2 flag select, the J6-NR robots
-        transform or None, the F2/robots counters, the keep predicate)."""
-        ok = F.col("_ok")
-        counters = [F.count(F.lit(1)).alias("n_total"), F.count_if(ok).alias("n_ok")]
-        keep, robots = ok, None
-        if self.robots is not None:
-            from .robots import robots_verdict
-
-            blocked, robots = F.col("_robots_blocked"), robots_verdict(self.robots)
-            counters.append(F.count_if(ok & blocked).alias("n_blocked"))
-            keep = ok & ~blocked
-        return [F.col("*"), self._urls.allowed.alias("_ok")], robots, counters, keep
-
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> RoundStats:
         last = self.wh.last_committed_round()
@@ -265,8 +254,7 @@ class Crawler:
 
         # The dequeued batch is ≤ k rows by construction: ONE Arrow collect,
         # then driver work — the count, the D2 lineage, the planner's
-        # decrements — and every downstream plan reads it back as a local
-        # relation (no executor cache, no per-step jobs over the batch).
+        # decrements — and the fetch plan reads it back as a file.
         with self._phase("dequeue"):
             batch = dq_plan.toArrow()
         stats.dequeued = batch.num_rows
@@ -280,10 +268,12 @@ class Crawler:
             "dequeue_order", round_no, FR.dequeue_order_table(batch, round_no)
         )
         self._planner.on_dequeued(batch)
-        # one partition: the Repartition node also keeps Catalyst from folding
-        # the re-tag projection into the local relation, which it would
-        # evaluate row by row on the driver, interpreted (~0.5 s per 10k rows)
-        dq = self.spark.createDataFrame(batch).coalesce(1)
+        # written once with pyarrow, read back as a pinned-schema file scan
+        # (dropped at commit, like the fetch delta): a scan has no rows for
+        # Catalyst to fold the re-tag into, as it would into a k-row local
+        # relation, and optimizes in a fraction of the time
+        self.wh.append_delta_rows("dequeued", round_no, batch)
+        dq = self.wh.read_delta("dequeued", round_no)
 
         # T4 re-tag + re-filter; disallowed rows leak as PROCESSING (reference
         # marks taken before filtering, URLStore.java:191-206 + DumbCrawler.java:275-279).
@@ -306,7 +296,8 @@ class Crawler:
             stats.add(name, v)
         fetched = self.wh.read_delta("fetch", round_no)
 
-        self._ingest_links(round_no, fetched.where(F.col("ok")), stats)
+        with self._phase("ingest"):
+            self._ingest_links(round_no, fetched, stats)
         # The round's two k-row tails are driver work over the fetch delta
         # just written, read with pyarrow like the dequeued batch is held: the
         # S11 errors sink (the failed rows, spans included) and the C3 update
@@ -341,64 +332,37 @@ class Crawler:
             # only within its round — spans persist in pages/errors; without
             # this the warehouse grows O(k × page bytes) every round
             self.wh.drop_delta("fetch", round_no)
+            self.wh.drop_delta("dequeued", round_no)
         self._round = round_no
         return stats
 
-    def _ingest_links(self, round_no: int, ok_rows: DataFrame, stats: RoundStats) -> None:
-        """Link ingest (§3.2): explode → canonicalize/tag/score → F2 (+ J6-NR
-        robots verdict) → J3 anti-join → ins delta. The F2/robots counters
-        ride the ins write as observed metrics, so the candidate pipeline is
-        evaluated once per round with no executor cache. The round's inserts
-        are then read once, as Arrow, to grow the URL-seen bloom and the
-        planner state on the driver."""
-        cfg = self.cfg
-        flag, robots, counters, keep = self._verdict_plan
-        links = ok_rows.select(F.explode_outer("links").alias("url")).where(F.col("url").isNotNull())
-        # the URL kernel over the links: the heaviest codegen class of a round
-        flagged = self._urls.candidates(links).select(*flag)
-        if robots is not None:
-            flagged = robots(flagged)
-        obs = Observation()
-        allowed_cands = (
-            flagged.observe(obs, *counters).where(keep).drop("_ok", "_robots_blocked")
-        )
-
-        seen_ids = self.wh.read_frontier_seen_ids(round_no - 1)
+    def _ingest_links(self, round_no: int, fetched: DataFrame, stats: RoundStats) -> None:
+        """Link ingest (§3.2): the ok rows' links, exploded, through the one
+        insert path (frontier.UrlKernel.ingest), which observes the F2/robots
+        counters on its fence and returns the inserted rows; the URL-seen
+        bloom and the planner state grow from them on the driver."""
+        links = fetched.where(F.col("ok")).select(F.explode_outer("links").alias("url"))
+        links = links.where(F.col("url").isNotNull())
         if self.use_bloom and self._bloom is None:
             # a distributed build, presized so the driver-side growth
             # (add_local) keeps its (m, k) until a part outgrows it
-            presize = max(BLOOM_PRESIZE_FLOOR, (self._fr_count // cfg.partitions + 1) * 8)
+            presize = max(BLOOM_PRESIZE_FLOOR, (self._fr_count // self.cfg.partitions + 1) * 8)
+            seen_ids = self.wh.read_frontier_seen_ids(round_no - 1)
             self._bloom = PartitionedBloom.build(seen_ids, expected_per_part=presize)
-        new_rows = self._urls.new_rows(
-            seen_ids, allowed_cands, round_no, depth=round_no, bloom=self._bloom
-        )
-        with self._phase("ins_write"):
-            # returns the footer row count — no read-back count job; a
-            # zero-insert round leaves no ins- dir at all
-            inserted_n = self.wh.write_frontier_inserts(round_no, new_rows)
-        vals = obs.get
+        ins, vals = self._urls.ingest(self.wh, links, round_no, round_no - 1, bloom=self._bloom)
         stats.add("ALLOWED_LINKS", vals["n_ok"])
         stats.add("IGNORED_LINKS", vals["n_total"] - vals["n_ok"])
         if self.robots is not None:
             stats.add("ROBOTS_BLOCKED_LINKS", vals["n_blocked"])
-        stats.add("DISCOVERED_URLS", inserted_n)
-        if inserted_n:
-            with self._phase("ins_fold"):
-                ins = self.wh.read_frontier_inserts(round_no).select(*self._fold_cols).toArrow()
+        stats.add("DISCOVERED_URLS", ins.num_rows)
+        if ins.num_rows:
             self._planner.on_inserts(ins)
             if self.use_bloom:
                 self._bloom = self._bloom.add_local(
-                    ins["part"].to_numpy(), ins["h1"].to_numpy(), ins["h2"].to_numpy()
+                    *(ins[c].to_numpy() for c in ("part", "h1", "h2"))
                 )
                 if self._bloom.overfull:  # rebuilt next round, presized anew
                     self._bloom = None
-
-    @cached_property
-    def _fold_cols(self) -> list[Column]:
-        """The insert columns the planner and the URL-seen bloom grow from."""
-        h1, h2 = _h1h2(F.col("url_id"))
-        cols = ("host", "attempt", "status", "part")
-        return [*map(F.col, cols), h1.alias("h1"), h2.alias("h2")]
 
     @cached_property
     def _pages_plan(self) -> tuple[Column, Column, list[Column], Column]:

@@ -6,7 +6,8 @@ The reference realizes all three roles in one SQLite table ``links``
 partition column ``part`` (salted murmur3 host bucket — urlkit.part_of), and
 every mutation is a declarative plan:
 
-- insert        = left-anti join → ins- delta     (URLStore.java:127-147)
+- insert        = one Arrow collect of the candidates, driver-side dedupe
+                  + seen-check → ins- delta       (URLStore.java:127-147)
 - dequeue       = window rank / ordered limit     (URLStore.java:185-208)
 - state change  = k-row update delta, composed on read by a left join +
                   conditional select              (URLStore.java:159-183)
@@ -21,9 +22,12 @@ Scale notes (10^10 rows, 1000 executors):
   Iceberg table bucketed by ``part`` these shuffles become storage-partitioned
   joins (SPJ) / partition-local windows — no full-table shuffle. Locally,
   AQE handles sizing.
-- The anti-join (J3) is the hot spot: the bloom prefilter (bloom.py) prunes
-  candidate links that are definitely-unseen BEFORE the shuffle, so only
-  bloom-positives (≈ duplicates + fpr) reach the exact join.
+- The seen-check (J3) is the hot spot. A round's candidate links are
+  k-bounded (k × links per page), so the ingest collects them once and
+  dedupes and bloom-probes them on the driver (bloom.py); only the
+  bloom-positives (≈ duplicates + fpr) reach Spark, as a file of ids that
+  one broadcast left-semi join matches against the seen ids — the
+  frontier-sized side is scanned, never shuffled.
 - The dequeue top-K never sorts the whole frontier: the politeness cap ranks
   only the over-budget hosts' rows (a per-host window, partition-local after
   the part bucketing), and the top-K compiles to TakeOrderedAndProject
@@ -37,11 +41,12 @@ from functools import cached_property
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from .bloom import _h1h2
 from .config import CrawlConfig
 from .filters import can_attempt, is_http, is_url_allowed
 from .tagging import priority_for_tags, tag_urls, with_seed_tag
@@ -70,24 +75,28 @@ FRONTIER_SCHEMA = T.StructType([
 ])
 
 
-def empty_frontier(spark: SparkSession) -> DataFrame:
-    # no partitions: an empty list would be scanned by a task per slice
-    return spark.createDataFrame(spark.sparkContext.emptyRDD(), FRONTIER_SCHEMA)
+# the frontier as every writer writes it: all columns nullable, so pyarrow
+# concatenates Spark-written and pyarrow-written files
+FRONTIER_ARROW = to_arrow_schema(
+    T.StructType([T.StructField(f.name, f.dataType, True) for f in FRONTIER_SCHEMA])
+)
 
 
 class UrlKernel:
     """The URL kernel of one crawl config (§3.2): url → canonicalize (U9) →
     parts (U1) → tags (T1) → priority (T2, from expression tags only) →
     url_id (U2) → host/part, one narrow select per layer (urlkit.py) —
-    single stage, zero shuffle — plus the T4 re-tag, the F2 verdict and the
-    frontier-row insert. Every piece depends on ``cfg`` alone, so each is
-    built once, on first use, and every later plan reuses it: a Column is an
-    unresolved expression, and rebuilding these trees costs thousands of
-    py4j calls per round."""
+    single stage, zero shuffle — plus the T4 re-tag, the F2 (and J6-NR
+    robots) verdict and the frontier insert. Every piece depends on ``cfg``
+    and ``robots`` alone, so each is built once, on first use, and every
+    later plan reuses it: a Column is an unresolved expression, and
+    rebuilding these trees costs thousands of py4j calls per round."""
 
-    def __init__(self, cfg: CrawlConfig):
+    def __init__(self, cfg: CrawlConfig, robots: DataFrame | None = None):
         self.cfg = cfg
+        self.robots = robots
         self._layers: dict[bool, list[list[Column]]] = {}  # seeds → candidate layers
+        self._verdicts: dict[bool, tuple] = {}  # seeds → ingest verdict plan
 
     @cached_property
     def allowed(self) -> Column:
@@ -141,58 +150,113 @@ class UrlKernel:
         completed (DumbCrawler.java:275-279 + URLStore.java:191-206)."""
         return apply_layers(dequeued, self._retag_layers).where(self.allowed)
 
+    def _verdict_plan(self, seeds: bool) -> tuple:
+        """(the flag select, the J6-NR robots transform or None, the counters
+        observed on the fence, the keep predicate). Seeds bypass F2 and
+        robots (initialize() calls addTasks directly,
+        DumbCrawler.java:61-67,143-146): F1 alone keeps them, and the one
+        counter is the seeds it drops (IGNORED_URLS)."""
+        if seeds not in self._verdicts:
+            keep = ok = F.col("_ok")
+            robots = None
+            if seeds:
+                flag, counters = is_http(F.col("url")), [F.count_if(~ok).alias("n_ignored")]
+            else:
+                flag = self.allowed
+                counters = [F.count(F.lit(1)).alias("n_total"), F.count_if(ok).alias("n_ok")]
+            if self.robots is not None and not seeds:
+                from .robots import robots_verdict
+
+                blocked, robots = F.col("_robots_blocked"), robots_verdict(self.robots)
+                counters.append(F.count_if(ok & blocked).alias("n_blocked"))
+                keep = ok & ~blocked
+            self._verdicts[seeds] = [F.col("*"), flag.alias("_ok")], robots, counters, keep
+        return self._verdicts[seeds]
+
     @cached_property
-    def _insert_plan(self) -> tuple[Column, Column, Column, list[Column], list[Column]]:
-        """(F1 guard, D1 rank, its keep predicate, the insert columns before
-        and after the round literals)."""
-        w = Window.partitionBy("url_id").orderBy(F.desc("priority"), F.asc("url"))
-        null = F.lit(None)
-        head = [
-            *map(F.col, ("url_id", "url", "host", "tags")),
-            F.lit(QUEUED).cast("tinyint").alias("status"),
-            F.col("priority").cast("int"),
-            F.lit(0).alias("attempt"),
-        ]
-        tail = [
-            *(null.cast("int").alias(c) for c in ("taken_round", "completed_round", "saved_round")),
-            null.cast("string").alias("error"),
-            F.col("part"),
-        ]
-        rank = F.row_number().over(w).alias("_rn")
-        return is_http(F.col("url")), rank, F.col("_rn") == 1, head, tail
+    def _ingest_cols(self) -> list[Column]:
+        """The collected candidate columns: the insert's, plus the JVM-side
+        bloom keys h1/h2."""
+        h1, h2 = _h1h2(F.col("url_id"))
+        cols = ("url_id", "url", "host", "tags", "priority", "part")
+        return [*map(F.col, cols), h1.alias("h1"), h2.alias("h2")]
 
-    def new_rows(
-        self, seen_ids: DataFrame, candidates: DataFrame, round_no: int, depth: int, bloom=None
-    ) -> DataFrame:
-        """S4+J3, the one insert path (crawl rounds, seeds, streaming): the
-        not-yet-seen candidate rows in frontier schema — MERGE's WHEN NOT
-        MATCHED INSERT set. ``candidates`` are F2-filtered unless seeds; F1 is
-        re-applied (URLStore.java:102-111). ``seen_ids`` needs only url_id:
-        base∪inserts ids (read_frontier_seen_ids) or an empty frontier.
+    def ingest(
+        self, wh, urls: DataFrame, round_no: int, seen_round: int | None,
+        seeds: bool = False, bloom=None,
+    ) -> tuple[pa.Table, dict[str, int]]:
+        """S4+J1-J3, the one insert path (crawl rounds, seeds, the stream):
+        ``urls.url`` → URL kernel → F2 (+ robots) verdict, observed as
+        counters → the kept rows not yet seen, written as round
+        ``round_no``'s ``ins-`` delta (with no ``seen_round``, an empty
+        warehouse's first snapshot). Returns those rows (frontier columns +
+        bloom keys h1/h2) and the counters. The observation fences the
+        kernel off from the keep filter, whose constraints Catalyst would
+        otherwise spend seconds propagating through it (test_round_jobs).
+        The kept candidates — a round's are bounded by k × links per page,
+        and nothing caps links per page — are collected as Arrow in one
+        job; the J1+J2 dedupe and the bloom probe run on the driver, and
+        only the bloom's positives (all, without a bloom) are checked
+        against the seen ids (``Warehouse.seen_among``, one job). The bloom
+        has no false negatives, so the result is exact."""
+        flag, robots, counters, keep = self._verdict_plan(seeds)
+        flagged = self.candidates(urls, seeds).select(*flag)
+        if robots is not None:
+            flagged = robots(flagged)
+        obs = Observation()
+        cands = flagged.observe(obs, *counters).where(keep).select(*self._ingest_cols).toArrow()
+        counts = {name: int(v or 0) for name, v in obs.get.items()}
+        cands = dedupe_candidates(cands)
+        if seen_round is not None and cands.num_rows:
+            maybe = np.ones(cands.num_rows, dtype=bool) if bloom is None else bloom.probe(
+                *(cands[c].to_numpy() for c in ("part", "h1", "h2"))
+            )
+            if maybe.any():
+                seen = wh.seen_among(seen_round, round_no, cands["url_id"].filter(maybe))
+                cands = cands.filter(pc.invert(pc.is_in(cands["url_id"], value_set=seen)))
+        rows = insert_rows(cands, round_no)
+        wh.write_frontier_inserts(round_no, rows.select(FRONTIER_ARROW.names), seen_round is None)
+        return rows, counts
 
-        J1+J2 in-batch dedup by url_id first: the reference's "last wins"
-        toMap merge (URLStore.java:134) iterates a HashSet —
-        nondeterministic; per SURVEY.md §2.8-D1 the deterministic spec keeps
-        (max priority, then min url) per url_id. Window + rank=1, shuffle
-        keyed like every other frontier op."""
-        http, rank, first, head, tail = self._insert_plan
-        cands = candidates.where(http).select(F.col("*"), rank).where(first).drop("_rn")
-        if bloom is not None:
-            # J3-NR: bloom prefilter — definitely-unseen candidates skip the
-            # shuffle; only bloom-positives hit the exact anti-join (bloom.py)
-            from .bloom import prefiltered_new_rows
 
-            new_src = prefiltered_new_rows(cands, seen_ids, bloom)
-        else:
-            new_src = cands.join(seen_ids.select("url_id"), "url_id", "left_anti")
-        return new_src.select(
-            *head, F.lit(depth).alias("depth"), F.lit(round_no).alias("created_round"), *tail
-        )
+def dedupe_candidates(cands: pa.Table) -> pa.Table:
+    """J1+J2 in-batch dedup by url_id. The reference's "last wins" toMap
+    merge (URLStore.java:134) iterates a HashSet — nondeterministic; per
+    SURVEY.md §2.8-D1 the deterministic spec keeps (max priority, then min
+    url) per url_id. One driver sort — Arrow compares strings bytewise, as
+    Spark does — then the first row of each url_id run."""
+    if cands.num_rows < 2:
+        return cands
+    cands = cands.take(pc.sort_indices(cands, sort_keys=[
+        ("url_id", "ascending"), ("priority", "descending"), ("url", "ascending"),
+    ]))
+    ids = cands["url_id"]
+    first = np.ones(cands.num_rows, dtype=bool)
+    first[1:] = pc.not_equal(ids[1:], ids[:-1]).to_numpy()
+    return cands.filter(first)
+
+
+def insert_rows(cands: pa.Table, round_no: int) -> pa.Table:
+    """New frontier rows — QUEUED, attempt 0, created at depth ``round_no``
+    — from deduped candidates, in :data:`FRONTIER_ARROW` with the
+    candidates' h1/h2 after it."""
+    n = cands.num_rows
+    fixed = {"status": QUEUED, "attempt": 0, "depth": round_no, "created_round": round_no}
+    cols = [
+        cands[f.name] if f.name in cands.column_names
+        else pa.array(np.full(n, fixed[f.name]), f.type) if f.name in fixed
+        else pa.nulls(n, f.type)
+        for f in FRONTIER_ARROW
+    ]
+    rows = pa.Table.from_arrays(cols, names=FRONTIER_ARROW.names).cast(FRONTIER_ARROW)
+    return rows.append_column("h1", cands["h1"]).append_column("h2", cands["h2"])
 
 
 DEQUEUE_COLS = [
     "url_id", "url", "host", "tags", "priority", "attempt", "depth", "saved_round", "part",
 ]
+# the read schema of the dequeued batch's round-scoped file (the fetch input)
+DEQUEUE_SCHEMA = T.StructType([FRONTIER_SCHEMA[c] for c in DEQUEUE_COLS])
 
 
 def eligible_raw(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:

@@ -10,7 +10,8 @@ instead of re-derived from a full scan:
   integer algebra:
     total(R+1) = total(R) − rows of round R's dequeue + rows of its ins-delta.
   The dequeued batch (≤ k rows) is already collected by the crawler, and
-  the ins-delta is read once as Arrow — never the 10^10-row frontier.
+  the ins-delta's rows are the link ingest's Arrow table — never the
+  10^10-row frontier.
   Status flips are TERMINAL
   (QUEUED → PROCESSING-leak | PROCESSED | FAILED, never back — SURVEY.md
   §2.8-C3), so dequeued rows leave the eligible set permanently and the
@@ -155,9 +156,9 @@ class IncrementalPlanner:
 
     def on_inserts(self, ins: pa.Table) -> None:
         """Add one round's ins-delta (host, attempt, status columns as Arrow;
-        k-bounded rows the crawler reads once for the bloom too). Inserted
-        rows are QUEUED with attempt 0 by construction
-        (frontier.UrlKernel.new_rows); the eligibility filter is still applied
+        the k-bounded rows the link ingest returns, which grow the bloom
+        too). Inserted rows are QUEUED with attempt 0 by construction
+        (frontier.insert_rows); the eligibility filter is still applied
         verbatim for safety."""
         el = ins.filter(pc.and_(
             pc.equal(ins["status"], FR.QUEUED),

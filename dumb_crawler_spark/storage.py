@@ -32,6 +32,7 @@ same contract on bare Parquet:
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import uuid
 from functools import cached_property
@@ -39,7 +40,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 COMPACT_EVERY = 16  # the crawl's and the stream's MoR compaction cadence, in rounds
 
@@ -102,6 +103,7 @@ class Warehouse:
         for kind in ("snap", "ins"):
             self.pin_schema("frontier", kind, FR.FRONTIER_SCHEMA)
         self.pin_schema("frontier", "upd", FR.UPDATE_DELTA_SCHEMA)
+        self.pin_schema("seen_probe", "delta", StructType([StructField("url_id", StringType())]))
 
     def pin_schema(self, table: str, kind: str, schema: StructType) -> None:
         """Declare the read schema of ``table``'s ``kind`` dirs (snap, ins,
@@ -143,8 +145,8 @@ class Warehouse:
         return n
 
     # -- full-state tables (frontier) -----------------------------------------
-    def write_snapshot(self, table: str, round_no: int, df: DataFrame, keep_empty: bool = True) -> int:
-        return self._atomic_write(df, self.root / table / f"snap-{round_no:08d}", keep_empty)
+    def write_snapshot(self, table: str, round_no: int, df: DataFrame) -> int:
+        return self._atomic_write(df, self.root / table / f"snap-{round_no:08d}")
 
     def read_snapshot(self, table: str, round_no: int) -> DataFrame:
         return self._read(table, "snap", str(self.root / table / f"snap-{round_no:08d}"))
@@ -203,12 +205,17 @@ class Warehouse:
 
     # -- round lineage / crash consistency -------------------------------------
     def commit_round(self, round_no: int, info: dict) -> None:
-        """Marker write = the commit point (single driver ⇒ single committer,
-        like the reference's single SQLite writer; no conflict handling)."""
+        """Marker write = the commit point. The marker is created
+        exclusively (a hard link of a complete temp file), so of two writers
+        committing the same round (a crawl and a stream, say) the second
+        raises FileExistsError instead of overwriting the first's commit."""
         marker = self.root / "_commits" / f"_round-{round_no:08d}.json"
-        tmp = marker.with_suffix(".tmp")
+        tmp = marker.with_name(f".tmp-{uuid.uuid4().hex}")
         tmp.write_text(json.dumps({"round": round_no, **info}, default=str))
-        tmp.rename(marker)
+        try:
+            os.link(tmp, marker)
+        finally:
+            tmp.unlink()
 
     def committed_rounds(self) -> list[int]:
         return sorted(
@@ -243,50 +250,60 @@ class Warehouse:
         return (self.root / "_TERMINATED.json").exists()
 
     # -- frontier merge-on-read (frontier.py compose/queued docs) ---------------
-    def _frontier_pieces(self, round_no: int):
-        """(base snapshot DF, inserts DF|None, updates DF|None) as of round_no:
-        the latest snap ≤ round_no plus the ins-/upd- delta dirs in
-        (snap_round, round_no]. Dir listing only — no data read."""
+    def _frontier_dirs(self, round_no: int) -> tuple[Path, list[Path], list[Path]]:
+        """(base snapshot dir, ins- dirs, upd- dirs) as of round_no: the latest
+        snap ≤ round_no plus the delta dirs in (snap_round, round_no]."""
         tdir = self.root / "frontier"
-        snaps = sorted(
-            int(d.name.split("-")[1])
-            for d in tdir.glob("snap-*")
-            if int(d.name.split("-")[1]) <= round_no
-        )
+        rnd = lambda d: int(d.name.split("-")[1])  # noqa: E731
+        snaps = sorted((d for d in tdir.glob("snap-*") if rnd(d) <= round_no), key=rnd)
         if not snaps:
             raise FileNotFoundError(f"no frontier snapshot ≤ round {round_no}")
-        s = snaps[-1]
-        base = self.read_snapshot("frontier", s)
+        s = rnd(snaps[-1])
 
-        def deltas(prefix: str) -> DataFrame | None:
-            dirs = sorted(
-                str(d) for d in tdir.glob(f"{prefix}-*")
-                if s < int(d.name.split("-")[1]) <= round_no
-            )
-            return self._read("frontier", prefix, *dirs) if dirs else None
+        def deltas(prefix: str) -> list[Path]:
+            return sorted((d for d in tdir.glob(f"{prefix}-*") if s < rnd(d) <= round_no), key=rnd)
 
-        return base, deltas("ins"), deltas("upd")
+        return snaps[-1], deltas("ins"), deltas("upd")
+
+    def _frontier_pieces(self, round_no: int):
+        """(base snapshot DF, inserts DF|None, updates DF|None) as of round_no.
+        Dir listing only — no data read."""
+        base, ins, upd = self._frontier_dirs(round_no)
+
+        def read(kind: str, dirs: list[Path]) -> DataFrame | None:
+            return self._read("frontier", kind, *map(str, dirs)) if dirs else None
+
+        return read("snap", [base]), read("ins", ins), read("upd", upd)
+
+    def frontier_size(self, round_no: int) -> int:
+        """Rows of the frontier as of round_no, from parquet footers (no Spark
+        job): the snapshot's plus its ins- deltas'. Exact, because the
+        compose joins at most one upd row to each url_id
+        (frontier.compose_frontier), which never changes the row count."""
+        base, ins, _ = self._frontier_dirs(round_no)
+        return sum(_footer_rows(d) for d in (base, *ins))
 
     @cached_property
     def _frontier_nulls(self) -> DataFrame:
         """No rows in no partitions, every frontier column nullable: unioned
-        into every frontier write (no task reads it), so inserts and
-        compactions write the one schema a pyarrow concat needs."""
+        into every Spark-written snapshot (no task reads it), so they write
+        frontier.FRONTIER_ARROW, the one schema a pyarrow concat needs."""
         from . import frontier as FR
 
         fields = [StructField(f.name, f.dataType, True) for f in FR.FRONTIER_SCHEMA]
         return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), StructType(fields))
 
-    def write_frontier_snapshot(self, round_no: int, fr: DataFrame, partitions: int, keep_empty: bool = True) -> int:
-        """The one frontier snapshot writer (seeds, compaction, the refetch
-        reset, a stream's first batch), with explicit layout: repartition by
-        `part` (the salted host bucket — Iceberg bucket-spec analog) and sort
-        within partitions by (status, priority DESC) — the `WRITE ORDERED BY`
-        analog, so parquet row-group min/max stats let the dequeue's
-        status==0 pushdown skip completed row groups entirely."""
+    def write_frontier_snapshot(self, round_no: int, fr: DataFrame, partitions: int) -> int:
+        """The Spark frontier snapshot writer (compaction, the refetch reset),
+        with explicit layout: repartition by `part` (the salted host bucket —
+        Iceberg bucket-spec analog) and sort within partitions by (status,
+        priority DESC) — the `WRITE ORDERED BY` analog, so parquet row-group
+        min/max stats let the dequeue's status==0 pushdown skip completed row
+        groups entirely. A warehouse's first snapshot is written with
+        pyarrow (write_frontier_inserts)."""
         out = fr.unionByName(self._frontier_nulls).repartition(partitions, "part")
         out = out.sortWithinPartitions("status", F.desc("priority"))
-        return self.write_snapshot("frontier", round_no, out, keep_empty=keep_empty)
+        return self.write_snapshot("frontier", round_no, out)
 
     def compact_frontier(self, round_no: int, partitions: int, every: int = COMPACT_EVERY) -> None:
         """MoR compaction (Iceberg rewrite_data_files): every ``every``-th round's
@@ -299,16 +316,18 @@ class Warehouse:
         pyarrow-written file."""
         return _write_rows(self.root / "frontier" / f"upd-{round_no:08d}", arrow_table)
 
-    def write_frontier_inserts(self, round_no: int, df: DataFrame) -> int:
-        """Zero-insert rounds leave no ins- dir at all (keep_empty=False):
-        _frontier_pieces globs only existing dirs, so readers never depend on
-        Spark writing schema-only files for empty results."""
-        dest = self.root / "frontier" / f"ins-{round_no:08d}"
-        return self._atomic_write(df.unionByName(self._frontier_nulls), dest, keep_empty=False)
-
-    def read_frontier_inserts(self, round_no: int) -> DataFrame | None:
-        d = self.root / "frontier" / f"ins-{round_no:08d}"
-        return self._read("frontier", "ins", str(d)) if d.exists() else None
+    def write_frontier_inserts(self, round_no: int, rows, snapshot: bool = False) -> int:
+        """A round's new frontier rows (frontier.UrlKernel.ingest), one
+        pyarrow-written file: its ins- delta, or with ``snapshot`` an empty
+        warehouse's first snap-. Zero rows leave no dir (_frontier_dirs
+        globs only existing ones) but in round 0: the seed snapshot is the
+        base every later round reads."""
+        dest = self.root / "frontier" / f"{'snap' if snapshot else 'ins'}-{round_no:08d}"
+        if rows.num_rows == 0 and round_no:
+            if dest.exists():
+                shutil.rmtree(dest)
+            return 0
+        return _write_rows(dest, rows)
 
     # -- convenience -----------------------------------------------------------
     def read_frontier(self, round_no: int | None = None) -> DataFrame:
@@ -330,9 +349,24 @@ class Warehouse:
         return FR.queued_view(*self._frontier_pieces(rnd))
 
     def read_frontier_seen_ids(self, round_no: int) -> DataFrame:
-        """The exact URL-seen set (J3 probe side): url_id column of
-        base ∪ inserts — column-pruned scans, no update join needed (updates
-        never add ids)."""
+        """The exact URL-seen set: url_id (and part) of base ∪ inserts —
+        column-pruned scans, no update join needed (updates never add ids)."""
         base, ins, _ = self._frontier_pieces(round_no)
         ids = base.select("url_id", "part")
         return ids if ins is None else ids.unionByName(ins.select("url_id", "part"))
+
+    def seen_among(self, seen_round: int, round_no: int, ids) -> "pa.Array":
+        """J3: which of ``ids`` (pyarrow) the URL-seen set as of
+        ``seen_round`` holds — one broadcast left-semi join of the seen ids
+        against the ids, shipped as round ``round_no``'s ``seen_probe`` file
+        (a scan, not a local relation), dropped after the collect."""
+        import pyarrow as pa
+
+        self.append_delta_rows("seen_probe", round_no, pa.table({"url_id": ids}))
+        try:
+            probe = F.broadcast(self.read_delta("seen_probe", round_no))
+            seen = self.read_frontier_seen_ids(seen_round).select("url_id")
+            hits = seen.join(probe, "url_id", "left_semi").toArrow()
+        finally:
+            self.drop_delta("seen_probe", round_no)
+        return hits["url_id"].combine_chunks()

@@ -10,7 +10,7 @@ needs, built on the same operators:
   tagged → scored → filtered → inserted on the crawl's path, each
   micro-batch that adds rows as the next round's ``ins-`` delta
   (``foreachBatch``). Effective exactly-once: the checkpoint dedups file
-  replay, and a replayed batch inserts nothing (url_id anti-join).
+  replay, and a replayed batch inserts nothing (the url_id seen-check).
 - :func:`windowed_event_counts` — watermarked tumbling-window counters, the
   streaming analog of the metrics table (late rows beyond the watermark are
   dropped rather than corrupting closed windows).
@@ -33,20 +33,14 @@ from .storage import Warehouse
 
 def _merge_urls(wh: Warehouse, kernel: FR.UrlKernel, urls: DataFrame, batch_id: int) -> None:
     """Insert one micro-batch's F2-allowed urls as the next round, on the
-    crawl's path (kernel, seen-set anti-join, ``ins-`` delta; an empty
-    warehouse's seed snapshot). Only a round that inserted rows commits."""
+    crawl's path (frontier.UrlKernel.ingest: the fenced kernel, the
+    seen-check, an ``ins-`` delta; an empty warehouse's first snapshot).
+    Only a round that inserted rows commits."""
     last = wh.last_committed_round()
     rnd = (last or 0) + 1
-    cands = kernel.candidates(urls).where(kernel.allowed)
-    seen = FR.empty_frontier(wh.spark) if last is None else wh.read_frontier_seen_ids(last)
-    new = kernel.new_rows(seen, cands, rnd, depth=rnd)
-    parts = kernel.cfg.partitions
-    if last is None:
-        n = wh.write_frontier_snapshot(rnd, new, parts, keep_empty=False)
-    else:
-        n = wh.write_frontier_inserts(rnd, new)
-    if n:
-        wh.compact_frontier(rnd, parts)
+    rows, _ = kernel.ingest(wh, urls, rnd, last)
+    if rows.num_rows:
+        wh.compact_frontier(rnd, kernel.cfg.partitions)
         wh.commit_round(rnd, {"stream_batch": batch_id})
 
 

@@ -13,6 +13,7 @@ from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import CrawlConfig, Politeness
 from dumb_crawler_spark.corpus import canonical_config
 from dumb_crawler_spark.filters import should_store
+from dumb_crawler_spark.storage import Warehouse
 
 
 def _mk_frontier(spark, rows):
@@ -25,25 +26,32 @@ def _mk_frontier(spark, rows):
     return spark.createDataFrame(data, FR.FRONTIER_SCHEMA)
 
 
-def test_merge_antijoin_and_batch_dedup(spark):
-    cfg = canonical_config()
-    fr = _mk_frontier(spark, [("a", "http://site.example.com/a", "site.example.com", 5, 0, 0)])
-    cands = spark.createDataFrame(
-        [
-            ("a", "http://site.example.com/a", "site.example.com", ["t"], 9, 0),   # seen → skipped
-            ("b", "http://site.example.com/b", "site.example.com", ["t"], 1, 0),
-            ("b", "http://site.example.com/b2", "site.example.com", ["t"], 7, 0),  # D1: max prio wins
-            ("c", "http://x.com/c1", "x.com", ["t"], 3, 0),
-            ("c", "http://x.com/c0", "x.com", ["t"], 3, 0),                        # D1 tie: min url wins
-            ("f", "ftp://x.com/f", "x.com", ["t"], 3, 0),                          # F1 drop
-        ],
-        "url_id string, url string, host string, tags array<string>, priority int, part int",
+def test_merge_antijoin_and_batch_dedup(spark, tmp_path):
+    # url_id = the path's letter; "top" scores /b2 above the other URLs
+    cfg = canonical_config(
+        id_extractor_pattern=r"https?://[^/]+/(?<id>[a-z])[0-9]*",
+        tagger={"any": r"matches(host, '.*')", "top": r"matches(path, '/b2')"},
+        priorities={"any": 3, "top": 7}, whitelist=("any",), blacklist=(),
     )
+    kernel, wh = FR.UrlKernel(cfg), Warehouse(spark, tmp_path / "wh")
+    urls = lambda us: spark.createDataFrame([(u,) for u in us], "url string")  # noqa: E731
+    kernel.ingest(wh, urls(["http://site.example.com/a"]), 1, None, seeds=True)
+    wh.commit_round(1, {})
+    before = wh.read_frontier(1).collect()
+    ins, counts = kernel.ingest(wh, urls([
+        "http://site.example.com/a",    # seen → skipped
+        "http://site.example.com/b",
+        "http://site.example.com/b2",   # D1: max prio wins
+        "http://x.com/c1",
+        "http://x.com/c0",              # D1 tie: min url wins
+        "ftp://x.com/f",                # F1 drop
+    ]), round_no=2, seen_round=1)
+    assert counts == {"n_total": 6, "n_ok": 5}
+    assert sorted(ins["url_id"].to_pylist()) == ["b", "c"]
     # the frontier as read after the round's ins delta (base ∪ inserts)
-    ins = FR.UrlKernel(cfg).new_rows(fr, cands, round_no=2, depth=2)
-    rows = {r["url_id"]: r for r in FR.compose_frontier(fr, ins, None).collect()}
+    rows = {r["url_id"]: r for r in wh.read_frontier(2).collect()}
     assert set(rows) == {"a", "b", "c"}
-    assert rows["a"]["priority"] == 5  # untouched
+    assert rows["a"] == before[0]  # untouched
     assert rows["b"]["url"] == "http://site.example.com/b2" and rows["b"]["priority"] == 7
     assert rows["c"]["url"] == "http://x.com/c0"
     assert rows["b"]["created_round"] == 2 and rows["b"]["depth"] == 2

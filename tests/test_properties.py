@@ -17,6 +17,7 @@ from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark import oracle as O
 from dumb_crawler_spark import urlkit as U
 from dumb_crawler_spark.config import CrawlConfig, Politeness
+from dumb_crawler_spark.storage import Warehouse
 
 # -- URL strategy: components, assembled ---------------------------------------
 _hostpart = st.text(alphabet=string.ascii_lowercase + string.digits, min_size=1, max_size=8)
@@ -83,19 +84,21 @@ def test_canonicalize_engine_matches_oracle_on_random_batch(spark):
     assert got == exp
 
 
-def test_merge_idempotent(spark):
+def test_merge_idempotent(spark, tmp_path):
     """Re-inserting the same candidate set changes nothing (J3 exactness —
     MERGE WHEN NOT MATCHED semantics): its second ins delta is empty."""
-    cfg = CrawlConfig()
+    cfg = CrawlConfig(allow_by_default=True)
     urls = spark.createDataFrame([(u,) for u in _random_urls(200, seed=5)], "url string")
-    kernel = FR.UrlKernel(cfg)
-    cands = kernel.candidates(urls)
-    fr1 = kernel.new_rows(FR.empty_frontier(spark), cands, 1, depth=1)
-    n1 = fr1.count()
-    fr2 = FR.compose_frontier(fr1, kernel.new_rows(fr1, cands, 2, depth=2), None)
-    assert fr2.count() == n1
+    kernel, wh = FR.UrlKernel(cfg), Warehouse(spark, tmp_path / "wh")
+    fr1, _ = kernel.ingest(wh, urls, 1, None)
+    wh.commit_round(1, {})
+    n1 = fr1.num_rows
+    assert n1 and wh.read_frontier(1).count() == n1
+    fr2, _ = kernel.ingest(wh, urls, 2, 1)
+    assert fr2.num_rows == 0 and not (tmp_path / "wh" / "frontier" / "ins-00000002").exists()
+    assert wh.read_frontier(2).count() == n1
     # and nothing changed: created_round stays 1 everywhere
-    assert fr2.where(F.col("created_round") != 1).count() == 0
+    assert wh.read_frontier(2).where(F.col("created_round") != 1).count() == 0
 
 
 def test_dequeue_invariants_random_frontier(spark):

@@ -115,3 +115,40 @@ def test_crawler_refuses_round_after_another_writers_commit(spark, tmp_path):
     taken = {r["url_id"] for r in resumed.dequeue_order().where(f"round = {last + 1}").collect()}
     stream_id = resumed.wh.read_frontier().where(F.col("url") == new).collect()[0]["url_id"]
     assert stream_id in taken
+
+
+def test_second_commit_of_a_round_raises(tmp_path, spark):
+    """The round marker is created exclusively: of two writers committing
+    the same round (a crawl and a stream, say), the second raises instead of
+    overwriting the first's commit."""
+    wh = Warehouse(spark, tmp_path / "wh")
+    wh.commit_round(1, {"writer": "first"})
+    with pytest.raises(FileExistsError):
+        wh.commit_round(1, {"writer": "second"})
+    marker = tmp_path / "wh" / "_commits" / "_round-00000001.json"
+    assert '"first"' in marker.read_text()
+    assert [p.name for p in marker.parent.iterdir()] == [marker.name]  # no temp left
+    assert wh.committed_rounds() == [1]
+
+
+def test_resume_sizes_the_frontier_from_footers(spark, tmp_path):
+    """A resume sizes the frontier (the URL-seen bloom's presize) from the
+    parquet footers of the snapshot and its ins- deltas, with no Spark job:
+    equal to the composed frontier's count on a warehouse with both ins and
+    upd deltas."""
+    docs, _ = generate_web(n_articles=30, seed=7)
+    cfg = canonical_config()
+    sdocs = docs_to_spark(spark, docs)
+    Crawler(spark, cfg, sdocs, tmp_path / "wh").run(max_rounds=3)
+    frontier = tmp_path / "wh" / "frontier"
+    assert list(frontier.glob("ins-*")) and list(frontier.glob("upd-*"))
+    c = Crawler(spark, cfg, sdocs, tmp_path / "wh")
+    sc = spark.sparkContext
+    group = f"resume-{os.getpid()}"
+    sc.setJobGroup(group, "resume")
+    try:
+        assert c.bootstrap() == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert c._fr_count == c.wh.read_frontier(3).count() == c.wh.frontier_size(3)

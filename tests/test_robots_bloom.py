@@ -1,6 +1,7 @@
 """North-rule additions: robots politeness (J6-NR) and the partitioned bloom
-URL-seen prefilter (J3-NR). Bloom exactness = prefiltered result identical to
-the plain anti-join (no false negatives, false positives verified away)."""
+URL-seen prefilter (J3-NR). Bloom exactness = the ingest's inserts with the
+bloom identical to those without it and to the plain anti-join (no false
+negatives, false positives verified away)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ from planner_ref import planner_dequeue, reference_dequeue
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark import frontier as FR
-from dumb_crawler_spark.bloom import PartitionedBloom, prefiltered_new_rows
+from dumb_crawler_spark.bloom import PartitionedBloom, _h1h2
 from dumb_crawler_spark.config import CrawlConfig, Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
@@ -18,6 +19,7 @@ from dumb_crawler_spark.robots import (
     host_budgets,
     parse_robots_txt,
 )
+from dumb_crawler_spark.storage import Warehouse
 
 ROBOTS_TXT = """
 # comments ignored
@@ -93,30 +95,43 @@ def test_robots_crawl_end_to_end(spark, tmp_path):
     assert c.metrics_total().get("ROBOTS_BLOCKED_LINKS", 0) > 0
 
 
-def test_bloom_no_false_negatives_and_exactness(spark):
-    cfg = CrawlConfig(partitions=8, salt=2)
+def _probe(bloom: PartitionedBloom, ids) -> dict[str, bool]:
+    """url_id → the driver probe's verdict, keys hashed JVM-side as the
+    ingest hashes them."""
+    h1, h2 = _h1h2(F.col("url_id"))
+    t = ids.select("url_id", "part", h1.alias("h1"), h2.alias("h2")).toArrow()
+    hit = bloom.probe(*(t[c].to_numpy() for c in ("part", "h1", "h2")))
+    return dict(zip(t["url_id"].to_pylist(), hit.tolist()))
+
+
+def test_bloom_no_false_negatives_and_exactness(spark, tmp_path):
+    cfg = CrawlConfig(partitions=8, salt=2, allow_by_default=True)
     from dumb_crawler_spark.corpus import frontier_urls_from_range
 
     urls = frontier_urls_from_range(spark, 3000)
     kernel = FR.UrlKernel(cfg)
     cands_all = kernel.candidates(urls)
-    frontier = kernel.new_rows(
-        FR.empty_frontier(spark), cands_all.limit(2000), 0, depth=0
-    ).cache()
-    bloom = PartitionedBloom.build(frontier.select("url_id", "part"))
+    wh = Warehouse(spark, tmp_path / "wh")
+    kernel.ingest(wh, urls.limit(2000), 0, None, seeds=True)
+    wh.commit_round(0, {})
+    frontier = wh.read_frontier_seen_ids(0).cache()
+    bloom = PartitionedBloom.build(frontier, expected_per_part=512)
 
-    probe = bloom.might_contain(cands_all)
+    verdict = _probe(bloom, cands_all)
     seen_ids = {r["url_id"] for r in frontier.select("url_id").collect()}
-    rows = probe.select("url_id", "_maybe_seen").collect()
-    fp = sum(1 for r in rows if r["_maybe_seen"] and r["url_id"] not in seen_ids)
-    for r in rows:
-        if r["url_id"] in seen_ids:
-            assert r["_maybe_seen"], f"false negative for {r['url_id']}"
-    assert fp / len(rows) < 0.05  # fpr sane
+    for uid in seen_ids:
+        assert verdict[uid], f"false negative for {uid}"
+    fp = sum(1 for uid, hit in verdict.items() if hit and uid not in seen_ids)
+    assert fp / len(verdict) < 0.05  # fpr sane
 
-    exact = {r["url_id"] for r in cands_all.join(frontier.select("url_id"), "url_id", "left_anti").collect()}
-    fast = {r["url_id"] for r in prefiltered_new_rows(cands_all, frontier, bloom).collect()}
-    assert fast == exact
+    # union is a plain bitmap OR: the two halves' filters OR to the whole's
+    half = lambda cond: PartitionedBloom.build(frontier.where(cond), expected_per_part=512)  # noqa: E731
+    assert half("url_id < '5'").union(half("url_id >= '5'")).filters == bloom.filters
+
+    exact = {r["url_id"] for r in cands_all.join(frontier, "url_id", "left_anti").collect()}
+    for rnd, b in ((1, bloom), (2, None)):
+        ins, _ = kernel.ingest(wh, urls, rnd, 0, bloom=b)
+        assert set(ins["url_id"].to_pylist()) == exact and ins.num_rows == len(exact)
 
 
 def test_bloom_regrows_past_its_presize(spark, tmp_path, monkeypatch):
@@ -147,8 +162,7 @@ def test_bloom_regrows_past_its_presize(spark, tmp_path, monkeypatch):
     for rnd in range(1, 5):
         c.run_round(rnd)
         if c._bloom is not None:
-            hits = c._bloom.might_contain(never).where("_maybe_seen").count()
-            fp_shares.append(hits / 2000)
+            fp_shares.append(sum(_probe(c._bloom, never).values()) / 2000)
     assert presizes[0] == 16 and c._fr_count > 4 * presizes[0]
     assert fp_shares and max(fp_shares) < 0.05, fp_shares
     assert len(presizes) >= 2  # rebuilt, presized from the grown frontier
@@ -169,28 +183,3 @@ def test_bloom_crawl_matches_plain_crawl(spark, tmp_path):
 
     assert state(plain) == state(bloomed)
     assert plain.metrics_total() == bloomed.metrics_total()
-
-
-def test_bloom_ships_via_broadcast_once(spark):
-    """Round-2 fix (VERDICT item 4): the bitmap dict must ship through ONE
-    sc.broadcast per filter version (fetched once per executor), never be
-    closure-captured per task; union releases consumed broadcasts."""
-    cfg = CrawlConfig(partitions=4, salt=2)
-    from dumb_crawler_spark.corpus import frontier_urls_from_range
-
-    urls = frontier_urls_from_range(spark, 500)
-    cands = FR.UrlKernel(cfg).candidates(urls)
-    bloom = PartitionedBloom.build(cands.select("url_id", "part"), expected_per_part=4096)
-    assert bloom._bcast is None  # lazy: nothing shipped until first probe
-    bloom.might_contain(cands).count()
-    b1 = bloom._bcast
-    assert b1 is not None and bloom.broadcast_bytes() > 0
-    bloom.might_contain(cands).count()
-    assert bloom._bcast is b1  # same version -> same broadcast, no re-ship
-
-    more = PartitionedBloom.build(cands.select("url_id", "part"), expected_per_part=4096)
-    merged = bloom.union(more)
-    assert bloom._bcast is None  # consumed inputs released
-    assert merged._bcast is None
-    merged.might_contain(cands).count()
-    assert merged._bcast is not None and merged._bcast is not b1

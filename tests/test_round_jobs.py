@@ -3,10 +3,12 @@ step of a round is one Spark action or pure driver work, and every plan is
 assembled from expressions the Crawler built once (crawler.py module
 docstring), so a change that re-adds a per-round job or rebuilds an
 expression tree every round fails here loudly. Also pinned: the
-observation that keeps the ins write's plan layered, the counters observed
-on the ins write stay exact under the bloom's two-branch union, the first
-reads of the Warehouse's tables return the columns their writers emit, and
-the dequeue_order lineage and the frontier read back across a warehouse
+observation that fences the URL kernel in the plan the link ingest collects
+(in a crawl round and a stream batch), no steady-round plan reading a local
+relation of more than a handful of rows, the counters observed on the
+ingest's fence staying exact with the bloom on, the first reads of the
+Warehouse's tables returning the columns their writers emit, and the
+dequeue_order lineage and the frontier reading back across a warehouse
 written before their `host` and `saved_round` columns existed."""
 
 from __future__ import annotations
@@ -20,25 +22,32 @@ from types import SimpleNamespace
 import pyarrow.parquet as pq
 import pytest
 from py4j.clientserver import ClientServerConnection
+from pyspark.sql import DataFrame, DataFrameWriter
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from test_pages_split import _tiny_web
+from test_streaming import UNBOUNDED, _push
 
 from dumb_crawler_spark.config import Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
 from dumb_crawler_spark.robots import ROBOTS_SCHEMA
 from dumb_crawler_spark.storage import Warehouse
+from dumb_crawler_spark.streaming import stream_gated_ingest
 
 # steady-state jobs of one round on local[4]; before the dequeued batch was
 # collected to the driver these rounds ran 36 and 30 jobs, before the robots
 # round was planned from the planner's driver-side counts (no per-round
 # grouping-sets probe) it ran 20, before UPDATED_PAGES was read off the
 # frontier row the canonical round (it saves pages) ran 15, and before the
-# update and errors deltas were written with pyarrow 15 and 14
-ROBOTS_BLOOM_MAX_JOBS = 12
-CANONICAL_MAX_JOBS = 11
+# update and errors deltas were written with pyarrow 15 and 14, and before
+# the link ingest collected its candidates as Arrow (the bloom probed on the
+# driver, the ins delta written with pyarrow, no read-back) 12 and 11
+ROBOTS_BLOOM_MAX_JOBS = 10
+CANONICAL_MAX_JOBS = 10
 # py4j commands of the robots+bloom round, object releases aside: 6,742 while
-# every round rebuilt its expression trees; the bound is a quarter of that
-ROBOTS_BLOOM_MAX_PY4J = 1_685
+# every round rebuilt its expression trees, 1,227 before the Arrow link
+# ingest, 911 since
+ROBOTS_BLOOM_MAX_PY4J = 1_000
 ROUNDS = 3  # rounds 1-2 pay first reads; round 3 is counted
 
 
@@ -60,27 +69,40 @@ def _py4j_commands():
         yield n
 
 
+@contextmanager
+def _executed():
+    """Every DataFrame the driver runs an action on (a collect, a count, a
+    parquet write) while the block runs."""
+    frames = []
+
+    def recording(action, frame):
+        def run(self, *args, **kwargs):
+            frames.append(frame(self))
+            return action(self, *args, **kwargs)
+        return run
+
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("toArrow", "collect", "count"):
+            action = getattr(ClassicDataFrame, name)
+            mp.setattr(ClassicDataFrame, name, recording(action, lambda df: df))
+        mp.setattr(DataFrameWriter, "parquet", recording(DataFrameWriter.parquet, lambda w: w._df))
+        yield frames
+
+
 def _count_round(c: Crawler, round_no: int) -> SimpleNamespace:
-    """Run one round; its Spark jobs, py4j commands and ins-write plan."""
+    """Run one round; its Spark jobs, py4j commands, dequeued rows and the
+    DataFrames it ran actions on."""
     sc = c.spark.sparkContext
     group = f"round-jobs-{uuid.uuid4().hex}"
-    ins = []
-    write_inserts = Warehouse.write_frontier_inserts
-
-    def capture(wh, rnd, df):
-        ins.append(df)
-        return write_inserts(wh, rnd, df)
-
     sc.setJobGroup(group, f"round {round_no}")
     try:
-        with pytest.MonkeyPatch.context() as mp, _py4j_commands() as py4j:
-            mp.setattr(Warehouse, "write_frontier_inserts", capture)
-            c.run_round(round_no)
+        with _executed() as frames, _py4j_commands() as py4j:
+            stats = c.run_round(round_no)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    return SimpleNamespace(jobs=jobs, py4j=py4j[0], ins=ins[0] if ins else None)
+    return SimpleNamespace(jobs=jobs, py4j=py4j[0], dequeued=stats.dequeued, frames=frames)
 
 
 def _crawl(c: Crawler) -> SimpleNamespace:
@@ -136,33 +158,96 @@ def _plan_nodes(tree: str) -> list[tuple[str, list[int]]]:
     return nodes
 
 
-def test_ins_write_observation_fences_the_url_kernel(robots_crawls):
-    """The ins write's observe() (a CollectMetrics node) is an optimizer
-    barrier between the URL kernel and the dedupe/anti-join. Without it the
-    F1/F2 filter pushes down into the kernel's layers and constraint
-    propagation over those expressions takes seconds to optimize the plan
-    (12.8 s against ~0.1 s on the polite_crawl benchmark's config). So:
-    every parse/regex of the kernel sits below a CollectMetrics, and the
-    F1 filter and the dedupe Window above it."""
-    _, counted, _ = robots_crawls
-    tree = counted.ins._jdf.queryExecution().optimizedPlan().toString()
-    nodes = _plan_nodes(tree)
-    fences = {i for i, (text, _) in enumerate(nodes) if text.startswith("CollectMetrics")}
-    assert fences, tree
-    kernel = [i for i, (text, _) in enumerate(nodes) if "ParseUrl" in text or "regexp_extract" in text]
-    assert kernel, tree
-    for i in kernel:
-        assert fences & set(nodes[i][1]), nodes[i][0][:120]
-    def fenced_off(text: str) -> bool:  # the dedupe or the F1/F2 filter
-        return text.startswith("Window ") or (
-            text.startswith("Filter ") and "StartsWith(url" in text
-        )
+# the columns the link ingest collects (frontier.UrlKernel.ingest)
+_INGEST_COLS = ["url_id", "url", "host", "tags", "priority", "part", "h1", "h2"]
 
-    for i in fences:
-        above = [nodes[j][0] for j in nodes[i][1]]
-        assert any(t.startswith("Window ") for t in above), tree
-        assert any(t.startswith("Filter ") and "StartsWith(url" in t for t in above), tree
-        assert not any(fenced_off(t) for t, anc in nodes if i in anc), tree
+
+def _assert_kernel_fenced(frames: list) -> None:
+    """The observe() on the ingest's collect (a CollectMetrics node) is an
+    optimizer barrier between the URL kernel and the keep filter. Without
+    it the filter's constraints propagate through the kernel's layers, and
+    optimizing the plan takes seconds: 12.8 s against ~0.1 s on the
+    polite_crawl benchmark's config for the crawl's insert plan, 4.0–5.2 s
+    per stream micro-batch. So: every parse/regex of the kernel sits below
+    a CollectMetrics, and the keep filter above it, not below."""
+    plans = [df for df in frames if df.columns == _INGEST_COLS]
+    assert plans, [df.columns for df in frames]
+    for df in plans:
+        tree = df._jdf.queryExecution().optimizedPlan().toString()
+        nodes = _plan_nodes(tree)
+        fences = {i for i, (text, _) in enumerate(nodes) if text.startswith("CollectMetrics")}
+        assert fences, tree
+        kernel = [
+            i for i, (text, _) in enumerate(nodes) if "ParseUrl" in text or "regexp_extract" in text
+        ]
+        assert kernel, tree
+        for i in kernel:
+            assert fences & set(nodes[i][1]), nodes[i][0][:120]
+
+        def keep(text: str) -> bool:
+            return text.startswith("Filter ") and "_ok#" in text
+
+        for i in fences:
+            assert any(keep(nodes[j][0]) for j in nodes[i][1]), tree
+            assert not any(keep(text) for text, anc in nodes if i in anc), tree
+
+
+def test_ins_write_observation_fences_the_url_kernel(robots_crawls):
+    """The round's link ingest collects its candidates through the fence."""
+    _, counted, _ = robots_crawls
+    _assert_kernel_fenced(counted.frames)
+
+
+def test_stream_ingest_fences_the_url_kernel(spark, tmp_path):
+    """A stream micro-batch inserts through the same fenced collect."""
+    _push(spark, tmp_path / "in", [
+        "http://site.example.com/articles/1", "http://elsewhere.org/a",
+    ])
+    with _executed() as frames:
+        q = stream_gated_ingest(
+            spark, canonical_config(), str(tmp_path / "wh"), str(tmp_path / "in"),
+            str(tmp_path / "ck"), budget_per_host=UNBOUNDED,
+        )
+        q.awaitTermination(120)
+    assert q.exception() is None
+    assert Warehouse(spark, tmp_path / "wh").committed_rounds() == [1]
+    _assert_kernel_fenced(frames)
+
+
+HANDFUL = 8  # rows a local relation in a steady round's plans may hold
+
+
+def _local_relation_rows(df: DataFrame) -> list[int]:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    nodes = (leaves.apply(i) for i in range(leaves.length()))
+    return [n.data().size() for n in nodes if n.getClass().getSimpleName() == "LocalRelation"]
+
+
+def test_steady_round_plans_read_no_local_relation(spark, tmp_path):
+    """No plan a steady round executes (the dequeue, the fetch write, the
+    ingest's collect and verify join, the pages write) holds a local
+    relation — a LocalTableScan once planned — of more than a handful of
+    rows. Catalyst optimizes a plan over a k-row local relation in ~1 s per
+    deep_frontier round (its batch as a file scan: ~0.2 s), and folds
+    projections into it, to run them interpreted on the driver. The crawl
+    reads its docs and robots from parquet, as the benchmark does."""
+    docs, _ = generate_web(n_articles=60, seed=9)
+    docs_to_spark(spark, docs).write.parquet(str(tmp_path / "docs"))
+    spark.createDataFrame(
+        [("site.example.com", ["/articles/1"], 1500)], ROBOTS_SCHEMA
+    ).write.parquet(str(tmp_path / "robots"))
+    cfg = canonical_config(thread_count=10, politeness=Politeness(respect_robots=True))
+    c = Crawler(
+        spark, cfg, spark.read.parquet(str(tmp_path / "docs")), tmp_path / "wh",
+        robots=spark.read.parquet(str(tmp_path / "robots")), use_bloom=True,
+    )
+    counted = _crawl(c)
+    assert counted.dequeued > HANDFUL
+    for df in counted.frames:
+        rows = _local_relation_rows(df)
+        assert all(n <= HANDFUL for n in rows), (
+            rows, df._jdf.queryExecution().optimizedPlan().toString()[:2000],
+        )
 
 
 def test_canonical_round_job_count(spark, tmp_path):
@@ -173,9 +258,10 @@ def test_canonical_round_job_count(spark, tmp_path):
 
 
 def test_observed_counters_exact_under_bloom_union(robots_crawls):
-    """The F2/robots counters ride the ins write as an Observation below the
-    bloom's certain-new/suspect union: they must equal the robots-only
-    crawl's, whose plan has a single branch."""
+    """The F2/robots counters ride the ingest's collect as an Observation,
+    and the bloom only decides which collected candidates the verify join
+    checks: the bloomed crawl's counters and dequeue order must equal the
+    robots-only crawl's."""
     bloomed, _, plain = robots_crawls
     got = bloomed.metrics_total()
     assert got.get("ROBOTS_BLOCKED_LINKS", 0) > 0

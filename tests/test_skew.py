@@ -67,7 +67,7 @@ def test_dequeue_plan_shapes(spark):
         return dq, dq._jdf.queryExecution().executedPlan().toString()
 
     cfg = CrawlConfig()
-    fr = FR.empty_frontier(spark)
+    fr = spark.createDataFrame(spark.sparkContext.emptyRDD(), FR.FRONTIER_SCHEMA)
     _, plan = shape(fr, cfg)
     assert "TakeOrderedAndProject" in plan
     cfg2 = CrawlConfig(politeness=Politeness(budget_per_host_per_round=2))

@@ -51,10 +51,8 @@ def test_unbounded_writer_exceeds_bound(spark, tmp_wh):
 
 def test_empty_insert_delta_leaves_no_dir(spark, tmp_wh):
     wh = Warehouse(spark, tmp_wh)
-    empty = FR.empty_frontier(spark)
-    assert wh.write_frontier_inserts(3, empty) == 0
+    assert wh.write_frontier_inserts(3, FR.FRONTIER_ARROW.empty_table()) == 0
     assert not (tmp_wh / "frontier" / "ins-00000003").exists()
-    assert wh.read_frontier_inserts(3) is None
 
 
 def test_drop_delta_reclaims_fetch_artifact(spark, tmp_wh):
