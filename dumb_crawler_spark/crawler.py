@@ -6,9 +6,10 @@ dataflow as declarative plans over the whole batch:
 
     dequeue (A1) → mark PROCESSING → re-tag/re-filter (T4/F2)
     → fetch-simulate join docs (J4) → validate (F5/F6)
-    → extract links (L2) → canonicalize/tag/score/filter (U9/U2/T1/T2/F2)
-    → merge new links into frontier (J1-J3/S4) → errors (S11)
-    → mark PROCESSED/FAILED (C3) → append pages (S7/S8; J5 off the row)
+    → extract links (L2), order spans (L3)
+    → canonicalize/tag/score/filter (U9/U2/T1/T2/F2)
+    → merge new links into frontier (J1-J3/S4) → mark PROCESSED/FAILED (C3)
+    → errors (S11) → append pages (S7/S8; J5 off the saved slice)
     → append metrics (A3/S10) → commit round (lineage)
 
 Every k-bounded step is either one Spark action or pure driver work, and
@@ -21,13 +22,14 @@ scan. The link ingest (frontier.UrlKernel.ingest) collects the round's
 allowed candidate links once as Arrow, dedupes and bloom-probes them on
 the driver, verifies the positives with one semi-join and writes the ins
 delta with pyarrow; the URL-seen bloom and the planner state grow from the
-same table. The round's other two k-row tails are driver work too: the C3
-update delta (the dequeued batch matched against one pyarrow read of the
-fetch delta) and the S11 errors delta (that delta's failed rows) are
-pyarrow writes. The counters ride actions that run anyway as observed
-metrics: the A3 fetch counters on the fetch write, the F2/robots counters
-on the ingest's collect, the J5 new-vs-update split on the pages write (the
-dequeued row's ``saved_round``, an exact per-URL record like the
+same table. The round's three k-row tails are driver work too, sliced from
+ONE pyarrow read of the fetch delta: the C3 update delta (the dequeued
+batch matched against it), the S11 errors delta (its failed rows) and the
+S7 pages delta (its saved rows, spans already in L3 order) are pyarrow
+writes. The counters ride actions that run anyway as observed metrics:
+the A3 fetch counters on the fetch write, the F2/robots counters on the
+ingest's collect. The J5 new-vs-update split is read off the saved slice
+(the dequeued row's ``saved_round``, an exact per-URL record like the
 reference's url_index, says whether the page was saved before). The
 Warehouse pins each table's read schema, so no per-read schema-inference
 job runs either.
@@ -87,7 +89,8 @@ class RoundStats:
     wall_seconds: float = 0.0  # run_round wall — steady-state vs first-round triage
     # per-round slice of Crawler.phase_times (run() diffs the accumulator
     # around each round) — lets a bench assert a phase is FLAT across rounds
-    # (e.g. pages_write independence from crawl history) without event logs
+    # without event logs; upd_write holds the tails' one fetch-delta read,
+    # errors_write and pages_write only their pyarrow writes
     phase_seconds: dict[str, float] = field(default_factory=dict)
 
     def add(self, name: str, value: int) -> None:
@@ -198,7 +201,9 @@ class Crawler:
         """J4+F5/F6+L2 fetch artifact plan (one row per allowed input row):
         L2 links over the fetch join (base-URL pieces layered), with the F3
         store gate evaluated once as ``saved`` — the pages sink, the
-        UNSAVED_PAGES counter and the update delta all read it."""
+        UNSAVED_PAGES counter and the update delta all read it — and the
+        spans put in L3 order once links are out, so the pages and errors
+        rows sliced from the delta store them in offset order."""
         fetch, star, ok = fetch_simulate(self.docs, self.cfg), F.col("*"), F.col("ok")
         saved = ok & F.coalesce(should_store(F.col("tags"), self.cfg), F.lit(False))
         layers = [
@@ -206,7 +211,10 @@ class Crawler:
             [star, F.when(ok, extract_links_with_base(F.col("spans"))).alias("links")],
             [star, F.size("links").alias("n_links"), saved.alias("saved")],
         ]
-        return lambda allowed: apply_layers(fetch(allowed), layers).drop(*BASE_PART_COLS)
+        spans = order_spans(F.col("spans"))
+        return lambda allowed: (
+            apply_layers(fetch(allowed), layers).drop(*BASE_PART_COLS).withColumn("spans", spans)
+        )
 
     @cached_property
     def _fetch_counters(self) -> list[Column]:
@@ -291,35 +299,44 @@ class Crawler:
         # artifact's footer count IS the T4-allowed count
         stats.add("ALLOWED_LINKS", allowed_n)
         stats.add("IGNORED_LINKS", stats.dequeued - allowed_n)
-        fcounts = {name: int(v or 0) for name, v in fobs.get.items()}
-        for name, v in fcounts.items():
-            stats.add(name, v)
+        for name, v in fobs.get.items():
+            stats.add(name, int(v or 0))
         fetched = self.wh.read_delta("fetch", round_no)
 
         with self._phase("ingest"):
             self._ingest_links(round_no, fetched, stats)
-        # The round's two k-row tails are driver work over the fetch delta
-        # just written, read with pyarrow like the dequeued batch is held: the
-        # S11 errors sink (the failed rows, spans included) and the C3 update
-        # delta. The frontier is NEVER rewritten in-round — the update delta
-        # is composed on read (frontier.compose_frontier; compaction bounds
-        # the delta window), so the per-round write is O(k), not O(frontier).
-        if allowed_n > fcounts["PROCESSED_URLS"]:
-            with self._phase("errors_write"):
-                failed = self.wh.read_delta_rows(
-                    "fetch", round_no, ["url_id", "url", "error", "spans"], where=~pc.field("ok")
-                )
-                rnd = pa.array(np.full(failed.num_rows, round_no, dtype=np.int32))
-                self.wh.append_delta_rows("errors", round_no, failed.add_column(3, "round", rnd))
+        # The round's three k-row tails (module docstring) are slices of one
+        # pyarrow read of the fetch delta just written. The frontier is NEVER
+        # rewritten in-round — the update delta is composed on read
+        # (frontier.compose_frontier; compaction bounds the delta window), so
+        # the per-round write is O(k), not O(frontier).
         with self._phase("upd_write"):
-            results = self.wh.read_delta_rows(
-                "fetch", round_no, ["url_id", "tags", "ok", "error", "saved"]
-            )
+            results = self.wh.read_delta_rows("fetch", round_no, [
+                "url_id", "url", "tags", "ok", "error", "saved", "saved_round", "spans",
+            ])
             self.wh.write_frontier_updates(
                 round_no, FR.round_update_delta(batch, results, round_no)
             )
-        for name, v in self._save_pages(round_no, fetched).items():
-            stats.add(name, v)
+        rnd = pa.array(np.full(results.num_rows, round_no, dtype=np.int32))
+        results = results.append_column("round", rnd)
+        failed = results.filter(pc.invert(results["ok"]))
+        if failed.num_rows:
+            with self._phase("errors_write"):
+                self.wh.append_delta_rows(
+                    "errors", round_no, failed.select(["url_id", "url", "error", "round", "spans"])
+                )
+        saved = results.filter(results["saved"])
+        if saved.num_rows:
+            with self._phase("pages_write"):
+                self.wh.append_delta_rows(
+                    "pages", round_no, saved.select(["url_id", "url", "round", "spans"])
+                )
+            # J5: a page is UPDATED iff its dequeued frontier row carries a
+            # saved_round (an earlier round saved it) — no pages-history read
+            upd_n = saved.num_rows - saved["saved_round"].null_count
+            stats.add("NEW_SAVED_PAGES", saved.num_rows - upd_n)
+            stats.add("UPDATED_PAGES", upd_n)
+            stats.add("SAVED_PAGES", saved.num_rows)
         self._fr_count += stats.counters.get("DISCOVERED_URLS", 0)
 
         with self._phase("compact"):
@@ -363,33 +380,6 @@ class Crawler:
                 )
                 if self._bloom.overfull:  # rebuilt next round, presized anew
                     self._bloom = None
-
-    @cached_property
-    def _pages_plan(self) -> tuple[Column, Column, list[Column], Column]:
-        """(F3 gate, the J5 update count, the page columns around ``round``)."""
-        saved_before = F.count_if(F.col("saved_round").isNotNull()).alias("upd")
-        spans = order_spans(F.col("spans")).alias("spans")
-        return F.col("saved"), saved_before, [F.col("url_id"), F.col("url")], spans
-
-    def _save_pages(self, round_no: int, fetched: DataFrame) -> dict[str, int]:
-        """S7/S8 pages sink behind the F3 gate (the artifact's ``saved``);
-        the span payload makes one pass (gate → order_spans → parquet). The
-        J5 new-vs-update split rides the write as an observed metric: a page
-        is UPDATED iff its dequeued frontier row carries a ``saved_round``
-        (an earlier round saved it) — O(k), no pages-history read."""
-        gate, saved_before, head, spans = self._pages_plan
-        obs = Observation()
-        saved = (
-            fetched.where(gate)
-            .observe(obs, saved_before)
-            .select(*head, F.lit(round_no).alias("round"), spans)
-        )
-        with self._phase("pages_write"):
-            saved_n = self.wh.append_delta("pages", round_no, saved, keep_empty=False)
-        if saved_n == 0:
-            return {}
-        upd_n = int(obs.get["upd"])
-        return {"NEW_SAVED_PAGES": saved_n - upd_n, "UPDATED_PAGES": upd_n, "SAVED_PAGES": saved_n}
 
     def _append_metrics(self, round_no: int, stats: RoundStats) -> None:
         items = sorted(stats.counters.items())

@@ -54,34 +54,14 @@ def _footer_rows(parquet_dir: Path) -> int:
     )
 
 
-def _write_rows(dest: Path, arrow_table) -> int:
-    """Write-to-temp + atomic rename of one pyarrow-written parquet file.
-    The footer carries no schema metadata: a table read from a Spark-written
-    file keeps Spark's row-schema key, and Spark would infer the new file's
-    schema from it. Nor statistics: no reader filters these k-row files, and
-    pyarrow puts min/max in every page header, which for KB-long span texts
-    would double the errors delta (Spark's writer keeps them out)."""
-    import pyarrow.parquet as pq
-
-    tmp = dest.parent / f".tmp-{uuid.uuid4().hex}"
-    tmp.mkdir(parents=True)
-    pq.write_table(
-        arrow_table.replace_schema_metadata(None), tmp / "part-00000.parquet",
-        store_schema=False, write_statistics=False,
-    )
-    if dest.exists():
-        shutil.rmtree(dest)
-    tmp.rename(dest)
-    return arrow_table.num_rows
-
-
 class Warehouse:
     """One crawl session's tables + round lineage under a root directory.
 
     ``max_records_per_file`` is the S8 file-rotation analog
     (WarcStorageManager.java:91-147 rotates WARC output at 50 MB): every
     parquet write is bounded via the DataFrameWriter ``maxRecordsPerFile``
-    option, the local stand-in for Iceberg's ``write.target-file-size-bytes``.
+    option, the local stand-in for Iceberg's ``write.target-file-size-bytes``,
+    and every pyarrow write by slicing its table into part files.
     """
 
     def __init__(
@@ -120,25 +100,41 @@ class Warehouse:
         return df
 
     # -- atomic writes -------------------------------------------------------
-    def _atomic_write(self, df: DataFrame, dest: Path, keep_empty: bool = True) -> int:
+    def _atomic_write(self, df: DataFrame, dest: Path) -> int:
         """Write-to-temp + atomic rename; returns the row count read back
         from the parquet FOOTERS (driver-side metadata, microseconds) so
-        callers never launch a count job over data they just wrote. With
-        ``keep_empty=False`` a zero-row result leaves NO directory — readers
-        that glob delta dirs then never see schema-only or file-less dirs."""
+        callers never launch a count job over data they just wrote."""
         tmp = dest.parent / f".tmp-{uuid.uuid4().hex}"
         w = df.write.mode("overwrite")
         if self.max_records_per_file:
             w = w.option("maxRecordsPerFile", str(self.max_records_per_file))
         w.parquet(str(tmp))
-        n = _footer_rows(tmp)
-        if n == 0 and not keep_empty:
-            shutil.rmtree(tmp)
-            # overwrite semantics must hold for the empty case too: a stale
-            # non-empty dest would otherwise silently survive
-            if dest.exists():
-                shutil.rmtree(dest)
-            return 0
+        if dest.exists():
+            shutil.rmtree(dest)
+        tmp.rename(dest)
+        return _footer_rows(dest)
+
+    def _write_rows(self, dest: Path, arrow_table) -> int:
+        """Write-to-temp + atomic rename of a pyarrow table, one part file
+        per ``max_records_per_file`` rows (one file if unbounded; an empty
+        table still writes one). The footer carries no schema metadata: a
+        table read from a Spark-written file keeps Spark's row-schema key,
+        and Spark would infer the new file's schema from it. Nor statistics:
+        no reader filters these k-row files, and pyarrow puts min/max in
+        every page header, which for KB-long span texts would double the
+        errors delta (Spark's writer keeps them out)."""
+        import pyarrow.parquet as pq
+
+        tmp = dest.parent / f".tmp-{uuid.uuid4().hex}"
+        tmp.mkdir(parents=True)
+        table = arrow_table.replace_schema_metadata(None)
+        n = table.num_rows
+        step = self.max_records_per_file or max(n, 1)
+        for i, lo in enumerate(range(0, max(n, 1), step)):
+            pq.write_table(
+                table.slice(lo, step), tmp / f"part-{i:05d}.parquet",
+                store_schema=False, write_statistics=False,
+            )
         if dest.exists():
             shutil.rmtree(dest)
         tmp.rename(dest)
@@ -152,12 +148,8 @@ class Warehouse:
         return self._read(table, "snap", str(self.root / table / f"snap-{round_no:08d}"))
 
     # -- append-only tables ----------------------------------------------------
-    def append_delta(
-        self, table: str, round_no: int, df: DataFrame, keep_empty: bool = True
-    ) -> int:
-        return self._atomic_write(
-            df, self.root / table / f"delta-{round_no:08d}", keep_empty=keep_empty
-        )
+    def append_delta(self, table: str, round_no: int, df: DataFrame) -> int:
+        return self._atomic_write(df, self.root / table / f"delta-{round_no:08d}")
 
     def drop_delta(self, table: str, round_no: int) -> None:
         """Reclaim a per-round scratch artifact (the `fetch` table: consumed
@@ -168,20 +160,18 @@ class Warehouse:
 
     def append_delta_rows(self, table: str, round_no: int, arrow_table) -> int:
         """Driver-side parquet write for k-row deltas (counter rows, the
-        dequeue lineage, the errors tail): a Spark job just to persist a few
-        hundred rows costs ~seconds of plan + schedule per round; pyarrow
-        writes the same file in microseconds. Readers can't tell the
-        difference."""
-        return _write_rows(self.root / table / f"delta-{round_no:08d}", arrow_table)
+        dequeue lineage, the errors and pages tails): a Spark job just to
+        persist a few hundred rows costs ~seconds of plan + schedule per
+        round; pyarrow writes the same file in microseconds. Readers can't
+        tell the difference."""
+        return self._write_rows(self.root / table / f"delta-{round_no:08d}", arrow_table)
 
-    def read_delta_rows(self, table: str, round_no: int, columns: list[str], where=None):
+    def read_delta_rows(self, table: str, round_no: int, columns: list[str]):
         """pyarrow read of one round's delta dir (the driver-side dual of
-        append_delta_rows), ``where`` an optional pyarrow filter expression."""
+        append_delta_rows)."""
         import pyarrow.parquet as pq
 
-        return pq.read_table(
-            self.root / table / f"delta-{round_no:08d}", columns=columns, filters=where
-        )
+        return pq.read_table(self.root / table / f"delta-{round_no:08d}", columns=columns)
 
     def read_delta(self, table: str, round_no: int) -> DataFrame:
         """One round's delta dir (e.g. the per-round `fetch` artifact)."""
@@ -312,13 +302,13 @@ class Warehouse:
             self.write_frontier_snapshot(round_no, self.read_frontier(round_no), partitions)
 
     def write_frontier_updates(self, round_no: int, arrow_table) -> int:
-        """The round's k-row update delta (frontier.round_update_delta), one
-        pyarrow-written file."""
-        return _write_rows(self.root / "frontier" / f"upd-{round_no:08d}", arrow_table)
+        """The round's k-row update delta (frontier.round_update_delta),
+        written with pyarrow."""
+        return self._write_rows(self.root / "frontier" / f"upd-{round_no:08d}", arrow_table)
 
     def write_frontier_inserts(self, round_no: int, rows, snapshot: bool = False) -> int:
-        """A round's new frontier rows (frontier.UrlKernel.ingest), one
-        pyarrow-written file: its ins- delta, or with ``snapshot`` an empty
+        """A round's new frontier rows (frontier.UrlKernel.ingest), written
+        with pyarrow: its ins- delta, or with ``snapshot`` an empty
         warehouse's first snap-. Zero rows leave no dir (_frontier_dirs
         globs only existing ones) but in round 0: the seed snapshot is the
         base every later round reads."""
@@ -327,7 +317,7 @@ class Warehouse:
             if dest.exists():
                 shutil.rmtree(dest)
             return 0
-        return _write_rows(dest, rows)
+        return self._write_rows(dest, rows)
 
     # -- convenience -----------------------------------------------------------
     def read_frontier(self, round_no: int | None = None) -> DataFrame:

@@ -2,18 +2,14 @@
 
 The reference has no streaming runtime — its "stream" is a 1-second poll loop
 (DumbCrawler.java:302-310), which crawler.py re-expresses as batch rounds.
-This module adds the two streaming shapes a production frontier actually
-needs, built on the same operators:
-
-- :func:`stream_gated_ingest` — continuous seed/link ingest: (url, ts)
-  files landing in a directory are canonicalized → politeness-gated →
-  tagged → scored → filtered → inserted on the crawl's path, each
-  micro-batch that adds rows as the next round's ``ins-`` delta
-  (``foreachBatch``). Effective exactly-once: the checkpoint dedups file
-  replay, and a replayed batch inserts nothing (the url_id seen-check).
-- :func:`windowed_event_counts` — watermarked tumbling-window counters, the
-  streaming analog of the metrics table (late rows beyond the watermark are
-  dropped rather than corrupting closed windows).
+This module adds the streaming shape a production frontier actually needs,
+built on the same operators: :func:`stream_gated_ingest`, a continuous
+seed/link ingest. (url, ts) files landing in a directory are canonicalized
+→ politeness-gated (:func:`politeness_gate`, per-host state in the
+checkpoint) → tagged → scored → filtered → inserted on the crawl's path,
+each micro-batch that adds rows as the next round's ``ins-`` delta
+(``foreachBatch``). Effective exactly-once: the checkpoint dedups file
+replay, and a replayed batch inserts nothing (the url_id seen-check).
 
 Scale: each micro-batch reuses the batch operators, so partitioning/shuffle
 behavior is identical to the round loop; the streaming runtime only schedules.
@@ -42,52 +38,6 @@ def _merge_urls(wh: Warehouse, kernel: FR.UrlKernel, urls: DataFrame, batch_id: 
     if rows.num_rows:
         wh.compact_frontier(rnd, kernel.cfg.partitions)
         wh.commit_round(rnd, {"stream_batch": batch_id})
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Watermarked tumbling-window counts — works on both a streaming and a
-    batch DataFrame (same plan, Catalyst decides)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(key_col))
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def stream_event_metrics(
-    spark: SparkSession,
-    incoming_dir: str,
-    checkpoint_dir: str,
-    out_table: str,
-    schema: T.StructType,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """File-stream → windowed counts → in-memory table (append mode: only
-    windows sealed by the watermark are emitted)."""
-    stream = spark.readStream.schema(schema).parquet(incoming_dir)
-    agg = windowed_event_counts(stream)
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(out_table)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 POLITENESS_OUT_SCHEMA = T.StructType([
@@ -191,37 +141,6 @@ def politeness_gate(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def stream_politeness_gate(
-    spark: SparkSession,
-    incoming_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    budget_per_host: int,
-    window_seconds: int = 60,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """File-stream of (host, url, ts) candidates → stateful politeness gate
-    → parquet sink (a durable sink, so a RESTARTED query recovers both the
-    source offsets and the per-host group state from the checkpoint — the
-    budget carries across process lifetimes, not just micro-batches)."""
-    schema = T.StructType([
-        T.StructField("host", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(incoming_dir)
-    gated = politeness_gate(stream, budget_per_host, window_seconds)
-    writer = (
-        gated.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _prune_drained_refeeds(incoming_dir: str, batch_id: int, margin: int = 2) -> None:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from dumb_crawler_spark.config import Politeness, load_config
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
-from dumb_crawler_spark.oracle import OracleCrawler
+from dumb_crawler_spark.oracle import OracleCrawler, canonicalize, url_id
 
 ROUNDS = 6
 
@@ -83,6 +83,35 @@ def test_span_sequence_invariant(pair, web):
         exp = [(s["kind"], s["text"], s["media_ref"]) for s in src]
         assert got == exp, r["url_id"]
         assert r["url_id"] in oracle_by_id
+
+
+def test_spans_stored_out_of_order_come_back_in_offset_order(spark, tmp_path):
+    """L3 at crawl level: docs whose spans are stored out of offset order
+    come back in offset order — in the saved page of one that validates,
+    and in the errors row of one that fails validation. The crawl still
+    matches the oracle on this corpus."""
+    cfg = canonical_config()
+    host = "http://site.example.com"
+
+    def shuffled(body, *links):  # offsets 2, 0, 1
+        texts = {2: "tail", 0: body, 1: " ".join(f'<a href="{l}">' for l in links)}
+        return [{"kind": "text", "text": t, "media_ref": None, "offset": o} for o, t in texts.items()]
+
+    docs = {
+        url_id(canonicalize(f"{host}/"), cfg.id_extractor_pattern): shuffled(
+            "welcome", f"{host}/articles/1", f"{host}/articles/2"
+        ),
+        "1": shuffled("article-body", f"{host}/"),
+        "2": shuffled("no body", f"{host}/"),  # fails the article selector
+    }
+    oracle, engine = _run_pair(spark, tmp_path, cfg, docs, max_rounds=3)
+    offsets = lambda df: {r["url_id"]: [s["offset"] for s in r["spans"]] for r in df.collect()}
+    assert offsets(engine.pages()) == {"1": [0, 1, 2]}
+    assert offsets(engine.wh.read_deltas("errors")) == {"2": [0, 1, 2]}
+    assert [(p["url_id"], p["spans"]) for p in oracle.pages] == [
+        (r["url_id"], [s.asDict() for s in r["spans"]]) for r in engine.pages().collect()
+    ]
+    assert engine.metrics_total() == {k: v for k, v in oracle.counters.items() if v}
 
 
 def test_frontier_urls_match(pair):

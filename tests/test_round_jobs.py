@@ -41,12 +41,14 @@ from dumb_crawler_spark.streaming import stream_gated_ingest
 # frontier row the canonical round (it saves pages) ran 15, and before the
 # update and errors deltas were written with pyarrow 15 and 14, and before
 # the link ingest collected its candidates as Arrow (the bloom probed on the
-# driver, the ins delta written with pyarrow, no read-back) 12 and 11
-ROBOTS_BLOOM_MAX_JOBS = 10
-CANONICAL_MAX_JOBS = 10
+# driver, the ins delta written with pyarrow, no read-back) 12 and 11, and
+# before the pages were sliced from the same pyarrow read of the fetch delta
+# as the update and errors deltas (no pages job, even for zero saved rows) 10
+ROBOTS_BLOOM_MAX_JOBS = 9
+CANONICAL_MAX_JOBS = 9
 # py4j commands of the robots+bloom round, object releases aside: 6,742 while
 # every round rebuilt its expression trees, 1,227 before the Arrow link
-# ingest, 911 since
+# ingest, 911 before the pyarrow pages write, 875 since
 ROBOTS_BLOOM_MAX_PY4J = 1_000
 ROUNDS = 3  # rounds 1-2 pay first reads; round 3 is counted
 
@@ -225,7 +227,7 @@ def _local_relation_rows(df: DataFrame) -> list[int]:
 
 def test_steady_round_plans_read_no_local_relation(spark, tmp_path):
     """No plan a steady round executes (the dequeue, the fetch write, the
-    ingest's collect and verify join, the pages write) holds a local
+    ingest's collect and verify join) holds a local
     relation — a LocalTableScan once planned — of more than a handful of
     rows. Catalyst optimizes a plan over a k-row local relation in ~1 s per
     deep_frontier round (its batch as a file scan: ~0.2 s), and folds
@@ -271,7 +273,7 @@ def test_observed_counters_exact_under_bloom_union(robots_crawls):
 
 _SPANS = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 # the columns the writers of the tables without a declared read schema emit:
-# the pages write's select, the errors delta's pyarrow table, the metrics rows
+# the pages and errors deltas' pyarrow tables, the metrics rows
 _WRITTEN = {
     "pages": [("url_id", "string"), ("url", "string"), ("round", "int"), ("spans", _SPANS)],
     "errors": [

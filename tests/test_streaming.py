@@ -1,23 +1,18 @@
 """Structured Streaming surface (SURVEY.md §2.9): continuous link ingest
 commits each micro-batch's new rows through the crawl's insert path (an
-``ins-`` delta, or the seed snapshot of an empty warehouse); watermarked
-windowed metrics seal correctly."""
+``ins-`` delta, or the seed snapshot of an empty warehouse), under a
+per-host politeness budget whose state outlives a query restart."""
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
 from dumb_crawler_spark.storage import COMPACT_EVERY, Warehouse
-from dumb_crawler_spark.streaming import (
-    stream_event_metrics,
-    stream_gated_ingest,
-    windowed_event_counts,
-)
+from dumb_crawler_spark.streaming import stream_gated_ingest
 
 UNBOUNDED = 1_000_000  # a per-host budget no test batch reaches
 
@@ -152,88 +147,40 @@ def test_stream_into_crawled_warehouse_writes_ins_delta(spark, tmp_path):
     assert new in got and len(got) == len(rows)
 
 
-def test_windowed_event_counts_batch_and_stream(spark, tmp_path):
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    rows = [
-        ("2024-01-01 00:01:00", "click", 1.0),
-        ("2024-01-01 00:05:00", "click", 2.0),
-        ("2024-01-01 00:11:00", "click", 4.0),
-        ("2024-01-01 02:00:00", "view", 8.0),  # advances watermark far past the first windows
-    ]
-    df = spark.createDataFrame(rows, "ts string, event_type string, value double").select(
-        F.col("ts").cast("timestamp"), "event_type", "value"
-    )
-    batch = {(str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-             for r in windowed_event_counts(df).collect()}
-    assert batch[("2024-01-01 00:00:00", "click")] == (2, 3.0)
-    assert batch[("2024-01-01 00:10:00", "click")] == (1, 4.0)
-
-    incoming = tmp_path / "ev"
-    df.coalesce(1).write.mode("append").parquet(str(incoming))
-    q = stream_event_metrics(
-        spark, str(incoming), str(tmp_path / "ckpt2"), "ev_counts", schema
-    )
-    q.awaitTermination(120)
-    got = {(str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-           for r in spark.sql("SELECT * FROM ev_counts").collect()}
-    # append mode emits only watermark-sealed windows: both click windows are
-    # sealed by the 02:00 event (watermark 30m), the view window is not
-    assert got[("2024-01-01 00:00:00", "click")] == (2, 3.0)
-    assert got[("2024-01-01 00:10:00", "click")] == (1, 4.0)
-    assert ("2024-01-01 02:00:00", "view") not in got
-
-
-def test_politeness_gate_state_across_batches(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): per-host event-time
-    budget must persist ACROSS micro-batches — batch 2's admissions see batch
-    1's consumption; a newer window refills the budget."""
-    from dumb_crawler_spark.streaming import stream_politeness_gate
-
-    schema = "host string, url string, ts timestamp"
-    incoming = tmp_path / "cand"
+def test_stream_gated_ingest_budget_across_restart(spark, tmp_path):
+    """The gate's per-host state holds across a query restart: a window's
+    budget spent by one run stays spent in the next, a newer window refills
+    it, and a window admits in (ts, url) order — not url order alone."""
+    cfg = canonical_config()
+    a = lambda i: f"http://site.example.com/articles/{i}"
+    b = "http://hot.example.com/articles/1"
 
     def push(rows):
-        spark.createDataFrame(rows, "host string, url string, ts string").select(
-            "host", "url", F.col("ts").cast("timestamp")
-        ).coalesce(1).write.mode("append").parquet(str(incoming))
+        spark.createDataFrame(rows, "url string, ts string").select(
+            "url", F.col("ts").cast("timestamp")
+        ).coalesce(1).write.mode("append").parquet(str(tmp_path / "in"))
 
-    # batch 1: host A has 5 candidates in window [00:00, 00:01) — budget 3
-    push([
-        ("a.com", f"http://a.com/{i}", "2024-01-01 00:00:10") for i in range(5)
-    ] + [("b.com", "http://b.com/0", "2024-01-01 00:00:10")])
-    out = tmp_path / "gated"
-    q = stream_politeness_gate(
-        spark, str(incoming), str(tmp_path / "ck"), str(out), budget_per_host=3,
-        window_seconds=60,
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(out)).collect()
-    a1 = [r for r in rows if r["host"] == "a.com"]
-    assert sum(r["admitted"] for r in a1) == 3 and len(a1) == 5
-    # deterministic order: smallest urls admitted first
-    assert {r["url"] for r in a1 if r["admitted"]} == {f"http://a.com/{i}" for i in range(3)}
-    assert all(r["admitted"] for r in rows if r["host"] == "b.com")
+    def run():
+        q = stream_gated_ingest(
+            spark, cfg, str(tmp_path / "wh"), str(tmp_path / "in"), str(tmp_path / "ck"),
+            budget_per_host=3, window_seconds=60,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return {r["url"] for r in Warehouse(spark, tmp_path / "wh").read_frontier().collect()}
 
-    # batch 2: same window -> budget already consumed; next window -> refill
+    # window 00:00, budget 3: (ts, url) order is 5, 4, 1, 2, 3 (url order
+    # would admit 1, 2, 3); the other host's row has a budget of its own
     push([
-        ("a.com", "http://a.com/late1", "2024-01-01 00:00:30"),   # same window: reject
-        ("a.com", "http://a.com/next1", "2024-01-01 00:01:30"),   # new window: admit
+        (a(5), "2024-01-01 00:00:05"), (a(4), "2024-01-01 00:00:10"),
+        (a(2), "2024-01-01 00:00:20"), (a(1), "2024-01-01 00:00:20"),
+        (a(3), "2024-01-01 00:00:30"), (b, "2024-01-01 00:00:30"),
     ])
-    q2 = stream_politeness_gate(
-        spark, str(incoming), str(tmp_path / "ck"), str(out), budget_per_host=3,
-        window_seconds=60,
-    )
-    q2.awaitTermination(120)
-    batch2 = {
-        r["url"]: r["admitted"]
-        for r in spark.read.parquet(str(out)).collect()
-        if "late1" in r["url"] or "next1" in r["url"]
-    }
-    assert batch2 == {"http://a.com/late1": False, "http://a.com/next1": True}
+    assert run() == {a(5), a(4), a(1), b}
+    # restart: 6 falls in the spent window and stays out; window 00:01
+    # refills, admitting 9 and the parked 2 and 3
+    push([(a(6), "2024-01-01 00:00:40"), (a(9), "2024-01-01 00:01:40")])
+    assert run() == {a(5), a(4), a(1), b, a(2), a(3), a(9)}
 
 
 def test_stream_gated_ingest_end_to_end(spark, tmp_path):
