@@ -4,8 +4,8 @@ The reference's main loop polls futures every second
 (DumbCrawler.java:61-79,302-310); one Spark **round** executes the same
 dataflow as declarative plans over the whole batch:
 
-    dequeue (A1) → mark PROCESSING → re-tag/re-filter (T4/F2)
-    → fetch-simulate join docs (J4) → validate (F5/F6)
+    dequeue (A1) + re-tag/re-filter (T4/F2) → mark PROCESSING
+    → fetch-simulate join docs (J4; misses → 404) → validate (F5/F6)
     → extract links (L2), order spans (L3)
     → canonicalize/tag/score/filter (U9/U2/T1/T2/F2)
     → merge new links into frontier (J1-J3/S4) → mark PROCESSED/FAILED (C3)
@@ -15,31 +15,34 @@ dataflow as declarative plans over the whole batch:
 Every k-bounded step is either one Spark action or pure driver work, and
 the k-bounded hand-offs between them are Arrow tables and files, never
 local relations. The dequeued batch (≤ k rows by construction) is
-collected ONCE as Arrow; the driver derives its count, the D2 lineage
-(written with pyarrow), the planner's decrements and the planned-count
-drift check from it, and writes it once with pyarrow for the fetch plan to
-scan. The link ingest (frontier.UrlKernel.ingest) collects the round's
-allowed candidate links once as Arrow, dedupes and bloom-probes them on
-the driver, verifies the positives with one semi-join and writes the ins
-delta with pyarrow; the URL-seen bloom and the planner state grow from the
-same table. The round's three k-row tails are driver work too, sliced from
-ONE pyarrow read of the fetch delta: the C3 update delta (the dequeued
+collected ONCE as Arrow, with the T4 re-tag and its F2 verdict evaluated
+on the way; the driver derives its count, the D2 lineage (written with
+pyarrow), the planner's decrements and the planned-count drift check from
+it, and writes its allowed rows once with pyarrow for the fetch plan, ONE
+broadcast inner join against docs, to scan. The link ingest
+(frontier.UrlKernel.ingest) collects the round's allowed candidate links
+once as Arrow, dedupes and bloom-probes them on the driver, verifies the
+positives with one semi-join and writes the ins delta with pyarrow; the
+URL-seen bloom and the planner state grow from the same table. The
+round's results are driver work too: ONE pyarrow read of the fetch delta
+(the join's hits), completed with a 404 row for every allowed row the
+join did not return (fetch.with_misses). The A3 fetch counters and the
+three k-row tails are slices of it: the C3 update delta (the dequeued
 batch matched against it), the S11 errors delta (its failed rows) and the
 S7 pages delta (its saved rows, spans already in L3 order) are pyarrow
-writes. The counters ride actions that run anyway as observed metrics:
-the A3 fetch counters on the fetch write, the F2/robots counters on the
-ingest's collect. The J5 new-vs-update split is read off the saved slice
-(the dequeued row's ``saved_round``, an exact per-URL record like the
+writes. The F2/robots counters ride the ingest's collect as observed
+metrics. The J5 new-vs-update split is read off the saved slice (the
+dequeued row's ``saved_round``, an exact per-URL record like the
 reference's url_index, says whether the page was saved before). The
 Warehouse pins each table's read schema, so no per-read schema-inference
 job runs either.
 
 Plans are built once per Crawler: every expression that depends on the
 config alone — the URL kernel, the T4 re-tag, the F2 and robots verdicts,
-the fetch artifact's columns, the counters — is built on first use and
-reused by every round (a Column is an unresolved expression), so a round
-adds only its literals (the round number) and its joins. Each layered
-kernel is one select per layer (urlkit.py).
+the fetch artifact's columns — is built on first use and reused by every
+round (a Column is an unresolved expression), so a round adds only its
+literals (the round number) and its joins. Each layered kernel is one
+select per layer (urlkit.py).
 
 Exactly-once rounds: all table writes land BEFORE the round's commit marker
 (storage.py); a crash mid-round leaves the previous round's state intact —
@@ -64,7 +67,7 @@ from functools import cached_property
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,7 +75,7 @@ from . import frontier as FR
 from .bloom import PartitionedBloom
 from .config import CrawlConfig
 from .extract import BASE_PART_COLS, base_parts_layers, extract_links_with_base, order_spans
-from .fetch import error_kinds, fetch_simulate
+from .fetch import fetch_simulate, with_misses
 from .filters import should_store
 from .planner import IncrementalPlanner
 from .storage import COMPACT_EVERY, Warehouse
@@ -198,7 +201,7 @@ class Crawler:
     # -- the cfg-pure pieces of a round's plans, built once per Crawler -------
     @cached_property
     def _fetch_artifact(self):
-        """J4+F5/F6+L2 fetch artifact plan (one row per allowed input row):
+        """J4+F5/F6+L2 fetch artifact plan (one row per hit of the fetch join):
         L2 links over the fetch join (base-URL pieces layered), with the F3
         store gate evaluated once as ``saved`` — the pages sink, the
         UNSAVED_PAGES counter and the update delta all read it — and the
@@ -216,22 +219,25 @@ class Crawler:
             apply_layers(fetch(allowed), layers).drop(*BASE_PART_COLS).withColumn("spans", spans)
         )
 
-    @cached_property
-    def _fetch_counters(self) -> list[Column]:
-        """ONE set of aggregates over the fetch artifact yields
-        PROCESSED_URLS, every ERROR_*, MAX_ATTEMPT_COUNT_REACHED, the F3 store
-        split and the A4 warns (A3; URLStore.java:176-180,
-        AbstractStorageManager.java:37-50, DumbCrawler.java:108-110)."""
-        cfg, ok, n_links = self.cfg, F.col("ok"), F.col("n_links")
-        named = {
-            "PROCESSED_URLS": F.col("error").isNull(),
-            **{f"ERROR_{e}": F.col("error") == e for e in error_kinds(cfg)},
-            "MAX_ATTEMPT_COUNT_REACHED": F.col("attempt") + 1 >= cfg.max_attempt_count,
-            "UNSAVED_PAGES": ok & ~F.col("saved"),
-            "WARN_EMPTY_LINKS": ok & (n_links == 0),
-            "WARN_TOO_MANY_LINKS": ok & (n_links > 300),
-        }
-        return [F.count_if(cond).alias(name) for name, cond in named.items()]
+    def _count_fetch(self, results: pa.Table, stats: RoundStats) -> None:
+        """A3 off the round's results (fetch.with_misses, one row per allowed
+        row): the T4 split, PROCESSED_URLS, one ERROR_* per error value,
+        MAX_ATTEMPT_COUNT_REACHED, the F3 store split and the A4 warns
+        (URLStore.java:176-180, AbstractStorageManager.java:37-50,
+        DumbCrawler.java:108-110)."""
+        ok, n_links, attempt = results["ok"], results["n_links"], results["attempt"]
+        stats.add("ALLOWED_LINKS", results.num_rows)
+        stats.add("IGNORED_LINKS", stats.dequeued - results.num_rows)
+        for name, mask in {
+            "PROCESSED_URLS": ok,
+            "MAX_ATTEMPT_COUNT_REACHED": pc.greater_equal(attempt, self.cfg.max_attempt_count - 1),
+            "UNSAVED_PAGES": pc.and_(ok, pc.invert(results["saved"])),
+            "WARN_EMPTY_LINKS": pc.and_(ok, pc.equal(n_links, 0)),
+            "WARN_TOO_MANY_LINKS": pc.and_(ok, pc.greater(n_links, 300)),
+        }.items():
+            stats.add(name, pc.sum(mask).as_py() or 0)
+        for e in pc.value_counts(results["error"].drop_null()).to_pylist():
+            stats.add(f"ERROR_{e['values']}", e["counts"])
 
     # -- one round ----------------------------------------------------------------
     def run_round(self, round_no: int) -> RoundStats:
@@ -261,10 +267,11 @@ class Crawler:
             dq_plan, planned_n = self._planner.plan(eligible, k)
 
         # The dequeued batch is ≤ k rows by construction: ONE Arrow collect,
-        # then driver work — the count, the D2 lineage, the planner's
-        # decrements — and the fetch plan reads it back as a file.
+        # re-tagged and re-filtered on the way (T4, UrlKernel.retag), then
+        # driver work — the count, the D2 lineage, the planner's decrements —
+        # and the fetch plan reads the allowed rows back as a file.
         with self._phase("dequeue"):
-            batch = dq_plan.toArrow()
+            batch = self._urls.retag(dq_plan).toArrow()
         stats.dequeued = batch.num_rows
         if planned_n != stats.dequeued:
             raise AssertionError(
@@ -276,44 +283,37 @@ class Crawler:
             "dequeue_order", round_no, FR.dequeue_order_table(batch, round_no)
         )
         self._planner.on_dequeued(batch)
-        # written once with pyarrow, read back as a pinned-schema file scan
-        # (dropped at commit, like the fetch delta): a scan has no rows for
-        # Catalyst to fold the re-tag into, as it would into a k-row local
-        # relation, and optimizes in a fraction of the time
-        self.wh.append_delta_rows("dequeued", round_no, batch)
+        # T4: only the allowed rows are fetched; the others leak as
+        # PROCESSING (reference marks taken before filtering,
+        # URLStore.java:191-206 + DumbCrawler.java:275-279). Written once with
+        # pyarrow, read back as a pinned-schema file scan (dropped at commit,
+        # like the fetch delta): a plan over a k-row local relation takes
+        # Catalyst several times as long to optimize (test_round_jobs).
+        allowed = batch.filter(batch["allowed"]).drop_columns(["allowed"])
+        self.wh.append_delta_rows("dequeued", round_no, allowed)
         dq = self.wh.read_delta("dequeued", round_no)
 
-        # T4 re-tag + re-filter; disallowed rows leak as PROCESSING (reference
-        # marks taken before filtering, URLStore.java:191-206 + DumbCrawler.java:275-279).
         # J4 + F5/F6 + L2 link extraction, materialized as a per-round parquet
         # artifact (`fetch` table) instead of an executor-heap cache: the rows
         # carry full span payloads (~KBs each), and columnar-compressed files
         # + column-pruned re-reads beat caching GBs of span data in the heap
         # (measured: the cache build GC-thrashed local[32] into anti-scaling).
-        # The A3 fetch counters ride the write as observed metrics.
-        fobs = Observation()
-        artifact = self._fetch_artifact(self._urls.retag(dq)).observe(fobs, *self._fetch_counters)
         with self._phase("fetch_write"):
-            allowed_n = self.wh.append_delta("fetch", round_no, artifact)
-        # fetch_simulate emits exactly one row per allowed input row, so the
-        # artifact's footer count IS the T4-allowed count
-        stats.add("ALLOWED_LINKS", allowed_n)
-        stats.add("IGNORED_LINKS", stats.dequeued - allowed_n)
-        for name, v in fobs.get.items():
-            stats.add(name, int(v or 0))
-        fetched = self.wh.read_delta("fetch", round_no)
+            self.wh.append_delta("fetch", round_no, self._fetch_artifact(dq))
+        # The round's results (module docstring): the hits, one pyarrow read
+        # of the fetch delta just written, completed with the 404 rows.
+        with self._phase("upd_write"):
+            results = with_misses(allowed, self.wh.read_delta_rows("fetch", round_no, [
+                "url_id", "error", "saved", "spans", "n_links",
+            ]))
+        self._count_fetch(results, stats)
 
         with self._phase("ingest"):
-            self._ingest_links(round_no, fetched, stats)
-        # The round's three k-row tails (module docstring) are slices of one
-        # pyarrow read of the fetch delta just written. The frontier is NEVER
-        # rewritten in-round — the update delta is composed on read
-        # (frontier.compose_frontier; compaction bounds the delta window), so
-        # the per-round write is O(k), not O(frontier).
+            self._ingest_links(round_no, self.wh.read_delta("fetch", round_no), stats)
+        # The frontier is NEVER rewritten in-round — the update delta is
+        # composed on read (frontier.compose_frontier; compaction bounds the
+        # delta window), so the per-round write is O(k), not O(frontier).
         with self._phase("upd_write"):
-            results = self.wh.read_delta_rows("fetch", round_no, [
-                "url_id", "url", "tags", "ok", "error", "saved", "saved_round", "spans",
-            ])
             self.wh.write_frontier_updates(
                 round_no, FR.round_update_delta(batch, results, round_no)
             )

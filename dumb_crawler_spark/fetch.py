@@ -5,8 +5,8 @@ The reference fetches live HTTP and parses DOM with Jsoup
 (SimpleHttpRenderer.java:29-52, CrawlingTaskCallable.java:42-71). Per
 BASELINE.json input_hint the corpus here is a pre-parsed table of interleaved
 text+media spans ``docs(doc_id, spans array<struct<kind,text,media_ref,offset>>)``
-— so "fetching" is a left join of the dequeued batch against docs, and every
-error path maps to a row predicate, evaluated in the reference's order
+— so "fetching" is ``dequeued ⋈ docs``, and every error path maps to a row
+predicate, evaluated in the reference's order
 (CrawlingTaskCallable.call, lines 42-63):
 
 1. fetch miss           → INVALID_STATUS_CODE_404   (SimpleHttpRenderer.java:39-42)
@@ -14,6 +14,11 @@ error path maps to a row predicate, evaluated in the reference's order
 3. content validation   → CONTENT_VALIDATION_ERROR_{tag}, first failing tag in
                           task-tag order             (ContentValidator.java:29-47)
 Failing rows are diverted to the errors table and their links are NOT followed.
+
+The join is an inner join (fetch_simulate), and the misses are driver work
+(with_misses): the batch is ≤ k rows and already on the driver, so the rows
+the join did not return are the 404s. A doc with NULL spans is no page, so
+it is dropped on the docs side and misses too.
 
 Scale: the dequeued batch (≤ per-round budget) is small relative to docs —
 but docs is the 100 TB side, so the join must shuffle docs? No: at scale the
@@ -27,6 +32,8 @@ from __future__ import annotations
 
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -36,14 +43,6 @@ from .urlkit import apply_layers
 ERR_404 = "INVALID_STATUS_CODE_404"
 ERR_EMPTY = "EMPTY_RESPONSE_BODY"
 ERR_VALIDATION_PREFIX = "CONTENT_VALIDATION_ERROR_"
-
-
-def error_kinds(cfg: CrawlConfig) -> list[str]:
-    """Every value fetch_simulate's ``error`` column can take — a closed set,
-    so per-error counters can be fixed aggregate expressions."""
-    return [ERR_404, ERR_EMPTY] + [
-        ERR_VALIDATION_PREFIX + tag for tag in cfg.validation_selectors
-    ]
 
 
 def render_via(tags: Column, cfg: CrawlConfig) -> Column:
@@ -82,27 +81,23 @@ def _first_failing_tag(spans: Column, tags: Column, cfg: CrawlConfig) -> Column:
 
 
 def fetch_simulate(docs: DataFrame, cfg: CrawlConfig) -> Callable[[DataFrame], DataFrame]:
-    """J4 + F5 + F6 as a transform of the dequeued batch: broadcast-join it
-    against the docs corpus and classify every row. The docs side, the
-    spans type and the classification columns are built once, here, so a
-    crawl builds the kernel once and each round's plan adds only its joins.
+    """J4 + F5 + F6 as a transform of the allowed batch: broadcast-join it
+    against the docs corpus and classify every hit. The docs side and the
+    classification columns are built once, here, so a crawl builds the
+    kernel once and each round's plan adds only its join.
 
-    Output: dequeued columns + spans, render_via, error (null = ok), ok.
-    """
-    # A naive `dequeued LEFT JOIN docs` cannot broadcast its small (left)
-    # side — Spark's BroadcastHashJoin can't build the preserved side of an
-    # outer join, so it would silently sort-merge-shuffle the 100 TB docs
-    # table. Split instead into two joins that each broadcast the k-bounded
-    # batch: an inner probe of the docs scan (hits) + a tiny anti-join for
-    # the misses (404 rows). Plan-asserted in tests/test_misc.py.
-    side = docs.select("doc_id", "spans")
-    doc_id, url_id, star = side["doc_id"], F.col("url_id"), F.col("*")
-    no_spans = F.lit(None).cast(side.schema["spans"].dataType).alias("spans")
+    Output: one row per hit, the batch's columns + spans, render_via, error
+    (null = ok), ok. The misses are with_misses' work: a ``batch LEFT JOIN
+    docs`` cannot broadcast its small (left) side — Spark's BroadcastHashJoin
+    can't build the preserved side of an outer join, so it would
+    sort-merge-shuffle the 100 TB docs table. Plan-asserted in
+    tests/test_misc.py."""
     spans, tags = F.col("spans"), F.col("tags")
+    side = docs.select("doc_id", "spans").where(spans.isNotNull())
+    doc_id, star = side["doc_id"], F.col("*")
     failing_tag = _first_failing_tag(spans, tags, cfg)
     error = (
-        F.when(spans.isNull(), F.lit(ERR_404))
-        .when(F.size(spans) == 0, F.lit(ERR_EMPTY))
+        F.when(F.size(spans) == 0, F.lit(ERR_EMPTY))
         .when(failing_tag.isNotNull(), F.concat(F.lit(ERR_VALIDATION_PREFIX), failing_tag))
     )
     classify = [
@@ -110,9 +105,22 @@ def fetch_simulate(docs: DataFrame, cfg: CrawlConfig) -> Callable[[DataFrame], D
         [star, F.col("error").isNull().alias("ok")],
     ]
 
-    def fetch(dequeued: DataFrame) -> DataFrame:
-        hits = side.join(F.broadcast(dequeued), doc_id == dequeued["url_id"], "inner").drop(doc_id)
-        misses = dequeued.join(F.broadcast(hits.select(url_id)), "url_id", "left_anti")
-        return apply_layers(hits.unionByName(misses.select(star, no_spans)), classify)
+    def fetch(batch: DataFrame) -> DataFrame:
+        hits = side.join(F.broadcast(batch), doc_id == batch["url_id"], "inner").drop(doc_id)
+        return apply_layers(hits, classify)
 
     return fetch
+
+
+def with_misses(allowed: pa.Table, hits: pa.Table) -> pa.Table:
+    """The round's results on the driver: one row per ``allowed`` row (the
+    fetched batch), its columns plus the columns of ``hits`` (a read of the
+    fetch delta: url_id, error and any others) looked up by url_id, plus
+    ``ok`` (no error). A row the join did not return is a fetch miss:
+    INVALID_STATUS_CODE_404, so not ok, and NULL in the other hit columns
+    (no spans, not saved)."""
+    at = pc.index_in(allowed["url_id"], value_set=hits["url_id"].combine_chunks())
+    cols = {c: hits[c].take(at) for c in hits.column_names if c != "url_id"}
+    cols["error"] = pc.if_else(at.is_valid(), cols["error"], ERR_404)
+    cols["ok"] = cols["error"].is_null()
+    return pa.table({**dict(zip(allowed.column_names, allowed.columns)), **cols})

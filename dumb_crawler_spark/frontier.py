@@ -138,17 +138,23 @@ class UrlKernel:
         return [
             *url_parts_layers(keep=DEQUEUE_COLS),
             [fresh if c == "tags" else F.col(c) for c in DEQUEUE_COLS],
+            [*map(F.col, DEQUEUE_COLS), self.allowed.alias("allowed")],
         ]
 
     def retag(self, dequeued: DataFrame) -> DataFrame:
         """T4: re-tag + re-filter at dequeue (DumbCrawler.java:276-279) —
         stored tags may be stale vs current config. Fresh tags REPLACE stored
         ones (so a seed's extra 'seed' tag is dropped here, exactly like the
-        reference, which re-tags from the bare url). Returns the allowed rows
-        only; the others stay PROCESSING — the reference leaks them the same
-        way: filtered tasks were already marked taken and are never
-        completed (DumbCrawler.java:275-279 + URLStore.java:191-206)."""
-        return apply_layers(dequeued, self._retag_layers).where(self.allowed)
+        reference, which re-tags from the bare url). Returns every dequeued
+        row, DEQUEUE_COLS plus the F2 verdict ``allowed``: the crawler
+        fetches the allowed rows, and the others stay PROCESSING — the
+        reference leaks them the same way: filtered tasks were already
+        marked taken and are never completed (DumbCrawler.java:275-279 +
+        URLStore.java:191-206). The observation fences the kernel above the
+        dequeue's ordered limit; without it Catalyst pushes the layers below
+        the limit, and TakeOrderedAndProject becomes a range sort (two more
+        jobs, test_round_jobs)."""
+        return apply_layers(dequeued.observe("retag_fence", F.count(F.lit(1))), self._retag_layers)
 
     def _verdict_plan(self, seeds: bool) -> tuple:
         """(the flag select, the J6-NR robots transform or None, the counters

@@ -12,11 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from dumb_crawler_spark.config import Politeness, load_config
-from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
+from dumb_crawler_spark.corpus import DOCS_SCHEMA, canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
+from dumb_crawler_spark.frontier import PROCESSING
 from dumb_crawler_spark.oracle import OracleCrawler, canonicalize, url_id
 
 ROUNDS = 6
+SITE = "http://site.example.com"
 
 
 @pytest.fixture(scope="module")
@@ -24,65 +26,85 @@ def web():
     return generate_web(n_articles=40, seed=42)
 
 
-def _run_pair(spark, tmp_path, cfg, docs, max_rounds=ROUNDS):
+def _run_pair(spark, tmp_path, cfg, docs, max_rounds=ROUNDS, sdocs=None):
     oracle = OracleCrawler(cfg, docs).run(max_rounds=max_rounds)
-    engine = Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh")
+    sdocs = docs_to_spark(spark, docs) if sdocs is None else sdocs
+    engine = Crawler(spark, cfg, sdocs, tmp_path / "wh")
     engine.run(max_rounds=max_rounds)
     return oracle, engine
 
 
 @pytest.fixture(scope="module")
-def pair(spark, tmp_path_factory, web):
+def pairs(spark, tmp_path_factory, web):
+    """(docs, oracle, engine) of two crawls of the web: the canonical config,
+    and one that takes the T4 and 404 paths — a seed T4 rejects (it leaks as
+    PROCESSING), a seed with no doc, a doc with NULL spans (a nullable docs
+    frame; the oracle reads a missing doc), one attempt per URL."""
     docs, _ = web
-    cfg = canonical_config()
-    return _run_pair(spark, tmp_path_factory.mktemp("golden"), cfg, docs)
+    canonical = _run_pair(spark, tmp_path_factory.mktemp("golden"), canonical_config(), docs)
+    cfg = canonical_config(
+        seeds=(f"{SITE}/", "http://elsewhere.example.org/", f"{SITE}/articles/7"),
+        max_attempt_count=1,
+    )
+    hit = {k: v for k, v in docs.items() if k not in ("3", "7")}
+    spans_t = DOCS_SCHEMA["spans"].dataType.simpleString()
+    sdocs = docs_to_spark(spark, hit).unionByName(
+        spark.createDataFrame([("3", None)], f"doc_id string, spans {spans_t}")
+    )
+    misses = _run_pair(
+        spark, tmp_path_factory.mktemp("golden_misses"), cfg, {**hit, "3": None}, sdocs=sdocs
+    )
+    return [(docs, *canonical), (hit, *misses)]
 
 
-def test_dequeue_order_exact(pair):
-    oracle, engine = pair
-    got = [
-        (r["round"], r["seq"], r["url_id"])
-        for r in engine.dequeue_order().orderBy("round", "seq").collect()
-    ]
-    assert got == oracle.dequeue_order
+def test_dequeue_order_exact(pairs):
+    for _, oracle, engine in pairs:
+        got = [
+            (r["round"], r["seq"], r["url_id"])
+            for r in engine.dequeue_order().orderBy("round", "seq").collect()
+        ]
+        assert got == oracle.dequeue_order
 
 
-def test_final_seen_set(pair):
-    oracle, engine = pair
-    fr = engine.wh.read_frontier()
-    assert {r["url_id"] for r in fr.select("url_id").collect()} == oracle.seen_set()
+def test_final_seen_set(pairs):
+    for _, oracle, engine in pairs:
+        fr = engine.wh.read_frontier()
+        assert {r["url_id"] for r in fr.select("url_id").collect()} == oracle.seen_set()
 
 
-def test_status_histogram(pair):
-    oracle, engine = pair
+def test_status_histogram(pairs):
     from dumb_crawler_spark.frontier import status_counts
-    got = {r["status"]: r["count"] for r in status_counts(engine.wh.read_frontier()).collect()}
-    assert got == oracle.status_hist()
+
+    for _, oracle, engine in pairs:
+        got = {r["status"]: r["count"] for r in status_counts(engine.wh.read_frontier()).collect()}
+        assert got == oracle.status_hist()
+    assert got[PROCESSING] == 1  # the second crawl's T4-rejected seed leaks
 
 
-def test_counters(pair):
-    oracle, engine = pair
-    got = engine.metrics_total()
-    exp = {k: v for k, v in oracle.counters.items() if v}
-    assert got == exp
+def test_counters(pairs):
+    for _, oracle, engine in pairs:
+        got = engine.metrics_total()
+        exp = {k: v for k, v in oracle.counters.items() if v}
+        assert got == exp
+    # the second crawl's no-doc seed and NULL-spans doc are both fetched
+    assert got["ERROR_INVALID_STATUS_CODE_404"] >= 2
 
 
-def test_span_sequence_invariant(pair, web):
+def test_span_sequence_invariant(pairs):
     """Per-row invariant: stored pages preserve (kind, text, media_ref, order)
     exactly as in the docs input (L3)."""
-    docs, _ = web
-    oracle, engine = pair
-    pages = engine.pages()
-    assert pages is not None
-    rows = pages.select("url_id", "spans").collect()
-    assert len(rows) == len(oracle.pages)
-    oracle_by_id = {p["url_id"]: p for p in oracle.pages}
-    for r in rows:
-        src = sorted(docs[r["url_id"]], key=lambda s: s["offset"])
-        got = [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]]
-        exp = [(s["kind"], s["text"], s["media_ref"]) for s in src]
-        assert got == exp, r["url_id"]
-        assert r["url_id"] in oracle_by_id
+    for docs, oracle, engine in pairs:
+        pages = engine.pages()
+        assert pages is not None
+        rows = pages.select("url_id", "spans").collect()
+        assert len(rows) == len(oracle.pages)
+        oracle_by_id = {p["url_id"]: p for p in oracle.pages}
+        for r in rows:
+            src = sorted(docs[r["url_id"]], key=lambda s: s["offset"])
+            got = [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]]
+            exp = [(s["kind"], s["text"], s["media_ref"]) for s in src]
+            assert got == exp, r["url_id"]
+            assert r["url_id"] in oracle_by_id
 
 
 def test_spans_stored_out_of_order_come_back_in_offset_order(spark, tmp_path):
@@ -114,17 +136,17 @@ def test_spans_stored_out_of_order_come_back_in_offset_order(spark, tmp_path):
     assert engine.metrics_total() == {k: v for k, v in oracle.counters.items() if v}
 
 
-def test_frontier_urls_match(pair):
+def test_frontier_urls_match(pairs):
     """Beyond ids: stored url/priority/attempt/error values match the oracle."""
-    oracle, engine = pair
-    fr = {r["url_id"]: r for r in engine.wh.read_frontier().collect()}
-    for uid, e in oracle.frontier.items():
-        r = fr[uid]
-        assert r["url"] == e.url and r["priority"] == e.priority, uid
-        assert r["status"] == e.status and r["attempt"] == e.attempt, uid
-        assert r["error"] == e.error, uid
-        assert r["tags"] == e.tags, uid
-        assert r["depth"] == e.depth and r["created_round"] == e.created_round, uid
+    for _, oracle, engine in pairs:
+        fr = {r["url_id"]: r for r in engine.wh.read_frontier().collect()}
+        for uid, e in oracle.frontier.items():
+            r = fr[uid]
+            assert r["url"] == e.url and r["priority"] == e.priority, uid
+            assert r["status"] == e.status and r["attempt"] == e.attempt, uid
+            assert r["error"] == e.error, uid
+            assert r["tags"] == e.tags, uid
+            assert r["depth"] == e.depth and r["created_round"] == e.created_round, uid
 
 
 def test_empty_included_tags_store_nothing(spark, tmp_path, web):

@@ -119,17 +119,24 @@ def test_dequeue_scan_pushdown(spark, tmp_path):
     assert "ReadSchema" in plan and "error" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
-def test_fetch_join_is_broadcast(spark):
+def test_fetch_join_is_broadcast(spark, tmp_path):
     """The dequeued batch must broadcast against the (huge) docs side —
-    never shuffle docs (fetch.py scale note)."""
+    never shuffle docs (fetch.py scale note) — in ONE join: one docs scan,
+    one broadcast, no anti-join and no union (the misses are driver work,
+    fetch.with_misses)."""
     docs, _ = generate_web(n_articles=12, seed=2)
-    sdocs = docs_to_spark(spark, docs)
+    docs_to_spark(spark, docs).write.parquet(str(tmp_path / "docs"))
+    sdocs = spark.read.parquet(str(tmp_path / "docs"))
     dq = spark.createDataFrame(
         [("x", "http://site.example.com/", "site.example.com", ["internal"], 0, 0, 0, 0)],
         "url_id string, url string, host string, tags array<string>, priority int, attempt int, depth int, part int",
     )
     plan = fetch_simulate(sdocs, canonical_config())(dq)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    initial = plan.split("== Initial Plan ==")[-1]  # AQE prints the plan once more
+    assert initial.count("FileScan parquet") == 1, plan
+    assert initial.count("BroadcastExchange") == 1, plan
+    assert "LeftAnti" not in plan and "Union" not in plan, plan
 
 
 def test_a4_f6_counters_present(spark, tmp_path):

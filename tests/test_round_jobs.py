@@ -5,7 +5,8 @@ docstring), so a change that re-adds a per-round job or rebuilds an
 expression tree every round fails here loudly. Also pinned: the
 observation that fences the URL kernel in the plan the link ingest collects
 (in a crawl round and a stream batch), no steady-round plan reading a local
-relation of more than a handful of rows, the counters observed on the
+relation of more than a handful of rows, the dequeue collect's top-k
+running below the T4 re-tag, the counters observed on the
 ingest's fence staying exact with the bloom on, the first reads of the
 Warehouse's tables returning the columns their writers emit, and the
 dequeue_order lineage and the frontier reading back across a warehouse
@@ -27,6 +28,7 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from test_pages_split import _tiny_web
 from test_streaming import UNBOUNDED, _push
 
+from dumb_crawler_spark import frontier as FR
 from dumb_crawler_spark.config import Politeness
 from dumb_crawler_spark.corpus import canonical_config, docs_to_spark, generate_web
 from dumb_crawler_spark.crawler import Crawler
@@ -43,12 +45,16 @@ from dumb_crawler_spark.streaming import stream_gated_ingest
 # the link ingest collected its candidates as Arrow (the bloom probed on the
 # driver, the ins delta written with pyarrow, no read-back) 12 and 11, and
 # before the pages were sliced from the same pyarrow read of the fetch delta
-# as the update and errors deltas (no pages job, even for zero saved rows) 10
-ROBOTS_BLOOM_MAX_JOBS = 9
-CANONICAL_MAX_JOBS = 9
+# as the update and errors deltas (no pages job, even for zero saved rows) 10,
+# and before the fetch was one inner join (the T4 re-tag on the dequeue
+# collect, the 404 rows and the fetch counters on the driver; no anti-join
+# branch with its second docs scan) 9
+ROBOTS_BLOOM_MAX_JOBS = 7
+CANONICAL_MAX_JOBS = 7
 # py4j commands of the robots+bloom round, object releases aside: 6,742 while
 # every round rebuilt its expression trees, 1,227 before the Arrow link
-# ingest, 911 before the pyarrow pages write, 875 since
+# ingest, 911 before the pyarrow pages write, 875 before the one-join fetch,
+# 862 since
 ROBOTS_BLOOM_MAX_PY4J = 1_000
 ROUNDS = 3  # rounds 1-2 pay first reads; round 3 is counted
 
@@ -192,6 +198,25 @@ def _assert_kernel_fenced(frames: list) -> None:
         for i in fences:
             assert any(keep(nodes[j][0]) for j in nodes[i][1]), tree
             assert not any(keep(text) for text, anc in nodes if i in anc), tree
+
+
+def test_dequeue_collect_fences_the_retag_above_the_ordered_limit(robots_crawls):
+    """The round's dequeue collect (the planner's plan re-tagged by
+    frontier.UrlKernel.retag) runs the ordered limit as a
+    TakeOrderedAndProject with the URL kernel above it. Without the
+    observation between them Catalyst pushes the kernel below the limit,
+    and the top-k becomes a range-partitioned sort: two more jobs."""
+    _, counted, _ = robots_crawls
+    plans = [df for df in counted.frames if df.columns == [*FR.DEQUEUE_COLS, "allowed"]]
+    assert len(plans) == 1, [df.columns for df in counted.frames]
+    tree = plans[0]._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in tree, tree
+    nodes = _plan_nodes(tree)
+    tops = [i for i, (text, _) in enumerate(nodes) if text.startswith("TakeOrderedAndProject")]
+    assert tops, tree
+    for i in tops:
+        assert any("ParseUrl" in nodes[j][0] for j in nodes[i][1]), tree
+        assert not any("ParseUrl" in text for text, anc in nodes if i in anc), tree
 
 
 def test_ins_write_observation_fences_the_url_kernel(robots_crawls):
