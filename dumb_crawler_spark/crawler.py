@@ -402,9 +402,11 @@ class Crawler:
         start = self.bootstrap()
         if refetch and start > 0:
             # C4 refetch-all reset (dormant in the reference: URLStore.java:60-68
-            # hardcodes refetch=false — `UPDATE links SET status = 0`)
+            # hardcodes refetch=false — `UPDATE links SET status = 0`); its
+            # round is committed, so the snapshot expires what it supersedes
             fr = self.wh.read_frontier(start).withColumn("status", F.lit(FR.QUEUED).cast("tinyint"))
             self.wh.write_frontier_snapshot(start, fr, self.cfg.partitions)
+            self.wh.expire_frontier()
         limit = max_rounds if max_rounds is not None else self.cfg.max_rounds
         rnd = start
         rounds_without_new_pages = 0

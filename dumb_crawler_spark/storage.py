@@ -15,6 +15,19 @@ same contract on bare Parquet:
   plus per-round ``ins-``/``upd-`` deltas, composed on read (frontier.py),
   each dir written to a temp dir and atomically renamed — the local analog
   of an Iceberg snapshot commit.
+- **retention** (``Warehouse.expire_frontier``): once a round that wrote a
+  frontier snapshot (compaction, the refetch reset) is committed, the dirs
+  that snapshot supersedes are deleted. Retained: the warehouse's first
+  snapshot (the O(seeds) seed snapshot), the latest committed one, and the
+  deltas after it, so the frontier's footprint is O(frontier + delta
+  window), not one copy per compaction. Time travel works only inside that
+  window, plus the first round: a read of an expired round raises.
+  Rollback of uncommitted dirs, of a half-done replace and of orphaned
+  ``.tmp-`` dirs plus the finishing of a cut-short expiry
+  (``rollback_uncommitted``) are the analog of Iceberg's rollback,
+  ``remove_orphan_files`` and ``expire_snapshots``. A warehouse written
+  before expiry existed reads every round as written; its first writer
+  (crawl resume, stream start) expires it.
 - **append-only tables** (``pages``, ``metrics``, ``errors``, ``rounds``):
   one ``delta-{round:08d}`` directory per round; a read unions the deltas of
   committed rounds only. File rotation (reference: 50 MB WARC) falls out of
@@ -52,6 +65,27 @@ def _footer_rows(parquet_dir: Path) -> int:
     return sum(
         pq.read_metadata(f).num_rows for f in parquet_dir.glob("*.parquet")
     )
+
+
+def _round_of(d: Path) -> int | None:
+    """The round of a ``<kind>-<round:08d>`` table dir; None for any other entry."""
+    kind, _, rnd = d.name.partition("-")
+    return int(rnd) if kind and rnd.isdigit() else None
+
+
+def _publish(tmp: Path, dest: Path) -> None:
+    """Rename a fully written temp dir to ``dest``. An existing ``dest`` (the
+    refetch reset rewrites its round's snapshot in place) is renamed aside
+    to ``.old-<name>`` first and deleted last: a kill between the two
+    renames leaves both dirs whole, and rollback_uncommitted renames the old
+    one back. Deleting ``dest`` first would leave none, or half of one."""
+    if not dest.exists():
+        tmp.rename(dest)
+        return
+    old = dest.with_name(f".old-{dest.name}")
+    dest.rename(old)
+    tmp.rename(dest)
+    shutil.rmtree(old)
 
 
 class Warehouse:
@@ -109,9 +143,7 @@ class Warehouse:
         if self.max_records_per_file:
             w = w.option("maxRecordsPerFile", str(self.max_records_per_file))
         w.parquet(str(tmp))
-        if dest.exists():
-            shutil.rmtree(dest)
-        tmp.rename(dest)
+        _publish(tmp, dest)
         return _footer_rows(dest)
 
     def _write_rows(self, dest: Path, arrow_table) -> int:
@@ -135,9 +167,7 @@ class Warehouse:
                 table.slice(lo, step), tmp / f"part-{i:05d}.parquet",
                 store_schema=False, write_statistics=False,
             )
-        if dest.exists():
-            shutil.rmtree(dest)
-        tmp.rename(dest)
+        _publish(tmp, dest)
         return n
 
     # -- full-state tables (frontier) -----------------------------------------
@@ -198,7 +228,10 @@ class Warehouse:
         """Marker write = the commit point. The marker is created
         exclusively (a hard link of a complete temp file), so of two writers
         committing the same round (a crawl and a stream, say) the second
-        raises FileExistsError instead of overwriting the first's commit."""
+        raises FileExistsError instead of overwriting the first's commit.
+        A round that wrote a frontier snapshot then expires what it
+        supersedes (expire_frontier); nothing is deleted before its marker
+        exists."""
         marker = self.root / "_commits" / f"_round-{round_no:08d}.json"
         tmp = marker.with_name(f".tmp-{uuid.uuid4().hex}")
         tmp.write_text(json.dumps({"round": round_no, **info}, default=str))
@@ -206,6 +239,7 @@ class Warehouse:
             os.link(tmp, marker)
         finally:
             tmp.unlink()
+        self.expire_frontier()
 
     def committed_rounds(self) -> list[int]:
         return sorted(
@@ -217,20 +251,60 @@ class Warehouse:
         return rounds[-1] if rounds else None
 
     def rollback_uncommitted(self) -> None:
-        """C2 orphan recovery: drop snapshot/delta dirs newer than the last
-        committed round (they are invisible anyway; this reclaims space and
-        mirrors Iceberg's snapshot expiry/rollback)."""
+        """C2 orphan recovery, run by a writer before its first round (crawl
+        resume, stream start). It puts back a dir a replace renamed aside
+        (_publish), deletes the ``.tmp-`` dirs and files of writes killed
+        before their rename, drops the snapshot/delta dirs newer than the
+        last committed round (invisible anyway), and finishes an expiry a
+        kill cut short (expire_frontier) — the analog of Iceberg's rollback,
+        remove_orphan_files and expire_snapshots. Single-writer
+        precondition (ROADMAP item 6): another live writer's in-flight dirs
+        look exactly like a crashed one's, and are deleted too."""
         last = self.last_committed_round()
-        for tdir in self.root.iterdir():
-            if not tdir.is_dir() or tdir.name.startswith("_"):
+        for tdir in (d for d in self.root.iterdir() if d.is_dir()):
+            for d in tdir.glob(".old-*"):
+                live = d.with_name(d.name.removeprefix(".old-"))
+                shutil.rmtree(d) if live.exists() else d.rename(live)
+            for d in tdir.glob(".tmp-*"):
+                shutil.rmtree(d) if d.is_dir() else d.unlink()
+            if tdir.name.startswith("_"):
                 continue
             for d in tdir.glob("*-*"):
-                try:
-                    rnd = int(d.name.split("-")[1])
-                except ValueError:
-                    continue
-                if last is None or rnd > last:
+                rnd = _round_of(d)
+                if rnd is not None and (last is None or rnd > last):
                     shutil.rmtree(d)
+        self.expire_frontier()
+
+    def expire_frontier(self) -> None:
+        """Iceberg expire_snapshots analog, run once the latest committed
+        frontier snapshot and its round's marker both exist (commit_round,
+        the refetch reset, rollback_uncommitted): every dir that snapshot
+        supersedes goes — the older snapshots but the warehouse's first, and
+        every ins-/upd- delta at or before it. The round expired through is
+        recorded first, so a read of an expired round raises
+        (_frontier_dirs) even when a kill left some of those dirs behind.
+        Idempotent."""
+        last, tdir = self.last_committed_round(), self.root / "frontier"
+        if last is None:
+            return
+        snaps = sorted(r for d in tdir.glob("snap-*") if (r := _round_of(d)) <= last)
+        if len(snaps) < 2:
+            return
+        first, latest = snaps[0], snaps[-1]
+        if self._expired_through() < latest:
+            tmp = tdir / f".tmp-{uuid.uuid4().hex}"
+            tmp.write_text(json.dumps({"round": latest}))
+            os.replace(tmp, tdir / "_expired.json")
+        superseded = [d for d in tdir.glob("snap-*") if first < _round_of(d) < latest]
+        superseded += [d for k in ("ins", "upd") for d in tdir.glob(f"{k}-*") if _round_of(d) <= latest]
+        for d in superseded:
+            shutil.rmtree(d)
+
+    def _expired_through(self) -> int:
+        """The round the frontier was last expired through (-1: never, as in
+        a warehouse written before expiry existed)."""
+        p = self.root / "frontier" / "_expired.json"
+        return json.loads(p.read_text())["round"] if p.exists() else -1
 
     # -- termination marker (S12) ----------------------------------------------
     def write_terminated(self, info: dict) -> None:
@@ -242,18 +316,30 @@ class Warehouse:
     # -- frontier merge-on-read (frontier.py compose/queued docs) ---------------
     def _frontier_dirs(self, round_no: int) -> tuple[Path, list[Path], list[Path]]:
         """(base snapshot dir, ins- dirs, upd- dirs) as of round_no: the latest
-        snap ≤ round_no plus the delta dirs in (snap_round, round_no]."""
+        snap ≤ round_no plus the delta dirs in (snap_round, round_no].
+        Raises for a round expire_frontier expired (between the first
+        snapshot and the one expired through, whose deltas are gone), and
+        for any round once that snapshot is missing (the refetch reset
+        killed mid-replace), instead of composing an older base with no
+        deltas."""
         tdir = self.root / "frontier"
-        rnd = lambda d: int(d.name.split("-")[1])  # noqa: E731
-        snaps = sorted((d for d in tdir.glob("snap-*") if rnd(d) <= round_no), key=rnd)
-        if not snaps:
+        snaps = sorted(tdir.glob("snap-*"), key=_round_of)
+        older = [d for d in snaps if _round_of(d) <= round_no]
+        if not older:
             raise FileNotFoundError(f"no frontier snapshot ≤ round {round_no}")
-        s = rnd(snaps[-1])
+        s, expired = _round_of(older[-1]), self._expired_through()
+        if s < expired and round_no > _round_of(snaps[0]):
+            raise FileNotFoundError(
+                f"frontier round {round_no} is expired or its snapshot is missing (expired "
+                f"through round {expired}; snapshots {[d.name for d in snaps]})"
+            )
 
         def deltas(prefix: str) -> list[Path]:
-            return sorted((d for d in tdir.glob(f"{prefix}-*") if s < rnd(d) <= round_no), key=rnd)
+            return sorted(
+                (d for d in tdir.glob(f"{prefix}-*") if s < _round_of(d) <= round_no), key=_round_of
+            )
 
-        return snaps[-1], deltas("ins"), deltas("upd")
+        return older[-1], deltas("ins"), deltas("upd")
 
     def _frontier_pieces(self, round_no: int):
         """(base snapshot DF, inserts DF|None, updates DF|None) as of round_no.
@@ -297,7 +383,8 @@ class Warehouse:
 
     def compact_frontier(self, round_no: int, partitions: int, every: int = COMPACT_EVERY) -> None:
         """MoR compaction (Iceberg rewrite_data_files): every ``every``-th round's
-        deltas fold into a fresh base, so the delta window stays bounded."""
+        deltas fold into a fresh base, so the delta window stays bounded; the
+        round's commit expires what the base supersedes (expire_frontier)."""
         if every and round_no % every == 0:
             self.write_frontier_snapshot(round_no, self.read_frontier(round_no), partitions)
 
@@ -340,10 +427,10 @@ class Warehouse:
 
     def read_frontier_seen_ids(self, round_no: int) -> DataFrame:
         """The exact URL-seen set: url_id (and part) of base ∪ inserts —
-        column-pruned scans, no update join needed (updates never add ids)."""
-        base, ins, _ = self._frontier_pieces(round_no)
-        ids = base.select("url_id", "part")
-        return ids if ins is None else ids.unionByName(ins.select("url_id", "part"))
+        one column-pruned scan of the snapshot and ins- dirs, no update join
+        needed (updates never add ids)."""
+        base, ins, _ = self._frontier_dirs(round_no)
+        return self._read("frontier", "snap", *map(str, (base, *ins))).select("url_id", "part")
 
     def seen_among(self, seen_round: int, round_no: int, ids) -> "pa.Array":
         """J3: which of ``ids`` (pyarrow) the URL-seen set as of

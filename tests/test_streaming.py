@@ -86,7 +86,8 @@ def test_stream_gated_ingest_unbounded_budget(spark, tmp_path):
 def test_stream_on_empty_warehouse_commits_deltas(spark, tmp_path):
     """A stream-only warehouse starts at round 1 with a snapshot; every
     later batch that adds rows commits an ins- delta, compacted into a
-    snapshot only at the crawl's cadence; a batch that adds nothing commits
+    snapshot only at the crawl's cadence, which expires the deltas it folds
+    in but keeps the first snapshot; a batch that adds nothing commits
     nothing and leaves no dir."""
     cfg = canonical_config()
     a = lambda i: f"http://site.example.com/articles/{i}"
@@ -115,21 +116,24 @@ def test_stream_on_empty_warehouse_commits_deltas(spark, tmp_path):
     last = f"{COMPACT_EVERY:08d}"
     assert wh.last_committed_round() == COMPACT_EVERY
     assert _frontier_dirs(tmp_path, "snap") == ["snap-00000001", f"snap-{last}"]
-    assert _frontier_dirs(tmp_path, "ins") == ["ins-00000002", f"ins-{last}"]
+    assert _frontier_dirs(tmp_path, "ins") == []
     rows = {r["url"]: r["created_round"] for r in wh.read_frontier().collect()}
     assert rows == {a(1): 1, a(2): 1, a(3): 2, a(4): COMPACT_EVERY}
-    assert _arrow_frontier(tmp_path).num_rows == 2 + 1 + 1 + 4
+    assert _arrow_frontier(tmp_path).num_rows == 2 + 4
 
 
 def test_stream_into_crawled_warehouse_writes_ins_delta(spark, tmp_path):
     """A batch into a crawled warehouse is the next round's ins- delta, on
     top of the crawl's snapshot and deltas — no snapshot rewrite. A crawl
     round that crashed before its commit is rolled back first, so none of
-    its dirs join the stream's round."""
+    its dirs join the stream's round, and a write's orphaned temp dir goes
+    with it."""
     docs, _ = generate_web(n_articles=30, seed=7)
     cfg = canonical_config()
     Crawler(spark, cfg, docs_to_spark(spark, docs), tmp_path / "wh").run(max_rounds=3)
     (tmp_path / "wh" / "_commits" / "_round-00000003.json").unlink()  # crash before commit
+    orphan = tmp_path / "wh" / "frontier" / ".tmp-5e1f"  # a write killed before its rename
+    orphan.mkdir()
     wh = Warehouse(spark, tmp_path / "wh")
     before = {r["url"] for r in wh.read_frontier().collect()}
     new = "http://site.example.com/articles/9999"
@@ -139,6 +143,7 @@ def test_stream_into_crawled_warehouse_writes_ins_delta(spark, tmp_path):
     assert "ins-00000003" in _frontier_dirs(tmp_path, "ins")
     assert "snap-00000003" not in _frontier_dirs(tmp_path, "snap")
     assert not [d for d in (tmp_path / "wh").rglob("*-00000003") if d.name != "ins-00000003"]
+    assert not orphan.exists()
     rows = wh.read_frontier().collect()
     assert {r["url"] for r in rows} == before | {new}
     assert [r["created_round"] for r in rows if r["url"] == new] == [3]
